@@ -155,19 +155,13 @@ object Bench {
       } }
 
     def group(name: String): String = name.takeWhile(_ != '_')
-    def clearShared(): Unit = {
-      AnnQueries.clearGridCache()
-      AnnQueries.clearAnnCache()
-      DedupQueries.clearPairsCache()
-      spark.catalog.clearCache()
-    }
 
     if (doWarmup) {
       queries.foreach { case (_, fn) =>
         try fn(spark, warmupDir).count()
         catch { case _: Throwable => () }
       }
-      clearShared()
+      SparkEntry.resetPackState(spark)
     }
 
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
@@ -196,7 +190,7 @@ object Bench {
     val calibSec: Double = SparkEntry.queries.get("q01_pricing_summary")
       .map { fn =>
         val samples = (1 to 3).flatMap(_ => timeOnce(fn).toOption)
-        clearShared()
+        SparkEntry.resetPackState(spark)
         if (samples.nonEmpty) samples.min else -1.0
       }.getOrElse(-1.0)
     // CALIBRATION VECTOR (round 13's lesson: one cheap scan query can
@@ -264,7 +258,7 @@ object Bench {
         case Some(fn) =>
           bestOf2 { (1 to 3).foreach(_ => fn(spark, sfDir).count()) }
       }
-    clearShared()
+    SparkEntry.resetPackState(spark)
     val calibShuffleLong = bestOf2 {
       spark.range(32000000L)
         .select(pmod(xxhash64(col("id")), lit(800000)).as("k"), col("id"))
@@ -336,7 +330,8 @@ object Bench {
         val m = queries.zipWithIndex.map { case ((name, fn), i) =>
           val r = timeOnce(fn)
           val nextGroup = queries.lift(i + 1).map(q => group(q._1))
-          if (!nextGroup.contains(group(name))) clearShared()
+          if (!nextGroup.contains(group(name)))
+            SparkEntry.resetPackState(spark)
           name -> r
         }.toMap
         m

@@ -26,91 +26,68 @@ object GraftFunctions {
       s"$fn: first argument (k) must be a literal")
   }
 
+  /** `build` behind an argument-count check: a call with any other
+    * count fails analysis naming the function and both counts, instead
+    * of an IndexOutOfBounds from the builder's `es(i)`. */
+  private def withArity(name: String, arity: Int)(
+      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
+    es => {
+      if (es.length != arity) throw new IllegalArgumentException(
+        s"$name expects $arity argument${if (arity == 1) "" else "s"}, " +
+          s"got ${es.length}")
+      build(es)
+    }
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_sqdist", es => VectorSqDist(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_dot", es => VectorDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", es => VectorCosine(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_norm", es => VectorNorm(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_packbits", es => PackSignBits(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hamming", es => HammingDistance(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash", es => SimHash64(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hamming64", es => HammingDistance64(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingles",
-      es => NGramShingles(es(0), foldableInt(es(1), "graft_shingles")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash",
-      es => MinHashSignature(es(0), foldableInt(es(1), "graft_minhash")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_lsh_bands",
-      es => LshBandHashes(es(0), foldableInt(es(1), "graft_lsh_bands")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_vecsum", es => VectorSum(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_vecsum_long", es => VectorSumLong(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_fp16_encode", es => Fp16Encode(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_fp16_decode", es => Fp16Decode(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_topk",
-      es => TopKSmallest(foldableInt(es(0), "graft_topk"), es(1), es(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_nearest_centroid",
-      es => NearestCentroid(es(0), foldableMatrix(es(1), "graft_nearest_centroid")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_nearest_centroid2",
-      es => NearestCentroidTwoLevel(es(0),
-        foldableMatrix(es(1), "graft_nearest_centroid2"),
-        foldableMatrix(es(2), "graft_nearest_centroid2"),
-        foldableIntMatrix(es(3), "graft_nearest_centroid2"),
-        foldableInt(es(4), "graft_nearest_centroid2")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_repetition", es => RepetitionStats(es(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_nearest_cells",
-      es => NearestCells(es(0), foldableMatrix(es(1), "graft_nearest_cells"),
-        foldableInt(es(2), "graft_nearest_cells")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_term_counts",
-      es => TermCounts(es(0), foldableStringSeq(es(1), "graft_term_counts")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_md5_prefix",
-      es => Md5PrefixLong(es(0), foldableInt(es(1), "graft_md5_prefix")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_md5_prefix_str",
-      es => Md5PrefixStr(es(0), foldableInt(es(1), "graft_md5_prefix_str")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_intersect_count",
-      es => IntersectCardinality(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_nearest_cells2",
-      es => NearestCellsTwoLevel(es(0),
-        foldableMatrix(es(1), "graft_nearest_cells2"),
-        foldableMatrix(es(2), "graft_nearest_cells2"),
-        foldableIntMatrix(es(3), "graft_nearest_cells2"),
-        foldableInt(es(4), "graft_nearest_cells2"),
-        foldableInt(es(5), "graft_nearest_cells2")),
-      "built-in")
+    def fn(name: String, arity: Int)(
+        build: Seq[Expression] => Expression): Unit =
+      reg.createOrReplaceTempFunction(name, withArity(name, arity)(build),
+        "built-in")
+    fn("graft_sqdist", 2)(es => VectorSqDist(es(0), es(1)))
+    fn("graft_dot", 2)(es => VectorDot(es(0), es(1)))
+    fn("graft_cosine", 2)(es => VectorCosine(es(0), es(1)))
+    fn("graft_norm", 1)(es => VectorNorm(es(0)))
+    fn("graft_packbits", 1)(es => PackSignBits(es(0)))
+    fn("graft_hamming", 2)(es => HammingDistance(es(0), es(1)))
+    fn("graft_simhash", 1)(es => SimHash64(es(0)))
+    fn("graft_hamming64", 2)(es => HammingDistance64(es(0), es(1)))
+    fn("graft_shingles", 2)(es =>
+      NGramShingles(es(0), foldableInt(es(1), "graft_shingles")))
+    fn("graft_minhash", 2)(es =>
+      MinHashSignature(es(0), foldableInt(es(1), "graft_minhash")))
+    fn("graft_lsh_bands", 2)(es =>
+      LshBandHashes(es(0), foldableInt(es(1), "graft_lsh_bands")))
+    fn("graft_vecsum", 1)(es => VectorSum(es(0)))
+    fn("graft_vecsum_long", 1)(es => VectorSumLong(es(0)))
+    fn("graft_fp16_encode", 1)(es => Fp16Encode(es(0)))
+    fn("graft_fp16_decode", 1)(es => Fp16Decode(es(0)))
+    fn("graft_topk", 3)(es =>
+      TopKSmallest(foldableInt(es(0), "graft_topk"), es(1), es(2)))
+    fn("graft_nearest_centroid", 2)(es => NearestCentroid(es(0),
+      foldableMatrix(es(1), "graft_nearest_centroid")))
+    fn("graft_nearest_centroid2", 5)(es => NearestCentroidTwoLevel(es(0),
+      foldableMatrix(es(1), "graft_nearest_centroid2"),
+      foldableMatrix(es(2), "graft_nearest_centroid2"),
+      foldableIntMatrix(es(3), "graft_nearest_centroid2"),
+      foldableInt(es(4), "graft_nearest_centroid2")))
+    fn("graft_repetition", 1)(es => RepetitionStats(es(0)))
+    fn("graft_nearest_cells", 3)(es => NearestCells(es(0),
+      foldableMatrix(es(1), "graft_nearest_cells"),
+      foldableInt(es(2), "graft_nearest_cells")))
+    fn("graft_term_counts", 2)(es => TermCounts(es(0),
+      foldableStringSeq(es(1), "graft_term_counts")))
+    fn("graft_md5_prefix", 2)(es =>
+      Md5PrefixLong(es(0), foldableInt(es(1), "graft_md5_prefix")))
+    fn("graft_md5_prefix_str", 2)(es =>
+      Md5PrefixStr(es(0), foldableInt(es(1), "graft_md5_prefix_str")))
+    fn("graft_intersect_count", 2)(es => IntersectCardinality(es(0), es(1)))
+    fn("graft_nearest_cells2", 6)(es => NearestCellsTwoLevel(es(0),
+      foldableMatrix(es(1), "graft_nearest_cells2"),
+      foldableMatrix(es(2), "graft_nearest_cells2"),
+      foldableIntMatrix(es(3), "graft_nearest_cells2"),
+      foldableInt(es(4), "graft_nearest_cells2"),
+      foldableInt(es(5), "graft_nearest_cells2")))
   }
 
   /** Evaluate a foldable array<array<float>> literal to a JVM matrix
@@ -199,7 +176,9 @@ object GraftFunctions {
   def bloomMightContain(spark: SparkSession, text: Column,
       bf: org.apache.spark.util.sketch.BloomFilter): Column = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", es => BloomMightContain(es(0), bf), "built-in")
+      "graft_bloom_contains",
+      withArity("graft_bloom_contains", 1)(es => BloomMightContain(es(0), bf)),
+      "built-in")
     call_function("graft_bloom_contains", text)
   }
   def fp16Encode(a: Column): Column = call_function("graft_fp16_encode", a)

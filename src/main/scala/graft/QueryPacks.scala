@@ -2905,12 +2905,15 @@ object AnnQueries {
           Pq.refineShortlist(shortlist, data, q, K),
           sh.truth)
         .select(col("recall").as("recall_refined"))
-      pure.crossJoin(refined)
+      // materialize the one-row result, then release both caches
+      try pure.crossJoin(refined)
         // floors self-report regressions (sf0.01 observed: 0.31 / 0.58;
         // refined must also beat pure ADC — the re-rank can only help)
         .withColumn("ok", col("recall_adc") >= lit(0.25) &&
           col("recall_refined") >= lit(0.5) &&
           col("recall_refined") >= col("recall_adc"))
+        .localCheckpoint()
+      finally { shortlist.unpersist(); codes.unpersist() }
     }),
     // fp16-stored corpus (the reference's embedding dtype,
     // README_reviews.md:84): the data side is snapped to the 2^-7

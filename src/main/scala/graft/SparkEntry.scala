@@ -50,6 +50,16 @@ object SparkEntry {
       TextQueries.all ++ CorpusQueries.all ++ AnnQueries.all ++
       IngestQueries.all ++ StreamQueries.all
 
+  /** Drop the state the pack shares across queries — the grid sweep,
+    * the ANN oracle inputs, the dedup pair sets — and every cached
+    * relation, so one query's caches never subsidize the next. */
+  def resetPackState(spark: SparkSession): Unit = {
+    AnnQueries.clearGridCache()
+    AnnQueries.clearAnnCache()
+    DedupQueries.clearPairsCache()
+    spark.catalog.clearCache()
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared deterministic synthetic generators for the scale benches and
-  * profilers (ScaleBench / ProfileBigQ / DedupScaleBench / ProfileLsh)
-  * — ONE definition each, so a profiler can never silently drift from
-  * the corpus of the bench it triages. Hash-derived, no RNG: the same
-  * (n, seed params) always produce byte-identical data at any
-  * partitioning. */
+  * serving profiles (ScaleBench / DedupScaleBench / the Profile* scale
+  * points) — ONE definition each, so a profile can never silently
+  * drift from the corpus of the bench it triages. Hash-derived, no
+  * RNG: the same (n, seed params) always produce byte-identical data
+  * at any partitioning. */
 object SynthData {
 
   /** Seeded 64-dim vectors from a 1000-component Gaussian-mixture

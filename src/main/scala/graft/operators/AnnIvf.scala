@@ -166,7 +166,8 @@ object AnnIvf {
     * A DIAL, not a drop-in: the probe set can differ from the flat
     * argmin's when a query's true nearest cell lives under a
     * non-beamed super, so it is a new (recall, qps) operating point —
-    * measured like any dial (ProfileShardedVsSingle "twolevel"),
+    * measured like any dial (`BENCH_scale_r18.json`
+    * two_level_probe_20m),
     * opt-in via `proberOverride`/`probers`, never a silent default.
     * With `wSuper >= supers.length` the beam covers every member list
     * and the probe list equals the flat argmin's exactly (ShardedSpec
@@ -979,9 +980,6 @@ object AnnIvf {
       case None => indexed
     }
 
-  /** Candidate rows a search at `nprobe` would scan (deterministic
-    * cost metric for the grid-search analytics). Computed from the
-    * cell-size histogram — O(cells) instead of rescanning the index. */
   /** (qid, probe-rank r [1-based], cid) — narrow NearestCells
     * projection, no join/agg/shuffle. */
   def probeRanks(centroids: DataFrame, queries: DataFrame, nprobe: Int,
@@ -992,15 +990,6 @@ object AnnIvf {
         posexplode(probeCellsCol(col(qvecCol), matrix, nprobe, twoLevel))
           .as(Seq("r0", "cid")))
       .select(col(qidCol), (col("r0") + 1).as("r"), col("cid"))
-  }
-
-  def searchCandidates(indexed: DataFrame, centroids: DataFrame,
-      queries: DataFrame, nprobe: Int,
-      qidCol: String = "qid", qvecCol: String = "q_embedding"): Long = {
-    val cellSizes = indexed.groupBy(col("cid")).agg(count(lit(1)).as("n"))
-    val probes = probeRanks(centroids, queries, nprobe, qidCol, qvecCol)
-    probes.join(broadcast(cellSizes), "cid")
-      .agg(sum(col("n"))).head().getLong(0)
   }
 
   /** Probe-and-scan search, heap lowering: same semantics as `search`

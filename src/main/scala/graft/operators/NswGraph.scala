@@ -783,7 +783,8 @@ object NswGraph {
     *
     * MEMORY-LEVEL PARALLELISM: the kernel is DRAM-latency-bound at
     * executor scale (a 5M partition's decoded cells exceed the LLC;
-    * measured 175 ns/eval cold vs 92 ns hot, ProfileBeam nCells=32) —
+    * measured 175 ns/eval cold vs 92 ns hot at nCells=32,
+    * `BENCH_scale_r12.json`) —
     * so a node's expansion runs in TWO passes: pass 1 stamps the
     * unstamped neighbors into `nbuf` and TOUCHES one float per cache
     * line of each neighbor's row (independent loads — the core
@@ -915,7 +916,7 @@ object NswGraph {
     * small-batch serving tier (round-13 verdict top item): every
     * serve entry that goes through a Spark job pays a measured ~0.5 s
     * fixed floor (probe job + merge stage + scheduling,
-    * `ProfileFloor`), which DOMINATES below ~10K queries/batch — at
+    * `BENCH_scale_r13.json`), which DOMINATES below ~10K queries/batch — at
     * the reference's own serving batch size (100 queries,
     * params_config.yaml:23) the job path manages ~200 qps against the
     * reference's in-process 21,890. The reference never pays that
@@ -923,7 +924,7 @@ object NswGraph {
     * replica is the same shape, Spark-native at the edges: the
     * decoded `ServableCell`s are collected ONCE into the driver (or
     * any serving JVM — the struct is plain arrays, `Serializable`),
-    * and `searchLocalProbed` runs the IDENTICAL beam kernel
+    * and `searchLocalQueries` runs the IDENTICAL beam kernel
     * (`beamServable`), the identical drain (`drainBeamTopK`) and the
     * identical top-k merge semantics (`TopKBuffer`, the TopKSmallest
     * aggregate's buffer class) in-process over a thread pool — zero
@@ -1261,43 +1262,11 @@ object NswGraph {
       queries: Array[(Long, Array[Float])], k: Int, nprobe: Int,
       efSearch: Int = 64, metric: String = "sqeuclidean",
       tombstones: Option[Array[Long]] = None)
-      : Array[(Long, Long, Long, Double)] =
-    searchLocalCore(rep, queries.map(_._1), queries.map(_._2), null,
-      nprobe, k, efSearch, metric, tombstones)
-
-  /** `searchLocalQueries` over precollected probe lists — the exact
-    * local counterpart of `searchServableProbed`: same beam
-    * (`beamServable`), same drain (`drainBeamTopK`), and the final
-    * merge runs the TopKSmallest aggregate's own buffer
-    * (`TopKBuffer`), so the kept set and (dist, id) tie-breaks equal
-    * the distributed `topKFrom` by shared code, not by reimplementation. */
-  def searchLocalProbed(rep: LocalReplica,
-      probed: Array[(Long, Array[Float], Array[Int])], k: Int,
-      efSearch: Int = 64, metric: String = "sqeuclidean",
-      tombstones: Option[Array[Long]] = None)
-      : Array[(Long, Long, Long, Double)] =
-    searchLocalCore(rep, probed.map(_._1), probed.map(_._2),
-      probed.map(_._3), 0, k, efSearch, metric, tombstones)
-
-  /** The local serving core. Probe lists compute INSIDE the worker
-    * loop when not supplied (`probes == null`) — the probe's C·dim
-    * argmin is the dominant per-query cost at serving cell counts
-    * (measured ~2× the np2/efS32 beam cost at 1024 cells), so
-    * serializing it on the calling thread would cap small-batch
-    * throughput at roughly a third of the hardware's rate. Probing
-    * in-worker uses the same thread-safe `NearestCells.nullSafeEval`
-    * as the precollected path, so supplied-vs-computed probes are
-    * identical per query. */
-  private def searchLocalCore(rep: LocalReplica, qids: Array[Long],
-      qvecs: Array[Array[Float]], probes: Array[Array[Int]],
-      nprobe: Int, k: Int, efSearch: Int, metric: String,
-      tombstones: Option[Array[Long]])
       : Array[(Long, Long, Long, Double)] = {
-    val perQuery = searchLocalCoreSlots(rep, qids, qvecs, probes,
-      nprobe, k, efSearch, metric, tombstones)
     val out = Array.newBuilder[(Long, Long, Long, Double)]
-    out.sizeHint(qids.length * k)
-    perQuery.foreach(rows => if (rows != null) out ++= rows)
+    out.sizeHint(queries.length * k)
+    searchLocalQueriesSlots(rep, queries, k, nprobe, efSearch, metric,
+      tombstones).foreach(out ++= _)
     out.result()
   }
 
@@ -1307,28 +1276,26 @@ object NswGraph {
     * cannot distinguish an empty group from an absent one, which is
     * exactly what the sharded merge needs to align slots across K
     * shard replicas (`Sharded`) — so the sharded paths consume this
-    * form and the single-replica paths flatten it. */
+    * form and the single-replica paths flatten it.
+    *
+    * Probe lists compute INSIDE the worker loop — the probe's C·dim
+    * argmin is the dominant per-query cost at serving cell counts
+    * (measured ~2× the np2/efS32 beam cost at 1024 cells), so
+    * serializing it on the calling thread would cap small-batch
+    * throughput at roughly a third of the hardware's rate. */
   private[operators] def searchLocalQueriesSlots(rep: LocalReplica,
       queries: Array[(Long, Array[Float])], k: Int, nprobe: Int,
       efSearch: Int = 64, metric: String = "sqeuclidean",
       tombstones: Option[Array[Long]] = None)
-      : Array[Array[(Long, Long, Long, Double)]] =
-    searchLocalCoreSlots(rep, queries.map(_._1), queries.map(_._2),
-      null, nprobe, k, efSearch, metric, tombstones)
-
-  private def searchLocalCoreSlots(rep: LocalReplica, qids: Array[Long],
-      qvecs: Array[Array[Float]], probes: Array[Array[Int]],
-      nprobe: Int, k: Int, efSearch: Int, metric: String,
-      tombstones: Option[Array[Long]])
       : Array[Array[(Long, Long, Long, Double)]] = {
+    val qids = queries.map(_._1)
+    val qvecs = queries.map(_._2)
     val nQ = qids.length
     if (nQ == 0) return Array.empty
     val efs = math.max(k, efSearch)
     val mcode = Knn.metricCode(metric)
     val tomb: Array[Long] = tombstones.orNull
-    val prober: Array[Float] => Array[Int] =
-      if (probes != null) null
-      else nearestCellsLocal(rep.centroidMatrix, nprobe)
+    val prober = nearestCellsLocal(rep.centroidMatrix, nprobe)
     val perQuery = new Array[Array[(Long, Long, Long, Double)]](nQ)
     // one worker per ~4 queries up to the core count: a 100-query
     // batch fans to 25 workers; a 4-query batch skips most of the
@@ -1355,7 +1322,7 @@ object NswGraph {
         var qi = start
         while (qi < end) {
           val qid = qids(qi); val qv = qvecs(qi)
-          val cids = if (probes != null) probes(qi) else prober(qv)
+          val cids = prober(qv)
           val buf = new graft.functions.TopKBuffer(k)
           var ci = 0
           while (ci < cids.length) {
@@ -1471,7 +1438,7 @@ object NswGraph {
     * allocation. The merge is the same q×k `topKFrom` as every k-NN
     * path.
     *
-    * BATCH SIZE IS THE THROUGHPUT DIAL (ProfileFloor, 5M×64,
+    * BATCH SIZE IS THE THROUGHPUT DIAL (5M×64,
     * BENCH_scale_r13.json): every call pays a ~0.5 s fixed floor on a
     * 32-thread local session (the probe job, the merge stage, task
     * scheduling) plus ~26 µs/query marginal — a 10K-query batch is
@@ -1512,66 +1479,9 @@ object NswGraph {
       servablePartialsProbed(idx, probed, k, efSearch, metric, tombstones),
       k, col("_dist"), col("_nnid"), col("qid"))
 
-  /** Beam-stage isolation for ProfileFloor: run exactly the beams
-    * `servablePartialsProbed` runs (same inversion, same scratch reuse,
-    * same drains) but return only the total result COUNT — no tuple
-    * materialization, no DataFrame encoding, no merge. The gap between
-    * this and the partials stage is the row-encoding cost; the gap
-    * between this and an empty job is the true beam compute. */
-  private[graft] def servableBeamCount(
-      idx: org.apache.spark.rdd.RDD[ServableCell],
-      probed: Array[(Long, Array[Float], Array[Int])], k: Int,
-      efSearch: Int = 64, metric: String = "sqeuclidean"): Long = {
-    val spark = SparkSession.active
-    val qvecs = probed.map(_._2)
-    val inv: Map[Int, Array[Int]] = probed.iterator.zipWithIndex
-      .flatMap { case ((_, _, cells), qi) => cells.iterator.map(_ -> qi) }
-      .toArray.groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) }
-    val bcQ = spark.sparkContext.broadcast((qvecs, inv))
-    val (efs, mcode, kk) =
-      (math.max(k, efSearch), Knn.metricCode(metric), k)
-    idx.mapPartitions { it =>
-      val (vecs, byCell) = bcQ.value
-      var stamps = new Array[Int](0)
-      var nbuf = new Array[Int](64)
-      var epoch = 0
-      val candidates = new PairHeap(efs + 1, max = false)
-      val results = new PairHeap(efs + 1, max = true)
-      var total = 0L
-      it.foreach { cell =>
-        val probing = byCell.getOrElse(cell.cid, null)
-        val nn = cell.ids.length
-        if (probing != null && nn > 0) {
-          if (stamps.length < nn) { stamps = new Array[Int](nn); epoch = 0 }
-          var maxDeg = 0
-          var di = 0
-          while (di < nn) {
-            val dg = cell.adjOff(di + 1) - cell.adjOff(di)
-            if (dg > maxDeg) maxDeg = dg
-            di += 1
-          }
-          if (nbuf.length < maxDeg) nbuf = new Array[Int](maxDeg)
-          var p = 0
-          while (p < probing.length) {
-            epoch += 1
-            beamServable(cell, mcode, vecs(probing(p)), efs, stamps,
-              epoch, candidates, results, nbuf)
-            var drop = results.size - kk
-            while (drop > 0) { results.pop(); drop -= 1 }
-            total += results.size
-            while (results.size > 0) results.pop()
-            p += 1
-          }
-        }
-      }
-      Iterator.single(total)
-    }.sum().toLong
-  }
-
   /** The per-cell partial results of `searchServableProbed` BEFORE the
-    * q×k top-k merge — exposed so the profiling harness can time the
-    * beam stage apart from the merge stage. */
-  private[graft] def servablePartialsProbed(
+    * q×k top-k merge. */
+  private def servablePartialsProbed(
       idx: org.apache.spark.rdd.RDD[ServableCell],
       probed: Array[(Long, Array[Float], Array[Int])], k: Int,
       efSearch: Int = 64, metric: String = "sqeuclidean",

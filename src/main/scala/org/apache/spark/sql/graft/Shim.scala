@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.SparkStrategy
   * technique third-party Catalyst extensions use to materialize a
   * DataFrame from a hand-built LogicalPlan and to register strategies
   * on an already-created session (SparkSessionExtensions only applies
-  * at builder time).
+  * at builder time) — and into the `private[spark]` listener bus.
   */
 object Shim {
 
@@ -38,4 +38,9 @@ object Shim {
     }
   }
 
+  /** Block until every listener event posted so far has been delivered
+    * (Spark's 10 s default timeout), so counters a listener gathered
+    * for a finished action are complete when read. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

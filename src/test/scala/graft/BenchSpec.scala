@@ -70,4 +70,37 @@ class BenchSpec extends AnyFunSuite {
     assert(pass == 2 && lats.length == 3)
     assert(math.abs(total - lats.sum) < 0.25) // loop overhead only
   }
+
+  test("Profile.Collector: every job ended and every task counted " +
+      "right after the drain") {
+    val spark = TestSpark.spark
+    val collector = new Profile.Collector
+    spark.sparkContext.addSparkListener(collector)
+    try {
+      import org.apache.spark.sql.functions.col
+      // two stages: the shuffle map stage and the aggregate's result
+      spark.range(0, 2000, 1, 4).groupBy(col("id") % 7).count().collect()
+      val jobs = collector.drained(spark)
+      assert(jobs.size >= 2, jobs)
+      assert(jobs.forall(!_.wallSec.isNaN), jobs)
+      assert(jobs.map(_.stageTasks).sum > 0, jobs)
+      assert(jobs.map(_.tasksEnded).sum == jobs.map(_.stageTasks).sum, jobs)
+    } finally spark.sparkContext.removeSparkListener(collector)
+  }
+
+  test("every graft.<Main> the docs and tools name still exists") {
+    val docs = new java.io.File("tools").listFiles()
+      .filter(_.getName.endsWith(".sh")).toSeq ++
+      Seq(new java.io.File("README.md"),
+        new java.io.File(".claude/skills/verify/SKILL.md"))
+    // test suites (`testOnly graft.KnnSpec`) are not mains
+    val mainRef = """(?<!testOnly )(?<![\w.])graft\.([A-Z]\w*)""".r
+    val named = docs.flatMap(f => mainRef
+      .findAllMatchIn(java.nio.file.Files.readString(f.toPath))
+      .map(_.group(1))).distinct
+    assert(named.contains("Profile") && named.contains("Bench"), named)
+    val missing = named.filterNot(n =>
+      scala.util.Try(Class.forName(s"graft.$n$$")).isSuccess)
+    assert(missing.isEmpty, s"docs name deleted mains: $missing")
+  }
 }

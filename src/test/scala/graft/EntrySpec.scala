@@ -27,4 +27,18 @@ class EntrySpec extends AnyFunSuite {
     assert(empty.filterNot(_ == "q05_anti_join").isEmpty,
       s"queries with empty results: $empty")
   }
+
+  test("ann_pq_recall releases every cache it adds") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = SparkEntry.queries("ann_pq_recall")(spark, sf)
+    assert(df.collect().nonEmpty)
+    AnnQueries.clearAnnCache()
+    // the one-row result's own local checkpoint is the only survivor
+    val added = sc.getPersistentRDDs.filter { case (id, rdd) =>
+      !before.contains(id) && !(rdd.isCheckpointed &&
+        rdd.getCheckpointFile.isEmpty)
+    }
+    assert(added.isEmpty, s"RDDs still persisted: ${added.keys.toSeq.sorted}")
+  }
 }

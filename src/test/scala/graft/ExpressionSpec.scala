@@ -165,4 +165,18 @@ class ExpressionSpec extends AnyFunSuite {
     assert(got(1L) == Seq(9L, 11L, 12L)) // ties (1.0,9) < (1.0,11)
     assert(got(2L) == Seq(20L))
   }
+
+  test("graft_* functions reject a wrong argument count, by name") {
+    def failure(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    }
+    val one = failure("SELECT graft_intersect_count(array(1))")
+    assert(one.contains("graft_intersect_count expects 2 arguments, got 1"),
+      one)
+    val three = failure(
+      "SELECT graft_norm(array(1.0f), array(2.0f), array(3.0f))")
+    assert(three.contains("graft_norm expects 1 argument, got 3"), three)
+  }
 }
