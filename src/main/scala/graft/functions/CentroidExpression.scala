@@ -353,10 +353,10 @@ private[graft] object CentroidGroups {
 /** Top-`nprobe` nearest centroids of a vector, ordered by (dist, cid)
   * asc — the probe-ranking step of IVF search as one narrow expression
   * (no crossJoin against the centroid table, no aggregate, no
-  * shuffle). Returns array<int> of cell ids. Selection is a bounded
-  * insertion into two parallel local arrays (nprobe is small); for the
-  * workloads in SURVEY §6 the whole probe phase is q x C x dim flops
-  * inside whole-stage codegen. */
+  * shuffle). Returns array<int> of cell ids. The ranking itself is
+  * `CellProbe`, the array-level probe the driver-local serving tiers
+  * call directly; this expression only unwraps and wraps the arrays,
+  * so the distributed and local probes are one code path. */
 case class NearestCells(child: Expression, centroids: Array[Array[Float]],
     nprobe: Int) extends UnaryExpression {
   override def prettyName: String = "graft_nearest_cells"
@@ -368,46 +368,10 @@ case class NearestCells(child: Expression, centroids: Array[Array[Float]],
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
-  private def np: Int = math.min(nprobe, centroids.length)
+  @transient private lazy val probe = new CellProbe(centroids, nprobe)
 
-  override def nullSafeEval(v: Any): Any = {
-    val x = v.asInstanceOf[ArrayData].toFloatArray()
-    val ids = new Array[Int](np)
-    val ds = new Array[Double](np)
-    var filled = 0
-    var c = 0
-    while (c < centroids.length) {
-      val cen = centroids(c)
-      val n = math.min(x.length, cen.length)
-      // early abandon against the current worst of the kept top-np
-      // (exact: a partial sum >= thr can only grow, and the insertion
-      // test below is strict <) — same blocked scan as NearestCentroid
-      val thr = if (filled < np) Double.MaxValue else ds(np - 1)
-      var acc = 0.0; var i = 0
-      var dead = false
-      while (i < n && !dead) {
-        val lim = math.min(i + 16, n)
-        while (i < lim) {
-          val d = x(i).toDouble - cen(i).toDouble
-          acc += d * d; i += 1
-        }
-        dead = acc >= thr
-      }
-      // bounded insertion sort: strict < keeps lowest cid on ties
-      if (!dead && (filled < np || acc < ds(filled - 1))) {
-        var p = math.min(filled, np - 1)
-        while (p > 0 && ds(p - 1) > acc) {
-          if (p < np) { ds(p) = ds(p - 1); ids(p) = ids(p - 1) }
-          p -= 1
-        }
-        ds(p) = acc; ids(p) = c
-        if (filled < np) filled += 1
-      }
-      c += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      java.util.Arrays.copyOf(ids, filled))
-  }
+  override def nullSafeEval(v: Any): Any =
+    ArrayData.toArrayData(probe(v.asInstanceOf[ArrayData].toFloatArray()))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("nearestCells", this,
@@ -417,6 +381,75 @@ case class NearestCells(child: Expression, centroids: Array[Array[Float]],
         s"$self.nullSafeEval($a);")
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/** Array-level probe: the top-`nprobe` cell ids of a query by
+  * (dist, cid) asc, squared L2 over min(query, centroid) dims. Selection
+  * is a bounded insertion into two parallel local arrays (nprobe is
+  * small), visiting cids in ascending order with a strict `<`, so the
+  * lowest cid wins a tie. Each distance early-abandons against the
+  * current worst kept one (exact: an abandoned partial sum is already
+  * above it and the insertion test is strict).
+  *
+  * Uniform-dim centroids are copied once into one contiguous array and
+  * scanned four at a time through `Knn.sqDistBounded4` under the
+  * threshold read at the start of the group (it only tightens, so a
+  * lane past it is past the live one too); each lane is then offered
+  * in cid order against the live threshold, so the kept list equals the
+  * one-at-a-time scan's, NaN and ties included (KnnSpec probe-parity
+  * pin). Ragged centroid rows and the remainder past the last group of
+  * four take the single-row `Knn.distBoundedSlices`. Immutable after
+  * construction, so one instance serves concurrent callers. */
+private[graft] final class CellProbe(centroids: Array[Array[Float]],
+    nprobe: Int) extends (Array[Float] => Array[Int]) {
+  private[this] val np = math.min(nprobe, centroids.length)
+  private[this] val dim = if (centroids.isEmpty) 0 else centroids(0).length
+  private[this] val flat = graft.operators.Knn.flattenUniform(centroids)
+
+  def apply(x: Array[Float]): Array[Int] = {
+    val ids = new Array[Int](np)
+    val ds = new Array[Double](np)
+    var filled = 0
+    var c = 0
+    if (flat != null) {
+      val n = math.min(x.length, dim)
+      val out = new Array[Double](4)
+      while (c + 4 <= centroids.length) {
+        val thr = if (filled < np) Double.MaxValue else ds(np - 1)
+        graft.operators.Knn.sqDistBounded4(flat, c * dim, (c + 1) * dim,
+          (c + 2) * dim, (c + 3) * dim, n, x, thr, out)
+        filled = offer(ids, ds, filled, out(0), c)
+        filled = offer(ids, ds, filled, out(1), c + 1)
+        filled = offer(ids, ds, filled, out(2), c + 2)
+        filled = offer(ids, ds, filled, out(3), c + 3)
+        c += 4
+      }
+    }
+    while (c < centroids.length) {
+      val cen = centroids(c)
+      val thr = if (filled < np) Double.MaxValue else ds(np - 1)
+      filled = offer(ids, ds, filled, graft.operators.Knn.distBoundedSlices(
+        0, cen, 0, cen.length, x, 0, x.length, thr), c)
+      c += 1
+    }
+    java.util.Arrays.copyOf(ids, filled)
+  }
+
+  /** Offer cell `c` at distance `d` (exact whenever it is below the
+    * live threshold) to the kept list; returns the new fill count. */
+  private def offer(ids: Array[Int], ds: Array[Double], filled: Int,
+      d: Double, c: Int): Int = {
+    val thr = if (filled < np) Double.MaxValue else ds(np - 1)
+    if (!(d >= thr) && (filled < np || d < ds(filled - 1))) {
+      var p = math.min(filled, np - 1)
+      while (p > 0 && ds(p - 1) > d) {
+        if (p < np) { ds(p) = ds(p - 1); ids(p) = ids(p - 1) }
+        p -= 1
+      }
+      ds(p) = d; ids(p) = c
+      if (filled < np) filled + 1 else filled
+    } else filled
+  }
 }
 
 /** Two-level probe ranking (r19): `NearestCells`' √C twin — the

@@ -1139,20 +1139,9 @@ object AnnIvf {
             cids(i) = members(i)._1; ids(i) = members(i)._2
             vecs(i) = members(i)._3; attrs(i) = members(i)._4; i += 1
           }
-          val dim = vecs(0).length
-          val flattenable = dim > 0 && n.toLong * dim <= Int.MaxValue &&
-            vecs.forall(_.length == dim)
-          val flat =
-            if (flattenable) {
-              val f = new Array[Float](n * dim)
-              i = 0
-              while (i < n) {
-                System.arraycopy(vecs(i), 0, f, i * dim, dim); i += 1
-              }
-              f
-            } else null
-          Iterator.single(FlatBlock(ids, cids, dim, flat,
-            if (flattenable) null else vecs,
+          val flat = Knn.flattenUniform(vecs)
+          Iterator.single(FlatBlock(ids, cids, vecs(0).length, flat,
+            if (flat != null) null else vecs,
             if (attrCol.isDefined) attrs else null))
         }
       }
@@ -1746,8 +1735,8 @@ object AnnIvf {
     * merged global top-k; a partial distance returned past the
     * tighter bound is never inserted (the `d <= bound` guard —
     * `Knn.distBounded`'s exact-iff-at-most-bound contract). With
-    * `sharedBounds == null` the code path is the r17 one, byte for
-    * byte. Rows identical either way (ShardedSpec). */
+    * `sharedBounds == null` every row is computed against the heap's
+    * own bound, as in r17. Rows identical either way (ShardedSpec). */
   private[graft] def localCellCoreSlots(rep: LocalCellReplica,
       queries: Array[(Long, Array[Float])], k: Int, nprobe: Int,
       metric: String, attrPred: Option[Double => Boolean],
@@ -1778,7 +1767,7 @@ object AnnIvf {
     val prober: Array[Float] => Array[Int] =
       if (exhaustive) null
       else if (proberOverride != null) proberOverride
-      else NswGraph.nearestCellsLocal(rep.centroidMatrix, nprobe)
+      else new graft.functions.CellProbe(rep.centroidMatrix, nprobe)
     // EXHAUSTIVE path: resolve the attr + tombstone checks ONCE per
     // call into a survivor index list (the local twin of Knn.exact
     // scanning an already-filtered relation) — every query in the
@@ -1850,18 +1839,57 @@ object AnnIvf {
         if (d <= ext) h.insert(d, rep.ids(i))
       } else h.insert(rowDist(qv, i, hb), rep.ids(i))
     }
+    // squared-L2 flat rows go four at a time: `distTo`'s rule per lane
+    // under the bounds read at the start of the group, inserted in row
+    // order. Bounds only tighten, so a lane past the group's bound is
+    // past the live one too, and a lane within it is exact — the heap
+    // ends as the one-at-a-time scan leaves it.
+    val laneKernel = rep.flat != null && mcode == 0
+    def distTo4(h: graft.functions.TopKBuffer, qv: Array[Float],
+        r0: Int, r1: Int, r2: Int, r3: Int, ext: Double,
+        lanes: Array[Double]): Unit = {
+      val hb = h.bound
+      val exactOnly = ext < hb
+      val b = if (exactOnly) ext else hb
+      val dim = rep.dim
+      Knn.sqDistBounded4(rep.flat, r0 * dim, r1 * dim, r2 * dim, r3 * dim,
+        math.min(dim, qv.length), qv, b, lanes)
+      insertLane(h, lanes(0), r0, b, exactOnly)
+      insertLane(h, lanes(1), r1, b, exactOnly)
+      insertLane(h, lanes(2), r2, b, exactOnly)
+      insertLane(h, lanes(3), r3, b, exactOnly)
+    }
+    // exact-only (the shared bound was tighter): `distTo`'s `d <= ext`;
+    // otherwise skip only a lane above the heap bound, which `insert`
+    // would reject anyway (NaN still goes to `insert`, as in `distTo`)
+    def insertLane(h: graft.functions.TopKBuffer, d: Double, row: Int,
+        b: Double, exactOnly: Boolean): Unit =
+      if (if (exactOnly) d <= b else !(d > b)) h.insert(d, rep.ids(row))
     def scanCell(h: graft.functions.TopKBuffer, qv: Array[Float],
-        from: Int, until: Int, ext: Double): Unit = {
+        from: Int, until: Int, ext: Double,
+        grp: Array[Int], lanes: Array[Double]): Unit = {
       var i = from
+      var g = 0 // kept rows waiting in `grp`
       while (i < until) {
         val keep = (pred == null || pred(rep.attrs(i))) &&
           (idBits == null ||
             (idBits(i >> 6) >>> (i & 63) & 1L) != 0L) &&
           (tomb == null ||
             java.util.Arrays.binarySearch(tomb, rep.ids(i)) < 0)
-        if (keep) distTo(h, qv, i, ext)
+        if (keep) {
+          if (lanes == null) distTo(h, qv, i, ext)
+          else {
+            grp(g) = i; g += 1
+            if (g == 4) {
+              distTo4(h, qv, grp(0), grp(1), grp(2), grp(3), ext, lanes)
+              g = 0
+            }
+          }
+        }
         i += 1
       }
+      var r = 0
+      while (r < g) { distTo(h, qv, grp(r), ext); r += 1 }
     }
     def publish(h: graft.functions.TopKBuffer, qi: Int): Unit =
       if (sharedBounds != null) {
@@ -1872,18 +1900,27 @@ object AnnIvf {
       if (sharedBounds == null) Double.PositiveInfinity
       else sharedBounds.get(qi)
     def runWorker(): Unit = {
+      val grp = if (laneKernel) new Array[Int](4) else null
+      val lanes = if (laneKernel) new Array[Double](4) else null
       var qi = next.getAndIncrement()
       while (qi < nQ) {
         val (qid, qv) = queries(qi)
         val h = new graft.functions.TopKBuffer(k)
         if (exhaustive) {
-          if (survIdx == null) scanCell(h, qv, 0, rep.ids.length, extOf(qi))
+          if (survIdx == null)
+            scanCell(h, qv, 0, rep.ids.length, extOf(qi), grp, lanes)
           else {
             var ext = extOf(qi)
             var s = 0
             while (s < survIdx.length) {
-              distTo(h, qv, survIdx(s), ext)
-              s += 1
+              if (lanes != null && s + 4 <= survIdx.length) {
+                distTo4(h, qv, survIdx(s), survIdx(s + 1), survIdx(s + 2),
+                  survIdx(s + 3), ext, lanes)
+                s += 4
+              } else {
+                distTo(h, qv, survIdx(s), ext)
+                s += 1
+              }
               // refresh/publish every 8K survivors: cheap against the
               // scan, fresh enough to matter under the parallel fan
               if (sharedBounds != null && (s & 8191) == 0) {
@@ -1898,7 +1935,7 @@ object AnnIvf {
             val cell = rep.byCid.get(cids(ci))
             if (cell != null) {
               scanCell(h, qv, rep.cellOff(cell), rep.cellOff(cell + 1),
-                extOf(qi))
+                extOf(qi), grp, lanes)
               publish(h, qi)
             }
             ci += 1

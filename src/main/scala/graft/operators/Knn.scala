@@ -129,7 +129,14 @@ object Knn {
     * bound is the exact distance; a return > bound only promises the
     * exact distance is also > bound (callers may only compare such a
     * value against `bound`). Dot/cosine accumulate signed terms and
-    * always compute in full. */
+    * always compute in full.
+    *
+    * `sqDistBounded4` is the 4-lane twin for squared L2: each of its
+    * lanes runs THIS accumulation order (row minus query, one double
+    * add per dim, abandon test after every 16-dim block) and freezes
+    * at the block where this loop would return, so every lane equals
+    * this function's return for the same row and bound, bit for bit
+    * (KnnSpec lane-parity pin). */
   def distBoundedSlices(mcode: Int,
       a: Array[Float], aOff: Int, aLen: Int,
       b: Array[Float], bOff: Int, bLen: Int,
@@ -173,6 +180,61 @@ object Knn {
           if (acc.toDouble > bound) return acc.toDouble
         }
         acc.toDouble
+    }
+  }
+
+  /** Squared L2 of FOUR rows of `flat` (starting at `o0..o3`) against
+    * `q`, over the first `n` dims, written to `out(0..3)`. One
+    * distance is a single chain of dependent double adds, bound by add
+    * latency; four independent chains interleaved keep the adder busy.
+    * Each lane is `distBoundedSlices(0, flat, oL, n, q, 0, n, bound)`
+    * exactly (see there); a lane past the bound keeps its frozen
+    * value, and the call returns once all four are past it. Callers
+    * group four rows that share one bound and evaluate any remainder
+    * with the single-row kernel. */
+  def sqDistBounded4(flat: Array[Float], o0: Int, o1: Int, o2: Int,
+      o3: Int, n: Int, q: Array[Float], bound: Double,
+      out: Array[Double]): Unit = {
+    var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+    var live = 15 // bit L set while lane L is at or below the bound
+    var i = 0
+    while (i < n) {
+      val lim = math.min(i + 16, n)
+      while (i < lim) {
+        val x = q(i).toDouble
+        val d0 = flat(o0 + i).toDouble - x; a0 += d0 * d0
+        val d1 = flat(o1 + i).toDouble - x; a1 += d1 * d1
+        val d2 = flat(o2 + i).toDouble - x; a2 += d2 * d2
+        val d3 = flat(o3 + i).toDouble - x; a3 += d3 * d3
+        i += 1
+      }
+      if ((live & 1) != 0 && a0 > bound) { out(0) = a0; live &= ~1 }
+      if ((live & 2) != 0 && a1 > bound) { out(1) = a1; live &= ~2 }
+      if ((live & 4) != 0 && a2 > bound) { out(2) = a2; live &= ~4 }
+      if ((live & 8) != 0 && a3 > bound) { out(3) = a3; live &= ~8 }
+      if (live == 0) return
+    }
+    if ((live & 1) != 0) out(0) = a0
+    if ((live & 2) != 0) out(1) = a1
+    if ((live & 4) != 0) out(2) = a2
+    if ((live & 8) != 0) out(3) = a3
+  }
+
+  /** One contiguous row-major copy of `rows` — the flat layout the
+    * kernels above read — or null when there is nothing to flatten or
+    * it cannot be flattened: no rows, zero dims, ragged rows, or more
+    * elements than an Int offset reaches. */
+  def flattenUniform(rows: Array[Array[Float]]): Array[Float] = {
+    val dim = if (rows.isEmpty) 0 else rows(0).length
+    if (dim == 0 || rows.length.toLong * dim > Int.MaxValue ||
+        !rows.forall(_.length == dim)) null
+    else {
+      val f = new Array[Float](rows.length * dim)
+      var i = 0
+      while (i < rows.length) {
+        System.arraycopy(rows(i), 0, f, i * dim, dim); i += 1
+      }
+      f
     }
   }
 

@@ -33,43 +33,69 @@ object NswGraph {
     * it replaces allocated a tuple per visited node, which dominated
     * graph-build wall time at 5M-row scale. `max = true` keeps the
     * LARGEST pair on top (the bounded result set), `max = false` the
-    * smallest (the candidate frontier). */
+    * smallest (the candidate frontier). The polarity test sits outside
+    * the sift loops and the backing arrays are read through locals:
+    * the C1 JIT hoists neither on its own. */
   private[graft] final class PairHeap(cap0: Int, max: Boolean) {
     private var ds = new Array[Double](math.max(cap0, 8))
     private var is = new Array[Int](ds.length)
     var size = 0
     def headDist: Double = ds(0)
     def headIdx: Int = is(0)
-    // "a should sit above b": lexicographic (dist, idx), flipped by max
-    private def above(da: Double, ia: Int, db: Double, ib: Int): Boolean =
-      if (max) da > db || (da == db && ia > ib)
-      else da < db || (da == db && ia < ib)
     def push(d: Double, i: Int): Unit = {
       if (size == ds.length) {
         ds = java.util.Arrays.copyOf(ds, size * 2)
         is = java.util.Arrays.copyOf(is, size * 2)
       }
+      val dv = ds; val iv = is
       var c = size; size += 1
-      while (c > 0 && above(d, i, ds((c - 1) / 2), is((c - 1) / 2))) {
-        ds(c) = ds((c - 1) / 2); is(c) = is((c - 1) / 2); c = (c - 1) / 2
-      }
-      ds(c) = d; is(c) = i
+      var p = (c - 1) >> 1
+      // sift up while (d, i) belongs above its parent
+      if (max)
+        while (c > 0 && (d > dv(p) || (d == dv(p) && i > iv(p)))) {
+          dv(c) = dv(p); iv(c) = iv(p); c = p; p = (c - 1) >> 1
+        }
+      else
+        while (c > 0 && (d < dv(p) || (d == dv(p) && i < iv(p)))) {
+          dv(c) = dv(p); iv(c) = iv(p); c = p; p = (c - 1) >> 1
+        }
+      dv(c) = d; iv(c) = i
     }
     def pop(): Unit = {
       size -= 1
-      val d = ds(size); val i = is(size)
+      val dv = ds; val iv = is; val n = size
+      val d = dv(n); val i = iv(n)
       var c = 0
       var done = false
-      while (!done) {
-        val l = 2 * c + 1; val r = l + 1
-        var b = c
-        var bd = d; var bi = i
-        if (l < size && above(ds(l), is(l), bd, bi)) { b = l; bd = ds(l); bi = is(l) }
-        if (r < size && above(ds(r), is(r), bd, bi)) { b = r; bd = ds(r); bi = is(r) }
-        if (b == c) done = true
-        else { ds(c) = ds(b); is(c) = is(b); c = b }
-      }
-      ds(c) = d; is(c) = i
+      // sift the last pair down from the root: each step moves up the
+      // child that belongs above both it and (d, i), if any
+      if (max)
+        while (!done) {
+          val l = 2 * c + 1; val r = l + 1
+          var b = c; var bd = d; var bi = i
+          if (l < n && (dv(l) > bd || (dv(l) == bd && iv(l) > bi))) {
+            b = l; bd = dv(l); bi = iv(l)
+          }
+          if (r < n && (dv(r) > bd || (dv(r) == bd && iv(r) > bi))) {
+            b = r; bd = dv(r); bi = iv(r)
+          }
+          if (b == c) done = true
+          else { dv(c) = bd; iv(c) = bi; c = b }
+        }
+      else
+        while (!done) {
+          val l = 2 * c + 1; val r = l + 1
+          var b = c; var bd = d; var bi = i
+          if (l < n && (dv(l) < bd || (dv(l) == bd && iv(l) < bi))) {
+            b = l; bd = dv(l); bi = iv(l)
+          }
+          if (r < n && (dv(r) < bd || (dv(r) == bd && iv(r) < bi))) {
+            b = r; bd = dv(r); bi = iv(r)
+          }
+          if (b == c) done = true
+          else { dv(c) = bd; iv(c) = bi; c = b }
+        }
+      dv(c) = d; iv(c) = i
     }
     /** Reset for reuse across beam calls — keeps the backing arrays. */
     def clear(): Unit = size = 0
@@ -102,17 +128,9 @@ object NswGraph {
     def size: Int = vecs.length
     private[this] val mcode = Knn.metricCode(metric)
     private[this] val dim = if (vecs.isEmpty) 0 else vecs(0).length
+    // null for a ragged/oversize cell or a one-off serve: per-row rows
     private[this] val flat: Array[Float] =
-      if (flatten && dim > 0 &&
-          vecs.length.toLong * dim <= Int.MaxValue &&
-          vecs.forall(_.length == dim)) {
-        val f = new Array[Float](vecs.length * dim)
-        var i = 0
-        while (i < vecs.length) {
-          System.arraycopy(vecs(i), 0, f, i * dim, dim); i += 1
-        }
-        f
-      } else null // ragged/oversize cell or one-off serve: per-row rows
+      if (flatten) Knn.flattenUniform(vecs) else null
     def dist(i: Int, q: Array[Float]): Double =
       distUpTo(i, q, Double.PositiveInfinity)
     def distUpTo(i: Int, q: Array[Float], bound: Double): Double =
@@ -749,17 +767,7 @@ object NswGraph {
   private[operators] def decodeCell(g: CellGraph): ServableCell = {
     val n = g.vecs.length
     val dim = if (n == 0) 0 else g.vecs(0).length
-    val flattenable = dim > 0 && n.toLong * dim <= Int.MaxValue &&
-      g.vecs.forall(_.length == dim)
-    val flat =
-      if (flattenable) {
-        val f = new Array[Float](n * dim)
-        var i = 0
-        while (i < n) {
-          System.arraycopy(g.vecs(i), 0, f, i * dim, dim); i += 1
-        }
-        f
-      } else null
+    val flat = Knn.flattenUniform(g.vecs)
     val adjOff = new Array[Int](n + 1)
     var i = 0
     while (i < n) { adjOff(i + 1) = adjOff(i) + g.adj(i).length; i += 1 }
@@ -770,7 +778,7 @@ object NswGraph {
       i += 1
     }
     ServableCell(g.cid, g.ids, dim, flat,
-      if (flattenable) null else g.vecs, adjFlat, adjOff)
+      if (flat != null) null else g.vecs, adjFlat, adjOff)
   }
 
   /** Beam search over a ServableCell — semantically IDENTICAL to
@@ -789,10 +797,18 @@ object NswGraph {
     * unstamped neighbors into `nbuf` and TOUCHES one float per cache
     * line of each neighbor's row (independent loads — the core
     * overlaps all ~28 misses instead of serializing them behind each
-    * distance loop); pass 2 evaluates distances in the SAME order
-    * with the same evolving bound, so accepted sets, heap states, and
-    * tie-breaks are exactly the single-pass ones. `nbuf` is caller
-    * scratch ≥ the cell's max degree. */
+    * distance loop); pass 2 evaluates distances in the SAME order.
+    * On squared-L2 flat cells it takes the collected neighbors four at
+    * a time through `Knn.sqDistBounded4` (four independent add chains
+    * instead of one latency-bound chain) under the bound read at the
+    * start of the group, then offers each lane in order to the live
+    * heap with the single-pass acceptance test. The group bound is
+    * never tighter than the live one, so an accepted distance is
+    * exact and a lane past it is rejected by the live test too; the
+    * remainder, and fp16/ragged/non-L2 cells, go one at a time with
+    * the live bound. Accepted sets, heap states, and tie-breaks are
+    * therefore exactly the single-pass ones. `nbuf` is caller scratch
+    * ≥ the cell's max degree. */
   private[graft] def beamServable(cell: ServableCell, mcode: Int,
       target: Array[Float], ef: Int, stamps: Array[Int], epoch: Int,
       candidates: PairHeap, results: PairHeap,
@@ -807,6 +823,17 @@ object NswGraph {
       else if (half != null)
         Knn.distBoundedHalf(mcode, half, i * dim, dim, target, bound)
       else Knn.distBounded(mcode, cell.rows(i), target, bound)
+    // accept `nb` at `d` (exact whenever it is within the bound it was
+    // computed under, which is never tighter than the live one)
+    def offer(d: Double, nb: Int): Unit =
+      if (results.size < ef || d < results.headDist ||
+        (d == results.headDist && nb < results.headIdx)) {
+        candidates.push(d, nb)
+        results.push(d, nb)
+        if (results.size > ef) results.pop()
+      }
+    val lanes = if (flat != null && mcode == 0) new Array[Double](4) else null
+    val qn = math.min(dim, target.length)
     val d0 = distTo(0, Double.PositiveInfinity) // entry node = 0
     candidates.push(d0, 0); results.push(d0, 0)
     stamps(0) = epoch
@@ -840,19 +867,27 @@ object NswGraph {
           }
           j += 1
         }
-        // pass 2: evaluate in the same order, same evolving bound
+        // pass 2: evaluate in the same order; squared-L2 flat rows
+        // four at a time under the bound read at the start of the
+        // group, then each lane re-tested, in order, against the live
+        // heap
         var x = 0
+        if (lanes != null)
+          while (x + 4 <= bn) {
+            val n0 = nbuf(x); val n1 = nbuf(x + 1)
+            val n2 = nbuf(x + 2); val n3 = nbuf(x + 3)
+            Knn.sqDistBounded4(flat, n0 * dim, n1 * dim, n2 * dim,
+              n3 * dim, qn, target,
+              if (results.size >= ef) results.headDist
+              else Double.PositiveInfinity, lanes)
+            offer(lanes(0), n0); offer(lanes(1), n1)
+            offer(lanes(2), n2); offer(lanes(3), n3)
+            x += 4
+          }
         while (x < bn) {
           val nb = nbuf(x)
-          val full = results.size >= ef
-          val d = distTo(nb,
-            if (full) results.headDist else Double.PositiveInfinity)
-          if (!full || d < results.headDist ||
-            (d == results.headDist && nb < results.headIdx)) {
-            candidates.push(d, nb)
-            results.push(d, nb)
-            if (results.size > ef) results.pop()
-          }
+          offer(distTo(nb, if (results.size >= ef) results.headDist
+            else Double.PositiveInfinity), nb)
           x += 1
         }
       }
@@ -933,8 +968,8 @@ object NswGraph {
     *
     * Results are BIT-IDENTICAL to `searchServable` over the same
     * index (NswSpec pins full-row equality, masked and unmasked):
-    * probe lists come from the same `NearestCells.nullSafeEval` the
-    * distributed probe expression runs, distances from the same
+    * probe lists come from the same `CellProbe` the distributed
+    * probe expression (`NearestCells`) wraps, distances from the same
     * `Knn.distBounded*` kernel, ties from the same (dist, id)
     * comparators.
     *
@@ -1186,24 +1221,6 @@ object NswGraph {
     }
   }
 
-  /** Local probe: the EXACT arithmetic, early-abandon and (dist, cid)
-    * tie-break of the distributed probe path, by construction — it
-    * calls the same `NearestCells.nullSafeEval` the codegen'd
-    * expression dispatches to, on the replica's collected centroid
-    * matrix. */
-  private[graft] def nearestCellsLocal(matrix: Array[Array[Float]],
-      nprobe: Int): Array[Float] => Array[Int] = {
-    val expr = graft.functions.NearestCells(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        null, org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      matrix, nprobe)
-    qv => expr.nullSafeEval(
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(qv))
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toIntArray()
-  }
-
   /** Run `work` on `workers` shared-pool threads and await them all;
     * the first worker failure rethrows on the caller. The local
     * serving kernels (this object's and `AnnIvf.localCellCore`) share
@@ -1295,7 +1312,7 @@ object NswGraph {
     val efs = math.max(k, efSearch)
     val mcode = Knn.metricCode(metric)
     val tomb: Array[Long] = tombstones.orNull
-    val prober = nearestCellsLocal(rep.centroidMatrix, nprobe)
+    val prober = new graft.functions.CellProbe(rep.centroidMatrix, nprobe)
     val perQuery = new Array[Array[(Long, Long, Long, Double)]](nQ)
     // one worker per ~4 queries up to the core count: a 100-query
     // batch fans to 25 workers; a 4-query batch skips most of the

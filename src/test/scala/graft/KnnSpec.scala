@@ -1210,4 +1210,123 @@ class KnnSpec extends AnyFunSuite {
         "searchPersisted(twoLevel) must row-match the local dial")
     } finally cells.unpersist()
   }
+
+  test("sqDistBounded4: every lane equals distBoundedSlices bit for bit " +
+      "(dims 1..100, bounds 0 / +Inf / each lane's own distance, NaN)") {
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    val rnd = new scala.util.Random(41)
+    val out = new Array[Double](4)
+    for (dim <- Seq(1, 15, 16, 17, 63, 64, 100); trial <- 0 until 30) {
+      val rows = 6
+      // small integer grid values make exact ties and exact-bound hits
+      // common; a few NaN and +Inf components land in rows or the query
+      def value(): Float =
+        rnd.nextInt(300) match {
+          case 0 => Float.NaN
+          case 1 => Float.PositiveInfinity
+          case _ => (rnd.nextInt(7) - 3).toFloat
+        }
+      val flat = Array.fill(rows * dim)(value())
+      val q = Array.fill(dim)(value())
+      // offsets may repeat a row across lanes
+      val offs = Array.fill(4)(rnd.nextInt(rows) * dim)
+      val full = offs.map(o =>
+        Knn.distBoundedSlices(0, flat, o, dim, q, 0, dim,
+          Double.PositiveInfinity))
+      val bounds = Seq(0.0, Double.PositiveInfinity,
+        rnd.nextInt(4 * dim).toDouble) ++ full.filterNot(_.isNaN)
+      bounds.foreach { bound =>
+        Knn.sqDistBounded4(flat, offs(0), offs(1), offs(2), offs(3), dim,
+          q, bound, out)
+        (0 until 4).foreach { l =>
+          val ref = Knn.distBoundedSlices(0, flat, offs(l), dim, q, 0, dim,
+            bound)
+          val ctx = s"dim=$dim trial=$trial bound=$bound lane=$l"
+          if (ref <= bound) assert(bits(out(l)) == bits(ref), ctx)
+          else if (ref > bound) assert(out(l) > bound, ctx)
+          else assert(out(l).isNaN, ctx)
+          // the lane also freezes where the single-row scan returns
+          assert(bits(out(l)) == bits(ref), ctx)
+        }
+      }
+    }
+  }
+
+  /** The one-centroid-at-a-time probe loop `NearestCells` ran before
+    * the 4-lane probe — kept as the parity reference. */
+  private def sequentialProbe(centroids: Array[Array[Float]], nprobe: Int,
+      x: Array[Float]): Array[Int] = {
+    val np = math.min(nprobe, centroids.length)
+    val ids = new Array[Int](np)
+    val ds = new Array[Double](np)
+    var filled = 0
+    var c = 0
+    while (c < centroids.length) {
+      val cen = centroids(c)
+      val n = math.min(x.length, cen.length)
+      val thr = if (filled < np) Double.MaxValue else ds(np - 1)
+      var acc = 0.0; var i = 0
+      var dead = false
+      while (i < n && !dead) {
+        val lim = math.min(i + 16, n)
+        while (i < lim) {
+          val d = x(i).toDouble - cen(i).toDouble
+          acc += d * d; i += 1
+        }
+        dead = acc >= thr
+      }
+      if (!dead && (filled < np || acc < ds(filled - 1))) {
+        var p = math.min(filled, np - 1)
+        while (p > 0 && ds(p - 1) > acc) {
+          if (p < np) { ds(p) = ds(p - 1); ids(p) = ids(p - 1) }
+          p -= 1
+        }
+        ds(p) = acc; ids(p) = c
+        if (filled < np) filled += 1
+      }
+      c += 1
+    }
+    java.util.Arrays.copyOf(ids, filled)
+  }
+
+  test("CellProbe: 4-lane probe lists equal the sequential NearestCells " +
+      "loop (C 1..257, nprobe 1..C+1, duplicates, ragged rows, NaN)") {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val rnd = new scala.util.Random(43)
+    def vec(dim: Int): Array[Float] =
+      Array.fill(dim)((rnd.nextInt(5) - 2).toFloat)
+    def check(cents: Array[Array[Float]], np: Int, x: Array[Float],
+        ctx: String): Unit = {
+      val want = sequentialProbe(cents, np, x).toSeq
+      assert(new graft.functions.CellProbe(cents, np)(x).toSeq == want, ctx)
+      val expr = graft.functions.NearestCells(
+        org.apache.spark.sql.catalyst.expressions.Literal(1), cents, np)
+      assert(expr.nullSafeEval(ArrayData.toArrayData(x))
+        .asInstanceOf[ArrayData].toIntArray().toSeq == want, ctx)
+    }
+    val dim = 17
+    for (c <- Seq(1, 3, 4, 5, 255, 256, 257);
+         np <- Seq(1, 4, c, c + 1).distinct) {
+      // a small pool makes duplicate centroids (and exact ties) common
+      val pool = Array.fill(math.max(2, c / 3))(vec(dim))
+      val cents = Array.fill(c)(pool(rnd.nextInt(pool.length)).clone())
+      (0 until 8).foreach { t =>
+        val x = vec(dim)
+        check(cents, np, x, s"C=$c np=$np t=$t")
+        val nan = x.clone(); nan(rnd.nextInt(dim)) = Float.NaN
+        check(cents, np, nan, s"C=$c np=$np t=$t NaN query")
+        // a query shorter and one longer than the centroids
+        check(cents, np, x.take(5), s"C=$c np=$np t=$t short query")
+        check(cents, np, x ++ vec(3), s"C=$c np=$np t=$t long query")
+      }
+      val ragged = Array.tabulate(c)(i => vec(1 + rnd.nextInt(2 * dim)))
+      (0 until 8).foreach { t =>
+        check(ragged, np, vec(dim), s"C=$c np=$np t=$t ragged")
+      }
+    }
+    // identical centroids: the lowest cids win, in cid order
+    val same = Array.fill(9)(Array.fill(dim)(1f))
+    assert(new graft.functions.CellProbe(same, 5)(vec(dim)).toSeq ==
+      (0 until 5))
+  }
 }

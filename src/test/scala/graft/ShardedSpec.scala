@@ -293,8 +293,8 @@ class ShardedSpec extends AnyFunSuite {
       // argmin sees every cell — probe list == flat argmin's
       val full = AnnIvf.twoLevelProberLocal(supM, rep.centroidMatrix,
         members, wSuper = supM.length, nprobe = nprobe)
-      val flatProber = graft.operators.NswGraph
-        .nearestCellsLocal(rep.centroidMatrix, nprobe)
+      val flatProber =
+        new graft.functions.CellProbe(rep.centroidMatrix, nprobe)
       qArr.foreach { case (_, qv) =>
         assert(full(qv).toSeq == flatProber(qv).toSeq)
       }
