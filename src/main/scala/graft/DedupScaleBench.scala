@@ -31,7 +31,6 @@ object DedupScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
 
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

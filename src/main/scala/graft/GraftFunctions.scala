@@ -1,16 +1,22 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.Shim.{column, expression}
 
 import graft.functions._
 
-/** Registration + typed Column wrappers for the engine's native
-  * Catalyst expressions. Registering through the session's
-  * FunctionRegistry keeps every function visible to Catalyst (codegen,
-  * constant folding, null propagation) and usable from both the Column
-  * DSL (via `call_function`) and `spark.sql`.
+/** Typed Column wrappers for the engine's native Catalyst expressions,
+  * and `register` for SQL text.
+  *
+  * Each wrapper builds its expression directly from typed Scala values
+  * (e.g. `NearestCells(expression(vec), centroids, nprobe)`), so the
+  * Column DSL needs no registration and works on any session; Catalyst
+  * still sees the native expression (codegen, constant folding, null
+  * propagation). `register` installs the `graft_*` names in a session's
+  * FunctionRegistry for `spark.sql` / `expr` text only. Its builders
+  * check the argument count and evaluate the literal arguments, because
+  * SQL arguments come from outside the program.
   */
 object GraftFunctions {
 
@@ -123,66 +129,56 @@ object GraftFunctions {
     }
   }
 
-  // Column-DSL wrappers (resolve through the active session's registry).
-  def sqDist(a: Column, b: Column): Column = call_function("graft_sqdist", a, b)
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-  def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
-  def norm(a: Column): Column = call_function("graft_norm", a)
-  def packBits(a: Column): Column = call_function("graft_packbits", a)
-  def hamming(a: Column, b: Column): Column = call_function("graft_hamming", a, b)
-  def simHash(a: Column): Column = call_function("graft_simhash", a)
-  def hamming64(a: Column, b: Column): Column = call_function("graft_hamming64", a, b)
-  def shingles(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_shingles", text, lit(n))
-  }
-  def minHash(shingles: Column, numHashes: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_minhash", shingles, lit(numHashes))
-  }
-  def lshBands(sig: Column, bands: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_lsh_bands", sig, lit(bands))
-  }
-  def vecSum(a: Column): Column = call_function("graft_vecsum", a)
+  // Column-DSL wrappers: each builds its expression, no registry.
+  def sqDist(a: Column, b: Column): Column =
+    column(VectorSqDist(expression(a), expression(b)))
+  def dot(a: Column, b: Column): Column =
+    column(VectorDot(expression(a), expression(b)))
+  def cosine(a: Column, b: Column): Column =
+    column(VectorCosine(expression(a), expression(b)))
+  def norm(a: Column): Column = column(VectorNorm(expression(a)))
+  def packBits(a: Column): Column = column(PackSignBits(expression(a)))
+  def hamming(a: Column, b: Column): Column =
+    column(HammingDistance(expression(a), expression(b)))
+  def simHash(a: Column): Column = column(SimHash64(expression(a)))
+  def hamming64(a: Column, b: Column): Column =
+    column(HammingDistance64(expression(a), expression(b)))
+  def shingles(text: Column, n: Int): Column =
+    column(NGramShingles(expression(text), n))
+  def minHash(shingles: Column, numHashes: Int): Column =
+    column(MinHashSignature(expression(shingles), numHashes))
+  def lshBands(sig: Column, bands: Int): Column =
+    column(LshBandHashes(expression(sig), bands))
+  def vecSum(a: Column): Column =
+    column(VectorSum(expression(a)).toAggregateExpression())
   /** One-pass fixed-term occurrence counts — see TermCounts. */
-  def termCounts(toks: Column, terms: Seq[String]): Column = {
-    import org.apache.spark.sql.functions.typedlit
-    call_function("graft_term_counts", toks, typedlit(terms))
-  }
+  def termCounts(toks: Column, terms: Seq[String]): Column =
+    column(TermCounts(expression(toks), terms))
   /** Fused `conv(substring(md5(x), 1, nHex), 16, 10).cast("long")` —
     * bit-identical, see Md5PrefixLong. */
-  def md5Prefix(text: Column, nHex: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_md5_prefix", text, lit(nHex))
-  }
+  def md5Prefix(text: Column, nHex: Int): Column =
+    column(Md5PrefixLong(expression(text), nHex))
   /** Fused `substring(md5(x), 1, nHex)` — byte-identical, see
     * Md5PrefixStr. */
-  def md5PrefixStr(text: Column, nHex: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_md5_prefix_str", text, lit(nHex))
-  }
-  def vecSumLong(a: Column): Column = call_function("graft_vecsum_long", a)
+  def md5PrefixStr(text: Column, nHex: Int): Column =
+    column(Md5PrefixStr(expression(text), nHex))
+  def vecSumLong(a: Column): Column =
+    column(VectorSumLong(expression(a)).toAggregateExpression())
   /** Fused `size(array_intersect(a, b))` — identical count, no
     * intersection-array materialization; see IntersectCardinality. */
   def intersectCount(a: Column, b: Column): Column =
-    call_function("graft_intersect_count", a, b)
-  def repetition(text: Column): Column = call_function("graft_repetition", text)
+    column(IntersectCardinality(expression(a), expression(b)))
+  def repetition(text: Column): Column =
+    column(RepetitionStats(expression(text)))
 
-  /** Bloom-filter membership probe. The filter object cannot be a SQL
-    * literal, so the expression is registered (capturing the filter)
-    * and resolved immediately — re-registration on the next call is
-    * fine because resolution happens at analysis time. */
-  def bloomMightContain(spark: SparkSession, text: Column,
-      bf: org.apache.spark.util.sketch.BloomFilter): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      withArity("graft_bloom_contains", 1)(es => BloomMightContain(es(0), bf)),
-      "built-in")
-    call_function("graft_bloom_contains", text)
-  }
-  def fp16Encode(a: Column): Column = call_function("graft_fp16_encode", a)
-  def fp16Decode(a: Column): Column = call_function("graft_fp16_decode", a)
+  /** Bloom-filter membership probe. The filter is a field of the
+    * expression, so each column keeps its own; it has no SQL name (a
+    * filter cannot be a SQL literal). */
+  def bloomMightContain(text: Column,
+      bf: org.apache.spark.util.sketch.BloomFilter): Column =
+    column(BloomMightContain(expression(text), bf))
+  def fp16Encode(a: Column): Column = column(Fp16Encode(expression(a)))
+  def fp16Decode(a: Column): Column = column(Fp16Decode(expression(a)))
 
   /** Snap every element of a float-array column to the 2^-7 grid
     * (floor(v·128 + 0.5)/128). Every multiple of 1/128 with |v| < 16
@@ -194,37 +190,22 @@ object GraftFunctions {
     org.apache.spark.sql.functions.transform(a, v =>
       (org.apache.spark.sql.functions.floor(v.cast("double") * 128.0 + 0.5)
         / 128.0).cast("float"))
-  def topK(k: Int, ord: Column, payload: Column): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_topk", lit(k), ord, payload)
-  }
-  def nearestCentroid(vec: Column, centroids: Array[Array[Float]]): Column = {
-    import org.apache.spark.sql.functions.typedlit
-    call_function("graft_nearest_centroid", vec,
-      typedlit(centroids.map(_.toSeq).toSeq))
-  }
+  def topK(k: Int, ord: Column, payload: Column): Column =
+    column(TopKSmallest(k, expression(ord), expression(payload))
+      .toAggregateExpression())
+  def nearestCentroid(vec: Column, centroids: Array[Array[Float]]): Column =
+    column(NearestCentroid(expression(vec), centroids))
   def nearestCentroid2(vec: Column, supers: Array[Array[Float]],
       centroids: Array[Array[Float]], members: Array[Array[Int]],
-      wSuper: Int = 1): Column = {
-    import org.apache.spark.sql.functions.{lit, typedlit}
-    call_function("graft_nearest_centroid2", vec,
-      typedlit(supers.map(_.toSeq).toSeq),
-      typedlit(centroids.map(_.toSeq).toSeq),
-      typedlit(members.map(_.toSeq).toSeq), lit(wSuper))
-  }
+      wSuper: Int = 1): Column =
+    column(NearestCentroidTwoLevel(expression(vec), supers, centroids,
+      members, wSuper))
   def nearestCells(vec: Column, centroids: Array[Array[Float]],
-      nprobe: Int): Column = {
-    import org.apache.spark.sql.functions.{lit, typedlit}
-    call_function("graft_nearest_cells", vec,
-      typedlit(centroids.map(_.toSeq).toSeq), lit(nprobe))
-  }
+      nprobe: Int): Column =
+    column(NearestCells(expression(vec), centroids, nprobe))
   def nearestCells2(vec: Column, supers: Array[Array[Float]],
       centroids: Array[Array[Float]], members: Array[Array[Int]],
-      wSuper: Int, nprobe: Int): Column = {
-    import org.apache.spark.sql.functions.{lit, typedlit}
-    call_function("graft_nearest_cells2", vec,
-      typedlit(supers.map(_.toSeq).toSeq),
-      typedlit(centroids.map(_.toSeq).toSeq),
-      typedlit(members.map(_.toSeq).toSeq), lit(wSuper), lit(nprobe))
-  }
+      wSuper: Int, nprobe: Int): Column =
+    column(NearestCellsTwoLevel(expression(vec), supers, centroids,
+      members, wSuper, nprobe))
 }

@@ -92,7 +92,6 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
     spark
   }
 

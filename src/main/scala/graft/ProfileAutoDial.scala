@@ -35,7 +35,6 @@ object ProfileAutoDial {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
     import spark.implicits._
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

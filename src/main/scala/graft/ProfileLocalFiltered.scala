@@ -67,7 +67,6 @@ object ProfileLocalFiltered {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
     // pin every pre-existing section to the FLAT prober (the r18
     // operating points this profile's history measures); the AUTO
     // section below re-enables the dial for its own A/B

@@ -44,7 +44,6 @@ object ProfileMaintServe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
     import spark.implicits._
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -38,7 +38,6 @@ object ProfilePackedDisk {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
     import spark.implicits._
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -75,7 +75,6 @@ object ProfileSharded {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
     import spark.implicits._
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -40,7 +40,6 @@ object ProfileTwoLevelDist {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
     import spark.implicits._
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -10,10 +10,7 @@ import graft.operators._
   * operators). */
 object DedupQueries {
 
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
-    Tables.load(s, d, "documents")
-  }
+  private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
   /** One jaccard pair relation per (session, dir):
     * `dedup_ngram_jaccard` reports it and `dedup_clusters` closes it
@@ -56,7 +53,6 @@ object DedupQueries {
     // identical pairs to dedup_minhash_lsh, so the same exact-jaccard
     // oracle checks the whole persist -> band -> verify loop
     "dedup_lsh_persist" -> ((s, d) => {
-      GraftFunctions.register(s)
       val dir = java.nio.file.Files
         .createTempDirectory("graft_lsh_sigs").toString
       Dedup.signatureTable(docs(s, d), shingleN = 3)
@@ -77,16 +73,13 @@ object DedupQueries {
     "dedup_simhash_native" -> ((s, d) => Dedup.simhashSignatures(docs(s, d))),
     "dedup_simhash_pairs_native" -> ((s, d) =>
       Dedup.simhashPairs(docs(s, d), maxHamming = 3)),
-    "dedup_embed_cosine" -> ((s, d) => {
-      GraftFunctions.register(s)
-      Dedup.embeddingTopPairs(Tables.load(s, d, "embeddings"), topN = 20)
-    }),
+    "dedup_embed_cosine" -> ((s, d) =>
+      Dedup.embeddingTopPairs(Tables.load(s, d, "embeddings"), topN = 20)),
     // the 100-TB path: same-cell pairs only, top-20 by cosine
     // (rows-only here — cell assignments come from the seeded k-means;
     // the cell-restricted equivalence vs brute force is asserted in
     // PipelineSpec)
     "dedup_embed_bucketed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val vecs = Tables.load(s, d, "embeddings")
       val centroids = AnnIvf.train(vecs, numCentroids = 8, iterations = 2)
       Dedup.embeddingNearPairsBucketed(vecs, centroids, threshold = -1.0)
@@ -120,7 +113,6 @@ object DedupQueries {
     // code path as dedup_embed_bucketed, which stays rows-only because
     // its centroids come from seeded k-means
     "dedup_embed_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val vecs = Tables.load(s, d, "embeddings")
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))
       val centroids = vecs.filter(col("vec_id") % 63 === 11)
@@ -138,7 +130,6 @@ object DedupQueries {
     // and are unfindable at single assignment; the oracle's pair
     // relation carries the same rn <= 2 assignment.
     "dedup_semantic" -> ((s, d) => {
-      GraftFunctions.register(s)
       val vecs = Tables.load(s, d, "embeddings")
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))
       val centroids = vecs.filter(col("vec_id") % 63 === 11)
@@ -154,7 +145,6 @@ object DedupQueries {
     // several shared cells dedup to one row. Work grows ~nassign²/C,
     // never all-pairs.
     "dedup_embed_multiprobe" -> ((s, d) => {
-      GraftFunctions.register(s)
       val vecs = Tables.load(s, d, "embeddings")
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))
       val centroids = vecs.filter(col("vec_id") % 63 === 11)
@@ -464,10 +454,7 @@ object DedupQueries {
 /** Text-analysis query pack over `documents`. */
 object TextQueries {
 
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
-    Tables.load(s, d, "documents")
-  }
+  private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_tokens" -> ((s, d) => TextAnalysis.tokenStats(docs(s, d))),
@@ -1288,10 +1275,7 @@ object TextQueries {
   * stratified sampling, test-set decontamination. */
 object CorpusQueries {
 
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
-    Tables.load(s, d, "documents")
-  }
+  private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "corpus_stats" -> ((s, d) => Corpus.stats(docs(s, d))),
@@ -1325,7 +1309,6 @@ object CorpusQueries {
     // hash aggregate per doc, mean per dim — integer-valued sums make
     // the double arithmetic engine-exact; emitted per-dim as ppm ints
     "corpus_pool" -> ((s, d) => {
-      GraftFunctions.register(s)
       val chunks = Corpus.chunkDocs(docs(s, d), chunkTokens = 40,
           stride = 32)
         .select(col("doc_id"),
@@ -1342,10 +1325,8 @@ object CorpusQueries {
     // from sqrt of OBSERVED stratum sizes (upsampling tail languages)
     // in pure integer arithmetic — quota = 200*isqrt(n_g)/sum isqrt;
     // en's raw 44% share smooths to ~30%
-    "corpus_temp_mix" -> ((s, d) => {
-      GraftFunctions.register(s)
-      Corpus.temperatureMix(docs(s, d), budget = 200L)
-    }),
+    "corpus_temp_mix" -> ((s, d) =>
+      Corpus.temperatureMix(docs(s, d), budget = 200L)),
     // token-budget data selection: best-quality docs until 20k
     // tokens, via the distributed prefix sum over the quality order
     "corpus_select" -> ((s, d) =>
@@ -1473,18 +1454,15 @@ object CorpusQueries {
     // vec_id % 5 == 0 slice — min-id seed, then farthest-point picks
     // on 6dp-rounded distances (ties to min id), so a recursive-CTE
     // oracle replays the identical selection order
-    "corpus_coreset" -> ((s, d) => {
-      GraftFunctions.register(s)
+    "corpus_coreset" -> ((s, d) =>
       Corpus.kCenters(
         Tables.load(s, d, "embeddings").filter(col("vec_id") % 5 === 0),
-        k = 10)
-    }),
+        k = 10)),
     // SIF-style retrieval: idf-weighted pooled doc embeddings
     // (integer-exact BIGINT pooling — order-free sums, floats only
     // in the final normalization) + exact search of the probe docs
     // against the rest
     "pipeline_sif" -> ((s, d) => {
-      GraftFunctions.register(s)
       val pooled = Retrieval.sifEmbed(docs(s, d))
       val probe = col("doc_id") % 97 === 0
       Knn.exact(
@@ -1502,7 +1480,6 @@ object CorpusQueries {
     // diagnostic that motivates hybrid fusion (low agreement = the
     // rankers surface different evidence and RRF has headroom)
     "bm25_rank_metrics" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = docs(s, d)
       val probe = col("doc_id") % 97 === 0
       val corpus = base.filter(!probe)
@@ -2287,7 +2264,6 @@ object AnnQueries {
 
   def gridResults(s: SparkSession, d: String): DataFrame =
     gridCache.getOrElseUpdate((s, d), {
-      GraftFunctions.register(s)
       val base = Tables.load(s, d, "embeddings")
       val totalBase = base.filter(col("vec_id") % 50 =!= 0).count()
       // BOTH algo sweeps, harmonized via unionByName — the reference
@@ -2348,7 +2324,6 @@ object AnnQueries {
     * local objects (training is eager); only `truth` holds executor
     * storage, dropped by `clearAnnCache`. */
   private final class AnnShared(s: SparkSession, d: String) {
-    GraftFunctions.register(s)
     private def data = dataDf(s, d).filter(filterLow)
     // lazy per field: each ann_* query pays only for the pieces it
     // touches; later pack members reuse them for free
@@ -2444,7 +2419,6 @@ object AnnQueries {
     // emitted as ppm (the engine's own rint(rec*1e6) integer), so the
     // compare hashes an integer, not a rounded double.
     "grid_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = Tables.load(s, d, "embeddings")
       val totalBase = base.filter(col("vec_id") % 50 =!= 0).count()
       val filtered = dataDf(s, d).filter(filterLow)
@@ -2479,7 +2453,6 @@ object AnnQueries {
     // healthy row's recall depends on seeded k-means, so it is
     // reduced to a produced/failed flag).
     "grid_errors" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = Tables.load(s, d, "embeddings")
       val totalBase = base.filter(col("vec_id") % 50 =!= 0).count()
       GridSearch.run(s, dataDf(s, d), queriesDf(s, d), "low", filterLow,
@@ -2503,7 +2476,6 @@ object AnnQueries {
     // functions, so the SQL oracle composes the probe pruning of
     // ann_ivf_fixed with the ADC ranking of ann_pq_fixed.
     "ann_ivfpq_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val all = dataDf(s, d)
       val filtered = all.filter(filterLow)
       val centroids = fixedCentroids(filtered, 311)
@@ -2528,7 +2500,6 @@ object AnnQueries {
     // label filter + unfiltered shared index as ann_ivfpq_fixed (cell
     // assignment, residual, and codes are pure per-row functions).
     "ann_ivfpq_residual" -> ((s, d) => {
-      GraftFunctions.register(s)
       val all = dataDf(s, d)
       val filtered = all.filter(filterLow)
       val centroids = fixedCentroids(filtered, 311)
@@ -2557,7 +2528,6 @@ object AnnQueries {
     // The engine code path is IDENTICAL to ann_ivf_topk; only the
     // centroid table differs.
     "ann_ivf_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       AnnIvf.search(AnnIvf.index(data, centroids), centroids,
@@ -2572,7 +2542,6 @@ object AnnQueries {
     // to searchFast (KnnSpec pins distances); this entry puts the
     // resident tier under the DuckDB oracle too
     "ann_ivf_serve_resident" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       val cells = AnnIvf.servableCells(AnnIvf.index(data, centroids))
@@ -2590,7 +2559,6 @@ object AnnQueries {
     // as serve_auto_strong: hash-equality proves the resident filtered
     // scan IS the pre-filter.
     "ann_ivf_serve_resident_filtered" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       val cells = AnnIvf.servableCells(AnnIvf.index(data, centroids),
@@ -2613,7 +2581,6 @@ object AnnQueries {
     // pre-filter over the shared fixed-centroid index; same oracle
     // recipe as ann_ivf_fixed with the survivor predicate applied.
     "serve_auto_strong" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 311)
       val art = Serving.Artifacts(AnnIvf.index(base, centroids), centroids)
@@ -2634,7 +2601,6 @@ object AnnQueries {
     // drain shares drainBeamTopK with the job path, and this entry
     // puts that shared masked drain under the DuckDB survivor oracle.
     "serve_local_tombstone" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val indexed = AnnIvf.index(data, centroids)
@@ -2661,7 +2627,6 @@ object AnnQueries {
     // ceil-div k' the SQL replays), the over-fetch beamed on the
     // local graph replica, survivors kept by the attr lookup.
     "serve_local_mild" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 31)
       val indexed = AnnIvf.index(base, centroids)
@@ -2688,7 +2653,6 @@ object AnnQueries {
     // (ServingSpec); hash-equality here puts the in-process kernel
     // under the DuckDB oracle too.
     "serve_local_filtered" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 311)
       val cells = AnnIvf.servableCells(AnnIvf.index(base, centroids),
@@ -2715,7 +2679,6 @@ object AnnQueries {
     // hash-equality proves the id-set route IS the pre-filter the
     // distributed dispatcher would evaluate from the Column itself.
     "serve_local_bitset" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 311)
       val indexed = AnnIvf.index(base, centroids)
@@ -2742,7 +2705,6 @@ object AnnQueries {
     // never a semantics change (ShardedSpec pins all three dispatch
     // branches; this puts the strong branch under DuckDB).
     "serve_sharded" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 311)
       val indexed = AnnIvf.index(base, centroids)
@@ -2769,7 +2731,6 @@ object AnnQueries {
     // dispatcher's masked serve must hash-equal a search over an index
     // that never held those rows.
     "serve_auto_tombstone" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 311)
       val tmp = java.nio.file.Files
@@ -2792,7 +2753,6 @@ object AnnQueries {
     // Extreme: filterMid keeps ~2% → exact scan over the survivors
     // (recall 1.0 by construction); oracle = the exact filtered k-NN.
     "serve_auto_extreme" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 311)
       val art = Serving.Artifacts(AnnIvf.index(base, centroids), centroids)
@@ -2808,7 +2768,6 @@ object AnnQueries {
     // 128) makes the beam provably exact in-cell, so the whole branch
     // — including the integer k' — is SQL-reproducible.
     "serve_auto_mild" -> ((s, d) => {
-      GraftFunctions.register(s)
       val base = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(base, 31)
       val indexed = AnnIvf.index(base, centroids)
@@ -2834,7 +2793,6 @@ object AnnQueries {
     // 100 TB); hash-equality with ann_ivf_fixed's oracle proves the
     // distributed plan changes nothing but the physical join.
     "ann_ivf_bigq" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       AnnIvf.searchShuffled(AnnIvf.index(data, centroids), centroids,
@@ -2846,7 +2804,6 @@ object AnnQueries {
     // once by cell id, the plan Knn.adaptive picks for big-query x
     // big-data (see searchShuffledFast's scaladoc)
     "ann_ivf_bigq_fast" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       AnnIvf.searchShuffledFast(AnnIvf.index(data, centroids), centroids,
@@ -2863,7 +2820,6 @@ object AnnQueries {
     // the full centroid table (queries are few; data rows are the
     // asymptote), so the probe/top-k half of the oracle is unchanged.
     "ann_ivf2_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val supers = fixedCentroids(data, 149).withColumnRenamed("cid", "sid")
       val centroids = fixedCentroids(data, 31)
@@ -2924,7 +2880,6 @@ object AnnQueries {
     // distance exactly. True-rounding behavior (non-grid inputs) is
     // pinned separately in Fp16Spec.
     "knn_fp16" -> ((s, d) => {
-      GraftFunctions.register(s)
       val grid = transform(col("embedding"), v =>
         (floor(v.cast("double") * 128.0 + 0.5) / 128.0).cast("float"))
       val dataF16 = dataDf(s, d).filter(filterLow)
@@ -2971,7 +2926,6 @@ object AnnQueries {
     // deterministic here because BOTH engines break (dist, id) ties on
     // the id.
     "ann_hamming_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val graphs = NswGraph.buildIndex(AnnIvf.index(data, centroids),
@@ -3002,7 +2956,6 @@ object AnnQueries {
     // (buildIndex -> CellGraph -> searchIndex); only the parameters
     // pin it. NswFixedSpec proves the no-prune/full-traversal bound.
     "ann_nsw_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val graphs = NswGraph.buildIndex(AnnIvf.index(data, centroids),
@@ -3018,7 +2971,6 @@ object AnnQueries {
     // distance-level equality; this entry puts it under the DuckDB
     // oracle too)
     "ann_nsw_serve" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val idx = NswGraph.servableIndex(
@@ -3041,7 +2993,6 @@ object AnnQueries {
     // item); results are bit-identical to the job path (NswSpec pin;
     // this entry puts the local kernel under the DuckDB oracle too).
     "serve_small_batch" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val idx = NswGraph.servableIndex(
@@ -3065,7 +3016,6 @@ object AnnQueries {
     // — the same survivor SQL as the IVF tombstone oracles checks the
     // graph path's deletion semantics exactly.
     "ann_nsw_tombstone" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val indexed = AnnIvf.index(data, centroids)
@@ -3088,7 +3038,6 @@ object AnnQueries {
     // the per-cell graphs (no query broadcast, nothing query-sized on
     // the driver) — the NSW analog of ann_ivf_bigq_fast
     "ann_nsw_bigq" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val graphs = NswGraph.buildIndex(AnnIvf.index(data, centroids),
@@ -3103,7 +3052,6 @@ object AnnQueries {
     // online-serve split for the graph index (parquet round trip was
     // spec-only before this entry)
     "ann_nsw_persist" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val tmp = java.nio.file.Files
@@ -3122,7 +3070,6 @@ object AnnQueries {
     // the actual 100-TB serving layout, plan-pinned in KnnSpec).
     // Identical semantics to ann_ivf_fixed; only the storage differs.
     "ann_ivf_persist" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       val tmp = java.nio.file.Files
@@ -3144,7 +3091,6 @@ object AnnQueries {
     // data rows. Identical semantics to ann_ivf_fixed; only the
     // storage bytes differ.
     "ann_packed_persist" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
         .withColumn("embedding", GraftFunctions.fp16Grid(col("embedding")))
       val centroids = fixedCentroids(data, 311)
@@ -3162,7 +3108,6 @@ object AnnQueries {
     // the pre-filter scan kernel reads them through the fp16 LUT —
     // the serving shape a packed deployment actually runs.
     "ann_packed_replica" -> ((s, d) => {
-      GraftFunctions.register(s)
       import s.implicits._
       val data = dataDf(s, d).filter(filterLow)
         .withColumn("embedding", GraftFunctions.fp16Grid(col("embedding")))
@@ -3194,7 +3139,6 @@ object AnnQueries {
     // two_level_probe_20m). Assignment stays the flat mod-31 argmin
     // (ann_ivf_fixed's), so only the PROBE differs from that recipe.
     "serve_twolevel_probe" -> ((s, d) => {
-      GraftFunctions.register(s)
       import s.implicits._
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
@@ -3227,7 +3171,6 @@ object AnnQueries {
     // with serve_twolevel_probe's SQL pins local and distributed
     // two-level serving to identical semantics.
     "serve_twolevel_persist" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 31)
       val supers = fixedCentroids(data, 149)
@@ -3248,7 +3191,6 @@ object AnnQueries {
     // (writeIndex starts at one file per cell, the append adds a
     // second to touched cells, compact folds them back)
     "ann_ivf_stats" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       val tmp = java.nio.file.Files
@@ -3267,7 +3209,6 @@ object AnnQueries {
     // deletion that leaked a row, dropped a cell wrongly, or
     // disturbed an untouched cell flips the hash
     "ann_ivf_delete" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       val tmp = java.nio.file.Files
@@ -3286,7 +3227,6 @@ object AnnQueries {
     // anti-join masks it below the top-k — hash-equality with the
     // survivor oracle proves tombstone-masked serving == eager delete
     "ann_ivf_tombstone" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       val tmp = java.nio.file.Files
@@ -3308,7 +3248,6 @@ object AnnQueries {
     // same survivor oracle as ann_ivf_tombstone proves
     // resident-masked == persisted-masked == eager delete.
     "ann_ivf_tombstone_resident" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)
       val tmp = java.nio.file.Files
@@ -3334,7 +3273,6 @@ object AnnQueries {
     // the pre-filtered corpus returns — the same full oracle as
     // ann_ivf_fixed checks it.
     "ann_ivf_serve" -> ((s, d) => {
-      GraftFunctions.register(s)
       val all = dataDf(s, d)
       // centroids are still the filtered mod-311 rows (the oracle's
       // centroid set); the INDEX is over the unfiltered corpus
@@ -3353,7 +3291,6 @@ object AnnQueries {
     // fixed-centroid oracle as ann_ivf_serve — hash-equality proves
     // the large-query serving plan changes no semantics.
     "ann_ivf_serve_bigq" -> ((s, d) => {
-      GraftFunctions.register(s)
       val all = dataDf(s, d)
       val centroids = fixedCentroids(all.filter(filterLow), 311)
       val tmp = java.nio.file.Files
@@ -3372,20 +3309,16 @@ object AnnQueries {
     // on vec_id in both engines. Engine path is the real Pq.encode /
     // Pq.searchAdc; ann_pq_recall keeps covering the k-means variant.
     "ann_pq_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
       val data = dataDf(s, d).filter(filterLow)
       val cb = fixedCodebook(s, data)
       Pq.searchAdc(Pq.encode(data, cb), cb, queriesDf(s, d), K)
         .select(col("qid"), col("rank"), col("neighbor_id"))
     }),
-    "quant_train" -> ((s, d) => {
-      GraftFunctions.register(s)
+    "quant_train" -> ((s, d) =>
       Quantize.train(Tables.load(s, d, "embeddings"))
         .select(col("dim").cast("long").as("dim"),
-          round(col("lo"), 6).as("lo"), round(col("hi"), 6).as("hi"))
-    }),
+          round(col("lo"), 6).as("lo"), round(col("hi"), 6).as("hi"))),
     "quant_int8" -> ((s, d) => {
-      GraftFunctions.register(s)
       val vecs = Tables.load(s, d, "embeddings")
       // qvec flattened to CSV text: the driver compare hashes cell
       // values and cannot hash array cells; the string pins every
@@ -3397,7 +3330,6 @@ object AnnQueries {
             .as("qvec_csv"))
     }),
     "quant_roundtrip" -> ((s, d) => {
-      GraftFunctions.register(s)
       val vecs = Tables.load(s, d, "embeddings")
       Quantize.roundTripError(vecs.filter(col("vec_id") % 50 === 0),
         Quantize.train(vecs))
@@ -3409,7 +3341,6 @@ object AnnQueries {
     // aggregate are codegen'd built-ins — the whole distance stays in
     // WSCG with zero custom code.
     "knn_int8" -> ((s, d) => {
-      GraftFunctions.register(s)
       val vecs = Tables.load(s, d, "embeddings")
       // bounds feed both quantize calls — cache the 64-row table so
       // the percentile scan runs once
@@ -4321,7 +4252,6 @@ object StreamQueries {
     // the batch Corpus.curate exactly, so corpus_curate's oracle
     // applies verbatim
     "stream_curate" -> ((s, d) => {
-      GraftFunctions.register(s)
       val docs = s.readStream
         .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
         .option("pathGlobFilter", "documents.parquet")
@@ -4337,7 +4267,6 @@ object StreamQueries {
     // watermark) — same output and bucket rule as text_perplexity, so
     // the full batch oracle checks the drained stream
     "stream_score" -> ((s, d) => {
-      GraftFunctions.register(s)
       val static = Tables.load(s, d, "documents")
       val model = graft.operators.TextAnalysis.trainLm(
         static, maxVocab = 1000000)
@@ -4349,7 +4278,7 @@ object StreamQueries {
       // sub-split spread is row-placement only, identity at scale
       // (r21, the stream_bm25 pattern)
       drained(graft.operators.TextAnalysis.lmScoreFrozen(
-        Spread.cpuStream(docs, static), model,
+        Spread.cpu(docs, static), model,
         headPpl = 29.95, tailPpl = 30.09), "stream_score")
     }),
     // streaming BM25 against standing queries (retrieval-at-ingest:
@@ -4359,7 +4288,6 @@ object StreamQueries {
     // reproduces the batch scorer's candidate relation exactly, so
     // the batch BM25 SQL (scores, no top-k cut) is the oracle
     "stream_bm25" -> ((s, d) => {
-      GraftFunctions.register(s)
       val static = Tables.load(s, d, "documents")
       val qs = static.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("qid"),
@@ -4374,7 +4302,7 @@ object StreamQueries {
       // stateless scorer -> sub-split spread is row-placement only
       // (guarded by the batch twin's size; identity at scale)
       drained(Retrieval.bm25ScoreFrozen(
-        Spread.cpuStream(docs, static), model), "stream_bm25")
+        Spread.cpu(docs, static), model), "stream_bm25")
     }),
     // streaming exact dedup in keyed state (one boolean per distinct
     // content hash): single-batch output is each hash's min-doc_id
@@ -4452,14 +4380,12 @@ object StreamQueries {
 object IngestQueries {
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ingest_pipeline" -> ((s, d) => {
-      GraftFunctions.register(s)
+    "ingest_pipeline" -> ((s, d) =>
       Ingest.pipeline(Tables.load(s, d, "documents"),
           minTokens = 20, maxRows = 400)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"),
-          size(col("embedding")).cast("long").as("dim"))
-    }),
+          size(col("embedding")).cast("long").as("dim"))),
     // S7 under the driver: the YAML config source end to end — parse a
     // filter_config/params_config-shaped document, expand the param
     // grid (J7's cartesian), apply the parsed range filter to a real
@@ -4549,12 +4475,10 @@ object IngestQueries {
         .select(col("doc_id"), col("category"), col("source"),
           col("n_chars"), md5(col("text")).as("text_md5"))
     }),
-    "ingest_shards" -> ((s, d) => {
-      GraftFunctions.register(s)
+    "ingest_shards" -> ((s, d) =>
       Ingest.shardIds(
         Ingest.minTokenFilter(Tables.load(s, d, "documents"), 20), 100)
-        .select(col("doc_id"), col("shard"))
-    }),
+        .select(col("doc_id"), col("shard"))),
     "multimodal_features" -> ((s, d) => {
       // binary-payload plumbing with a stubbed decoder; the metadata
       // columns are oracle-checked, the fake feature values are
@@ -4662,7 +4586,6 @@ object IngestQueries {
       // e_first pins the float scaling — both reproduced exactly by
       // the SQL oracle. The native xxhash embedder stays covered by
       // ingest_pipeline + PipelineSpec determinism tests.
-      GraftFunctions.register(s)
       Ingest.pipeline(Tables.load(s, d, "documents"),
           minTokens = 20, maxRows = 400,
           embedder = Ingest.syntheticEmbeddingPortable)

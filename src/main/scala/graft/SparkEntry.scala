@@ -39,7 +39,6 @@ object SparkEntry {
   /** Flagship: filtered exact k-NN on sf0.001 (driver smoke-checks rows>0). */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    GraftFunctions.register(spark)
     Knn.exact(dataDf(spark, dir).filter(filterLow),
       queriesDf(spark, dir), K)
   }
@@ -75,12 +74,10 @@ object VectorQueries {
   import SparkEntry._
 
   private def knnWith(filter: Column, metric: String)(
-      spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
+      spark: SparkSession, dir: String): DataFrame =
     Knn.exact(dataDf(spark, dir).filter(filter),
         queriesDf(spark, dir), K, metric)
       .select(col("qid"), col("rank"), col("neighbor_id"))
-  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "knn_exact_low" -> (knnWith(filterLow, "sqeuclidean") _),
@@ -93,7 +90,6 @@ object VectorQueries {
     // bit-identical to the one-shot path — same oracle as
     // knn_exact_low checks it
     "knn_exact_bigq" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
       val qs = queriesDf(spark, dir)
       // count once; chunkedByQuery reuses it instead of re-scanning
       val nQ = qs.count()
@@ -104,14 +100,11 @@ object VectorQueries {
     }),
     "knn_cosine" -> (knnWith(filterLow, "cosine") _),
     "knn_dot" -> (knnWith(filterLow, "dot") _),
-    "knn_hamming" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
+    "knn_hamming" -> ((spark: SparkSession, dir: String) =>
       Knn.exactHamming(dataDf(spark, dir).filter(filterLow),
           queriesDf(spark, dir), K)
-        .select(col("qid"), col("rank"), col("neighbor_id"))
-    }),
+        .select(col("qid"), col("rank"), col("neighbor_id"))),
     "knn_recall_self" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
       // consumed twice by the recall join — cache, don't recompute
       val found = knnWith(filterLow, "sqeuclidean")(spark, dir).cache()
       Recall.ofRanked(found, found)
@@ -119,13 +112,11 @@ object VectorQueries {
     // the same search expressed through the first-class KnnJoin
     // logical operator; the .filter on qid exercises the
     // PushQueryFilterThroughKnn optimizer rule
-    "knn_plan_node" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
+    "knn_plan_node" -> ((spark: SparkSession, dir: String) =>
       graft.plans.KnnJoin.run(
         dataDf(spark, dir).filter(filterLow), queriesDf(spark, dir), K)
         .filter(col("qid") >= 100)
-        .select(col("qid"), col("rank"), col("neighbor_id"))
-    }),
+        .select(col("qid"), col("rank"), col("neighbor_id"))),
     // A2 selectivity accounting (reference popcount of the filter
     // bitset, utils_grid_search.py:171-185 — here a predicate count)
     "filter_selectivity" -> ((spark: SparkSession, dir: String) => {
@@ -172,7 +163,6 @@ object VectorQueries {
     // deterministic -> full DuckDB oracle.
     "knn_sanity_texts" -> ((spark: SparkSession, dir: String) => {
       import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(spark)
       val docs = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text"))
       val corpus = Tables.load(spark, dir, "embeddings")
@@ -200,29 +190,24 @@ object VectorQueries {
     // shortlist on the first 32 of 64 dims, exact re-rank of the 100
     // candidates at full width. Both passes deterministic -> full
     // oracle, even though the result is approximate w.r.t. knn_exact.
-    "knn_truncate_refine" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
+    "knn_truncate_refine" -> ((spark: SparkSession, dir: String) =>
       Knn.truncateRefine(dataDf(spark, dir).filter(filterLow),
           queriesDf(spark, dir), K, coarseDims = 32, nCandidates = 100)
         .select(col("qid"), col("rank"), col("neighbor_id"),
-          round(col("dist"), 6).as("dist"))
-    }),
+          round(col("dist"), 6).as("dist"))),
     // Two-stage binary serving: sign-packed hamming shortlist (the
     // 32x-smaller scan) + exact full-width re-rank of the 100
     // candidates. Hamming distances are integers and the re-rank is
     // the shared sequential-double arithmetic -> full oracle.
-    "knn_binary_rerank" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
+    "knn_binary_rerank" -> ((spark: SparkSession, dir: String) =>
       Knn.binaryRerank(dataDf(spark, dir).filter(filterLow),
           queriesDf(spark, dir), K, nCandidates = 100)
         .select(col("qid"), col("rank"), col("neighbor_id"),
-          round(col("dist"), 6).as("dist"))
-    }),
+          round(col("dist"), 6).as("dist"))),
     // Hard-negative mining: the k nearest DIFFERENT-label vectors per
     // query — queries grouped by label, one bounded-heap search per
     // label against the complement corpus; fully deterministic
     "knn_hard_negatives" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
       val qs = Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("q_embedding"),
@@ -236,7 +221,6 @@ object VectorQueries {
     // exact oracle — both inputs deterministic, so the metric values
     // themselves are fully oracle-checkable
     "knn_rank_metrics" -> ((spark: SparkSession, dir: String) => {
-      GraftFunctions.register(spark)
       val filtered = dataDf(spark, dir).filter(filterLow)
       val qs = queriesDf(spark, dir)
       val found = Knn.truncateRefine(filtered, qs, K,

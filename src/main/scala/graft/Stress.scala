@@ -24,7 +24,6 @@ object Stress {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
 
     def synth(rows: Int, idCol: String, vecCol: String) =
       spark.range(rows.toLong).toDF(idCol)

@@ -59,12 +59,4 @@ object Tables {
     }
     (forced, toMicros)
   }
-
-  /** Register all engine functions and return a loader bound to `dir`.
-    * Called at the top of every SparkEntry query so the functions are
-    * available regardless of which session the driver hands us. */
-  def bound(spark: SparkSession, dir: String): String => DataFrame = {
-    GraftFunctions.register(spark)
-    name => load(spark, dir, name)
-  }
 }

@@ -337,22 +337,18 @@ object AnnIvf {
     * fp32 layout's (KnnSpec pins; `ann_packed_persist` puts the
     * layout under the full DuckDB oracle). */
   def writeIndexPacked(indexed: DataFrame, path: String,
-      vecCol: String = "embedding"): Unit = {
-    GraftFunctions.register(indexed.sparkSession)
+      vecCol: String = "embedding"): Unit =
     writeIndex(indexed.withColumn(vecCol,
       GraftFunctions.fp16Encode(col(vecCol))), path)
-  }
 
   /** Read a `writeIndexPacked` tree back as an fp32 relation (the
     * binary column decoded through `Fp16Decode` — a projection above
     * the scan, so cid partition pruning is untouched). Any search or
     * maintenance path that expects `array<float>` runs on the result. */
   def readIndexPacked(spark: SparkSession, path: String,
-      vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(spark)
+      vecCol: String = "embedding"): DataFrame =
     spark.read.parquet(path)
       .withColumn(vecCol, GraftFunctions.fp16Decode(col(vecCol)))
-  }
 
   /** Incremental maintenance: assign NEW vectors against the frozen
     * centroid table (narrow, deterministic — identical cells to a full

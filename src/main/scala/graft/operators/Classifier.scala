@@ -190,8 +190,7 @@ object Classifier {
     * NULL-text docs are excluded (they have no feature rows in the
     * SQL-oracle formulation and would otherwise score NULL rows). */
   private def featureArrays(docs: DataFrame, isTarget: Column,
-      buckets: Int, idCol: String, textCol: String): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
+      buckets: Int, idCol: String, textCol: String): DataFrame =
     // Spread.cpu: the per-token bucket hash dominates; a sub-split
     // scan would run it on one core (r20). Narrow per-doc arrays —
     // placement cannot affect any downstream integer sum.
@@ -200,7 +199,6 @@ object Classifier {
         isTarget.cast("long").as("y"),
         transform(TextAnalysis.whitespaceTokens(col(textCol)),
           t => bucketOf(t, buckets)).as("bs"))
-  }
 
   /** Integer logits: z_micro = Σ_tokens w_micro[bucket] via an
     * expression-only fold — token multiplicity IS the per-bucket

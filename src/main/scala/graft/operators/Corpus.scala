@@ -39,7 +39,6 @@ object Corpus {
     */
   def stratifiedSample(docs: DataFrame, groupCol: String, k: Int,
       idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val rank = md5Rank52(col(idCol).cast("string"))
     docs.select(col(groupCol), col(idCol).as("id"), rank.as("rk"))
       .groupBy(col(groupCol))
@@ -82,7 +81,6 @@ object Corpus {
     val kMax = quotas.values.max.toInt
     require(kMax > 0, "budget x max weight must reach at least one row")
     val quotaDf = broadcast(quotas.toSeq.toDF(groupCol, "_quota"))
-    GraftFunctions.register(spark)
     val rank = md5Rank52(col(idCol).cast("string"))
     docs.filter(col(groupCol).isin(weights.keys.toSeq: _*))
       .select(col(groupCol), col(idCol).as("id"), rank.as("rk"))
@@ -109,7 +107,7 @@ object Corpus {
   def meanPoolEmbeddings(chunks: DataFrame, idCol: String = "doc_id",
       vecCol: String = "emb"): DataFrame =
     chunks.groupBy(col(idCol))
-      .agg(expr(s"graft_vecsum($vecCol)").as("_sum"),
+      .agg(GraftFunctions.vecSum(col(vecCol)).as("_sum"),
         count(lit(1)).as("n_chunks"))
       .select(col(idCol),
         transform(col("_sum"), s => s / col("n_chunks"))
@@ -154,7 +152,6 @@ object Corpus {
       s"max stratum quota exceeds Int.MaxValue")
     val kMax = quotas.map(_._2).max.toInt
     val quotaDf = broadcast(quotas.toSeq.toDF(groupCol, "_quota"))
-    GraftFunctions.register(spark)
     val rank = md5Rank52(col(idCol).cast("string"))
     docs.filter(col(groupCol).isin(quotas.map(_._1).toSeq: _*))
       .select(col(groupCol), col(idCol).as("id"), rank.as("rk"))
@@ -188,7 +185,6 @@ object Corpus {
       qidCol: String = "qid", qlabelCol: String = "q_label"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(m > 0 && poolSize >= m)
-    GraftFunctions.register(items.sparkSession)
     val pool = items
       .select(col(idCol).cast("long").as("id"),
         col(labelCol).cast("long").as("lbl"))
@@ -442,7 +438,6 @@ object Corpus {
     require(numShards > 0)
     val spark = docs.sparkSession
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rank = md5Rank52(concat(lit(s"$seed:"),
       col(idCol).cast("string")))
     val sorted = docs
@@ -566,7 +561,6 @@ object Corpus {
       buckets: Int = 1024, idCol: String = "doc_id",
       textCol: String = "text", nativeHash: Boolean = false): DataFrame = {
     require(buckets > 0)
-    GraftFunctions.register(docs.sparkSession)
     val t = col("t")
     val bigrams = zip_with(slice(t, lit(1), greatest(size(t) - 1, lit(0))),
       slice(t, lit(2), greatest(size(t) - 1, lit(0))),

@@ -668,14 +668,14 @@ object Dedup {
   private def pigeonholePairs(sigs: DataFrame, chunks: Seq[Column],
       hamming: (Column, Column) => Column, maxHamming: Int,
       guard: DataFrame): DataFrame = {
-    // Spread.cpuBy (r21): hash-partition the chunked relation by the
+    // Spread.cpu by key (r21): hash-partition the chunked relation by the
     // JOIN KEYS so the self-join reuses the partitioning — without it
     // a sub-split signature table collapses (AQE-coalesced) to ONE
     // task for the whole pair emission + hamming filter + distinct
     // (profiled 0.76 s single-task at sf0.1, 271 K pair rows out).
     // Key-hash placement cannot change an equi-join's row set;
     // identity at scale by the guard.
-    val chunked = Spread.cpuBy(
+    val chunked = Spread.cpu(
       sigs.select(col("doc_id"), col("simhash"),
         posexplode(array(chunks: _*)).as(Seq("chunk_idx", "chunk"))),
       guard, col("chunk_idx"), col("chunk"))
@@ -1054,7 +1054,6 @@ object Dedup {
   def crossDocSpanDedup(docs: DataFrame, n: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 1)
-    GraftFunctions.register(docs.sparkSession)
     // Spread.cpu (r20): the per-position window hash below is the
     // dominant per-row cost — a sub-split corpus scan would run it on
     // one core. Placement-independent: grams carry (doc, pos), every
@@ -1278,14 +1277,13 @@ object Dedup {
   def decontaminateBloom(docs: DataFrame, isTest: Column, n: Int,
       fpp: Double = 0.01,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
     val sh = docs.select(col(idCol).as("doc_id"), isTest.as("is_test"),
       explode(shinglesOf(col(textCol), n)).as("s"))
     val testSh = sh.filter(col("is_test")).select("s").distinct().cache()
     val nTest = testSh.count() // also materializes the cache
     val bf = testSh.stat.bloomFilter("s", math.max(nTest, 1L), fpp)
     val hits = sh.filter(!col("is_test"))
-      .filter(GraftFunctions.bloomMightContain(spark, col("s"), bf))
+      .filter(GraftFunctions.bloomMightContain(col("s"), bf))
       .join(broadcast(testSh), Seq("s"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
     docs.filter(!isTest).select(col(idCol).as("doc_id"))

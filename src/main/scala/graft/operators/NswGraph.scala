@@ -432,15 +432,13 @@ object NswGraph {
     * re-encode); `refreshLocalReplica` sniffs the schema and decodes
     * packed trees straight to packed cells. */
   def writeGraphIndexPacked(graphs: org.apache.spark.sql.Dataset[CellGraph],
-      path: String): Unit = {
-    graft.GraftFunctions.register(graphs.sparkSession)
+      path: String): Unit =
     graphs.toDF()
       .select(col("cid"), col("ids"),
         transform(col("vecs"), v => graft.GraftFunctions.fp16Encode(v))
           .as("vecs16"),
         col("adj"))
       .write.mode("overwrite").partitionBy("cid").parquet(path)
-  }
 
   def readGraphIndexPacked(spark: SparkSession, path: String)
       : org.apache.spark.sql.Dataset[CellGraphPacked] = {
@@ -554,7 +552,6 @@ object NswGraph {
     val combined = oldRows.unionByName(newIndexed)
     val rebuilt = buildIndex(combined, m, efConstruction, metric,
       idCol, vecCol)
-    graft.GraftFunctions.register(spark)
     rebuilt.toDF()
       .select(col("cid"), col("ids"),
         transform(col("vecs"), v => graft.GraftFunctions.fp16Encode(v))

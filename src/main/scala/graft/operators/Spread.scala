@@ -29,63 +29,49 @@ import org.apache.spark.sql.DataFrame
   * oracle pack re-verifies every such query.
   */
 object Spread {
-  def cpu(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val threshold = spark.sessionState.conf.filesMaxPartitionBytes
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (size <= threshold)
-      df.repartition(spark.sparkContext.defaultParallelism)
-    else df
-  }
+  def cpu(df: DataFrame): DataFrame = cpu(df, df)
 
-  /** Key-partitioned twin (r21): like `cpu`, but HASH-partitions by
-    * `keys` instead of round-robin, so an equi-join keyed on exactly
-    * those columns reuses the partitioning (no further exchange) and
-    * the join's per-pair work — instead of one AQE-coalesced task over
-    * a sub-split build — runs at full parallelism. The size estimate
-    * ALWAYS comes from `guard`, never from `df` (callers pass a
-    * scan-adjacent relation whose estimate is file-based; `df` itself
-    * is often a localCheckpointed relation whose LogicalRDD stats
-    * default to "huge" and would wrongly disable the spread at exactly
-    * the small sizes it exists for). Keep guards scan-adjacent so the
-    * estimate cannot undershoot. Identity at scale, like `cpu`. */
-  def cpuBy(df: DataFrame, guard: DataFrame,
+  /** The one guarded body. The size estimate ALWAYS comes from
+    * `guard`, never from `df`; with no `keys` the exchange is
+    * round-robin, with `keys` it hash-partitions by them. Two callers
+    * pass a guard other than `df`:
+    *
+    *  - Key-partitioned (r21): an equi-join keyed on exactly `keys`
+    *    reuses the partitioning (no further exchange), and the join's
+    *    per-pair work — instead of one AQE-coalesced task over a
+    *    sub-split build — runs at full parallelism. `df` there is often
+    *    a localCheckpointed relation whose LogicalRDD stats default to
+    *    "huge" and would wrongly disable the spread at exactly the
+    *    small sizes it exists for, so the guard is a scan-adjacent
+    *    relation whose estimate is file-based. Keep guards
+    *    scan-adjacent so the estimate cannot undershoot.
+    *  - Streaming (r20 wave 2): a streaming plan has no usable size
+    *    estimate, so the guard is a BATCH relation over the same input.
+    *    One unsplittable sub-split file makes the whole micro-batch ONE
+    *    task (profiled: stream_bm25's scoring stage ran single-core).
+    *    STATELESS downstream operators only — a round-robin placement
+    *    upstream of keyed state would be re-shuffled by the state
+    *    partitioning anyway, so it serves the stateless scorers where
+    *    placement provably cannot change rows.
+    *
+    *    ASSUMPTIONS (r21, ADVICE): the guard must read the SAME input
+    *    as the stream, and the decision is taken ONCE at plan-build
+    *    time from the guard's size — nothing re-evaluates it per
+    *    micro-batch. For a genuinely GROWING ingest source that starts
+    *    sub-split, the repartition is baked in and every later large
+    *    micro-batch pays a full shuffle; the "identity at scale"
+    *    guarantee therefore only holds when the source is already at
+    *    its representative size at setup (true for the replayed-file
+    *    benches this serves). Callers with growing sources should
+    *    rebuild the query periodically or skip the spread. */
+  def cpu(df: DataFrame, guard: DataFrame,
       keys: org.apache.spark.sql.Column*): DataFrame = {
     val spark = df.sparkSession
     val threshold = spark.sessionState.conf.filesMaxPartitionBytes
     val size = guard.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (size <= threshold)
-      df.repartition(spark.sparkContext.defaultParallelism, keys: _*)
-    else df
-  }
-
-  /** Streaming twin (r20 wave 2): a streaming plan has no usable size
-    * estimate, so the sub-split guard reads a BATCH relation over the
-    * same input (`batchTwin`). Same regime as `cpu`: one unsplittable
-    * sub-split file makes the whole micro-batch ONE task (profiled:
-    * stream_bm25's scoring stage ran single-core), and the round-robin
-    * exchange restores parallelism; at scale the guard makes it the
-    * identity. STATELESS downstream operators only — a round-robin
-    * placement upstream of keyed state would be re-shuffled by the
-    * state partitioning anyway, so this helper is kept for the
-    * stateless scorers where placement provably cannot change rows.
-    *
-    * ASSUMPTIONS (r21, ADVICE): `batchTwin` must read the SAME input
-    * as `stream`, and the decision is taken ONCE at plan-build time
-    * from the twin's size — nothing re-evaluates it per micro-batch.
-    * For a genuinely GROWING ingest source that starts sub-split, the
-    * repartition is baked in and every later large micro-batch pays a
-    * full shuffle; the "identity at scale" guarantee therefore only
-    * holds when the source is already at its representative size at
-    * setup (true for the replayed-file benches this serves). Callers
-    * with growing sources should rebuild the query periodically or
-    * skip the spread. */
-  def cpuStream(stream: DataFrame, batchTwin: DataFrame): DataFrame = {
-    val spark = batchTwin.sparkSession
-    val threshold = spark.sessionState.conf.filesMaxPartitionBytes
-    val size = batchTwin.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (size <= threshold)
-      stream.repartition(spark.sparkContext.defaultParallelism)
-    else stream
+    val n = spark.sparkContext.defaultParallelism
+    if (size > threshold) df
+    else if (keys.isEmpty) df.repartition(n)
+    else df.repartition(n, keys: _*)
   }
 }

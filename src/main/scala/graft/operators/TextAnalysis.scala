@@ -111,11 +111,9 @@ object TextAnalysis {
     * (identical bits in any engine — a SQL oracle reproduces the full
     * sketch; the xxhash64 variant above is the cheaper native path). */
   def winnowPortable(docs: DataFrame, k: Int = 4, w: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     winnowWith(docs, k, w, idCol, textCol,
       g => graft.GraftFunctions.md5Prefix(g, 15))
-  }
 
   /** Repetition quality signals (the Gopher-rules repetition family):
     * per document, the fraction of token occurrences claimed by the
@@ -573,7 +571,6 @@ object TextAnalysis {
   def crossDocNgramCoverage(docs: DataFrame, n: Int, minDocs: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 1 && minDocs >= 2)
-    graft.GraftFunctions.register(docs.sparkSession)
     // Spread.cpu + fused Md5PrefixStr (r20): see crossDocSpanDedup —
     // same gram relation, same placement independence
     val base = Spread.cpu(docs).select(col(idCol).as("doc_id"),

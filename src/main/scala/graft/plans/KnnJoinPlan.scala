@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.Cross
@@ -154,15 +154,8 @@ object PushQueryFilterThroughKnn extends Rule[LogicalPlan] {
     }
 }
 
-/** Registration: builder-time extensions object plus a runtime
-  * installer for sessions the driver already created. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => KnnStrategy)
-    e.injectOptimizerRule(_ => PushQueryFilterThroughKnn)
-  }
-}
-
+/** Runtime installer of the strategy and optimizer rule, for sessions
+  * the driver already created (no caller sets `spark.sql.extensions`). */
 object GraftPlanner {
   def install(spark: SparkSession): Unit = {
     Shim.addStrategy(spark, KnnStrategy)

@@ -1,17 +1,25 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SparkStrategy
 
 /** Minimal bridge into Spark's `private[sql]` plan APIs — the standard
   * technique third-party Catalyst extensions use to materialize a
-  * DataFrame from a hand-built LogicalPlan and to register strategies
+  * DataFrame from a hand-built LogicalPlan, to move between a Column
+  * and the Catalyst expression it wraps, and to register strategies
   * on an already-created session (SparkSessionExtensions only applies
   * at builder time) — and into the `private[spark]` listener bus.
   */
 object Shim {
+
+  /** A Column over a hand-built Catalyst expression (no registry). */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** The (possibly unresolved) Catalyst expression behind a Column. */
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSession], plan)

@@ -41,4 +41,15 @@ class EntrySpec extends AnyFunSuite {
     }
     assert(added.isEmpty, s"RDDs still persisted: ${added.keys.toSeq.sorted}")
   }
+
+  test("queries build their graft_* columns without the function registry") {
+    // between them: distances, nearest cells and top-k (ann_ivf_fixed),
+    // MinHash/LSH, the md5 prefix (sample_stratified) and vecsum
+    val fresh = spark.newSession()
+    def rows(s: org.apache.spark.sql.SparkSession, q: String) =
+      SparkEntry.queries(q)(s, sf).collect().map(_.toString).sorted.toSeq
+    for (q <- Seq("ann_ivf_fixed", "dedup_minhash_lsh", "sample_stratified",
+        "corpus_pool")) assert(rows(fresh, q) == rows(spark, q), q)
+    assert(!fresh.catalog.functionExists("graft_sqdist"))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -178,5 +178,86 @@ class ExpressionSpec extends AnyFunSuite {
     val three = failure(
       "SELECT graft_norm(array(1.0f), array(2.0f), array(3.0f))")
     assert(three.contains("graft_norm expects 1 argument, got 3"), three)
+  }
+
+  test("bloomMightContain: each column keeps its own filter") {
+    import org.apache.spark.util.sketch.BloomFilter
+    val bfA = BloomFilter.create(100, 0.001); bfA.putString("alpha")
+    val bfB = BloomFilter.create(100, 0.001); bfB.putString("beta")
+    // both columns exist before either is analyzed
+    val inA = GraftFunctions.bloomMightContain($"s", bfA)
+    val inB = GraftFunctions.bloomMightContain($"s", bfB)
+    val got = Seq("alpha", "beta").toDF("s")
+      .select($"s", inA.as("in_a"), inB.as("in_b")).orderBy($"s").collect()
+    assert(got.toSeq == Seq(Row("alpha", true, false), Row("beta", false, true)))
+  }
+
+  test("every registered graft_* SQL function equals its DSL wrapper") {
+    import GraftFunctions._
+    val fresh = spark.newSession()
+    GraftFunctions.register(fresh)
+    val supers = Array(Array(1.0f, -1.0f, 0.0f, 0.5f), Array(-1.0f, 1.0f, 0.5f, 0.0f))
+    val cents = Array(Array(1.0f, -2.0f, 0.5f, 0.25f), Array(0.5f, 0.0f, 0.0f, 1.0f),
+      Array(-1.0f, 1.0f, 0.25f, 0.0f), Array(0.0f, 2.0f, -0.5f, 1.0f))
+    val members = Array(Array(0, 1), Array(2, 3))
+    def floats(m: Array[Array[Float]]) =
+      m.map(_.map(v => s"${v}f").mkString("array(", ", ", ")")).mkString("array(", ", ", ")")
+    val ints = members.map(_.mkString("array(", ", ", ")")).mkString("array(", ", ", ")")
+    val (sup, cen) = (floats(supers), floats(cents))
+    val row = {
+      import fresh.implicits._
+      Seq((Array(0.75f, -1.5f, 0.5f, 0.25f), Array(0.5f, 1.0f, -1.0f, 2.0f),
+        Array(3L, -4L, 5L, 6L), "the quick brown fox jumps over the lazy dog",
+        Seq("the", "quick", "brown", "fox", "the"), Seq("fox", "the", "dog"),
+        2.5, 7L)).toDF("a", "b", "la", "t", "toks", "toks2", "d", "id")
+    }
+    row.createOrReplaceTempView("parity_row")
+    val (a, b, t, toks, toks2) = (col("a"), col("b"), col("t"), col("toks"), col("toks2"))
+    val cases: Map[String, (String, Column)] = Map(
+      "graft_sqdist" -> ("graft_sqdist(a, b)", sqDist(a, b)),
+      "graft_dot" -> ("graft_dot(a, b)", dot(a, b)),
+      "graft_cosine" -> ("graft_cosine(a, b)", cosine(a, b)),
+      "graft_norm" -> ("graft_norm(a)", norm(a)),
+      "graft_packbits" -> ("graft_packbits(a)", packBits(a)),
+      "graft_hamming" -> ("graft_hamming(graft_packbits(a), graft_packbits(b))",
+        hamming(packBits(a), packBits(b))),
+      "graft_simhash" -> ("graft_simhash(toks)", simHash(toks)),
+      "graft_hamming64" -> ("graft_hamming64(graft_simhash(toks), graft_simhash(toks2))",
+        hamming64(simHash(toks), simHash(toks2))),
+      "graft_shingles" -> ("graft_shingles(t, 3)", shingles(t, 3)),
+      "graft_minhash" -> ("graft_minhash(graft_shingles(t, 3), 16)",
+        minHash(shingles(t, 3), 16)),
+      "graft_lsh_bands" -> ("graft_lsh_bands(graft_minhash(graft_shingles(t, 3), 16), 4)",
+        lshBands(minHash(shingles(t, 3), 16), 4)),
+      "graft_vecsum" -> ("graft_vecsum(a)", vecSum(a)),
+      "graft_vecsum_long" -> ("graft_vecsum_long(la)", vecSumLong(col("la"))),
+      "graft_fp16_encode" -> ("graft_fp16_encode(a)", fp16Encode(a)),
+      "graft_fp16_decode" -> ("graft_fp16_decode(graft_fp16_encode(a))",
+        fp16Decode(fp16Encode(a))),
+      "graft_topk" -> ("graft_topk(2, d, id)", topK(2, col("d"), col("id"))),
+      "graft_nearest_centroid" -> (s"graft_nearest_centroid(a, $cen)",
+        nearestCentroid(a, cents)),
+      "graft_nearest_centroid2" -> (s"graft_nearest_centroid2(a, $sup, $cen, $ints, 1)",
+        nearestCentroid2(a, supers, cents, members, 1)),
+      "graft_repetition" -> ("graft_repetition(t)", repetition(t)),
+      "graft_nearest_cells" -> (s"graft_nearest_cells(a, $cen, 3)",
+        nearestCells(a, cents, 3)),
+      "graft_term_counts" -> ("graft_term_counts(toks, array('the', 'fox', 'cat'))",
+        termCounts(toks, Seq("the", "fox", "cat"))),
+      "graft_md5_prefix" -> ("graft_md5_prefix(t, 13)", md5Prefix(t, 13)),
+      "graft_md5_prefix_str" -> ("graft_md5_prefix_str(t, 8)", md5PrefixStr(t, 8)),
+      "graft_intersect_count" -> ("graft_intersect_count(toks, toks2)",
+        intersectCount(toks, toks2)),
+      "graft_nearest_cells2" -> (s"graft_nearest_cells2(a, $sup, $cen, $ints, 1, 3)",
+        nearestCells2(a, supers, cents, members, 1, 3)))
+    val registered = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(cases.keySet == registered)
+    cases.toSeq.sortBy(_._1).foreach { case (name, (sql, dsl)) =>
+      val viaSql = fresh.sql(s"SELECT $sql AS v FROM parity_row").collect().toSeq
+      val viaDsl = row.select(dsl.as("v")).collect().toSeq
+      assert(viaSql.size == 1 && !viaSql.head.isNullAt(0), name)
+      assert(viaSql == viaDsl, name)
+    }
   }
 }

@@ -65,7 +65,6 @@ class OptimizationParitySpec extends AnyFunSuite {
     // real shingle arrays from the corpus: every candidate-pair shape
     // the LSH verify join actually sees
     val docs = Tables.load(spark, sf, "documents").limit(60)
-    GraftFunctions.register(spark)
     val sh = docs.select(col("doc_id"),
       GraftFunctions.shingles(col("text"), 3).as("sh"))
     val pairs = sh.as("a").join(sh.as("b"),

@@ -101,7 +101,6 @@ class PlanPropertiesSpec extends AnyFunSuite {
   }
 
   test("knn_plan_node: query-side filter is pushed below KnnJoin") {
-    GraftFunctions.register(spark)
     val df = graft.plans.KnnJoin.run(
       SparkEntry.dataDf(spark, sf), SparkEntry.queriesDf(spark, sf), 10)
       .filter(col("qid") >= 100)
@@ -119,7 +118,6 @@ class PlanPropertiesSpec extends AnyFunSuite {
   }
 
   test("hamming IVF search: equi/broadcast joins only, no cartesian") {
-    GraftFunctions.register(spark)
     val data = SparkEntry.dataDf(spark, sf)
     val centroids = AnnIvf.train(data, 8, iterations = 1)
     val plan = physical(AnnIvf.search(AnnIvf.index(data, centroids),
