@@ -104,16 +104,17 @@ object Bench {
       // serve_small_batch: ann_nsw_serve's build + the driver-local
       // replica serve, whose serving cost is milliseconds — the pack
       // row would re-measure the graph build; the local tier's
-      // throughput is measured in the scale record (ProfileSmallBatch)
+      // throughput is in BENCH_scale_r16.json
+      // scale_5m.small_batch_serving
       "serve_small_batch",
       // serve_local_filtered / serve_local_mild / serve_local_tombstone:
       // the serve_auto_* / ann_nsw_tombstone fixtures through the
       // in-process dispatcher — same exclusion rationale; the local
-      // tiers' throughput is measured in the scale record
+      // tiers' throughput is `graft.Profile local-filtered`
       "serve_local_filtered", "serve_local_mild", "serve_local_tombstone",
       // serve_local_bitset: serve_local_filtered's id-set twin (same
       // fixture + one distributed id collect) — the id-set route's
-      // throughput is measured in the scale record (ProfileLocalFiltered)
+      // throughput is in BENCH_scale_r16.json scale_5m.idset_vs_attr_route
       "serve_local_bitset",
       "ann_ivfpq_fixed", "ann_ivfpq_residual", "ann_hamming_fixed",
       "stream_dedup",

@@ -1,11 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
+import org.apache.spark.storage.StorageLevel
 
-/** Per-query profiling over the `SparkEntry` pack, one fresh session
-  * per invocation. Two modes:
+import graft.operators.{AnnIvf, Knn, NswGraph, Recall, Serving}
+
+/** Profiling harness, one fresh session per invocation. Three modes:
   *
   *  - `solo [sfDir] [query ...]` — one COLD single-shot pass per query
   *    (the pack's convention), one parseable
@@ -21,12 +24,16 @@ import org.apache.spark.sql.graft.Shim
   *    scheduling latency) can be told apart from a few heavy stages
   *    (cluster work), and the heavy job matched to its operator. The
   *    cold/warm split is pass 0 against pass 1.
+  *  - `local-filtered [n] [nQ] [nCells]` — the closed-loop FILTERED
+  *    serving point (`localFiltered`), one parseable
+  *    `[local-filtered] {json}` line per record.
   *
-  * An argument containing '/' is the sf dir (default: SPARK_GRAFT_SF_DIR,
-  * as for Bench); the rest are query names. Cores: SPARK_GRAFT_CPUS
-  * (default 32).
+  * For solo/triage an argument containing '/' is the sf dir (default:
+  * SPARK_GRAFT_SF_DIR, as for Bench); the rest are query names. Cores:
+  * SPARK_GRAFT_CPUS (default 32).
   *
   * usage: runMain graft.Profile solo|triage [sfDir] [query ...]
+  *        runMain graft.Profile local-filtered [n] [nQ] [nCells]
   */
 object Profile {
 
@@ -141,10 +148,141 @@ object Profile {
     spark.sparkContext.removeSparkListener(collector)
   }
 
+  /** One `local-filtered` measurement. `section` is `build` (`bucket`
+    * names the tier, `graph` or `flat`, and `seconds` is its build +
+    * replica wall), `bucket` (the dispatch at the default dial) or
+    * `low-sweep` (one matched-recall `dial`). Serving records carry
+    * the dispatched strategy, recall@10 on the 200-query sample and
+    * the closed loop's qps and avg/p99 ms per `batch`-query call. */
+  final case class ServeRecord(section: String, bucket: String,
+      strategy: String = "", dial: String = "", batch: Int = 0,
+      qps: Double = 0.0, recall: Double = 0.0, avgMs: Double = 0.0,
+      p99Ms: Double = 0.0, seconds: Double = 0.0) {
+    def json: String =
+      f"""{"section":"$section","bucket":"$bucket",""" +
+        f""""strategy":"$strategy","dial":"$dial","batch":$batch,""" +
+        f""""qps":$qps%.1f,"recall":$recall%.4f,"avg_ms":$avgMs%.3f,""" +
+        f""""p99_ms":$p99Ms%.3f,"seconds":$seconds%.2f}"""
+  }
+
+  /** The reference's rating buckets as (name, rating_m threshold,
+    * share kept): filter_config.yaml's low/high/mid selectivities. */
+  val Buckets: Seq[(String, Double, Double)] = Seq(("low", 8.363, 0.8363),
+    ("high", 1.561, 0.1561), ("mid", 0.077, 0.0077))
+
+  /** The low-bucket matched-recall sweep as (nprobe, overFetchMult,
+    * efSearch): the over-fetch narrowed to mult=1 (k' = ceil(k/sel) =
+    * 12) and efSearch swept toward the reference's CPU-HNSW low-bucket
+    * point (21,890 qps @ recall 0.914 at batch=100, BASELINE.md), at
+    * the dispatch default np4 and the unfiltered tier's np2. */
+  val LowDials: Seq[(Int, Int, Int)] = Seq((4, 1, 12), (4, 1, 16),
+    (4, 1, 20), (4, 1, 24), (4, 2, 24), (4, 3, 32), (2, 1, 24),
+    (2, 2, 24), (2, 2, 32), (2, 3, 32))
+
+  /** FILTERED small-batch serving at the reference's product shape
+    * (filter buckets × 100-query closed-loop batches,
+    * params_config.yaml:23), every branch of
+    * `Serving.serveFilteredLocalExplained`'s dispatch in-process.
+    * Fixture: `n` 64-dim mixture vectors with `rating_m` on the
+    * {0, 0.001, …, 9.999} grid (the reference's exact selectivities),
+    * `nCells` cells with two-level assignment, m=16/efC=64 graphs,
+    * k=10, `nQ` queries; selectivity rides as a hint. Returns the
+    * graph and flat build records, then per bucket the dispatch at
+    * nprobe=4/efSearch=32 for batch 100 and 1000, then the
+    * `LowDials` sweep at batch 100. Past `Serving.TwoLevelMinCells`
+    * cells the pre-filter branch may run the cost-based two-level
+    * prober. */
+  def localFiltered(spark: SparkSession, n: Int, nQ: Int,
+      nCells: Int): Seq[ServeRecord] = {
+    import spark.implicits._
+    val k = 10
+    val data = SynthData.mixtureVectors(spark, n, "vec_id", "embedding")
+      .withColumn("rating_m",
+        pmod(xxhash64(col("vec_id"), lit(888)), lit(10000))
+          .cast("double") / 1000.0)
+      .persist(StorageLevel.MEMORY_ONLY)
+    val queries = SynthData.mixtureVectors(spark, nQ, "qid", "q_embedding")
+      .cache()
+    val qSample = queries.orderBy(xxhash64(col("qid"), lit(7))).limit(200)
+      .cache()
+    val centroids = AnnIvf.train(
+      data.sample(math.min(1.0, 200000.0 / n), 44), nCells, iterations = 2)
+    val indexed = AnnIvf.indexTwoLevel(data, AnnIvf.trainSupers(centroids),
+      centroids, wSuper = 4).persist(StorageLevel.MEMORY_ONLY)
+    // each bucket's exact top-k on the sample, shared by its dials
+    val truths = Buckets.map { case (nm, thr, _) =>
+      nm -> Knn.exact(data.filter(col("rating_m") < thr), qSample, k).cache()
+    }.toMap
+    try {
+      indexed.count()
+      val (graphRep, gSec) = time {
+        val s = NswGraph.servableIndex(
+          NswGraph.buildIndex(indexed, m = 16, efConstruction = 64))
+        s.count()
+        try NswGraph.localReplica(s, centroids) finally s.unpersist()
+      }
+      val (flatRep, fSec) = time {
+        val c = AnnIvf.servableCells(indexed, attrCol = Some("rating_m"))
+        c.count()
+        try AnnIvf.localCellReplica(c, centroids) finally c.unpersist()
+      }
+      def rows(q: DataFrame) = q.select(col("qid").cast("long"),
+        col("q_embedding")).as[(Long, Array[Float])].collect()
+      val qArr = rows(queries)
+      val sampleArr = rows(qSample)
+      def serve(batch: Array[(Long, Array[Float])], thr: Double,
+          sel: Double, np: Int = 4, efs: Int = 32, mult: Int = 3) =
+        Serving.serveFilteredLocalExplained(flatRep, Some(graphRep), batch,
+          k, _ < thr, nprobe = np, efSearch = efs, overFetchMult = mult,
+          selectivity = Some(sel))
+      // recall of one dial on the sample against the bucket's exact
+      // truth, then the closed loop at each batch size
+      def measure(section: String, bucket: String, dial: String,
+          batches: Seq[Int])(
+          call: Array[(Long, Array[Float])] => (Serving.Strategy,
+            Array[(Long, Long, Long, Double)])): Seq[ServeRecord] = {
+        val (strat, sRows) = call(sampleArr)
+        val found = spark.createDataset(sRows.toSeq)
+          .toDF("qid", "rank", "neighbor_id", "dist")
+        val r = Recall.ofRanked(found, truths(bucket)).head()
+        val recall = r.getDouble(r.fieldIndex("recall"))
+        batches.map { bs =>
+          val (qps, avgMs, p99Ms) = ProfileStats.closedLoop(qArr, bs)(call(_))
+          ServeRecord(section, bucket, strat.name, dial, bs, qps, recall,
+            avgMs, p99Ms)
+        }
+      }
+
+      // warm the kernels and the JIT on the low and high buckets
+      Buckets.take(2).foreach { case (_, thr, sel) =>
+        serve(qArr.take(5000), thr, sel)
+      }
+      val build = Seq(ServeRecord("build", "graph", seconds = gSec),
+        ServeRecord("build", "flat", seconds = fSec))
+      val buckets = Buckets.flatMap { case (nm, thr, sel) =>
+        measure("bucket", nm, "np=4 mult=3 efS=32", Seq(100, 1000))(
+          serve(_, thr, sel))
+      }
+      val (low, lowThr, lowSel) = Buckets.head
+      val sweep = LowDials.flatMap { case (np, mult, efs) =>
+        measure("low-sweep", low, s"np=$np mult=$mult efS=$efs", Seq(100))(
+          serve(_, lowThr, lowSel, np, efs, mult))
+      }
+      build ++ buckets ++ sweep
+    } finally (truths.values ++ Seq(indexed, qSample, queries, data))
+      .foreach(_.unpersist())
+  }
+
   def main(args: Array[String]): Unit = {
     val (dirs, names) = args.drop(1).toSeq.partition(_.contains('/'))
     val sfDir = dirs.headOption.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
     (args.headOption, sfDir) match {
+      case (Some("local-filtered"), _) =>
+        def arg(i: Int, default: Int) = args.lift(i).fold(default)(_.toInt)
+        val spark = session()
+        try localFiltered(spark, arg(1, 5000000), arg(2, 100000),
+          arg(3, 1024)).foreach(r => println(s"[local-filtered] ${r.json}"))
+        finally spark.stop()
       case (Some("solo"), Some(dir)) =>
         val spark = session()
         try solo(spark, dir,
@@ -157,6 +295,7 @@ object Profile {
         System.err.println(
           "usage: graft.Profile solo [sfDir] [query ...]\n" +
           "       graft.Profile triage [sfDir] query [query ...]\n" +
+          "       graft.Profile local-filtered [n] [nQ] [nCells]\n" +
           "sfDir defaults to $SPARK_GRAFT_SF_DIR")
         sys.exit(2)
     }

@@ -2122,7 +2122,7 @@ object AnnIvf {
     * (flat `NearestCells`, or the two-level dial when set). */
   private def probeRelation(queries: DataFrame, matrix: Array[Array[Float]],
       nprobe: Int, qidCol: String, qvecCol: String,
-      twoLevel: Option[TwoLevelProbe] = None): DataFrame =
+      twoLevel: Option[TwoLevelProbe]): DataFrame =
     queries.select(col(qidCol).cast("long"), col(qvecCol),
       explode(probeCellsCol(col(qvecCol), matrix, nprobe, twoLevel))
         .as("_pcid"))

@@ -198,7 +198,6 @@ object Bpe {
     * ARRAY<STRING>) with tokens in document order. */
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
     // word instances keyed by (doc, widx) so repeated words stay
     // distinct; symbols under the same layout as the trainer
     // word instances keyed by the native (_did, widx) pair — the

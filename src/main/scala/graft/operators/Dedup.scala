@@ -318,7 +318,7 @@ object Dedup {
     * -> diet-joined exact-jaccard verification. */
   private def bandCollapseVerify(withSh: DataFrame, sig: DataFrame,
       threshold: Double, numHashes: Int, bands: Int,
-      bandGroups: Int = 1): DataFrame = {
+      bandGroups: Int): DataFrame = {
     require(bandGroups >= 1, "bandGroups must be >= 1")
     // IDENTICAL-SIGNATURE COLLAPSE: docs with equal signatures band
     // identically (every band hash is a function of the signature

@@ -470,7 +470,7 @@ object NswGraph {
     if (flattenable) {
       // bulk little-endian view get per row (r19): bit-identical to
       // the per-element shift assembly, ~the memcpy the halved read
-      // bytes paid for (ProfilePackedDisk graph tier)
+      // bytes paid for (BENCH_scale_r19.json packed_disk_5m graph tier)
       val half = new Array[Short](n * dim)
       i = 0
       while (i < n) {
@@ -1498,8 +1498,8 @@ object NswGraph {
   private def servablePartialsProbed(
       idx: org.apache.spark.rdd.RDD[ServableCell],
       probed: Array[(Long, Array[Float], Array[Int])], k: Int,
-      efSearch: Int = 64, metric: String = "sqeuclidean",
-      tombstones: Option[Array[Long]] = None): DataFrame = {
+      efSearch: Int, metric: String,
+      tombstones: Option[Array[Long]]): DataFrame = {
     val spark = SparkSession.active
     import spark.implicits._
     val qids = probed.map(_._1)
@@ -1563,23 +1563,6 @@ object NswGraph {
     }.toDF("qid", "_nnid", "_dist")
     partials
   }
-
-  /** IVF-layered graph search — the HNSW-at-scale composition
-    * (SURVEY §7.3 "per-partition graphs layered under AnnIvf"): data
-    * is range-partitioned by cell; inside each partition one NSW graph
-    * is built PER CELL, and each query beam-searches only the graphs
-    * of its `nprobe` probed cells. Per probed cell the beam visits
-    * ~efSearch·M vectors instead of the whole cell — the asymptotic
-    * win over `AnnIvf.searchFast` once cells outgrow the beam.
-    * Same TopKSmallest merge; approximate (graph recall < 1). */
-  def searchIvf(indexed: DataFrame, centroids: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int,
-      m: Int = 8, efConstruction: Int = 64, efSearch: Int = 64,
-      metric: String = "sqeuclidean",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      qidCol: String = "qid", qvecCol: String = "q_embedding"): DataFrame =
-    searchIndex(buildIndex(indexed, m, efConstruction, metric, idCol, vecCol),
-      centroids, queries, k, nprobe, efSearch, metric, qidCol, qvecCol)
 
   /** Approximate top-k for every query. Output (qid, rank,
     * neighbor_id, dist); recall rises with efSearch. */

@@ -94,13 +94,12 @@ object Serving {
         .build(centroidMatrixLocal).centers, 4)
     /** The dial the distributed dispatcher's resident branch installs
       * when the geometry crossover says the √C probe wins (r19):
-      * `None` below the floor / crossover / kill-switch. The floor
+      * `None` below the floor / crossover. The floor
       * check runs FIRST so small geometries never pay the matrix
       * collect or the row count. */
     private[operators] def autoTwoLevelProbe(nprobe: Int,
         sel: Double): Option[AnnIvf.TwoLevelProbe] =
-      if (Serving.autoTwoLevelEnabled &&
-          numCells >= Serving.TwoLevelMinCells &&
+      if (numCells >= Serving.TwoLevelMinCells &&
           centroidMatrixLocal.nonEmpty &&
           Serving.autoTwoLevel(centroidMatrixLocal.length.toLong, numRows,
             centroidMatrixLocal.head.length, nprobe, sel))
@@ -403,12 +402,6 @@ object Serving {
         math.min(nCells, Int.MaxValue.toLong).toInt))
     else extreme
 
-  /** Deployment kill-switch for the cost-based two-level probe auto
-    * (r19): `false` forces the flat prober on every dispatch (the
-    * pre-r19 behavior). An explicit `proberOverride`/`probers`
-    * argument always beats the auto either way. */
-  @volatile var autoTwoLevelEnabled: Boolean = true
-
   /** Hard cell-count floor for the auto: below it the flat argmin is
     * sub-measurable against the scan (and every fixed-recipe oracle /
     * spec geometry lives far below it, so the auto can never flip
@@ -429,8 +422,9 @@ object Serving {
     * the flop tie, and the dial engages exactly where it was
     * measured winning. The dial is a new (recall, qps) operating
     * point (−0.45pp recall at the measured shape): the auto is
-    * documented dispatcher behavior past the floor, `proberOverride`
-    * pins it manually, `autoTwoLevelEnabled = false` retires it. */
+    * documented dispatcher behavior past the floor; an explicit
+    * `proberOverride`/`probers` argument (e.g. the flat `CellProbe`)
+    * always beats it. */
   def autoTwoLevel(nCells: Long, rows: Long, dim: Int, nprobe: Int,
       selectivity: Double): Boolean = {
     val rowsPerCell = rows.toDouble / math.max(1L, nCells)
@@ -763,7 +757,7 @@ object Serving {
       mild: Double, extreme: Double,
       maxOverFetchK: Int, metric: String,
       tombstones: Option[Array[Long]],
-      proberOverride: Array[Float] => Array[Int] = null)
+      proberOverride: Array[Float] => Array[Int])
       : (Strategy, Array[(Long, Long, Long, Double)]) = {
     require(overFetchMult >= 1, s"overFetchMult must be >= 1")
     val tomb: Array[Long] = tombstones.orNull
@@ -796,7 +790,7 @@ object Serving {
           // C = the MATRIX length (the argmin scans every centroid,
           // empty cells included) — the same C a split-sharded serve
           // resolves, keeping the two decisions identical
-          else if (autoTwoLevelEnabled && autoTwoLevel(
+          else if (autoTwoLevel(
               flat.centroidMatrix.length.toLong, flat.size.toLong,
               flat.dim, nprobe, sel))
             flat.twoLevelProberAuto(nprobe)
@@ -904,19 +898,4 @@ object Serving {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
       .toDF("qid", "rank", "neighbor_id", "dist"))
   }
-
-  /** `serveFilteredExplained` without the strategy tag. */
-  def serveFiltered(art: Artifacts, queries: DataFrame, k: Int,
-      predicate: Column, nprobe: Int = 4, efSearch: Int = 64,
-      overFetchMult: Int = 3, selectivity: Option[Double] = None,
-      mild: Double = 0.5, extreme: Double = CostBased,
-      maxOverFetchK: Int = 4096,
-      metric: String = "sqeuclidean",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      qidCol: String = "qid", qvecCol: String = "q_embedding",
-      attrPred: Option[Double => Boolean] = None,
-      validateAttrPred: Boolean = false): DataFrame =
-    serveFilteredExplained(art, queries, k, predicate, nprobe, efSearch,
-      overFetchMult, selectivity, mild, extreme, maxOverFetchK, metric,
-      idCol, vecCol, qidCol, qvecCol, attrPred, validateAttrPred)._2
 }

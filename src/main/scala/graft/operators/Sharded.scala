@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions.col
   *    per-shard dials the probed corpus FRACTION — which governs
   *    recall (measured, BENCH_scale_r16 cells_experiment) — matches
   *    the small-corpus operating point instead of shrinking with
-  *    corpus growth. `ProfileSharded` measures this against the
-  *    single-20M-replica iso-recall row.
+  *    corpus growth (BENCH_scale_r17.json scale_20m_sharded measures
+  *    this against the single-20M-replica iso-recall row).
   *
   * Merge correctness: each shard returns its own exact-or-beam top-k
   * per query; the global top-k is a subset of the union of per-shard
@@ -442,7 +442,7 @@ object Sharded {
       maxOverFetchK: Int, metric: String,
       tombstones: Option[Array[Long]],
       parallelShards: Option[Boolean],
-      probers: Option[Seq[Array[Float] => Array[Int]]] = None)
+      probers: Option[Seq[Array[Float] => Array[Int]]])
       : (Serving.Strategy, Rows) = {
     require(flatShards.nonEmpty, "serveFilteredSharded needs >= 1 shard")
     require(overFetchMult >= 1, s"overFetchMult must be >= 1")
@@ -526,8 +526,7 @@ object Sharded {
         // from their own (C, rows) — each shard is its own quantizer.
         val shardProbers: Seq[Array[Float] => Array[Int]] =
           probers.getOrElse {
-            if (!Serving.autoTwoLevelEnabled) flatShards.map(_ => null)
-            else if (sharedCentroids) {
+            if (sharedCentroids) {
               val totalRows = flatShards.iterator.map(_.size.toLong).sum
               val c = flatShards.head.centroidMatrix.length.toLong
               if (Serving.autoTwoLevel(c, totalRows,
@@ -594,35 +593,6 @@ object Sharded {
         }
         (Serving.GraphOverfetch, out.result())
     }
-  }
-
-  /** `serveFilteredShardedExplained` behind the DataFrame contract —
-    * the sharded twin of `Serving.serveFilteredLocalDf`. */
-  def serveFilteredShardedDf(
-      flatShards: Seq[AnnIvf.LocalCellReplica],
-      graphShards: Option[Seq[NswGraph.LocalReplica]],
-      queries: DataFrame, k: Int, attrPred: Double => Boolean,
-      nprobe: Int = 4, efSearch: Int = 64,
-      overFetchMult: Int = 3, selectivity: Option[Double] = None,
-      mild: Double = 0.5, extreme: Double = Serving.CostBased,
-      maxOverFetchK: Int = 4096,
-      metric: String = "sqeuclidean",
-      qidCol: String = "qid", qvecCol: String = "q_embedding",
-      tombstones: Option[Array[Long]] = None,
-      parallelShards: Option[Boolean] = None)
-      : (Serving.Strategy, DataFrame) = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qRows = queries
-      .select(col(qidCol).cast("long"), col(qvecCol))
-      .as[(Long, Array[Float])].collect()
-    val (strategy, rows) = serveFilteredShardedExplained(flatShards,
-      graphShards, qRows, k, attrPred, nprobe, efSearch, overFetchMult,
-      selectivity, mild, extreme, maxOverFetchK, metric, tombstones,
-      parallelShards)
-    (strategy, spark.createDataset(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
-      .toDF("qid", "rank", "neighbor_id", "dist"))
   }
 
   /** `serveFilteredShardedIdSetExplained` behind the DataFrame

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Driver-side config source — SURVEY §2.1 S7.
   *

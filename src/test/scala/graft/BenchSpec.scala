@@ -88,6 +88,24 @@ class BenchSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(collector)
   }
 
+  test("Profile.localFiltered: every bucket serves with recall and " +
+      "qps, and the low sweep covers every default dial") {
+    val recs = Profile.localFiltered(TestSpark.spark, 20000, 500, 16)
+    assert(recs.filter(_.section == "build").map(_.bucket) ==
+      Seq("graph", "flat"), recs)
+    Profile.Buckets.map(_._1).foreach { b =>
+      val rs = recs.filter(r => r.section == "bucket" && r.bucket == b)
+      assert(rs.map(_.batch) == Seq(100, 1000), rs)
+      assert(rs.forall(r => r.qps > 0 && r.recall > 0 && r.recall <= 1 &&
+        r.strategy.nonEmpty), rs)
+    }
+    val sweep = recs.filter(_.section == "low-sweep")
+    assert(sweep.map(_.dial) == Profile.LowDials.map { case (np, m, e) =>
+      s"np=$np mult=$m efS=$e" }, sweep)
+    assert(sweep.forall(r => r.qps > 0 && r.recall > 0 && r.recall <= 1),
+      sweep)
+  }
+
   test("every graft.<Main> the docs and tools name still exists") {
     val docs = new java.io.File("tools").listFiles()
       .filter(_.getName.endsWith(".sh")).toSeq ++

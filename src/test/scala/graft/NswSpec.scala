@@ -35,8 +35,8 @@ class NswSpec extends AnyFunSuite {
   test("IVF-layered graph search: recall floor and subset-of-probed-cells") {
     val centroids = graft.operators.AnnIvf.train(data, 8, iterations = 2)
     val indexed = graft.operators.AnnIvf.index(data, centroids)
-    val found = NswGraph.searchIvf(indexed, centroids, queries, 10,
-      nprobe = 8, m = 16, efSearch = 128)
+    val found = NswGraph.searchIndex(NswGraph.buildIndex(indexed, m = 16),
+      centroids, queries, 10, nprobe = 8, efSearch = 128)
     // nprobe = all cells + high ef → recall close to the flat-IVF path
     val rec = recallOf(found)
     assert(rec >= 0.80, s"layered recall $rec")

@@ -182,8 +182,8 @@ class ServingSpec extends AnyFunSuite {
       // the tag distinguishes the resident attr-twin path from the
       // relation-scan pre-filter, so callers can audit which filter ran
       assert(strategy == Serving.IvfPrefilterResident)
-      val viaRelation = Serving.serveFiltered(artifacts, queries, 10,
-        SparkEntry.filterHigh, nprobe = 4, extreme = 0.02)
+      val viaRelation = Serving.serveFilteredExplained(artifacts, queries,
+        10, SparkEntry.filterHigh, nprobe = 4, extreme = 0.02)._2
       assert(asRows(res) == asRows(viaRelation) && asRows(res).nonEmpty)
     } finally flat.unpersist()
   }
@@ -781,7 +781,7 @@ class ServingSpec extends AnyFunSuite {
     // end-to-end at an auto-engaging geometry: 2048 deterministic
     // synthetic centroids (the serve's correctness here is RELATIVE —
     // the auto must equal the serve under the EXPLICIT derived
-    // prober, and the kill-switch must restore the flat serve)
+    // prober, and an explicit flat prober must restore the flat serve)
     val d = data.cache()
     val dims = d.select($"embedding").head()
       .getSeq[Float](0).length
@@ -813,17 +813,16 @@ class ServingSpec extends AnyFunSuite {
         proberOverride = flatRep.twoLevelProberAuto(2))
       assert(rAuto.toSet == rExplicit.toSet,
         "auto must serve exactly the derived two-level prober's rows")
-      // kill-switch: the flat (pre-r19) serve, row-for-row
-      Serving.autoTwoLevelEnabled = false
-      val rFlat = try {
-        val (_, r) = Serving.serveFilteredLocalExplained(
-          flatRep, None, qArr, 10, twin, nprobe = 2)
-        r
-      } finally Serving.autoTwoLevelEnabled = true
+      // an explicit flat prober pins the flat (pre-r19) serve,
+      // row-for-row
+      val (_, rFlat) = Serving.serveFilteredLocalExplained(
+        flatRep, None, qArr, 10, twin, nprobe = 2,
+        proberOverride = new graft.functions.CellProbe(
+          flatRep.centroidMatrix, 2))
       val direct = AnnIvf.searchLocalCellsQueries(flatRep, qArr, 10, 2,
         attrPred = Some(twin))
       assert(rFlat.toSet == direct.toSet,
-        "disabled auto must serve the flat prober's rows")
+        "the pinned flat prober must serve the flat prober's rows")
       // SPLIT shards decide from the global geometry and derive
       // identical supers from the shared matrix: sharded-with-auto
       // stays row-identical to the unsharded serve

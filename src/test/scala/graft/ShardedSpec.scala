@@ -168,15 +168,6 @@ class ShardedSpec extends AnyFunSuite {
         flatShards, Some(graphShards), qArr, 10, Array.emptyLongArray,
         nprobe = 8, efSearch = 64, selectivity = Some(0.0001))
       assert(re.isEmpty)
-      // the DataFrame wrapper matches the array hot path
-      val (sd, rd) = Sharded.serveFilteredShardedDf(flatShards,
-        Some(graphShards), queries, 10, a => a == 0.0 || a == 1.0,
-        nprobe = 8, efSearch = 64, extreme = 0.02)
-      assert(sd == Serving.IvfPrefilterResident)
-      val (_, ra) = Sharded.serveFilteredShardedExplained(flatShards,
-        Some(graphShards), qArr, 10, a => a == 0.0 || a == 1.0,
-        nprobe = 8, efSearch = 64, extreme = 0.02)
-      assert(asRows(rd) == ra.toSet)
       // attr-less shards refused loudly on the attr route
       val bareShards = Sharded.splitCellReplica(
         AnnIvf.localCellReplica(AnnIvf.servableCells(indexed),
