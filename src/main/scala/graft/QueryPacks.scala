@@ -2308,9 +2308,7 @@ object AnnQueries {
       res.cache()
       res.count()
       truth.unpersist(blocking = false)
-      quant.values.foreach { case (c, idx, _) =>
-        c.unpersist(blocking = false); idx.unpersist(blocking = false)
-      }
+      quant.values.foreach(_._2.unpersist(blocking = false))
       filtered.unpersist(blocking = false)
       res
     })

@@ -57,7 +57,8 @@ object GridSearch {
     * npartitions value, shareable across BOTH algo sweeps: AnnIvf.train
     * is seeded/deterministic, so the shared result is bit-identical to
     * per-sweep retraining — only the wall clock changes (one train
-    * instead of two). Caller owns the caches (unpersist after use). */
+    * instead of two). The centroid table stays an uncached local
+    * relation, whose collects run no job; caller owns the index cache. */
   def trainQuantizers(filtered: DataFrame, nparts: Seq[Int],
       iterations: Int = 2): Map[Int, (DataFrame, DataFrame, Double)] = {
     // OVERLAPPED BUILDS (r20, guide §2.6): each npartitions build is an
@@ -76,7 +77,7 @@ object GridSearch {
     val futures = nparts.distinct.map { np =>
       Future {
         val t0 = System.nanoTime()
-        val c = AnnIvf.train(filtered, np, iterations = iterations).cache()
+        val c = AnnIvf.train(filtered, np, iterations = iterations)
         val idx = AnnIvf.index(filtered, c).cache()
         built(np) = (c, idx, 0.0) // registered for cleanup pre-materialize
         idx.count()
@@ -93,9 +94,7 @@ object GridSearch {
       // future races the cleanup.
       case e: Throwable =>
         futures.foreach(f => scala.util.Try(Await.result(f, Duration.Inf)))
-        built.values.foreach { case (c, idx, _) =>
-          c.unpersist(blocking = false); idx.unpersist(blocking = false)
-        }
+        built.values.foreach(_._2.unpersist(blocking = false))
         throw e
     }
   }
@@ -189,10 +188,10 @@ object GridSearch {
               math.rint(rec * 1e6) / 1e6, nCand)
           }
           } finally {
-            // unpersist locally-trained caches on success AND failure —
+            // unpersist a locally-trained index on success AND failure —
             // a throw mid-evaluation (e.g. the recall collect) must not
-            // leak cached DataFrames for the rest of the session
-            if (shared.isEmpty) { centroids.unpersist(); indexed.unpersist() }
+            // leak a cached DataFrame for the rest of the session
+            if (shared.isEmpty) indexed.unpersist()
           }
         }.recover { case e =>
           combos.sortBy(_.nprobe).map(c =>
@@ -332,10 +331,8 @@ object GridSearch {
             npRows
             } finally {
               // success or throw (e.g. in probeQueries): never leak the
-              // locally-trained quantizer caches
-              if (!sharedQuantizers.contains(npart)) {
-                indexed.unpersist(); centroids.unpersist()
-              }
+              // locally-trained index cache
+              if (!sharedQuantizers.contains(npart)) indexed.unpersist()
             }
         }
       }

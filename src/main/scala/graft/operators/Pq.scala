@@ -78,52 +78,22 @@ object Pq {
   /** Train per-subspace k-means codebooks — all m subspaces JOINTLY:
     * one seeded hash-ranked sample seeds every subspace (same seed
     * rows AnnIvf.train would pick, sliced), and each Lloyd iteration
-    * is ONE aggregate over (sub, cid, subvec) exploded rows instead of
-    * m independent jobs — 1 + iterations Spark jobs total vs
+    * is ONE `AnnIvf.lloydStep` pass over m×ksub cells instead of m
+    * independent jobs — 1 + iterations Spark jobs total vs
     * m·(1 + iterations). At scale: train on a bounded sample — PQ
     * codebooks need ~10^5-10^6 rows regardless of corpus size. */
   def train(data: DataFrame, m: Int = 8, ksub: Int = 16,
       iterations: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding"): Codebook = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val seeds = data.select(col(idCol).as("_id"), col(vecCol).as("_v"))
-      .withColumn("_h", xxhash64(col("_id"), lit(42)))
-      .orderBy(col("_h"), col("_id"))
-      .limit(ksub)
-      .select(col("_v")).as[Array[Float]].collect()
+    require(ksub >= 1, s"Pq.train: ksub must be >= 1, got $ksub")
+    val seeds = AnnIvf.seedRows(data, ksub, idCol, vecCol)
     require(seeds.nonEmpty, "cannot train PQ on an empty table")
     val dim = seeds(0).length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    require(m >= 1 && dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
-    var books: Array[Array[Array[Float]]] =
-      Array.tabulate(m)(s => seeds.map(_.slice(s * dsub, (s + 1) * dsub)))
-    var it = 0
-    while (it < iterations) {
-      val subCols = (0 until m).map { s =>
-        val sv = slice(col(vecCol), s * dsub + 1, dsub)
-        struct(lit(s).as("sub"),
-          GraftFunctions.nearestCentroid(sv, books(s)).as("cid"),
-          sv.as("sv"))
-      }
-      val dimSums = (0 until dsub).map(i =>
-        sum(element_at(col("sv"), i + 1).cast("double")).as(s"_s$i"))
-      val means = data
-        .select(explode(array(subCols: _*)).as("_e"))
-        .select(col("_e.sub").as("sub"), col("_e.cid").as("cid"),
-          col("_e.sv").as("sv"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(count(lit(1)).as("n"), dimSums: _*)
-        .select(col("sub"), col("cid"),
-          array((0 until dsub).map(i =>
-            (col(s"_s$i") / col("n")).cast("float")): _*).as("c"))
-        .as[(Int, Int, Array[Float])].collect()
-      // empty cells keep their previous centroid (standard Lloyd)
-      val next = books.map(_.clone())
-      means.foreach { case (s, c, v) => next(s)(c) = v }
-      books = next
-      it += 1
-    }
+    val books = Iterator.iterate(Array.tabulate(m)(s =>
+      seeds.map(_.slice(s * dsub, (s + 1) * dsub))))(
+      AnnIvf.lloydStep(data, vecCol, _)).drop(iterations).next()
     Codebook(m, dsub, books)
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -162,7 +162,7 @@ class NswSpec extends AnyFunSuite {
     // post-filtered and re-ranked — the reference's own delete
     // semantics, checkable bit for bit
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{lit, row_number}
+    import org.apache.spark.sql.functions.row_number
     val efs = 64
     val wide = NswGraph.searchServable(idx, centroids, queries, efs,
       nprobe = 8, efSearch = efs)

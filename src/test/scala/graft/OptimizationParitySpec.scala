@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Classifier, Corpus, Spread}
-import graft.operators.TextAnalysis
 
 /** r20 optimization-round parity pins: every rewritten primitive must
   * be bit-identical to the declarative form it replaced, and every

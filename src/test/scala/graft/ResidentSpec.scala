@@ -11,7 +11,6 @@ import graft.operators.{AnnIvf, NswGraph, Resident}
   * and the actual-footprint accounting the scale record reports. */
 class ResidentSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  import spark.implicits._
   private val sf = TestSpark.sf
 
   private def data = SparkEntry.dataDf(spark, sf)
