@@ -107,21 +107,23 @@ object AnnIvf {
             s += 1
           }
         }
-        Iterator.range(0, m * k).filter(counts(_) > 0).map(c =>
-          (c, (counts(c), sums.slice(c * dsub, (c + 1) * dsub))))
+        // one flat (n, sums...) array per cell: the count is exact as
+        // a double up to 2^53 rows
+        Iterator.range(0, m * k).filter(counts(_) > 0).map(c => (c,
+          counts(c).toDouble +: sums.slice(c * dsub, (c + 1) * dsub)))
       }
     val reducers = math.min(m * k,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val means = try partials.reduceByKey({ (a, b) =>
-      (0 until dsub).foreach(j => a._2(j) += b._2(j)); (a._1 + b._1, a._2)
+      (0 to dsub).foreach(j => a(j) += b(j)); a
     }, reducers).collect() catch { // a bad row's check, not the abort
       case e: org.apache.spark.SparkException
           if e.getCause.isInstanceOf[IllegalArgumentException] =>
         throw e.getCause
     }
     val next = books.map(_.clone())
-    means.foreach { case (c, (n, s)) =>
-      next(c / k)(c % k) = s.map(x => (x / n).toFloat) }
+    means.foreach { case (c, a) =>
+      next(c / k)(c % k) = Array.tabulate(dsub)(j => (a(j + 1) / a(0)).toFloat) }
     next
   }
 
@@ -1028,6 +1030,19 @@ object AnnIvf {
       .select(col(qidCol), (col("r0") + 1).as("r"), col("cid"))
   }
 
+  /** The queries probing one cell (indices into the probe lists, in
+    * query order) and the 1-based rank each gives it. */
+  private[graft] final case class CellProbes(queries: Array[Int], ranks: Array[Int])
+
+  /** cid -> CellProbes over per-query probe lists (a null list probes
+    * nothing): the broadcast side of every probe-and-scan pass
+    * (`searchFast`, `searchServableCells`, `GridSearch.run`). */
+  private[graft] def cellProbes(probes: Array[Array[Int]]): Map[Int, CellProbes] =
+    probes.indices.flatMap(qi => Option(probes(qi)).toSeq.flatMap(cs =>
+      cs.indices.map(r => (cs(r), qi, r + 1))))
+      .groupBy(_._1).map { case (c, ps) =>
+        c -> CellProbes(ps.map(_._2).toArray, ps.map(_._3).toArray) }
+
   /** Probe-and-scan search, heap lowering: same semantics as `search`
     * (exact top-k within the nprobe nearest cells per query,
     * deterministic tie-break) but the candidate stream is never
@@ -1047,34 +1062,19 @@ object AnnIvf {
     import spark.implicits._
     // probe ranking as a narrow per-row expression, then collected:
     // (qid, vec, probed cells)
-    val matrix = collectCentroids(centroids)
-    val probed = queries
-      .select(col(qidCol).cast("long"), col(qvecCol),
-        GraftFunctions.nearestCells(col(qvecCol), matrix, nprobe))
-      .as[(Long, Array[Float], Array[Int])].collect()
-    val bc = spark.sparkContext.broadcast(probed)
+    val probed = NswGraph.probeQueries(centroids, queries, nprobe, qidCol, qvecCol)
+    val bc = spark.sparkContext.broadcast((probed, cellProbes(probed.map(_._3))))
     val met = metric
     val partials = indexed
       .select(col(idCol).cast("long"), col(vecCol), col("cid"))
       .as[(Long, Array[Float], Int)]
       .mapPartitions { it =>
-        val qs = bc.value
-        // cid -> indices of queries probing it
-        val byCell = scala.collection.mutable.HashMap
-          .empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
-        var qi = 0
-        while (qi < qs.length) {
-          qs(qi)._3.foreach(c =>
-            byCell.getOrElseUpdate(c.toInt,
-              scala.collection.mutable.ArrayBuffer.empty) += qi)
-          qi += 1
-        }
-        val cells = byCell.map { case (c, l) => c -> l.toArray }.toMap
+        val (qs, cells) = bc.value
         val heaps = Array.fill(qs.length)(new graft.functions.TopKBuffer(k))
         val code = Knn.metricCode(met)
         it.foreach { case (id, v, cid) =>
           cells.get(cid) match {
-            case Some(qids) =>
+            case Some(CellProbes(qids, _)) =>
               var j = 0
               while (j < qids.length) {
                 val q = qids(j)
@@ -1294,14 +1294,9 @@ object AnnIvf {
       twoLevel: Option[TwoLevelProbe] = None): DataFrame = {
     val spark = SparkSession.active
     import spark.implicits._
-    val matrix = collectCentroids(centroids)
-    val probed = queries
-      .select(col(qidCol).cast("long"), col(qvecCol),
-        probeCellsCol(col(qvecCol), matrix, nprobe, twoLevel))
-      .as[(Long, Array[Float], Array[Int])].collect()
-    val inv: Map[Int, Array[Int]] = probed.iterator.zipWithIndex
-      .flatMap { case ((_, _, cells), qi) => cells.iterator.map(_ -> qi) }
-      .toArray.groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) }
+    val probed = NswGraph.probeQueries(centroids, queries, nprobe, qidCol,
+      qvecCol, twoLevel)
+    val inv = cellProbes(probed.map(_._3)).map { case (c, p) => c -> p.queries }
     val bc = spark.sparkContext.broadcast((probed.map(_._1),
       probed.map(_._2), inv))
     val (mcode, kk) = (Knn.metricCode(metric), k)

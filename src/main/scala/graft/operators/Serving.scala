@@ -57,30 +57,26 @@ object Serving {
       local: Option[NswGraph.LocalReplica] = None,
       flatLocal: Option[AnnIvf.LocalCellReplica] = None) {
     /** SELECTIVITY MEMO for the no-hint path: a deployment serving
-      * repeated ad-hoc predicates would otherwise pay two column-
-      * pruned counts PER CALL (`serveFilteredExplained`'s honest
-      * default). Keyed by the predicate's SQL rendering; scoped to
+      * repeated ad-hoc predicates would otherwise pay a column-pruned
+      * count aggregate PER CALL (`serveFilteredExplained`'s default). Keyed by the predicate's SQL rendering; scoped to
       * this Artifacts instance, so a new index epoch (new Artifacts
       * over the refreshed index) invalidates it for free. Stores the
       * exact (total, survivors) counts so the over-fetch k' stays the
       * same pure integer function on a cache hit. */
     private[operators] val selCache =
       scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-    /** Number of times the two-count measurement actually ran —
+    /** Number of times the count measurement actually ran —
       * observability for the cache (pinned in ServingSpec). */
     @volatile private[graft] var selComputes: Int = 0
     /** The memoized (total, survivors) for a predicate, if present. */
     def cachedCounts(predicate: Column): Option[(Long, Long)] =
       selCache.get(Serving.predicateKey(predicate))
 
-    /** Cell count for the cost-based `extreme` boundary — one tiny
-      * count over the (driver-sized) centroid table, paid once per
-      * Artifacts epoch. */
-    private[operators] lazy val numCells: Long = centroids.count()
-
+    /** Cell count for the cost-based `extreme` boundary: the rows of
+      * the centroid matrix (one entry per centroid row). */
+    private[operators] lazy val numCells: Long = centroidMatrixLocal.length.toLong
     /** The (driver-sized) centroid matrix — collected once per
-      * Artifacts epoch, only when the auto two-level dial needs the
-      * geometry (numCells past the floor). */
+      * Artifacts epoch. */
     @transient private lazy val centroidMatrixLocal: Array[Array[Float]] =
       AnnIvf.collectCentroids(centroids)
     /** Unfiltered relation row count — one column-pruned count per
@@ -94,9 +90,8 @@ object Serving {
         .build(centroidMatrixLocal).centers, 4)
     /** The dial the distributed dispatcher's resident branch installs
       * when the geometry crossover says the √C probe wins (r19):
-      * `None` below the floor / crossover. The floor
-      * check runs FIRST so small geometries never pay the matrix
-      * collect or the row count. */
+      * `None` below the floor / crossover. The floor check runs
+      * FIRST so small geometries never pay the row count. */
     private[operators] def autoTwoLevelProbe(nprobe: Int,
         sel: Double): Option[AnnIvf.TwoLevelProbe] =
       if (numCells >= Serving.TwoLevelMinCells &&
@@ -516,18 +511,20 @@ object Serving {
     val (sel, kFromCounts) = selectivity match {
       case Some(x) => (x, None)
       case None =>
-        // both counts are column-pruned scans (no vector decode) and
-        // MEMOIZED per (artifact, predicate) — a deployment serving
-        // repeated predicates pays them once per index epoch (tombstone
+        // both counts come from one column-pruned scan (no vector
+        // decode), MEMOIZED per (artifact, predicate) — a deployment
+        // serving repeated predicates pays it once per epoch (tombstone
         // refreshes clear the memo: counts are over the masked
         // relation); one with known filters passes the hint and never
-        // pays them. Predicates whose rendering is ambiguous (anonymous
+        // pays it. Predicates whose rendering is ambiguous (anonymous
         // Scala UDFs all print as `UDF(...)`) or non-deterministic
         // skip the memo and measure per call — a key collision would
         // return counts measured for a different filter.
         def measure(): (Long, Long) = {
           art.selComputes += 1
-          (indexedM.count(), survivors.count())
+          // count_if keeps exactly filter()'s rows (null is false)
+          val r = indexedM.agg(count(lit(1)), count_if(predicate)).head()
+          (r.getLong(0), r.getLong(1))
         }
         val (total, surv) =
           if (cacheableFilter(survivors))
@@ -664,7 +661,7 @@ object Serving {
     * same counts (ServingSpec pins all three, masked and unmasked).
     * Selectivity: pass the hint, or the counts come from ONE pass
     * over the replica's attrs (`selectivityCounts`, milliseconds at
-    * 5M — the local twin of the two column-pruned counts).
+    * 5M — the local twin of the column-pruned count aggregate).
     *
     * DUPLICATE qids: each occurrence in `queries` is served as its
     * OWN rank-1..k group (a batch is positional — two slots with the
@@ -719,7 +716,7 @@ object Serving {
     * predicate; `serve_local_bitset` puts it under the full DuckDB
     * oracle). Needs NO attr-built replica. Selectivity: pass the
     * hint, or one pass over the replica's ids computes the same
-    * integers as the dispatcher's two column-pruned counts.
+    * integers as the dispatcher's column-pruned counts.
     *
     * SCALE NOTE — id-set size: 8 bytes/survivor on the serving heap
     * (the same budget class as the replica itself). The shape is
