@@ -62,16 +62,19 @@ object AnnIvf {
       .orderBy(col("_h"), col("_id"))
       .limit(n)
       .select(col("_v")).as[Array[Float]].collect()
+    checkSeeds(seeds, vecCol)
+    seeds
+  }
+
+  private def checkSeeds(seeds: Array[Array[Float]], vecCol: String): Unit = {
     require(!seeds.contains(null), s"k-means: null $vecCol in a seed row")
     require(seeds.forall(_.length == seeds(0).length), s"k-means: seed " +
       s"$vecCol lengths differ: ${seeds.map(_.length).distinct.mkString(",")}")
-    seeds
   }
 
   /** One Lloyd update of k-means problems over consecutive dsub-dim
     * slices of each row (AnnIvf: one slice; PQ: m), as ONE dense
-    * partition pass: each task assigns its rows with NearestCentroid's
-    * kernel and adds them in row order into C×dsub doubles + C counts;
+    * partition pass: each task runs `lloydPartials` over its rows;
     * non-empty cells shuffle as (cell, n, sums), at most P×C rows, and
     * one reduceByKey merges them in map order: the addition order of
     * the per-dimension sum() aggregate it replaced, so the means are
@@ -82,45 +85,66 @@ object AnnIvf {
       books: Array[Array[Array[Float]]]): Array[Array[Array[Float]]] = {
     val spark = data.sparkSession
     import spark.implicits._
-    val (m, k, dsub) =
-      (books.length, books(0).length, books(0)(0).length)
     val partials = data.select(col(vecCol)).as[Array[Float]].rdd
-      .mapPartitions { rows =>
-        // the child is never evaluated: only the assignment kernel runs
-        val kernels = books.map(b => graft.functions.NearestCentroid(
-          org.apache.spark.sql.catalyst.expressions.Literal(0), b))
-        val sums = new Array[Double](m * k * dsub)
-        val counts = new Array[Long](m * k)
-        val sub = new Array[Float](dsub)
-        rows.foreach { v =>
-          require(v != null, s"k-means: null $vecCol")
-          require(v.length == m * dsub, s"k-means: a row's $vecCol has" +
-            s" length ${v.length}, but the seeds have length ${m * dsub}")
-          var s = 0
-          while (s < m) {
-            val x = if (m == 1) v
-              else { System.arraycopy(v, s * dsub, sub, 0, dsub); sub }
-            val cell = s * k + kernels(s).assignOne(x)
-            counts(cell) += 1
-            var j = 0
-            while (j < dsub) { sums(cell * dsub + j) += x(j); j += 1 }
-            s += 1
-          }
-        }
-        // one flat (n, sums...) array per cell: the count is exact as
-        // a double up to 2^53 rows
-        Iterator.range(0, m * k).filter(counts(_) > 0).map(c => (c,
-          counts(c).toDouble +: sums.slice(c * dsub, (c + 1) * dsub)))
-      }
-    val reducers = math.min(m * k,
+      .mapPartitions(lloydPartials(_, books, vecCol))
+    val reducers = math.min(books.length * books(0).length,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val means = try partials.reduceByKey({ (a, b) =>
-      (0 to dsub).foreach(j => a(j) += b(j)); a
-    }, reducers).collect() catch { // a bad row's check, not the abort
+    val means = try partials.reduceByKey(addPartial _, reducers).collect()
+    catch { // a bad row's check, not the abort
       case e: org.apache.spark.SparkException
           if e.getCause.isInstanceOf[IllegalArgumentException] =>
         throw e.getCause
     }
+    nextBooks(books, means)
+  }
+
+  /** One partition's Lloyd partials, shared by the Spark task and the
+    * driver-local step: assign each row with NearestCentroid's kernel
+    * and add it, in row order, into C×dsub doubles + C counts; emit
+    * one flat (n, sums...) array per non-empty cell (the count is
+    * exact as a double up to 2^53 rows). */
+  private[operators] def lloydPartials(rows: Iterator[Array[Float]],
+      books: Array[Array[Array[Float]]],
+      vecCol: String): Iterator[(Int, Array[Double])] = {
+    val (m, k, dsub) =
+      (books.length, books(0).length, books(0)(0).length)
+    // the child is never evaluated: only the assignment kernel runs
+    val kernels = books.map(b => graft.functions.NearestCentroid(
+      org.apache.spark.sql.catalyst.expressions.Literal(0), b))
+    val sums = new Array[Double](m * k * dsub)
+    val counts = new Array[Long](m * k)
+    val sub = new Array[Float](dsub)
+    rows.foreach { v =>
+      require(v != null, s"k-means: null $vecCol")
+      require(v.length == m * dsub, s"k-means: a row's $vecCol has" +
+        s" length ${v.length}, but the seeds have length ${m * dsub}")
+      var s = 0
+      while (s < m) {
+        val x = if (m == 1) v
+          else { System.arraycopy(v, s * dsub, sub, 0, dsub); sub }
+        val cell = s * k + kernels(s).assignOne(x)
+        counts(cell) += 1
+        var j = 0
+        while (j < dsub) { sums(cell * dsub + j) += x(j); j += 1 }
+        s += 1
+      }
+    }
+    Iterator.range(0, m * k).filter(counts(_) > 0).map(c => (c,
+      counts(c).toDouble +: sums.slice(c * dsub, (c + 1) * dsub)))
+  }
+
+  /** Merge a later partial into an earlier one, in place. */
+  private def addPartial(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var j = 0
+    while (j < a.length) { a(j) += b(j); j += 1 }
+    a
+  }
+
+  /** The books after a step: each merged cell's mean, empty cells
+    * keep their centroid. */
+  private def nextBooks(books: Array[Array[Array[Float]]],
+      means: Iterable[(Int, Array[Double])]): Array[Array[Array[Float]]] = {
+    val (k, dsub) = (books(0).length, books(0)(0).length)
     val next = books.map(_.clone())
     means.foreach { case (c, a) =>
       next(c / k)(c % k) = Array.tabulate(dsub)(j => (a(j + 1) / a(0)).toFloat) }
@@ -156,14 +180,36 @@ object AnnIvf {
   /** Super-centroid table (sid INT, centroid ARRAY<FLOAT>) for the
     * two-level coarse quantizer: k-means over the SUB-CENTROID matrix
     * itself (C rows — trivially cheap at any corpus size; the data is
-    * never rescanned). √C supers by default. */
+    * never rescanned). √C supers by default.
+    *
+    * Trained ON THE DRIVER, bit-identical to `train` over the same
+    * table: its partitions are collected once, in order (one job on a
+    * cached table), the seeds are ranked by the same
+    * (xxhash64(cid, 42), cid) key `seedRows` sorts on, and each step
+    * runs `lloydPartials` per partition and merges the partials in
+    * partition order, as `lloydStep`'s reduceByKey does — no Spark
+    * job per step. */
   def trainSupers(centroids: DataFrame, numSupers: Int = 0,
       iterations: Int = 4): DataFrame = {
-    val c = centroids.count().toInt
+    val spark = centroids.sparkSession
+    import spark.implicits._
+    val parts = centroids.select(col("cid"), col("centroid"))
+      .as[(Int, Array[Float])].rdd.glom().collect()
+    val c = parts.iterator.map(_.length).sum
     val nS = if (numSupers > 0) numSupers
       else math.max(1, math.ceil(math.sqrt(c.toDouble)).toInt)
-    train(centroids, nS, iterations, idCol = "cid", vecCol = "centroid")
-      .withColumnRenamed("cid", "sid")
+    val seeds = parts.flatten.map { case (cid, v) =>
+      import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+      (XxHash64(Seq(Literal(cid), Literal(42)), 42).eval()
+        .asInstanceOf[Long], cid, v)
+    }.sortBy(r => (r._1, r._2)).take(nS).map(_._3)
+    checkSeeds(seeds, "centroid")
+    val rows = parts.map(_.map(_._2))
+    val supers = if (seeds.isEmpty) seeds else Iterator.iterate(
+      Array(seeds))(books => nextBooks(books, rows.toSeq
+        .flatMap(p => lloydPartials(p.iterator, books, "centroid"))
+        .groupMapReduce(_._1)(_._2)(addPartial))).drop(iterations).next()(0)
+    supers.zipWithIndex.map(_.swap).toSeq.toDF("sid", "centroid")
   }
 
   /** members(sid) = ascending cids whose sub-centroid's nearest super
@@ -1135,13 +1181,15 @@ object AnnIvf {
     * — bit-identical to `searchFast` (KnnSpec) with no per-call
     * decode.
     *
-    * MEMORY GUARD (see `Resident`): by default the decoded footprint
-    * is estimated from one column-pruned (count, dim) aggregate and
-    * checked against free executor storage — fits → `MEMORY_ONLY`
-    * (the resident contract); doesn't → `MEMORY_AND_DISK` with a loud
-    * warning, so an undersized deployment degrades to bounded disk
-    * re-reads instead of silently re-decoding the corpus on every
-    * eviction. Pass `storage = Some(level)` to skip the estimate. */
+    * MEMORY GUARD (see `Resident.persistSized`): by default the
+    * decode runs once, persisted `MEMORY_ONLY` by a job that also
+    * folds the blocks' (rows, widest dim) and checks the decoded
+    * footprint against the free executor storage read before the
+    * build — fits → the tier is returned built (the resident
+    * contract); doesn't → `MEMORY_AND_DISK` with a loud warning, so
+    * an undersized deployment degrades to bounded disk re-reads
+    * instead of silently re-decoding the corpus on every eviction.
+    * Pass `storage = Some(level)` to skip the pass. */
   def servableCells(indexed: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       attrCol: Option[String] = None,
@@ -1149,15 +1197,7 @@ object AnnIvf {
       : org.apache.spark.rdd.RDD[FlatBlock] = {
     val spark = indexed.sparkSession
     import spark.implicits._
-    val level = storage.getOrElse {
-      val r = indexed
-        .agg(count(lit(1)), max(size(col(vecCol)))).head()
-      val (n, dim) = (r.getLong(0), if (r.isNullAt(1)) 0 else r.getInt(1))
-      Resident.autoLevel(spark,
-        Resident.estimateFlatBytes(n, dim, attrCol.isDefined),
-        "AnnIvf.servableCells")
-    }
-    indexed
+    val decoded = indexed
       .select(col("cid").cast("int"), col(idCol).cast("long"), col(vecCol),
         attrCol.map(c => col(c).cast("double")).getOrElse(lit(0.0)))
       .as[(Int, Long, Array[Float], Double)]
@@ -1182,7 +1222,21 @@ object AnnIvf {
         }
       }
       .rdd
-      .persist(level)
+    Resident.persistSized(decoded, storage, "AnnIvf.servableCells")(
+      blockStats)(t => Resident.estimateFlatBytes(t.rows, t.dim,
+      attrCol.isDefined))
+  }
+
+  /** One resident block's share of the tier and replica guards: rows,
+    * the widest row's dim, its rows in the packed fp16 form, and
+    * whether it carries filter attributes. */
+  private[operators] def blockStats(b: FlatBlock): Resident.TierStats = {
+    val n = b.ids.length.toLong
+    val dim = if (b.rows == null) b.dim
+      else b.rows.iterator.filter(_ != null).map(_.length)
+        .foldLeft(b.dim)(math.max)
+    Resident.TierStats(n, dim, 0L, if (b.flat != null) n else 0L,
+      if (b.half != null) n else 0L, b.attrs != null)
   }
 
   /** `servableCells` for a `writeIndexPacked` tree: the binary16
@@ -1202,18 +1256,7 @@ object AnnIvf {
       : org.apache.spark.rdd.RDD[FlatBlock] = {
     val spark = indexed.sparkSession
     import spark.implicits._
-    val level = storage.getOrElse {
-      val r = indexed
-        .agg(count(lit(1)), max(length(col(vecCol)) / 2)).head()
-      val (n, dim) = (r.getLong(0),
-        if (r.isNullAt(1)) 0 else r.getDouble(1).toInt)
-      // the packed form stores 2 bytes/dim where the fp32 estimate
-      // assumes 4 — subtract the difference
-      Resident.autoLevel(spark,
-        Resident.estimateFlatBytes(n, dim, attrCol.isDefined) - 2L * n * dim,
-        "AnnIvf.servableCellsPacked")
-    }
-    indexed
+    val decoded = indexed
       .select(col("cid").cast("int"), col(idCol).cast("long"), col(vecCol),
         attrCol.map(c => col(c).cast("double")).getOrElse(lit(0.0)))
       .as[(Int, Long, Array[Byte], Double)]
@@ -1256,7 +1299,11 @@ object AnnIvf {
         }
       }
       .rdd
-      .persist(level)
+    // the packed form stores 2 bytes/dim where the fp32 estimate
+    // assumes 4 — subtract the difference
+    Resident.persistSized(decoded, storage, "AnnIvf.servableCellsPacked")(
+      blockStats)(t => Resident.estimateFlatBytes(t.rows, t.dim,
+      attrCol.isDefined) - 2L * t.rows * t.dim)
   }
 
   /** Serve a query batch from the resident blocks: probes are
@@ -1557,32 +1604,22 @@ object AnnIvf {
     }
   }
 
-  /** Build the local flat replica from the resident blocks —
-    * partition-streamed like `NswGraph.localReplica` (one small job
-    * per partition; `spark.driver.maxResultSize` never sees the whole
-    * corpus), heap-guarded the same way. One-time regroup: count per
-    * cell, prefix-sum offsets, fill. */
+  /** Build the local flat replica from the resident blocks through
+    * `Resident.collectReplica`, like `NswGraph.localReplica`: one job
+    * sizes every partition and the heap guard refuses before any
+    * collect; the blocks then arrive in partition order in batches
+    * bounded by a share of `spark.driver.maxResultSize`, which never
+    * sees the whole corpus. One-time regroup: count per cell,
+    * prefix-sum offsets, fill. An empty tier gives an empty replica
+    * that serves every predicate with no rows. */
   def localCellReplica(idx: org.apache.spark.rdd.RDD[FlatBlock],
       centroids: DataFrame, maxHeapFraction: Double = 0.6,
       force: Boolean = false): LocalCellReplica = {
-    if (!force) {
-      val (n, dim, withAttrs, halfRows) = idx
-        .map(b => (b.ids.length.toLong, b.dim, b.attrs != null,
-          if (b.half != null) b.ids.length.toLong else 0L))
-        .fold((0L, 0, false, 0L)) { case ((n1, d1, a1, h1), (n2, d2, a2, h2)) =>
-          (n1 + n2, math.max(d1, d2), a1 || a2, h1 + h2) }
-      // packed blocks hold 2 bytes/dim where the estimate assumes 4
-      val est = Resident.estimateFlatBytes(n, dim, withAttrs) -
-        2L * halfRows * dim
-      val free = Resident.freeHeapAfterGc()
-      require(est <= (free * maxHeapFraction).toLong,
-        f"localCellReplica: decoded estimate ${est / 1e6}%.0f MB " +
-          f"exceeds ${maxHeapFraction * 100}%.0f%% of the free driver " +
-          f"heap (${free / 1e6}%.0f MB free) - serve from the " +
-          "distributed resident tier, grow the driver, or pass " +
-          "force = true")
-    }
-    val blocks = idx.toLocalIterator.toArray
+    // packed blocks hold 2 bytes/dim where the estimate assumes 4
+    def est(t: Resident.TierStats): Long =
+      Resident.estimateFlatBytes(t.rows, t.dim, t.attrs) - 2L * t.halfRows * t.dim
+    val blocks = Resident.collectReplica(idx, "localCellReplica",
+      maxHeapFraction, force)(blockStats)(est, est)(identity)
     val n = blocks.iterator.map(_.ids.length).sum
     val withAttrs = blocks.exists(_.attrs != null)
     // all-or-none (r14 ADVICE): a mixed-block index would otherwise
@@ -1633,7 +1670,9 @@ object AnnIvf {
     // pass 2: fill at each cell's cursor
     val cursor = java.util.Arrays.copyOf(cellOff, cellOff.length)
     val ids = new Array[Long](n)
-    val attrs = if (withAttrs) new Array[Double](n) else null
+    // an empty tier's replica carries (no) attrs, so it serves every
+    // predicate with no rows rather than refusing as attr-less
+    val attrs = if (withAttrs || n == 0) new Array[Double](n) else null
     val flat = if (flattenable) new Array[Float](n * dim) else null
     val half = if (packable) new Array[Short](n * dim) else null
     val rows =

@@ -45,7 +45,8 @@ object Bpe {
     * total symbol count fits `graft.bpe.localTrainBudget` (default 4M
     * symbol rows ≈ tens of MB — the same bounded-driver-work contract
     * as the classifier's localTrainBudget), the (word, wcount) vocab
-    * is collected ONCE and the rounds replay on the driver:
+    * is collected ONCE — the same bounded collect decides the gate —
+    * and the rounds replay on the driver:
     * integer pair counts summed per adjacency, argmax by (count desc,
     * left asc, right asc) under UTF8 BINARY byte order (exactly
     * Spark's string ordering), greedy left-to-right merge application
@@ -64,13 +65,21 @@ object Bpe {
       .groupBy("word").agg(count(lit(1)).as("wcount"))
     val budget = spark.conf.get("graft.bpe.localTrainBudget",
       "4000000").toLong
-    // one vocab-sized aggregate decides the mode: total symbol rows =
-    // Σ |word| (code points) over the distinct vocabulary
-    val symRows = words
-      .agg(coalesce(sum(length(col("word")).cast("long")), lit(0L)))
-      .head().getLong(0)
+    // one vocab collect decides the mode AND feeds the local replay:
+    // total symbol rows = Σ |word| (code points) over the distinct
+    // non-empty vocabulary. Every such word has >= 1 symbol, so
+    // budget + 1 rows already prove the sum is over budget — the
+    // collect stops there (empty words add no symbol)
+    val cap = math.max(0L, math.min(budget, Int.MaxValue - 2L) + 1L).toInt
+    val vocab = words
+      .filter(length(col("word")) > 0)
+      .select(col("word"), col("wcount").cast("long"))
+      .limit(cap).as[(String, Long)].collect()
+    val symRows = vocab.iterator
+      .map { case (w, _) => w.codePointCount(0, w.length).toLong }.sum
     val merges: Seq[(Int, String, String, Long)] =
-      if (symRows <= budget) trainBpeLocal(words, numMerges)
+      if (vocab.length < cap && symRows <= budget)
+        trainBpeLocal(vocab, numMerges)
       else trainBpeDistributed(words, numMerges)
     merges.toDF("round", "left_sym", "right_sym", "pair_count")
       .select(col("round").cast("long"), col("left_sym"),
@@ -117,20 +126,11 @@ object Bpe {
     * byte order), same greedy-left-to-right application the
     * declarative window formulation lowers to. Words split into CODE
     * POINTS (substr/length on UTF8String are code-point-based). */
-  private def trainBpeLocal(words: DataFrame,
+  private def trainBpeLocal(words: Array[(String, Long)],
       numMerges: Int): Seq[(Int, String, String, Long)] = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    val vocab: Array[(Array[String], Long)] = words
-      .filter(length(col("word")) > 0)
-      .select(col("word"), col("wcount").cast("long"))
-      .as[(String, Long)].collect()
-      .map { case (w, c) =>
-        val syms = w.codePoints().toArray
-          .map(cp => new String(Character.toChars(cp)))
-        (syms, c)
-      }
-    var cur: Array[(Array[String], Long)] = vocab
+    var cur: Array[(Array[String], Long)] = words.map { case (w, c) =>
+      (w.codePoints().toArray.map(cp => new String(Character.toChars(cp))), c)
+    }
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var round = 1
     var exhausted = false

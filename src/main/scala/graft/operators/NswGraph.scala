@@ -486,28 +486,15 @@ object NswGraph {
   }
 
   /** `servableIndex` for a `writeGraphIndexPacked` tree: cells decode
-    * once, straight to the packed serving form. The storage estimate
+    * once, straight to the packed serving form. The storage guard
     * budgets the packed footprint (2 bytes/dim). */
   def servableIndexPacked(spark: SparkSession, path: String,
       storage: Option[org.apache.spark.storage.StorageLevel] = None)
-      : org.apache.spark.rdd.RDD[ServableCell] = {
-    val packed = readGraphIndexPacked(spark, path)
-    val level = storage.getOrElse {
-      val r = packed.toDF()
-        .agg(sum(size(col("ids"))),
-          max(length(element_at(col("vecs16"), 1)) / 2),
-          sum(aggregate(transform(col("adj"), a => size(a)),
-            lit(0L), (acc, x) => acc + x)))
-        .head()
-      val rows = if (r.isNullAt(0)) 0L else r.getLong(0)
-      val dim = if (r.isNullAt(1)) 0 else r.getDouble(1).toInt
-      val edges = if (r.isNullAt(2)) 0L else r.getLong(2)
-      Resident.autoLevel(spark,
-        Resident.estimateGraphBytes(rows, dim, edges) - 2L * rows * dim,
-        "NswGraph.servableIndexPacked")
-    }
-    packed.rdd.map(decodeCellPacked).persist(level)
-  }
+      : org.apache.spark.rdd.RDD[ServableCell] =
+    Resident.persistSized(readGraphIndexPacked(spark, path).rdd
+      .map(decodeCellPacked), storage, "NswGraph.servableIndexPacked")(
+      cellStats)(t => Resident.estimateGraphBytes(t.rows, t.dim, t.edges) -
+        2L * t.rows * t.dim)
 
   /** `appendToGraphIndex` for a PACKED tree: old touched cells decode
     * through the fp16 codec (exact — binary16 values are a subset of
@@ -730,30 +717,29 @@ object NswGraph {
     * searches run `mapPartitions` over them with zero per-call decode,
     * and the only data movement is the q×k partial merge.
     *
-    * MEMORY GUARD (see `Resident`): the decoded footprint (vectors +
-    * CSR adjacency) is estimated from one aggregate over the graph
-    * Dataset's array sizes and checked against free executor storage
-    * — fits → `MEMORY_ONLY`; doesn't → `MEMORY_AND_DISK` with a loud
-    * warning (bounded disk re-reads instead of silent re-decode on
-    * eviction). Pass `storage = Some(level)` to skip the estimate. */
+    * MEMORY GUARD (see `Resident.persistSized`): the decode runs once,
+    * persisted `MEMORY_ONLY` by a job that also folds the decoded
+    * footprint (vectors + CSR adjacency, `cellStats`) and checks it
+    * against the free executor storage read before the build — fits →
+    * the tier is returned built; doesn't → `MEMORY_AND_DISK` with a
+    * loud warning (bounded disk re-reads instead of silent re-decode
+    * on eviction). Pass `storage = Some(level)` to skip the pass. */
   def servableIndex(graphs: org.apache.spark.sql.Dataset[CellGraph],
       storage: Option[org.apache.spark.storage.StorageLevel] = None)
-      : org.apache.spark.rdd.RDD[ServableCell] = {
-    val level = storage.getOrElse {
-      val r = graphs
-        .agg(sum(size(col("ids"))),
-          max(size(element_at(col("vecs"), 1))),
-          sum(aggregate(transform(col("adj"), a => size(a)),
-            lit(0L), (acc, x) => acc + x)))
-        .head()
-      val rows = if (r.isNullAt(0)) 0L else r.getLong(0)
-      val dim = if (r.isNullAt(1)) 0 else r.getInt(1)
-      val edges = if (r.isNullAt(2)) 0L else r.getLong(2)
-      Resident.autoLevel(graphs.sparkSession,
-        Resident.estimateGraphBytes(rows, dim, edges),
-        "NswGraph.servableIndex")
-    }
-    graphs.rdd.map(decodeCell).persist(level)
+      : org.apache.spark.rdd.RDD[ServableCell] =
+    Resident.persistSized(graphs.rdd.map(decodeCell), storage,
+      "NswGraph.servableIndex")(cellStats)(t =>
+      Resident.estimateGraphBytes(t.rows, t.dim, t.edges))
+
+  /** One serving cell's share of the tier and replica guards: rows,
+    * dim (the fallback rows' when wider), CSR edges, and its rows in
+    * the flat fp32 or the packed fp16 form. */
+  private[operators] def cellStats(c: ServableCell): Resident.TierStats = {
+    val n = c.ids.length.toLong
+    Resident.TierStats(n,
+      c.dim.max(if (c.rows == null || c.rows.isEmpty) 0 else c.rows(0).length),
+      c.adjOff(c.ids.length).toLong, if (c.flat != null) n else 0L,
+      if (c.half != null) n else 0L, attrs = false)
   }
 
   /** Decode one CellGraph into its resident serving form — flatten
@@ -1044,58 +1030,38 @@ object NswGraph {
   def packReplicaFp16(rep: LocalReplica): LocalReplica =
     new LocalReplica(rep.cells.map(packCellFp16), rep.centroidMatrix)
 
-  /** Build the driver-local replica from the resident index — one
-    * partition-streamed collection (`toLocalIterator`: one small job
-    * per partition, so `spark.driver.maxResultSize` sees one
-    * partition's cells at a time, not the whole index — a 1.4 GiB
-    * replica builds under the 1 GiB default), paid once per index
-    * epoch (the same epoch-snapshot contract as `servableIndex`:
-    * tombstones arrive per call via the serve-time mask,
-    * appends/deletes need a rebuild). The heap guard estimates the
-    * decoded footprint from one pass over the RDD's array sizes and
-    * refuses a replica that would eat more than `maxHeapFraction` of
-    * the driver's remaining heap (pass `force = true` for a
-    * deployment that sized its serving driver deliberately) — the
-    * loud-failure twin of `Resident.autoLevel`'s storage check. */
+  /** Build the driver-local replica from the resident index, paid
+    * once per index epoch (the same epoch-snapshot contract as
+    * `servableIndex`: tombstones arrive per call via the serve-time
+    * mask, appends/deletes need a rebuild). `Resident.collectReplica`
+    * sizes every partition in one job, then fetches the partitions in
+    * order in batches bounded by a share of
+    * `spark.driver.maxResultSize` — one job at small sizes, while the
+    * limit never sees the whole index (a 1.4 GiB replica builds under
+    * the 1 GiB default). The heap guard refuses, before any collect,
+    * a replica that would eat more than `maxHeapFraction` of the
+    * driver's remaining heap (pass `force = true` for a deployment
+    * that sized its serving driver deliberately) — the loud-failure
+    * twin of the resident tier's storage check. */
   def localReplica(idx: org.apache.spark.rdd.RDD[ServableCell],
       centroids: DataFrame, maxHeapFraction: Double = 0.6,
       force: Boolean = false, packFp16: Boolean = false): LocalReplica = {
-    if (!force) {
-      val (rows, dimMax, edges, flatRows, halfRows) = idx
-        .map(c => (c.ids.length.toLong,
-          c.dim.max(if (c.rows == null || c.rows.isEmpty) 0
-            else c.rows(0).length),
-          (c.adjOff(c.ids.length)).toLong,
-          if (c.flat != null) c.ids.length.toLong else 0L,
-          if (c.half != null) c.ids.length.toLong else 0L))
-        .fold((0L, 0, 0L, 0L, 0L)) {
-          case ((r1, d1, e1, f1, h1), (r2, d2, e2, f2, h2)) =>
-            (r1 + r2, math.max(d1, d2), e1 + e2, f1 + f2, h1 + h2) }
-      // packed vectors take 2 bytes/dim instead of 4 (ids/adjacency
-      // unchanged) — the guard budgets the form actually built.
-      // Only FLAT cells pack (ragged/oversize cells stay fp32 —
-      // packCellFp16 passes them through), so the subtraction counts
-      // flat-cell rows, not all rows (r17 ADVICE: the all-rows
-      // subtraction underestimated replicas with many ragged cells);
-      // already-half cells are 2 bytes/dim whether or not this build
-      // packs, so they subtract unconditionally.
-      val est = Resident.estimateGraphBytes(rows, dimMax, edges) -
-        2L * dimMax * (halfRows + (if (packFp16) flatRows else 0L))
-      val free = Resident.freeHeapAfterGc()
-      require(est <= (free * maxHeapFraction).toLong,
-        f"localReplica: decoded graph estimate ${est / 1e6}%.0f MB " +
-          f"exceeds ${maxHeapFraction * 100}%.0f%% of the free driver " +
-          f"heap (${free / 1e6}%.0f MB free) - serve from the " +
-          "distributed resident tier, grow the driver, or pass " +
-          "force = true")
-    }
-    // packing per streamed cell: the fp32 form of each cell is
+    // packed vectors take 2 bytes/dim instead of 4 (ids/adjacency
+    // unchanged) — the guard budgets the form actually built. Only
+    // FLAT cells pack (ragged/oversize cells stay fp32 — packCellFp16
+    // passes them through), so the subtraction counts flat-cell rows,
+    // not all rows; already-half cells are 2 bytes/dim whether or not
+    // this build packs, so they subtract unconditionally.
+    def est(t: Resident.TierStats, packs: Boolean): Long =
+      Resident.estimateGraphBytes(t.rows, t.dim, t.edges) -
+        2L * t.dim * (t.halfRows + (if (packs) t.flatRows else 0L))
+    // packing per fetched batch: the fp32 form of a batch is
     // transient, so the build never holds both precisions of the
     // whole corpus
-    val it = idx.toLocalIterator
-    new LocalReplica(
-      (if (packFp16) it.map(packCellFp16) else it).toArray,
-      AnnIvf.collectCentroids(centroids))
+    val cells = Resident.collectReplica(idx, "localReplica",
+      maxHeapFraction, force)(cellStats)(est(_, packFp16), est(_, false))(
+      b => if (packFp16) b.map(packCellFp16) else b)
+    new LocalReplica(cells, AnnIvf.collectCentroids(centroids))
   }
 
   /** INCREMENTAL replica refresh (r16 — the carried r14 item): after
@@ -1139,13 +1105,12 @@ object NswGraph {
     val fresh: Array[ServableCell] =
       if (dirs.isEmpty) Array.empty
       else {
-        // partition-streamed like the full rebuild (localReplica's
-        // toLocalIterator): a SPREAD batch can touch most cells, and
-        // a plain collect of their raw rows then exceeds
-        // spark.driver.maxResultSize (measured: 1.05 GiB > the 1 GiB
-        // default at a 5M all-cells refresh) — the iterator fetches
-        // one partition at a time, so the limit sees per-partition
-        // sizes, exactly like the guarded build path
+        // partition-streamed (toLocalIterator): a SPREAD batch can
+        // touch most cells, and a plain collect of their raw rows then
+        // exceeds spark.driver.maxResultSize (measured: 1.05 GiB > the
+        // 1 GiB default at a 5M all-cells refresh) — the iterator
+        // fetches one partition at a time, so the limit sees
+        // per-partition sizes
         val df = AnnIvf.readCells(spark, path, dirs)
         val b = Array.newBuilder[ServableCell]
         // schema sniff (r18): a writeGraphIndexPacked tree carries

@@ -129,6 +129,34 @@ class BpeSpec extends AnyFunSuite {
     assert(local.nonEmpty)
   }
 
+  test("trainBpe: the local gate is Σ code points <= budget, decided " +
+      "from the one vocabulary collect") {
+    // distinct words hug pug pun bun (3 symbols each), hugs (4) and
+    // h😀g (3 code points, 4 UTF-16 units): 19 symbols
+    val docs = Seq((1L, "hug hug pug pun h\uD83D\uDE00g"),
+      (2L, "bun hugs pun pun")).toDF("doc_id", "text")
+    val collector = new Profile.Collector
+    spark.sparkContext.addSparkListener(collector)
+    def run(budget: Long) = {
+      spark.conf.set("graft.bpe.localTrainBudget", budget.toString)
+      try {
+        collector.drained(spark); collector.reset()
+        val merges = Bpe.trainBpe(docs, numMerges = 4)
+        val jobs = collector.drained(spark).size
+        (merges.orderBy("round").collect().map(r => (r.getLong(0),
+          r.getString(1), r.getString(2), r.getLong(3))).toList, jobs)
+      } finally spark.conf.unset("graft.bpe.localTrainBudget")
+    }
+    try {
+      val (local, localJobs) = run(19L)
+      val (dist, distJobs) = run(18L)
+      assert(local == dist && local.nonEmpty)
+      // the local replay is the vocabulary collect alone
+      assert(localJobs <= 2, s"local mode ran $localJobs jobs")
+      assert(distJobs > 4 * localJobs, s"distributed ran $distJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(collector)
+  }
+
   test("trainBpe: partition independence on testdata") {
     val docs = Tables.load(spark, TestSpark.sf, "documents")
     def run(df: org.apache.spark.sql.DataFrame) =

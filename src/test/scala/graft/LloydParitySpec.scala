@@ -19,8 +19,8 @@ class LloydParitySpec extends AnyFunSuite {
 
   /** `n` clustered rows (vec_id, embedding) over `parts` partitions,
     * cached and materialized, so both plans read the same partitions. */
-  private def rows(n: Int, parts: Int): DataFrame = {
-    val rnd = new scala.util.Random(7)
+  private def rows(n: Int, parts: Int, seed: Int = 7): DataFrame = {
+    val rnd = new scala.util.Random(seed)
     val centers = Array.fill(24)(Array.fill(Dim)(rnd.nextFloat() * 4 - 2))
     val df = (0 until n).map { i =>
       val c = centers(rnd.nextInt(centers.length))
@@ -131,6 +131,32 @@ class LloydParitySpec extends AnyFunSuite {
         "centroid")
       assert(bits(got) == bits(want))
     } finally data.unpersist()
+  }
+
+  test("trainSupers on a cached centroid table equals the Spark Lloyd " +
+      "path and the sum() plan bit for bit, in at most 1 job") {
+    Seq(1, 2, 31).foreach { seed =>
+      val data = rows(3000, 4, seed)
+      val cents = AnnIvf.train(data, 256).cache()
+      val collector = new Profile.Collector
+      try {
+        cents.count()
+        val want = aggTrain(cents, 16, 4, idCol = "cid", vecCol = "centroid")
+        val viaSpark = AnnIvf.collectCentroids(AnnIvf.train(cents, 16, 4,
+          idCol = "cid", vecCol = "centroid"))
+        spark.sparkContext.addSparkListener(collector)
+        collector.drained(spark); collector.reset()
+        val supers = AnnIvf.trainSupers(cents)
+        val jobs = collector.drained(spark)
+        assert(jobs.size <= 1, s"trainSupers: $jobs")
+        val got = AnnIvf.collectMatrix(supers, "sid", "centroid")
+        assert(bits(got) == bits(want) && bits(got) == bits(viaSpark),
+          s"seed $seed")
+      } finally {
+        spark.sparkContext.removeSparkListener(collector)
+        cents.unpersist(); data.unpersist()
+      }
+    }
   }
 
   test("Pq.train equals the exploded sum() plan bit for bit, ksub " +
