@@ -2714,7 +2714,7 @@ object AnnQueries {
           col("label").isin(0, 1) && col("vec_id") % 3 =!= 1)
         // extreme pinned (branch-driving entry; see serve_auto_strong)
         val (strat, res) = Sharded.serveFilteredShardedIdSetDf(shards,
-          None, queriesDf(s, d), K, ids, nprobe = 2, extreme = 0.02)
+          queriesDf(s, d), K, ids, nprobe = 2, extreme = 0.02)
         require(strat == Serving.IvfPrefilterResident,
           s"dispatched $strat")
         res.select(col("qid"), col("rank"), col("neighbor_id"))
@@ -2786,9 +2786,9 @@ object AnnQueries {
     // 2-nearest probes, exact in-cell top-10), but the query side is
     // never broadcast or collected — probes come from the narrow
     // NearestCells expression and candidates from a sort-merge join on
-    // the cell id. This is the lowering `Knn.adaptive` picks when BOTH
-    // sides exceed their budgets (millions of re-embedded queries at
-    // 100 TB); hash-equality with ann_ivf_fixed's oracle proves the
+    // the cell id. This is the lowering for when BOTH sides exceed
+    // their budgets (millions of re-embedded queries at 100 TB);
+    // hash-equality with ann_ivf_fixed's oracle proves the
     // distributed plan changes nothing but the physical join.
     "ann_ivf_bigq" -> ((s, d) => {
       val data = dataDf(s, d).filter(filterLow)
@@ -2799,8 +2799,8 @@ object AnnQueries {
     }),
     // the cogroup HEAP-KERNEL distributed lowering under the same
     // oracle — searchFast's per-pair cost with both sides shuffled
-    // once by cell id, the plan Knn.adaptive picks for big-query x
-    // big-data (see searchShuffledFast's scaladoc)
+    // once by cell id, the plan for big-query x big-data (see
+    // searchShuffledFast's scaladoc)
     "ann_ivf_bigq_fast" -> ((s, d) => {
       val data = dataDf(s, d).filter(filterLow)
       val centroids = fixedCentroids(data, 311)

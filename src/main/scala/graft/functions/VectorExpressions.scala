@@ -41,8 +41,31 @@ abstract class VectorBinaryExpression extends BinaryExpression
 
   protected def evalLoop(x: ArrayData, y: ArrayData): Double
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    evalLoop(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  /** A dim mismatch fails loudly, naming both inputs and both dims: a
+    * distance over the shared prefix is a wrong answer, not a
+    * distance. Checked once per pair, before the element loop; null
+    * inputs stay null-in, null-out (`nullIntolerant`). */
+  private def dimMismatchPrefix: String =
+    s"$prettyName: vector dims differ between ${left.sql} and ${right.sql}"
+
+  /** Java source of the dim check, for `doGenCode`. */
+  protected def dimCheckCode(ctx: CodegenContext, a: String,
+      b: String): String = {
+    val msg = ctx.addReferenceObj("dimMismatch", dimMismatchPrefix)
+    s"""if ($a.numElements() != $b.numElements()) {
+       |  throw new IllegalArgumentException($msg + ": " +
+       |    $a.numElements() + " vs " + $b.numElements());
+       |}""".stripMargin
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements())
+      throw new IllegalArgumentException(s"$dimMismatchPrefix: " +
+        s"${x.numElements()} vs ${y.numElements()}")
+    evalLoop(x, y)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -50,7 +73,8 @@ abstract class VectorBinaryExpression extends BinaryExpression
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${dimCheckCode(ctx, a, b)}
+         |int $n = $a.numElements();
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  ${loopBody(a, b, acc, i)}
@@ -69,7 +93,7 @@ case class VectorSqDist(left: Expression, right: Expression)
     s"""double ${i}_d = (double)$a.getFloat($i) - (double)$b.getFloat($i);
        |$acc += ${i}_d * ${i}_d;""".stripMargin
   protected def evalLoop(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
     var acc = 0.0; var i = 0
     while (i < n) {
       val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
@@ -89,7 +113,7 @@ case class VectorDot(left: Expression, right: Expression)
   protected def loopBody(a: String, b: String, acc: String, i: String): String =
     s"$acc += (double)$a.getFloat($i) * (double)$b.getFloat($i);"
   protected def evalLoop(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
     var acc = 0.0; var i = 0
     while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
     acc
@@ -116,7 +140,8 @@ case class VectorCosine(left: Expression, right: Expression)
       val vx = ctx.freshName("vx")
       val vy = ctx.freshName("vy")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${dimCheckCode(ctx, a, b)}
+         |int $n = $a.numElements();
          |double $dot = 0.0, $na = 0.0, $nb = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $vx = (double)$a.getFloat($i);
@@ -128,7 +153,7 @@ case class VectorCosine(left: Expression, right: Expression)
        """.stripMargin
     })
   protected def evalLoop(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
       val a = x.getFloat(i).toDouble; val b = y.getFloat(i).toDouble

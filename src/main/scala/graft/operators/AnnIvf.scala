@@ -245,7 +245,7 @@ object AnnIvf {
     * (at 0.77% kept there is almost no distance work — per-query cost
     * is C centroid dots per shard, and K independent shards pay K×C
     * vs the single replica's K·C/2... see BENCH_scale_r18). This
-    * prober is the ASSIGNMENT path's own device (`assignTwoLevel` /
+    * prober is the ASSIGNMENT path's own device (`indexTwoLevel`'s
     * `NearestCentroid2`) applied at serve time: beam the `wSuper`
     * nearest supers (√C dots), then argmin over ONLY their member
     * cells — O((√C + wSuper·C/√C)·dim) per query instead of O(C·dim),
@@ -349,21 +349,6 @@ object AnnIvf {
       .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
   }
 
-  /** Two-level assignment: (idCol, cid) — narrow, no shuffle, and
-    * O((√C + C/√C)·dim) per row instead of O(C·dim). The returned cid
-    * indexes the SAME flat centroid table, so every downstream
-    * consumer (writeIndex, search/searchFast/searchPersisted, NSW
-    * per-cell graphs, IVF-PQ, filtered serving) is unchanged. */
-  def assignTwoLevel(data: DataFrame, supers: DataFrame,
-      centroids: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", wSuper: Int = 4): DataFrame = {
-    val supM = collectMatrix(supers, "sid", "centroid")
-    val subM = collectCentroids(centroids)
-    data.select(col(idCol),
-      GraftFunctions.nearestCentroid2(col(vecCol), supM, subM,
-        memberLists(supM, subM), wSuper).as("cid"))
-  }
-
   /** Two-level analog of `index` — the scale path past ~100M rows,
     * where the flat n×C argmin (even with the exact group pruning in
     * NearestCentroid) dominates build time. */
@@ -413,10 +398,8 @@ object AnnIvf {
     * /root/reference/utils_grid_search.py:364-365): the embedding
     * column becomes 2 bytes/dim little-endian BINARY via the
     * `Fp16Encode` codegen codec, halving index bytes at rest and
-    * every replica-build / incremental-refresh read. Same clustered
-    * one-file-per-cell layout; probes still prune partitions. Read it
-    * back with `readIndexPacked` (decoded fp32 relation — any
-    * existing search/maintenance path), serve it pruned via
+    * every replica-build read. Same clustered one-file-per-cell
+    * layout; probes still prune partitions. Serve it pruned via
     * `searchPersisted(..., packedVec = true)`, or decode STRAIGHT to
     * a packed replica with `servableCellsPacked` (no fp32
     * materialization anywhere). Values are fp16-rounded at write
@@ -428,15 +411,6 @@ object AnnIvf {
       vecCol: String = "embedding"): Unit =
     writeIndex(indexed.withColumn(vecCol,
       GraftFunctions.fp16Encode(col(vecCol))), path)
-
-  /** Read a `writeIndexPacked` tree back as an fp32 relation (the
-    * binary column decoded through `Fp16Decode` — a projection above
-    * the scan, so cid partition pruning is untouched). Any search or
-    * maintenance path that expects `array<float>` runs on the result. */
-  def readIndexPacked(spark: SparkSession, path: String,
-      vecCol: String = "embedding"): DataFrame =
-    spark.read.parquet(path)
-      .withColumn(vecCol, GraftFunctions.fp16Decode(col(vecCol)))
 
   /** Incremental maintenance: assign NEW vectors against the frozen
     * centroid table (narrow, deterministic — identical cells to a full
@@ -580,39 +554,6 @@ object AnnIvf {
     * root, so index scans (which skip dot-paths) never see it. */
   private[operators] val TombstoneDir = ".graft_tombstones"
 
-  /** MONOTONIC side-table epoch file (dot-prefixed sibling of the
-    * side-table): every mutation through this object's entry points
-    * (`tombstone`, `clearTombstoneIds`, `foldTombstones`) bumps it by
-    * one, so `Serving`'s staleness probe compares an integer that
-    * changes on EVERY write — the directory-mtime fallback it
-    * replaces has filesystem-second granularity, under which two
-    * writes landing in one second were indistinguishable (carried
-    * r13–r15 nit). Single-writer by the same contract as the
-    * side-table itself (maintenance is a driver-side loop). */
-  private[operators] val TombstoneEpochFile = ".graft_tombstone_epoch"
-
-  /** The side-table epoch, -1 when no write ever bumped it (older
-    * layouts: the probe falls back to directory mtime). */
-  private[graft] def tombstoneEpoch(spark: SparkSession,
-      path: String): Long = {
-    val f = new org.apache.hadoop.fs.Path(path, TombstoneEpochFile)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) -1L
-    else {
-      val in = new java.io.DataInputStream(fs.open(f))
-      try in.readLong() finally in.close()
-    }
-  }
-
-  private def bumpTombstoneEpoch(spark: SparkSession,
-      path: String): Unit = {
-    val next = tombstoneEpoch(spark, path) + 1L
-    val f = new org.apache.hadoop.fs.Path(path, TombstoneEpochFile)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = new java.io.DataOutputStream(fs.create(f, true))
-    try out.writeLong(next) finally out.close()
-  }
-
   /** Record spread deletes WITHOUT rewriting any cell: append the ids
     * to the tombstone side-table — O(batch) cost no matter how many
     * cells the ids touch. The eager `deleteFromIndex` is the right
@@ -650,7 +591,6 @@ object AnnIvf {
       .localCheckpoint() // count + write from one materialization
     del.coalesce(1).write.mode("append")
       .parquet(s"$path/$TombstoneDir")
-    bumpTombstoneEpoch(spark, path)
     del.count()
   }
 
@@ -722,7 +662,6 @@ object AnnIvf {
       } else
         kept.coalesce(1).write.mode("overwrite")
           .parquet(s"$path/$TombstoneDir")
-      bumpTombstoneEpoch(spark, path)
     }
 
   /** Fold the tombstones into the layout: one eager delete of every
@@ -756,7 +695,6 @@ object AnnIvf {
         val dir = new org.apache.hadoop.fs.Path(path, TombstoneDir)
         dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .delete(dir, true)
-        bumpTombstoneEpoch(spark, path)
         n
     }
 
@@ -829,13 +767,10 @@ object AnnIvf {
     * recover) on one index path must be externally serialized against
     * each other AND against `appendToIndex` — the staged rows are a
     * snapshot, so a concurrent append into a touched cell between the
-    * staging read and the swap would be silently dropped
-    * (`streamingIndexAppend` serializes its own maintenance inside
-    * foreachBatch; a separate delete stream on the same path needs
-    * the same discipline). Rename semantics here target HDFS/local
-    * filesystems where directory rename is an atomic metadata op; on
-    * rename-as-copy object stores (S3A) prefer a manifest-committer
-    * layout. */
+    * staging read and the swap would be silently dropped. Rename
+    * semantics here target HDFS/local filesystems where directory
+    * rename is an atomic metadata op; on rename-as-copy object stores
+    * (S3A) prefer a manifest-committer layout. */
   private[operators] def stagedCellCommit(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       rows: DataFrame, touchedCids: Array[Int]): Unit = {
@@ -1426,22 +1361,12 @@ object AnnIvf {
       val flat: Array[Float], // null when ragged -> rows
       val rows: Array[Array[Float]],
       val centroidMatrix: Array[Array[Float]],
-      // fp16-PACKED vector form (r17, `packCellReplicaFp16`): when
+      // fp16-PACKED vector form (`servableCellsPacked` blocks): when
       // set, flat/rows are null and the scan kernels decode per
-      // element through Knn.distBoundedHalf's LUT — the graph tier's
-      // packed form, applied to the filtered-serving flat tier
+      // element through Knn.distBoundedHalf's LUT
       val half: Array[Short] = null) extends Serializable {
     def size: Int = ids.length
     def nCells: Int = cellOff.length - 1
-    /** Decoded footprint (vectors + ids + attrs + offsets), bytes. */
-    def approxBytes: Long = {
-      val vec =
-        if (flat != null) 4L * flat.length
-        else if (half != null) 2L * half.length
-        else rows.iterator.map(r => 16L + 4L * r.length).sum
-      vec + 8L * ids.length + 4L * cellOff.length +
-        (if (attrs == null) 0L else 8L * attrs.length)
-    }
     // globally id-sorted view for the mild branch's membership/attr
     // lookups (built once; ids are unique by the index contract)
     private[operators] val (sortedIds, attrsBySorted)
@@ -1531,9 +1456,9 @@ object AnnIvf {
       * filter: a positional mask over the corpus,
       * utils_grid_search.py:238-247). Built in ONE parallel pass
       * (n binary searches, range-chunked over the pool) and memoized
-      * per id-set ARRAY INSTANCE — `Artifacts.survivorIds` hands the
-      * same array back per (predicate, epoch), so a filter pays the
-      * build once; fresh arrays (ad-hoc callers) rebuild. Identity
+      * per id-set ARRAY INSTANCE — a caller that holds one
+      * `survivorIdSet` array per filter epoch pays the build once;
+      * fresh arrays (ad-hoc callers) rebuild. Identity
       * keying is sound because the mask is a pure function of the
       * array's contents and an aliased key can only rebuild, never
       * return a stale mask; the cache evicts the LEAST-RECENTLY-USED
@@ -1699,29 +1624,6 @@ object AnnIvf {
     new LocalCellReplica(byCid, cellOff, ids, attrs, dim, flat, rows,
       collectCentroids(centroids), half)
   }
-
-  /** fp16-PACK a flat local replica (r17 — the graph tier's
-    * `NswGraph.packReplicaFp16` applied to the filtered-serving flat
-    * tier): the contiguous vector array drops to 2 bytes/dim (the
-    * reference's own stored precision); ids/attrs/offsets/centroids
-    * are SHARED by reference with the input. The scan kernels decode
-    * per element through `Knn.distBoundedHalf`'s 256 KB LUT with the
-    * fp32 kernel's exact accumulation + early-abandon structure, so
-    * packed-vs-fp32 results can differ only by the storage rounding —
-    * pinned bit-identical on fp16-exact vectors in KnnSpec, recall
-    * delta measured ≈0 at 5M (BENCH_scale_r17). Ragged replicas
-    * (`flat` null → `rows`) are returned unchanged. */
-  def packCellReplicaFp16(rep: LocalCellReplica): LocalCellReplica =
-    if (rep.flat == null) rep
-    else {
-      val h = new Array[Short](rep.flat.length)
-      var i = 0
-      while (i < h.length) {
-        h(i) = graft.functions.Fp16.toHalf(rep.flat(i)); i += 1
-      }
-      new LocalCellReplica(rep.byCid, rep.cellOff, rep.ids, rep.attrs,
-        rep.dim, null, null, rep.centroidMatrix, h)
-    }
 
   /** THE small-batch flat-tier hot path: pre-filter probe-and-scan
     * over the local replica with ZERO Spark jobs — the in-process

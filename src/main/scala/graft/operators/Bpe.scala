@@ -188,47 +188,6 @@ object Bpe {
     merges.result()
   }
 
-  /** ENCODE with a learned merge list: replay the merges in learning
-    * order over `docs`' word symbols and emit each document's BPE
-    * token sequence. The state here is (doc, word-position)-keyed —
-    * corpus-sized — so cost is numMerges window passes over it;
-    * production encoders replay merges per distinct word instead
-    * (vocabulary-sized, then join back), which `trainBpe`'s state
-    * shape already demonstrates. Output: (idCol, tokens
-    * ARRAY<STRING>) with tokens in document order. */
-  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // word instances keyed by (doc, widx) so repeated words stay
-    // distinct; symbols under the same layout as the trainer
-    // word instances keyed by the native (_did, widx) pair — the
-    // merge windows partition by these columns directly (a
-    // synthesized string key would pay a concat projection plus
-    // string comparisons in every round's sort). Empty words (from
-    // consecutive spaces) carry no symbols, like the trainer.
-    var state = docs.select(col(idCol).as("_did"),
-        posexplode(TextAnalysis.whitespaceTokens(col(textCol)))
-          .as(Seq("widx", "_w")))
-      .filter(length(col("_w")) > 0)
-      .select(col("_did"), col("widx"), col("_w"),
-        explode(sequence(lit(1L), length(col("_w")).cast("long")))
-          .as("pos"))
-      .withColumn("sym", col("_w").substr(col("pos").cast("int"), lit(1)))
-      .select(col("_did"), col("widx"), col("pos"), col("sym"))
-      .localCheckpoint()
-    merges.foreach { case (l, r) =>
-      val prev = state
-      state = applyMerge(state, l, r,
-        keyCols = Seq("_did", "widx"), carry = Nil).localCheckpoint()
-      prev.unpersist()
-    }
-    state
-      .groupBy(col("_did"))
-      .agg(array_sort(collect_list(struct(col("widx"), col("pos"),
-        col("sym")))).as("_s"))
-      .select(col("_did").as(idCol),
-        transform(col("_s"), x => x.getField("sym")).as("tokens"))
-  }
-
   /** (word, wcount) -> one row per character position. Empty words
     * contribute no symbols (sequence(1, 0) would otherwise yield
     * [1, 0] — Spark auto-steps DOWN when start > stop — and

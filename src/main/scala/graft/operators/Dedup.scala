@@ -500,8 +500,8 @@ object Dedup {
   }
 
   /** Distinct (doc_a < doc_b) pairs sharing at least one band — the
-    * single definition of the LSH candidate condition, used by the
-    * verified batch path and the streaming twin's equality spec.
+    * single definition of the LSH candidate condition, used by every
+    * verified batch path.
     * Singleton buckets (the overwhelming majority: docs×bands rows,
     * almost all unique hashes) can never produce a pair, so they are
     * pruned with one map-side-combined count BEFORE the self-join —
@@ -550,22 +550,6 @@ object Dedup {
         slice(ids, i + 2, s - i - 1),
         b => struct(element_at(ids, (i + 1).cast("int")).as("doc_a"),
           b.as("doc_b")))))
-  }
-
-  /** The PRE-VERIFICATION LSH candidate pair set — exposed for the
-    * streaming twin's equality spec. */
-  def lshCandidatePairs(docs: DataFrame, shingleN: Int,
-      numHashes: Int = 128, bands: Int = 64,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // localCheckpoint, not cache: same CollapseProject hazard as
-    // minhashLsh (the banded self-join would inline the 128-hash
-    // signature twice), but nothing here survives to unpersist later
-    val sig = docs.select(col(idCol).as("doc_id"),
-        shinglesOf(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), minhashSignature(col("sh"), numHashes).as("sig"))
-      .localCheckpoint(eager = false)
-    candidatesOf(bandHashes(sig, numHashes, bands))
   }
 
   /** SimHash 64-bit fingerprints (native expression, §2.10). */
@@ -823,7 +807,7 @@ object Dedup {
       .flatMap { case (s, d) => Iterator((s, d), (d, s)) }
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // COST-BASED LOWERING (the Knn.adaptive pattern): near-dup pair
+    // COST-BASED LOWERING: near-dup pair
     // relations are usually a sliver of the corpus — when the edge
     // list fits a driver budget (~32 MB at the 2M default), a
     // path-compressed union-find over the already-materialized edges
@@ -909,24 +893,17 @@ object Dedup {
     result
   }
 
-  /** Near-duplicate CLUSTERS: the transitive closure of the n-gram
-    * Jaccard pair relation (pairs from `ngramJaccardAuto`, components
-    * via `connectedComponents`). One row per document:
-    * (doc_id, cluster_id = min doc_id of its cluster, is_canonical =
-    * 1 for the cluster representative). Dropping `is_canonical = 0`
-    * rows yields the deduplicated corpus — the standard keep-one-per-
-    * cluster step of a training-data pipeline (the pair queries alone
-    * under-delete: near-dup is not transitive, A~B, B~C with A!~C
-    * still must collapse to ONE kept doc, not two). */
-  def dupClusters(docs: DataFrame, n: Int, threshold: Double,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    dupClustersFromPairs(docs,
-      ngramJaccardAuto(docs, n, threshold, idCol, textCol), idCol)
-
-  /** `dupClusters` over an ALREADY-COMPUTED near-dup pair relation
-    * (columns doc_a, doc_b) — the pipeline shape at scale: the pair
-    * relation is produced once and consumed by both the pair report
-    * and the cluster closure. */
+  /** Near-duplicate CLUSTERS over an ALREADY-COMPUTED near-dup pair
+    * relation (columns doc_a, doc_b): the transitive closure via
+    * `connectedComponents`. One row per document: (doc_id,
+    * cluster_id = min doc_id of its cluster, is_canonical = 1 for the
+    * cluster representative). Dropping `is_canonical = 0` rows yields
+    * the deduplicated corpus — the standard keep-one-per-cluster step
+    * of a training-data pipeline (the pair queries alone under-delete:
+    * near-dup is not transitive, A~B, B~C with A!~C still must
+    * collapse to ONE kept doc, not two). The pair relation is produced
+    * once and consumed by both the pair report and the cluster
+    * closure. */
   def dupClustersFromPairs(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id"): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -966,10 +943,7 @@ object Dedup {
     * Scale design (100 TB): ONE hash anti-join against the store
     * (both sides keyed on the 128-bit content hash — co-partitioned
     * shuffle, no broadcast assumption: the store is corpus-sized) and
-    * one map-side-combined min_by for the in-batch collapse. For a
-    * hot path the store side composes with the Bloom prefilter
-    * exactly as `decontaminateBloom` (drop clean hashes before the
-    * join; the anti-join kills false positives).
+    * one map-side-combined min_by for the in-batch collapse.
     * Output: (idCol, text_hash) of accepted docs. */
   def incrementalExact(newDocs: DataFrame, storePath: String,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -1254,36 +1228,6 @@ object Dedup {
       explode(shinglesOf(col(textCol), n)).as("s"))
     val testSh = sh.filter(col("is_test")).select("s").distinct()
     val hits = sh.filter(!col("is_test"))
-      .join(broadcast(testSh), Seq("s"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-    docs.filter(!isTest).select(col(idCol).as("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-        (coalesce(col("n_shared"), lit(0L)) > 0).cast("long")
-          .as("contaminated"))
-  }
-
-  /** `decontaminate` with a BLOOM-FILTER prefilter on the train side —
-    * the shape for when even the distinct test-shingle table is heavy
-    * to probe per row: a Bloom filter is ~10 bits/element (vs ~50+
-    * bytes/entry in a broadcast hash table), so the codegen'd
-    * `BloomMightContain` probe drops the overwhelmingly-clean train
-    * shingle stream BEFORE the join; only the surviving candidates
-    * (true hits + the fpp false positives) reach the exact join that
-    * eliminates false positives. Output is IDENTICAL to
-    * `decontaminate` for any fpp (pinned in CorpusSpec) — the filter
-    * only prunes, never decides. */
-  def decontaminateBloom(docs: DataFrame, isTest: Column, n: Int,
-      fpp: Double = 0.01,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"), isTest.as("is_test"),
-      explode(shinglesOf(col(textCol), n)).as("s"))
-    val testSh = sh.filter(col("is_test")).select("s").distinct().cache()
-    val nTest = testSh.count() // also materializes the cache
-    val bf = testSh.stat.bloomFilter("s", math.max(nTest, 1L), fpp)
-    val hits = sh.filter(!col("is_test"))
-      .filter(GraftFunctions.bloomMightContain(col("s"), bf))
       .join(broadcast(testSh), Seq("s"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
     docs.filter(!isTest).select(col(idCol).as("doc_id"))

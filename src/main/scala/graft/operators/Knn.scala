@@ -70,8 +70,12 @@ object Knn {
     val qRows = queries
       .select(col(qidCol).cast("long"), col(qvecCol)).as[(Long, Array[Float])]
       .collect()
+    qRows.foreach { case (qid, q) =>
+      require(q != null, s"Knn.exact: $qvecCol is null for $qidCol=$qid")
+    }
     val bc = spark.sparkContext.broadcast(qRows)
     val m = metric // avoid capturing `this`
+    val (vc, ic, qvc, qic) = (vecCol, idCol, qvecCol, qidCol)
     // Spread.cpu REMOVED (r21, VERDICT what's-wrong #2 resolved by
     // same-window A/B): the bounded-heap kernel over the sf0.1 corpus
     // is ~0.1 s of single-core work — cheaper than the exchange the
@@ -85,13 +89,21 @@ object Knn {
         val code = metricCode(m)
         val heaps = Array.fill(qs.length)(new graft.functions.TopKBuffer(k))
         it.foreach { case (id, v) =>
+          require(v != null, s"Knn.exact: $vc is null for $ic=$id")
           var qi = 0
           while (qi < qs.length) {
+            // a dim mismatch fails loudly: the kernel would otherwise
+            // return the distance over the shared prefix
+            val q = qs(qi)._2
+            if (v.length != q.length)
+              throw new IllegalArgumentException(s"Knn.exact: $vc of " +
+                s"$ic=$id has dim ${v.length} but $qvc of " +
+                s"$qic=${qs(qi)._1} has dim ${q.length}")
             // abandon against the heap's k-th best: a partial sum
             // already strictly above it is rejected by insert either
             // way (distBounded contract — ties compute in full)
             val h = heaps(qi)
-            h.insert(distBounded(code, v, qs(qi)._2, h.bound), id)
+            h.insert(distBounded(code, v, q, h.bound), id)
             qi += 1
           }
         }
@@ -522,42 +534,6 @@ object Knn {
     }.reduce(_ unionByName _)
   }
 
-  /** CHUNKED query lowering — the large-query-table twin of `exact`.
-    *
-    * `exact` collects the query side for broadcast (the SURVEY-J1
-    * contract: 10K × 64 floats ≈ 2.5 MB, same shape as the reference's
-    * per-batch query copy, cuvs_bench_grid_search_v3.py:251). A
-    * pipeline that re-embeds and searches MILLIONS of queries breaks
-    * that contract: the collect itself is driver-sized and the
-    * per-partition heap array is q-sized. This lowering iterates the
-    * query table in deterministic hash chunks of at most
-    * `maxQueriesPerChunk`, runs the same broadcast+bounded-heap kernel
-    * per chunk, and unions — the reference's own query batching
-    * (utils_grid_search.py:591,995) expressed over DataFrames.
-    *
-    * Results are BIT-IDENTICAL to the one-shot path: per-query results
-    * are independent of which other queries share the batch (the
-    * query-batch-independence property pinned in KnnSpec), and the
-    * union preserves every (qid, rank) row.
-    *
-    * Cost shape: ceil(q / chunk) passes over the data side. At scale
-    * the caller persists (or re-reads a columnar cache of) the data
-    * side; driver memory and executor heap-array size stay bounded by
-    * `maxQueriesPerChunk` regardless of the query-table size.
-    */
-  def exactChunked(
-      data: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      metric: String = "sqeuclidean",
-      maxQueriesPerChunk: Int = 65536,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      qidCol: String = "qid",
-      qvecCol: String = "q_embedding"): DataFrame =
-    chunkedByQuery(queries, maxQueriesPerChunk, qidCol)(
-      exact(data, _, k, metric, idCol, vecCol, qidCol, qvecCol))
-
   /** Query-chunked lowering of ANY per-query search: split the query
     * table into deterministic hash chunks (qid-content-based, so the
     * split is partition-layout independent and chunk sizes are
@@ -588,41 +564,5 @@ object Knn {
       search(queries.filter(
         pmod(xxhash64(col(qidCol), lit(9173)), lit(nChunks)) === c))
     }.reduce(_ unionByName _)
-  }
-
-  /** Cost-based physical selection — the engine-side analog of the
-    * reference's brute-force-vs-CAGRA duality (SURVEY §4 strategy 3):
-    * below `exactThresholdBytes` of (post-filter) scan, brute force is
-    * both exact and cheapest; above it, build/probe a partitioned IVF
-    * index sized C = sqrt(n) with `nprobe` as the recall knob. The
-    * decision reads Catalyst's own size estimate off the optimized
-    * plan, so predicate selectivity (filter pushdown) is priced in.
-    * Returns (chosen path name, ranked results). */
-  def adaptive(data: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 8,
-      exactThresholdBytes: Long = 256L << 20,
-      queryBroadcastBudgetBytes: Long = 64L << 20): (String, DataFrame) = {
-    val est = data.queryExecution.optimizedPlan.stats.sizeInBytes
-    val qEst = queries.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (qEst > queryBroadcastBudgetBytes && est <= exactThresholdBytes) {
-      // query table exceeds the broadcast/collect budget over a small
-      // data side: the chunked exact lowering bounds driver memory and
-      // per-partition heap size no matter how large the query side grows
-      ("exact_chunked", exactChunked(data, queries, k))
-    } else if (est <= exactThresholdBytes) ("exact", exact(data, queries, k))
-    else {
-      val n = data.count()
-      val cells = math.max(2, math.sqrt(n.toDouble).toInt)
-      val centroids = AnnIvf.train(data, cells, iterations = 2)
-      val indexed = AnnIvf.index(data, centroids)
-      if (qEst > queryBroadcastBudgetBytes)
-        // both sides big: the fully distributed lowering — probes from
-        // a narrow expression, one shuffle of each side by cell id,
-        // heap kernel per cell, nothing query-sized ever on the driver
-        ("ivf_shuffled", AnnIvf.searchShuffledFast(indexed, centroids,
-          queries, k, math.min(nprobe, cells)))
-      else ("ivf", AnnIvf.searchFast(indexed, centroids, queries, k,
-        math.min(nprobe, cells)))
-    }
   }
 }

@@ -297,105 +297,13 @@ object NswGraph {
         it.toArray.groupBy(_._3).iterator.map { case (cid, cellRows0) =>
           // id-sorted insert order: the graph for a cell is a pure
           // function of its row SET, independent of partition layout
-          // or shuffle arrival order — what makes the incremental
-          // append path below bit-equal to a full rebuild
+          // or shuffle arrival order
           val cellRows = cellRows0.sortBy(_._1)
           val vecs = cellRows.map(_._2)
           CellGraph(cid, cellRows.map(_._1), vecs,
             build(new CellKernel(met, vecs), mm, efc))
         }
       }
-  }
-
-  /** Incremental maintenance for the persisted graph index — parity
-    * with `AnnIvf.appendToIndex`: assign the new rows to cells against
-    * the frozen centroid table, read back ONLY the touched cells'
-    * graphs (partition-pruned), rebuild those cells over old ∪ new
-    * rows, and dynamically overwrite just their partition directories.
-    * Untouched cells are neither read nor rewritten. Because per-cell
-    * builds are id-sort deterministic, the result is BIT-IDENTICAL to
-    * a full rebuild over the combined corpus (pinned in NswSpec) —
-    * unlike generic HNSW insertion, which degrades with update order.
-    * At 100 TB the cost is proportional to the touched cells' sizes,
-    * not the corpus. */
-  def appendToGraphIndex(newData: DataFrame, centroids: DataFrame,
-      path: String, m: Int = 8, efConstruction: Int = 64,
-      metric: String = "sqeuclidean",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      supers: Option[DataFrame] = None, wSuper: Int = 4): Array[Int] = {
-    val spark = newData.sparkSession
-    import spark.implicits._
-    // same assignment-parity contract as AnnIvf.appendToIndex: a base
-    // index whose cells came from the two-level quantizer must route
-    // batches through the same hierarchical expression at the same
-    // wSuper (and keeps the per-batch cost off the flat n×C argmin at
-    // serving-scale C)
-    val newIndexed = supers
-      .fold(AnnIvf.index(newData, centroids, idCol, vecCol))(sup =>
-        AnnIvf.indexTwoLevel(newData, sup, centroids, idCol, vecCol, wSuper))
-      .select(col(idCol).cast("long").as(idCol), col(vecCol), col("cid"))
-    // the touched cell ids — returned (r16, mirroring
-    // AnnIvf.appendToIndex) so a serving refresh can re-read ONLY
-    // these cells instead of rebuilding its replica from the corpus
-    val touched = newIndexed.select(col("cid")).distinct()
-      .collect().map(_.getInt(0))
-    if (touched.isEmpty) return Array.emptyIntArray
-    val oldRows = readGraphIndex(spark, path)
-      .filter(col("cid").isin(touched.toSeq: _*))
-      .flatMap(g => g.ids.zip(g.vecs).map { case (id, v) => (id, v, g.cid) })
-      .toDF(idCol, vecCol, "cid")
-    val combined = oldRows.unionByName(newIndexed)
-    buildIndex(combined, m, efConstruction, metric, idCol, vecCol)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid").parquet(path)
-    touched
-  }
-
-  /** Deletion parity for the GRAPH tier (`AnnIvf.deleteFromIndex`'s
-    * counterpart): a cell's adjacency references its members, so
-    * removing ids REBUILDS the touched cells' graphs over the
-    * survivors — the append path's machinery minus the new rows. The
-    * graph for a cell is a pure function of its row set (id-sorted
-    * insert order), so the rebuilt cells are bit-identical to a full
-    * rebuild from the filtered corpus; untouched cell graphs keep
-    * their files. Pass the base build's (m, efConstruction, metric) —
-    * the same parity contract as `appendToGraphIndex`. Commits
-    * through `AnnIvf.stagedCellCommit`, so the survivor scan and the
-    * swap both scale with the TOUCHED cells (a cell whose every
-    * member is deleted has no staged twin and stays removed); only
-    * the id discovery scans the full graph table — adjacency
-    * membership is per-row data, not derivable from a hint. Returns
-    * the number of rows deleted. */
-  def deleteFromGraphIndex(spark: SparkSession, path: String,
-      ids: DataFrame, m: Int = 8, efConstruction: Int = 64,
-      metric: String = "sqeuclidean",
-      idCol: String = "vec_id"): Long = {
-    import spark.implicits._
-    val del = ids.select(col(idCol).cast("long").as(idCol))
-    val touched = spark.read.parquet(path)
-      .select(col("cid"), explode(col("ids")).as(idCol))
-      .join(broadcast(del), idCol)
-      .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    if (touched.isEmpty) return 0L
-    val touchedCids = touched.map(_._1)
-    val delSet = del.as[Long].collect().toSet
-    val bc = spark.sparkContext.broadcast(delSet)
-    val survivors = AnnIvf
-      .readCells(spark, path, touchedCids.toSeq.map(c => s"$path/cid=$c"))
-      .select(col("cid").cast("int"), col("ids"), col("vecs"), col("adj"))
-      .as[CellGraph]
-      .flatMap(g => g.ids.zip(g.vecs).collect {
-        case (id, v) if !bc.value.contains(id) => (id, v, g.cid)
-      })
-      .toDF(idCol, "embedding", "cid")
-    val rebuilt = buildIndex(survivors, m, efConstruction, metric,
-      idCol, "embedding")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AnnIvf.stagedCellCommit(spark, fs, path, rebuilt.toDF(), touchedCids)
-    touched.map(_._2).sum
   }
 
   /** Persist / reload the graph index. One parquet partition directory
@@ -411,143 +319,6 @@ object NswGraph {
     spark.read.parquet(path)
       .select(col("cid").cast("int"), col("ids"), col("vecs"), col("adj"))
       .as[CellGraph]
-  }
-
-  /** One cell of the fp16-PACKED persisted graph layout (r18):
-    * vectors as 2-byte little-endian binary16 per row — the
-    * reference's own stored precision (`_fp16.npy`,
-    * /root/reference/utils_grid_search.py:364-365). */
-  final case class CellGraphPacked(cid: Int, ids: Array[Long],
-      vecs16: Array[Array[Byte]], adj: Array[Array[Int]])
-
-  /** Persist the graph index with PACKED vectors (`vecs16` binary
-    * column via the `Fp16Encode` codec): index bytes at rest and
-    * every replica-build / refresh read drop to half the fp32
-    * layout's vector share. Same one-directory-per-cell clustered
-    * layout; adjacency/ids unchanged. Values fp16-round at write
-    * time; on fp16-exact inputs the layout round-trips losslessly
-    * and serves bit-identically to the fp32 layout (NswSpec pins).
-    * Maintenance: `appendToGraphIndexPacked` keeps the layout
-    * (old cells decode exactly via the fp16 codec, rebuilt cells
-    * re-encode); `refreshLocalReplica` sniffs the schema and decodes
-    * packed trees straight to packed cells. */
-  def writeGraphIndexPacked(graphs: org.apache.spark.sql.Dataset[CellGraph],
-      path: String): Unit =
-    graphs.toDF()
-      .select(col("cid"), col("ids"),
-        transform(col("vecs"), v => graft.GraftFunctions.fp16Encode(v))
-          .as("vecs16"),
-        col("adj"))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-
-  def readGraphIndexPacked(spark: SparkSession, path: String)
-      : org.apache.spark.sql.Dataset[CellGraphPacked] = {
-    import spark.implicits._
-    spark.read.parquet(path)
-      .select(col("cid").cast("int"), col("ids"), col("vecs16"), col("adj"))
-      .as[CellGraphPacked]
-  }
-
-  /** Decode one packed cell STRAIGHT to its packed serving form —
-    * binary16 bytes to the `half` array `beamServable` reads through
-    * the LUT; the fp32 vectors never exist (2 bytes/dim from disk to
-    * replica). Ragged/oversize cells fall back to decoded fp32 rows,
-    * exactly like `decodeCell`'s non-flattenable branch. */
-  private[operators] def decodeCellPacked(g: CellGraphPacked): ServableCell = {
-    val n = g.vecs16.length
-    val dim = if (n == 0) 0 else g.vecs16(0).length / 2
-    val flattenable = dim > 0 && n.toLong * dim <= Int.MaxValue &&
-      g.vecs16.forall(_.length == 2 * dim)
-    val adjOff = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { adjOff(i + 1) = adjOff(i) + g.adj(i).length; i += 1 }
-    val adjFlat = new Array[Int](adjOff(n))
-    i = 0
-    while (i < n) {
-      System.arraycopy(g.adj(i), 0, adjFlat, adjOff(i), g.adj(i).length)
-      i += 1
-    }
-    if (flattenable) {
-      // bulk little-endian view get per row (r19): bit-identical to
-      // the per-element shift assembly, ~the memcpy the halved read
-      // bytes paid for (BENCH_scale_r19.json packed_disk_5m graph tier)
-      val half = new Array[Short](n * dim)
-      i = 0
-      while (i < n) {
-        graft.functions.Fp16.bytesToShorts(g.vecs16(i), half,
-          i * dim, dim)
-        i += 1
-      }
-      ServableCell(g.cid, g.ids, dim, null, null, adjFlat, adjOff, half)
-    } else {
-      val rows = g.vecs16.map(graft.functions.Fp16.bytesToFloats)
-      ServableCell(g.cid, g.ids, dim, null, rows, adjFlat, adjOff)
-    }
-  }
-
-  /** `servableIndex` for a `writeGraphIndexPacked` tree: cells decode
-    * once, straight to the packed serving form. The storage guard
-    * budgets the packed footprint (2 bytes/dim). */
-  def servableIndexPacked(spark: SparkSession, path: String,
-      storage: Option[org.apache.spark.storage.StorageLevel] = None)
-      : org.apache.spark.rdd.RDD[ServableCell] =
-    Resident.persistSized(readGraphIndexPacked(spark, path).rdd
-      .map(decodeCellPacked), storage, "NswGraph.servableIndexPacked")(
-      cellStats)(t => Resident.estimateGraphBytes(t.rows, t.dim, t.edges) -
-        2L * t.rows * t.dim)
-
-  /** `appendToGraphIndex` for a PACKED tree: old touched cells decode
-    * through the fp16 codec (exact — binary16 values are a subset of
-    * fp32), the touched cells rebuild over old ∪ new rows with the
-    * same id-sorted determinism, and the rewrite re-encodes — the
-    * tree never mixes layouts. New rows fp16-round on write like the
-    * base build's. Returns the touched cell ids (feed them to
-    * `refreshLocalReplica`, which sniffs the packed schema). */
-  def appendToGraphIndexPacked(newData: DataFrame, centroids: DataFrame,
-      path: String, m: Int = 8, efConstruction: Int = 64,
-      metric: String = "sqeuclidean",
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      supers: Option[DataFrame] = None, wSuper: Int = 4): Array[Int] = {
-    val spark = newData.sparkSession
-    import spark.implicits._
-    val newIndexed = supers
-      .fold(AnnIvf.index(newData, centroids, idCol, vecCol))(sup =>
-        AnnIvf.indexTwoLevel(newData, sup, centroids, idCol, vecCol, wSuper))
-      .select(col(idCol).cast("long").as(idCol), col(vecCol), col("cid"))
-    val touched = newIndexed.select(col("cid")).distinct()
-      .collect().map(_.getInt(0))
-    if (touched.isEmpty) return Array.emptyIntArray
-    val oldRows = readGraphIndexPacked(spark, path)
-      .filter(col("cid").isin(touched.toSeq: _*))
-      .map(decodeCellPacked)
-      .flatMap { c =>
-        c.ids.indices.iterator.map { i =>
-          val v =
-            if (c.half != null) {
-              val a = new Array[Float](c.dim)
-              var j = 0
-              while (j < c.dim) {
-                a(j) = graft.functions.Fp16.fromHalf(c.half(i * c.dim + j))
-                j += 1
-              }
-              a
-            } else c.rows(i)
-          (c.ids(i), v, c.cid)
-        }
-      }
-      .toDF(idCol, vecCol, "cid")
-    val combined = oldRows.unionByName(newIndexed)
-    val rebuilt = buildIndex(combined, m, efConstruction, metric,
-      idCol, vecCol)
-    rebuilt.toDF()
-      .select(col("cid"), col("ids"),
-        transform(col("vecs"), v => graft.GraftFunctions.fp16Encode(v))
-          .as("vecs16"),
-        col("adj"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid").parquet(path)
-    touched
   }
 
   /** Per-query probe lists for a graph-index search: (qid, vector,
@@ -580,23 +351,6 @@ object NswGraph {
       probeQueries(centroids, queries, nprobe, qidCol, qvecCol, twoLevel),
       k, efSearch, metric, tombstones)
 
-  /** `searchIndex` for query tables past the broadcast/collect budget:
-    * the query-chunked lowering (see `Knn.chunkedByQuery`) bounds the
-    * collected probe-list array by `maxQueriesPerChunk` per pass; the
-    * graph index is reused across chunks (the caller holds the cached
-    * Dataset). Bit-identical to the one-shot path — beam search is
-    * per-query, so results are query-batch independent. */
-  def searchIndexChunked(graphs: org.apache.spark.sql.Dataset[CellGraph],
-      centroids: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
-      efSearch: Int = 64, maxQueriesPerChunk: Int = 65536,
-      metric: String = "sqeuclidean",
-      qidCol: String = "qid", qvecCol: String = "q_embedding",
-      tombstones: Option[Array[Long]] = None,
-      twoLevel: Option[AnnIvf.TwoLevelProbe] = None): DataFrame =
-    Knn.chunkedByQuery(queries, maxQueriesPerChunk, qidCol)(
-      searchIndex(graphs, centroids, _, k, nprobe, efSearch, metric,
-        qidCol, qvecCol, tombstones, twoLevel))
-
   /** Fully distributed graph search for LARGE query tables — the NSW
     * analog of `AnnIvf.searchShuffledFast`: the probe relation
     * (qid, qvec, probed cell) comes from the narrow NearestCells
@@ -608,8 +362,9 @@ object NswGraph {
     * The graph side shuffles once per call (cogroup keys it by cid) —
     * right for one huge batch, where the index pass amortizes over
     * millions of queries. For a STREAM of modest batches against a
-    * cached index prefer `searchIndex`/`searchIndexChunked`, which
-    * only filter the graph Dataset. Bit-identical results (beam
+    * cached index prefer `searchIndex` (query tables past the collect
+    * budget chunk through `Knn.chunkedByQuery`), which only filters
+    * the graph Dataset. Bit-identical results (beam
     * search is per-query; pinned in NswSpec). */
   def searchIndexShuffled(graphs: org.apache.spark.sql.Dataset[CellGraph],
       centroids: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
@@ -694,7 +449,7 @@ object NswGraph {
     * the ragged/oversize fallback (`flat` null), never both. `half`
     * (r17) is the fp16-PACKED vector form (2 bytes/dim — the
     * reference's own stored precision) produced by
-    * `packReplicaFp16`/`localReplica(packFp16 = true)`; when set,
+    * `localReplica(packFp16 = true)`; when set,
     * `flat`/`rows` are null and the beam kernel decodes per element
     * through `Knn.distBoundedHalf`'s LUT. */
   final case class ServableCell(cid: Int, ids: Array[Long], dim: Int,
@@ -743,10 +498,8 @@ object NswGraph {
   }
 
   /** Decode one CellGraph into its resident serving form — flatten
-    * vectors, CSR the adjacency. The single decode shared by the
-    * distributed resident tier (`servableIndex`) and the incremental
-    * local-replica refresh (`refreshLocalReplica`), so the two can
-    * never diverge. */
+    * vectors, CSR the adjacency (the distributed resident tier,
+    * `servableIndex`). */
   private[operators] def decodeCell(g: CellGraph): ServableCell = {
     val n = g.vecs.length
     val dim = if (n == 0) 0 else g.vecs(0).length
@@ -987,14 +740,6 @@ object NswGraph {
       }
       d
     }
-    /** Decoded footprint (vectors + ids + CSR adjacency), bytes. */
-    def approxBytes: Long = cells.iterator.map { c =>
-      val vec =
-        if (c.flat != null) 4L * c.flat.length
-        else if (c.half != null) 2L * c.half.length
-        else c.rows.iterator.map(r => 16L + 4L * r.length).sum
-      vec + 8L * c.ids.length + 4L * c.adjFlat.length + 4L * c.adjOff.length
-    }.sum
   }
 
   /** Pack one serving cell's vectors to fp16 (2 bytes/dim,
@@ -1012,23 +757,6 @@ object NswGraph {
       }
       c.copy(flat = null, half = h)
     }
-
-  /** fp16-PACK a local replica (r17): every flat cell's vectors drop
-    * to 2 bytes/dim — the precision the reference itself stores and
-    * serves (`_fp16.npy`, utils_grid_search.py:364-365) — roughly
-    * halving the vector share of the footprint (ids/adjacency stay),
-    * so one serving JVM holds ~2× the rows. The beam kernel decodes
-    * per element through a 256 KB L2-resident LUT
-    * (`Knn.distBoundedHalf`); accepted sets can differ from fp32 only
-    * by the storage rounding, and the measured recall delta at 5M is
-    * ≈0 (the exact ground truth is fp32 on BOTH sides — same for the
-    * reference, whose truth sets are fp32 too; BENCH_scale_r17).
-    * Shares ids/adjacency arrays with the input replica; the fp32
-    * vector arrays are released when the caller drops the unpacked
-    * replica (or build packed directly: `localReplica(packFp16 =
-    * true)` packs per streamed cell, never holding both forms). */
-  def packReplicaFp16(rep: LocalReplica): LocalReplica =
-    new LocalReplica(rep.cells.map(packCellFp16), rep.centroidMatrix)
 
   /** Build the driver-local replica from the resident index, paid
     * once per index epoch (the same epoch-snapshot contract as
@@ -1062,125 +790,6 @@ object NswGraph {
       maxHeapFraction, force)(cellStats)(est(_, packFp16), est(_, false))(
       b => if (packFp16) b.map(packCellFp16) else b)
     new LocalReplica(cells, AnnIvf.collectCentroids(centroids))
-  }
-
-  /** INCREMENTAL replica refresh (r16 — the carried r14 item): after
-    * an `appendToGraphIndex` / `deleteFromGraphIndex` touched a few
-    * cells of the persisted graph index, re-read and re-decode ONLY
-    * those cells' partition directories (the `cid=` pruned read
-    * `AnnIvf.readCells` — nothing else is listed, read, or decoded)
-    * and return a NEW replica sharing every untouched cell's decoded
-    * arrays with the old one. Double-buffered by construction: the
-    * old replica is immutable and keeps serving until the caller
-    * swaps the reference, so a serving loop refreshes with zero
-    * downtime. Cost is O(touched cells) end to end — the full
-    * `localReplica` rebuild re-collects the corpus (12.5–16.9 s at
-    * 5M, BENCH_scale_r14/16) where a single-cell append refreshes in
-    * ~0.5 s (33× — BENCH_scale_r16). The per-touched-cell constant is
-    * ~3× the rebuild's bulk path (991 pruned directory reads streamed
-    * serially measured 53 s vs the 16.9 s rebuild at 5M/1022 cells),
-    * so past roughly a THIRD of the cells touched — a compaction, not
-    * a serving-loop append — rebuild through the heap-guarded
-    * `localReplica` instead.
-    *
-    * BIT-IDENTICAL to a fresh replica over the same tree (NswSpec
-    * pin): per-cell decode is `decodeCell` — the exact function the
-    * resident tier runs — and per-cell graphs are pure functions of
-    * their row sets (id-sorted insert order), so sharing untouched
-    * cells changes nothing. A touched cell whose directory no longer
-    * exists (every member deleted) simply leaves the replica. No heap
-    * guard here: the replica grows only by the appended rows — the
-    * build-time guard ran at `localReplica`; a deployment compacting
-    * its way into a much larger corpus rebuilds through that guarded
-    * path. */
-  def refreshLocalReplica(spark: SparkSession, path: String,
-      rep: LocalReplica, touchedCids: Array[Int]): LocalReplica = {
-    if (touchedCids.isEmpty) return rep
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = touchedCids.distinct.sorted.toSeq
-      .map(c => s"$path/cid=$c")
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    val fresh: Array[ServableCell] =
-      if (dirs.isEmpty) Array.empty
-      else {
-        // partition-streamed (toLocalIterator): a SPREAD batch can
-        // touch most cells, and a plain collect of their raw rows then
-        // exceeds spark.driver.maxResultSize (measured: 1.05 GiB > the
-        // 1 GiB default at a 5M all-cells refresh) — the iterator
-        // fetches one partition at a time, so the limit sees
-        // per-partition sizes
-        val df = AnnIvf.readCells(spark, path, dirs)
-        val b = Array.newBuilder[ServableCell]
-        // schema sniff (r18): a writeGraphIndexPacked tree carries
-        // `vecs16` — its cells decode STRAIGHT to the packed serving
-        // form (decodeCellPacked), never through fp32
-        if (df.columns.contains("vecs16")) {
-          val it = df
-            .select(col("cid").cast("int"), col("ids"), col("vecs16"),
-              col("adj"))
-            .as[CellGraphPacked]
-            .toLocalIterator()
-          while (it.hasNext) b += decodeCellPacked(it.next())
-        } else {
-          val it = df
-            .select(col("cid").cast("int"), col("ids"), col("vecs"),
-              col("adj"))
-            .as[CellGraph]
-            .toLocalIterator()
-          while (it.hasNext) b += decodeCell(it.next())
-        }
-        b.result()
-      }
-    val touched = touchedCids.toSet
-    // a PACKED replica's refresh packs the fresh cells too — the
-    // refreshed replica never mixes precisions with its untouched
-    // (aliased) cells
-    val freshForm =
-      if (rep.cells.exists(_.half != null)) fresh.map(packCellFp16)
-      else fresh
-    new LocalReplica(
-      rep.cells.filterNot(c => touched.contains(c.cid)) ++ freshForm,
-      rep.centroidMatrix)
-  }
-
-  /** `refreshLocalReplica` with the measured crossover applied for
-    * the caller: the pruned per-cell re-read costs ~3× the bulk
-    * rebuild PER CELL (53 s for a 991/1022-cell refresh vs the 16.9 s
-    * corpus rebuild at 5M — BENCH_scale_r16), so past
-    * `rebuildFraction` of the replica's cells touched this entry
-    * rebuilds through the heap-guarded `localReplica` path instead of
-    * refreshing. Result is bit-identical either way (both paths
-    * decode via `decodeCell` over the same tree — NswSpec pins the
-    * rebuild branch against the refresh branch); only the sharing
-    * differs (refresh aliases untouched cells, rebuild is all fresh).
-    * A serving-loop append (a handful of cells) always refreshes; a
-    * compaction-scale touch set rebuilds.
-    *
-    * `maxHeapFraction`/`force` forward to the rebuild branch's
-    * `localReplica` heap guard (r16 ADVICE): the old replica stays
-    * live through the swap (double-buffering needs ~2× footprint), so
-    * a compaction-scale refresh mid serving-loop can trip the default
-    * guard where the unguarded refresh path would have succeeded — a
-    * deployment that sized its driver for the double-buffer passes
-    * `force = true` (or a higher fraction) to make the crossover
-    * infallible. */
-  def refreshLocalReplicaAuto(spark: SparkSession, path: String,
-      rep: LocalReplica, touchedCids: Array[Int], centroids: DataFrame,
-      rebuildFraction: Double = 0.34, maxHeapFraction: Double = 0.6,
-      force: Boolean = false): LocalReplica = {
-    require(rebuildFraction >= 0.0,
-      s"rebuildFraction must be >= 0, got $rebuildFraction")
-    if (touchedCids.isEmpty) return rep
-    val nTouched = touchedCids.distinct.length
-    if (nTouched <= rebuildFraction * math.max(1, rep.cells.length))
-      refreshLocalReplica(spark, path, rep, touchedCids)
-    else {
-      val idx = servableIndex(readGraphIndex(spark, path))
-      try localReplica(idx, centroids, maxHeapFraction, force)
-      finally idx.unpersist()
-    }
   }
 
   /** Run `work` on `workers` shared-pool threads and await them all;

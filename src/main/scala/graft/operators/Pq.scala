@@ -39,8 +39,8 @@ object Pq {
     * configuration instead of scaladoc lore (round-13 verdict task 3).
     * A preset bundles the codebook shape (`m`, `ksub`) with the
     * refined-serving shortlist depth (`kfactor`); train with
-    * `Pq.train(data, p.m, p.ksub)` and serve with
-    * `searchPersistedAdcRefined(..., kfactor = p.kfactor)`. The
+    * `Pq.train(data, p.m, p.ksub)` and serve with `refineShortlist`
+    * over a `searchPersistedAdc` shortlist of k·`p.kfactor`. The
     * sidecar (`PqMeta`) still records whatever shape a layout was
     * actually written with, so presets never reinterpret old layouts. */
   final case class Preset(m: Int, ksub: Int, kfactor: Int)
@@ -183,52 +183,19 @@ object Pq {
     Knn.topKFrom(partials, k, col("_dist"), col("_nnid"), col("qid"))
   }
 
-  /** `searchAdc` for query tables past the broadcast/collect budget:
-    * the query-chunked lowering (see `Knn.chunkedByQuery`) bounds the
-    * per-partition LUT array and driver memory by `maxQueriesPerChunk`
-    * no matter how many queries a pipeline re-embeds. Bit-identical to
-    * the one-shot path (ADC results are query-batch independent). */
-  def searchAdcChunked(codes: DataFrame, cb: Codebook, queries: DataFrame,
-      k: Int, maxQueriesPerChunk: Int = 65536,
-      idCol: String = "vec_id",
-      qidCol: String = "qid", qvecCol: String = "q_embedding"): DataFrame =
-    Knn.chunkedByQuery(queries, maxQueriesPerChunk, qidCol)(
-      searchAdc(codes, cb, _, k, idCol, qidCol, qvecCol))
-
   /** ADC shortlist + exact re-rank (the standard IVF-PQ "refine"
-    * stage): ADC retrieves k×kfactor candidates from the code table,
-    * then only those rows' original vectors are fetched (equi-join on
-    * id — candidate-sized, not corpus-sized) and re-scored exactly.
-    * Recovers most of the recall PQ loses while still scanning only
-    * codes: the full-precision corpus is touched for q×k×kfactor rows
-    * per batch. */
-  def searchAdcRefined(codes: DataFrame, cb: Codebook, data: DataFrame,
-      queries: DataFrame, k: Int, kfactor: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      qidCol: String = "qid", qvecCol: String = "q_embedding"): DataFrame =
-    rerank(searchAdc(codes, cb, queries, k * kfactor, idCol,
-      qidCol, qvecCol), data, queries, k, idCol, vecCol, qidCol, qvecCol)
-
-  /** Exact re-rank of a PRECOMPUTED ADC shortlist — `searchAdcRefined`
-    * with the shortlist supplied by the caller, so ONE ADC scan can
-    * feed both the pure-ADC metric (its rank <= k prefix: the same
-    * (dist, id) total order makes top-k the head of top-k·kfactor)
-    * and the refined serve within a single run (r21 build-reuse, not
-    * cross-run caching). Output is identical to `searchAdcRefined`
-    * when `shortlist` = searchAdc(codes, cb, queries, k·kfactor). */
+    * stage): the caller's ADC shortlist — `searchAdc` or
+    * `searchPersistedAdc` at k·kfactor — is re-scored exactly over
+    * only those rows' fp32 vectors (equi-join on id, q·k·kfactor rows,
+    * queries broadcast). Recovers most of the recall PQ loses while
+    * still scanning only codes. Taking the shortlist as input lets ONE
+    * ADC scan feed both the pure-ADC metric (its rank <= k prefix: the
+    * same (dist, id) total order makes top-k the head of
+    * top-k·kfactor) and the refined serve within a single run. */
   def refineShortlist(shortlist: DataFrame, data: DataFrame,
       queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      qidCol: String = "qid", qvecCol: String = "q_embedding"): DataFrame =
-    rerank(shortlist, data, queries, k, idCol, vecCol, qidCol, qvecCol)
-
-  /** Exact full-precision re-rank of an ADC shortlist: gather the
-    * candidates' fp32 vectors (q·k·kfactor rows), broadcast the
-    * queries, take the true top-k. Shared by the in-memory and
-    * persisted two-stage serves. */
-  private def rerank(shortlist: DataFrame, data: DataFrame,
-      queries: DataFrame, k: Int, idCol: String, vecCol: String,
-      qidCol: String, qvecCol: String): DataFrame = {
+      qidCol: String = "qid", qvecCol: String = "q_embedding"): DataFrame = {
     val candidates = shortlist
       .select(col("qid"), col("neighbor_id"))
       .join(data.select(col(idCol).as("neighbor_id"), col(vecCol)),
@@ -287,9 +254,9 @@ object Pq {
     * always consistent; pass `residual = false` everywhere explicitly
     * if you truly want raw codes (e.g. unclustered data).
     *
-    * THE DOCUMENTED SERVING ENTRY for this layout is
-    * `searchPersistedAdcRefined` (residual ADC shortlist + exact
-    * re-rank of q·k·kfactor rows): the two-stage serve recovers the
+    * THE DOCUMENTED SERVING ENTRY for this layout is a residual
+    * `searchPersistedAdc` shortlist of k·kfactor re-ranked exactly by
+    * `refineShortlist`: the two-stage serve recovers the
     * recall PQ loses while still scanning only codes —
     * raw-ADC-only serving is a diagnostic mode, not the product
     * path.
@@ -601,43 +568,4 @@ object Pq {
       .toDF("qid", "_nnid", "_dist")
     Knn.topKFrom(partials, k, col("_dist"), col("_nnid"), col("qid"))
   }
-
-  /** `searchPersistedAdc` for query tables past the broadcast/collect
-    * budget (see `Knn.chunkedByQuery`): per chunk the probe map,
-    * query broadcast, and per-partition LUT arrays are bounded by
-    * `maxQueriesPerChunk`; partition pruning stays per-chunk (each
-    * pass opens only its own probed cells' files). Bit-identical to
-    * the one-shot path. */
-  def searchPersistedAdcChunked(spark: SparkSession, path: String,
-      centroids: DataFrame, cb: Codebook, queries: DataFrame, k: Int,
-      nprobe: Int, maxQueriesPerChunk: Int = 65536,
-      idCol: String = "vec_id",
-      qidCol: String = "qid", qvecCol: String = "q_embedding",
-      dataFilter: Option[org.apache.spark.sql.Column] = None,
-      residual: Boolean = true,
-      honorTombstones: Boolean = true,
-      twoLevel: Option[AnnIvf.TwoLevelProbe] = None): DataFrame =
-    Knn.chunkedByQuery(queries, maxQueriesPerChunk, qidCol)(
-      searchPersistedAdc(spark, path, centroids, cb, _, k, nprobe,
-        idCol, qidCol, qvecCol, dataFilter, residual, honorTombstones,
-        twoLevel))
-
-  /** `searchAdcRefined` over the persisted clustered layout: ADC
-    * shortlist of k·kfactor from the probed cells, then an exact
-    * full-precision re-rank of just those candidates — the standard
-    * two-stage IVF-PQ serve (compressed scan pays the fan-out, the
-    * fp32 corpus is touched for q·k·kfactor rows only). */
-  def searchPersistedAdcRefined(spark: SparkSession, path: String,
-      centroids: DataFrame, cb: Codebook, data: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int, kfactor: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      qidCol: String = "qid", qvecCol: String = "q_embedding",
-      dataFilter: Option[org.apache.spark.sql.Column] = None,
-      residual: Boolean = true,
-      honorTombstones: Boolean = true,
-      twoLevel: Option[AnnIvf.TwoLevelProbe] = None): DataFrame =
-    rerank(searchPersistedAdc(spark, path, centroids, cb, queries,
-        k * kfactor, nprobe, idCol, qidCol, qvecCol, dataFilter, residual,
-        honorTombstones, twoLevel),
-      data, queries, k, idCol, vecCol, qidCol, qvecCol)
 }

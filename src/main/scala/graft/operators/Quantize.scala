@@ -27,25 +27,6 @@ object Quantize {
         expr(s"percentile(CAST(v AS DOUBLE), $pHi)").as("hi"))
   }
 
-  /** The 100-TB lowering of `train`: `percentile_approx` (the
-    * Greenwald-Khanna sketch) instead of the exact percentile, which
-    * must buffer every value of a dimension in one aggregation state.
-    * The sketch is mergeable map-side with bounded memory
-    * (O(accuracy) per dim per partition); `accuracy` 1e4 bounds rank
-    * error to n/accuracy rows. Quantizer bounds only position the
-    * int8 grid — a tiny shift in lo/hi moves codes by at most a bin,
-    * which QuantizeSpec bounds against the exact-trained grid. */
-  def trainApprox(vecs: DataFrame, quantile: Double = 0.99,
-      accuracy: Int = 10000, vecCol: String = "embedding"): DataFrame = {
-    val pLo = (1.0 - quantile) / 2.0
-    val pHi = 1.0 - pLo
-    vecs.select(posexplode(col(vecCol)).as(Seq("dim", "v")))
-      .groupBy(col("dim"))
-      .agg(
-        expr(s"percentile_approx(CAST(v AS DOUBLE), $pLo, $accuracy)").as("lo"),
-        expr(s"percentile_approx(CAST(v AS DOUBLE), $pHi, $accuracy)").as("hi"))
-  }
-
   /** Quantize each vector to array<int8-valued int> using broadcast
     * per-dim bounds. Output (idCol, qvec ARRAY<INT> in [-128,127]). */
   def apply(vecs: DataFrame, bounds: DataFrame,

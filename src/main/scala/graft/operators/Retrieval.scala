@@ -280,11 +280,11 @@ object Retrieval {
     * `maxQueries` makes the STANDING-QUERY contract explicit: the
     * model collects every query's terms to the driver (that is the
     * point — scoring becomes expression-only and streaming-safe), so
-    * the query table must be driver-sized. The guard mirrors
-    * `Knn.adaptive`'s budget discipline — fail loudly at train time
-    * rather than OOM the driver mid-collect. For a query table past
-    * the budget this is the wrong operator: use the distributed
-    * `bm25TopKShuffled` lowering, which never collects queries. */
+    * the query table must be driver-sized. The guard fails loudly at
+    * train time rather than OOM the driver mid-collect. For a query
+    * table past the budget this is the wrong operator: use the
+    * distributed `bm25TopKShuffled` lowering, which never collects
+    * queries. */
   def trainBm25Frozen(
       docs: DataFrame,
       queries: DataFrame,

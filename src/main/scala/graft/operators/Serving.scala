@@ -48,7 +48,9 @@ object Serving {
     * over-fetch branch, and the flat blocks
     * (`AnnIvf.servableCells(..., attrCol = Some(…))`) for serving the
     * strong branch's pre-filter at resident speed. Every filter is
-    * served from these — no per-filter index anywhere. */
+    * served from these — no per-filter index anywhere. The artifacts
+    * also carry the serving epoch's selectivity memo and tombstone
+    * mask. */
   final case class Artifacts(
       indexed: DataFrame,
       centroids: DataFrame,
@@ -68,10 +70,6 @@ object Serving {
     /** Number of times the count measurement actually ran —
       * observability for the cache (pinned in ServingSpec). */
     @volatile private[graft] var selComputes: Int = 0
-    /** The memoized (total, survivors) for a predicate, if present. */
-    def cachedCounts(predicate: Column): Option[(Long, Long)] =
-      selCache.get(Serving.predicateKey(predicate))
-
     /** Cell count for the cost-based `extreme` boundary: the rows of
       * the centroid matrix (one entry per centroid row). */
     private[operators] lazy val numCells: Long = centroidMatrixLocal.length.toLong
@@ -101,108 +99,6 @@ object Serving {
         Some(derivedTwoLevel)
       else None
 
-    /** SURVIVOR ID-SET MEMO — the bitset filter form for the local
-      * serving tier (`serveFilteredLocalIdSet*`): the sorted ids of
-      * `indexed.filter(predicate)`, computed by ONE distributed
-      * filter per (artifact, predicate) and cached like the
-      * selectivity memo (same `cacheableFilter` guard: ambiguous/
-      * non-deterministic predicates recompute per call). NOT cleared
-      * by tombstone refreshes — the id-set is over the UNMASKED
-      * relation; the serve-time mask composes with it inside the
-      * kernels, so one id-set epoch outlives any number of mask
-      * epochs. BOUNDED (r17): entries vary 0.3–400 MB (8 bytes/id up
-      * to `maxIds`), so the bound is by BYTES, not count —
-      * `idSetCacheMaxBytes` (default 512 MB) caps the memo's total
-      * heap; inserting past it evicts existing entries until the new
-      * set fits (evicted predicates recompute on their next serve —
-      * pinned in ServingSpec). A long-lived serving JVM cycling
-      * ad-hoc predicates can no longer accumulate id-sets without
-      * bound.
-      *
-      * LRU + hard bound (r18, r17 ADVICE): eviction picks the
-      * LEAST-RECENTLY-USED entry (a monotonic access stamp per key —
-      * hash-order eviction could evict the hottest predicate's 400 MB
-      * set while a cold one survived, recomputing it every cycle); an
-      * id-set larger than the whole budget is returned UNCACHED
-      * instead of evicting everything and overshooting; and the
-      * evict-then-insert accounting runs under one lock, so two
-      * concurrent inserts can no longer both pass the budget check.
-      * Cache HITS stay lock-free (TrieMap read + stamp write). */
-    private[operators] val idSetCache =
-      scala.collection.concurrent.TrieMap.empty[String, Array[Long]]
-    private val idSetStamps =
-      scala.collection.concurrent.TrieMap.empty[String, Long]
-    private val idSetClock = new java.util.concurrent.atomic.AtomicLong()
-    private val idSetLock = new Object
-    /** Byte budget for the id-set memo (spec-tunable). */
-    @volatile private[graft] var idSetCacheMaxBytes: Long =
-      512L * 1024 * 1024
-    /** Current memo entry count — observability for the bound pin. */
-    private[graft] def idSetCacheEntries: Int = idSetCache.size
-    /** Number of times an id-set was actually collected —
-      * observability for the memo (pinned in ServingSpec). */
-    @volatile private[graft] var idSetComputes: Int = 0
-    /** The sorted survivor id-set of `predicate` over this artifact's
-      * indexed relation — memoized per predicate rendering, the memo
-      * byte-bounded by `idSetCacheMaxBytes`. */
-    def survivorIds(predicate: Column, idCol: String = "vec_id",
-        maxIds: Long = 50000000L): Array[Long] = {
-      def compute(): Array[Long] = {
-        idSetComputes += 1
-        Serving.survivorIdSet(indexed, predicate, idCol, maxIds)
-      }
-      if (!Serving.cacheableFilter(indexed.filter(predicate))) compute()
-      else {
-        val key = Serving.predicateKey(predicate)
-        idSetCache.get(key) match {
-          case Some(ids) =>
-            // re-stamp only while the key is still cached: a
-            // concurrent eviction between our read and this put would
-            // otherwise leave an orphan stamp for an absent key,
-            // slowly accumulating in a long-lived serving JVM
-            if (idSetCache.contains(key))
-              idSetStamps.put(key, idSetClock.incrementAndGet())
-            ids
-          case None =>
-            val ids = compute()
-            val need = 8L * ids.length
-            // an id-set larger than the whole budget is served
-            // UNCACHED — inserting it would evict every other entry
-            // and still overshoot (the r17 soft-by-one-entry bound)
-            if (need > idSetCacheMaxBytes) ids
-            else idSetLock.synchronized {
-              // a concurrent compute of the same key may have landed
-              // first — keep whichever won (both are the same pure
-              // function of (relation, predicate))
-              idSetCache.get(key) match {
-                case Some(won) =>
-                  idSetStamps.put(key, idSetClock.incrementAndGet())
-                  won
-                case None =>
-                  var total = need +
-                    idSetCache.values.iterator.map(8L * _.length).sum
-                  while (total > idSetCacheMaxBytes && idSetCache.nonEmpty) {
-                    val lru = idSetCache.keysIterator
-                      .minBy(k2 => idSetStamps.getOrElse(k2, 0L))
-                    idSetCache.remove(lru)
-                      .foreach(v => total -= 8L * v.length)
-                    idSetStamps.remove(lru)
-                  }
-                  idSetCache.put(key, ids)
-                  idSetStamps.put(key, idSetClock.incrementAndGet())
-                  // sweep stamps orphaned by the hit-path race (the
-                  // contains-guard narrows but cannot close it);
-                  // entry count is dozens, so this is O(1) in practice
-                  idSetStamps.keysIterator
-                    .filterNot(idSetCache.contains)
-                    .foreach(idSetStamps.remove)
-                  ids
-              }
-            }
-        }
-      }
-    }
-
     /** TOMBSTONE MASK for this serving epoch — serve-consistency with
       * the persisted paths' anti-join (`AnnIvf.searchPersisted*`
       * honor the side-table by default; the resident tiers are epoch
@@ -228,82 +124,6 @@ object Serving {
         indexPath: String): Unit =
       setTombstones(
         AnnIvf.tombstoneIds(spark, indexPath).getOrElse(Array.emptyLongArray))
-
-    /** OPT-IN STALENESS PROBE (round-13 verdict watch item): the mask
-      * refresh above is manual, so a deployment that forgets it keeps
-      * serving tombstoned ids until the next epoch. Armed, every
-      * `everyNCalls`-th `serveFiltered*` call reads the side-table's
-      * MONOTONIC EPOCH FILE (one driver-side filesystem call, no job,
-      * no scan — bumped by every `AnnIvf.tombstone` / clear / fold)
-      * and auto-refreshes the mask when it moved — covering new
-      * tombstone batches, folds, and `clearTombstones` rewrites
-      * alike, including two writes inside the same filesystem second
-      * (the r15 nit: the previous mtime stamp had 1 s granularity on
-      * some filesystems; the epoch is an integer that changes on
-      * every write). Side-tables from layouts that predate the epoch
-      * file fall back to the directory mtime — there the same-second
-      * window still applies until the first new write creates the
-      * file. Returns this Artifacts for chaining; the initial arm
-      * performs one refresh so the mask starts synchronized. */
-    def withTombstoneProbe(spark: org.apache.spark.sql.SparkSession,
-        indexPath: String, everyNCalls: Int = 1): this.type = {
-      require(everyNCalls >= 1, s"everyNCalls must be >= 1")
-      probeConf = Some((spark, indexPath, everyNCalls))
-      // stamp BEFORE the refresh (maybeRefreshTombstones' order): a
-      // tombstone write landing between the two then looks NEWER than
-      // the stamp and triggers a spurious-but-safe extra refresh —
-      // the reverse order would stamp past the write and silently
-      // serve the stale mask until the NEXT side-table write
-      probeStamp = tombstoneStamp(spark, indexPath)
-      refreshTombstones(spark, indexPath)
-      this
-    }
-    @volatile private var probeConf
-      : Option[(org.apache.spark.sql.SparkSession, String, Int)] = None
-    @volatile private var probeStamp: Long = -1L
-    private val probeCalls = new java.util.concurrent.atomic.AtomicLong()
-    /** Number of times the probe actually refreshed the mask —
-      * observability (pinned in ServingSpec); atomic because serves
-      * may probe concurrently. */
-    private val probeRefreshCount =
-      new java.util.concurrent.atomic.AtomicInteger()
-    private[graft] def probeRefreshes: Int = probeRefreshCount.get()
-    private def tombstoneStamp(
-        spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-      // the monotonic epoch (small non-negative integers) when any
-      // write ever bumped it; else the directory mtime (epoch-millis
-      // scale, or -1 when absent) — the two ranges never collide, and
-      // the first epoch bump on an mtime-stamped index reads as a
-      // change, which is correct (a write just happened)
-      val e = AnnIvf.tombstoneEpoch(spark, path)
-      if (e >= 0) e
-      else {
-        val dir = new org.apache.hadoop.fs.Path(path, AnnIvf.TombstoneDir)
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(dir)) fs.getFileStatus(dir).getModificationTime
-        else -1L
-      }
-    }
-    /** Serializes the probe's compare-refresh-stamp sequence: without
-      * it two concurrent serves could both see stamp != probeStamp and
-      * both refresh — refreshes are idempotent (safe), but
-      * `probeRefreshes` would over-count distinct stamp changes (r15
-      * ADVICE). The stat + refresh run under the lock; serves that
-      * only read `tombstones` never take it. */
-    private val probeLock = new Object
-    /** Run the staleness probe if armed and due — called by every
-      * serve entry before it reads `tombstones`. */
-    private[operators] def maybeRefreshTombstones(): Unit =
-      probeConf.foreach { case (spark, path, n) =>
-        if (probeCalls.incrementAndGet() % n == 0) probeLock.synchronized {
-          val stamp = tombstoneStamp(spark, path)
-          if (stamp != probeStamp) {
-            refreshTombstones(spark, path)
-            probeStamp = stamp
-            probeRefreshCount.incrementAndGet()
-          }
-        }
-      }
   }
 
   /** Stable cache key for a filter predicate (its expression
@@ -316,8 +136,8 @@ object Serving {
     * filter form, utils_grid_search.py:238-247): ANY `Column`
     * predicate — multi-column, string, UDF — evaluated by ONE
     * column-pruned distributed filter, collected as ids only. Pay it
-    * once per filter epoch (or memoize via `Artifacts.survivorIds`),
-    * then every serve call tests membership by binary search.
+    * once per filter epoch, then every serve call tests membership by
+    * binary search.
     *
     * `maxIds` bounds the driver/serving-JVM heap the collect may
     * claim (8 bytes/id): the count job runs first and the collect is
@@ -486,9 +306,6 @@ object Serving {
       validateAttrPred: Boolean = false)
       : (Strategy, DataFrame) = {
     require(overFetchMult >= 1, s"overFetchMult must be >= 1")
-    // staleness probe first (no-op unless armed via
-    // withTombstoneProbe): the mask below must be this call's epoch
-    art.maybeRefreshTombstones()
     // tombstone mask first (pre-filter semantics, identical to the
     // persisted paths' anti-join): every branch below serves from the
     // masked relation, so a tombstoned id can never be returned —
@@ -698,9 +515,8 @@ object Serving {
     * SORTED survivor id-set — the reference's own bitset filter form
     * (utils_grid_search.py:238-247 precomputes a per-filter id mask
     * the same way) — produced ONCE per filter epoch by running an
-    * arbitrary distributed `Column` predicate (`survivorIdSet` /
-    * `Artifacts.survivorIds`, which memoizes per predicate like the
-    * selectivity cache). Every dispatch branch then serves from the
+    * arbitrary distributed `Column` predicate (`survivorIdSet`). Every
+    * dispatch branch then serves from the
     * same machinery as the attr route with the per-row keep test
     * swapped for a binary-search membership check — the tombstone
     * mask's mechanism with the polarity flipped:

@@ -16,15 +16,15 @@ import org.apache.spark.sql.functions.col
   *
   * Two shard models, same serve/merge code:
   *
-  *  - SPLIT shards (`splitCellReplica`/`splitGraphReplica`): one
-  *    index's cells partitioned round-robin across K replicas that
-  *    SHARE the centroid matrix. Every query probes the same global
-  *    cell list in every shard and each shard scans/beams only the
-  *    probed cells it owns, so the union of per-shard work is EXACTLY
-  *    the single replica's work and the merged result is
-  *    ROW-IDENTICAL to the unsharded serve on every dispatch branch
-  *    (ShardedSpec pins all three; `serve_sharded` puts the strong
-  *    branch under the full DuckDB oracle). This is the
+  *  - SPLIT shards (`splitCellReplica`): one index's cells
+  *    partitioned round-robin across K replicas that SHARE the
+  *    centroid matrix. Every query probes the same global cell list
+  *    in every shard and each shard scans only the probed cells it
+  *    owns, so the union of per-shard work is EXACTLY the single
+  *    replica's work and the merged result is ROW-IDENTICAL to the
+  *    unsharded serve on both flat-tier dispatch branches (ShardedSpec
+  *    pins both; `serve_sharded` puts the strong branch under the
+  *    full DuckDB oracle). This is the
   *    split-one-serving-JVM-into-K form.
   *  - INDEPENDENT shards: K separately built indexes over disjoint
   *    corpus slices (each with its own centroids — the 100-TB
@@ -46,8 +46,8 @@ import org.apache.spark.sql.functions.col
   * tie-breaks by shared code, not reimplementation.
   *
   * Slot alignment: every shard serves the SAME positional query
-  * array, and the kernels' per-slot form
-  * (`searchLocalQueriesSlots` / `localCellCoreSlots`) keeps element i
+  * array, and the kernel's per-slot form (`localCellCoreSlots`)
+  * keeps element i
   * = slot i even when a slot's rows are empty in some shard — so
   * duplicate qids and empty survivor sets can never shift the merge
   * (the flattened contract's rank-restart grouping could not
@@ -101,21 +101,6 @@ object Sharded {
         !bits.compareAndSet(slot, cur,
           java.lang.Double.doubleToRawLongBits(d)))
         cur = bits.get(slot)
-    }
-  }
-
-  /** Partition ONE graph replica's cells round-robin (cid-sorted
-    * order) into `nShards` replicas sharing the centroid matrix.
-    * Shares every cell's decoded arrays by reference — zero copy. */
-  def splitGraphReplica(rep: NswGraph.LocalReplica, nShards: Int)
-      : Seq[NswGraph.LocalReplica] = {
-    require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    val ordered = rep.cells.sortBy(_.cid)
-    (0 until nShards).map { s =>
-      new NswGraph.LocalReplica(
-        ordered.zipWithIndex.collect {
-          case (c, i) if i % nShards == s => c },
-        rep.centroidMatrix)
     }
   }
 
@@ -322,148 +307,47 @@ object Sharded {
     out.result()
   }
 
-  /** UNFILTERED sharded serve on the graph tier: each shard beams the
-    * batch at the same dials, per-slot top-k lists merge by
-    * (dist, id). For split shards this is row-identical to the
-    * single-replica `searchLocalQueries` (ShardedSpec); for
-    * independent shards it is the N-replicas-over-N-data-shards
-    * deployment serve.
-    *
-    * `parallelShards = Some(true)` fans the K shard serves onto the
-    * cached fan pool (each shard's kernel still chunks its queries
-    * over the shared worker pool) — the IN-PROCESS approximation of
-    * the deployment's parallel fan-out, where batch latency is the
-    * slowest SHARD plus one merge instead of the K-shard sum.
-    * Results are identical either way (per-shard serves are
-    * independent pure functions; ShardedSpec pins it): the flag
-    * trades scheduling for latency, never semantics. The default
-    * `None` applies the MEASURED rule (`autoParallel`): fan whenever
-    * there is more than one shard — with the cached fan pool and the
-    * cross-shard bounds, the fan wins or ties at every measured
-    * shape (BENCH_scale_r18; the r17 batch=1000 regression came from
-    * per-call thread churn + cold bounds, both retired).
-    * `Some(false)` forces the sequential total-work measurement
-    * shape. */
-  def searchShardedLocalQueries(reps: Seq[NswGraph.LocalReplica],
-      queries: Array[(Long, Array[Float])], k: Int, nprobe: Int,
-      efSearch: Int = 64, metric: String = "sqeuclidean",
-      tombstones: Option[Array[Long]] = None,
-      parallelShards: Option[Boolean] = None): Rows = {
-    require(reps.nonEmpty, "searchShardedLocalQueries needs >= 1 shard")
-    if (queries.isEmpty) return Array.empty
-    val par = parallelShards.getOrElse(
-      autoParallel(queries.length, reps.length))
-    mergeSlots(
-      fanShards(reps, par)(r =>
-        NswGraph.searchLocalQueriesSlots(r, queries, k, nprobe,
-          efSearch, metric, tombstones)),
-      queries.map(_._1), k)
-  }
-
-  /** FILTERED sharded serving, attr-twin filter form — the sharded
-    * twin of `Serving.serveFilteredLocalExplained`: ONE strategy is
-    * chosen globally from the summed per-shard selectivity counts
-    * (every shard must run the same branch or the merge would mix
-    * exact and approximate row sets), then each branch fans to the
-    * shards and merges:
+  /** FILTERED sharded serving — the sharded twin of
+    * `Serving.serveFilteredLocalExplained`, for ANY filter via its
+    * sorted survivor id-set (the bitset form, `Serving.survivorIdSet`):
+    * one id-set spans all shards; each shard's kernels test the members
+    * it holds. ONE strategy is chosen globally from the summed
+    * per-shard selectivity counts (every shard must run the same branch
+    * or the merge would mix exact and approximate row sets), then the
+    * branch fans to the shards and merges:
     *
     *  - EXTREME → per-shard exact scan over survivors, merge top-k
-    *  - STRONG → per-shard pre-filter probe-scan, merge top-k
+    *  - otherwise → per-shard pre-filter probe-scan, merge top-k
     *    (tagged `IvfPrefilterResident` like the local dispatcher)
-    *  - MILD → per-shard beam k' candidates, merge to the GLOBAL
-    *    top-k' FIRST (so the candidate set equals the unsharded
-    *    branch's — a shard's deeper-than-global-k' rows must not leak
-    *    extra survivors in), then the survivor filter and re-rank
-    *    to k
     *
-    * `graphShards` need not align cell-for-cell with `flatShards`:
-    * the mild branch's keep test looks an id up across ALL flat
-    * shards (an id lives in exactly one). The cost boundary resolves
-    * from the TOTAL geometry — probed cells per query is
-    * nprobe × K for independent shards and nprobe for split shards
-    * (detected by the shared centroid-matrix instance: same coarse
-    * quantizer ⇒ same global probe list). */
-  def serveFilteredShardedExplained(
-      flatShards: Seq[AnnIvf.LocalCellReplica],
-      graphShards: Option[Seq[NswGraph.LocalReplica]],
-      queries: Array[(Long, Array[Float])], k: Int,
-      attrPred: Double => Boolean,
-      nprobe: Int = 4, efSearch: Int = 64,
-      overFetchMult: Int = 3, selectivity: Option[Double] = None,
-      mild: Double = 0.5, extreme: Double = Serving.CostBased,
-      maxOverFetchK: Int = 4096,
-      metric: String = "sqeuclidean",
-      tombstones: Option[Array[Long]] = None,
-      parallelShards: Option[Boolean] = None,
-      probers: Option[Seq[Array[Float] => Array[Int]]] = None)
-      : (Serving.Strategy, Rows) = {
-    require(flatShards.forall(_.attrs != null),
-      "serveFilteredSharded needs attr-built shard replicas - build " +
-        "each with servableCells(..., attrCol = Some(...)), or serve " +
-        "the filter as an id-set (serveFilteredShardedIdSetExplained)")
-    serveShardedCore(flatShards, graphShards, queries, k, attrPred,
-      null, nprobe, efSearch, overFetchMult, selectivity, mild,
-      extreme, maxOverFetchK, metric, tombstones, parallelShards,
-      probers)
-  }
-
-  /** `serveFilteredShardedExplained` for ANY filter via its sorted
-    * survivor id-set (the bitset form, `Serving.survivorIdSet`) —
-    * one id-set spans all shards; each shard's kernels test the
-    * members it holds. */
+    * The cost boundary resolves from the TOTAL geometry — probed cells
+    * per query is nprobe × K for independent shards and nprobe for
+    * split shards (detected by a shared coarse quantizer ⇒ same global
+    * probe list). */
   def serveFilteredShardedIdSetExplained(
       flatShards: Seq[AnnIvf.LocalCellReplica],
-      graphShards: Option[Seq[NswGraph.LocalReplica]],
       queries: Array[(Long, Array[Float])], k: Int,
       idSet: Array[Long],
-      nprobe: Int = 4, efSearch: Int = 64,
-      overFetchMult: Int = 3, selectivity: Option[Double] = None,
+      nprobe: Int = 4, selectivity: Option[Double] = None,
       mild: Double = 0.5, extreme: Double = Serving.CostBased,
-      maxOverFetchK: Int = 4096,
       metric: String = "sqeuclidean",
       tombstones: Option[Array[Long]] = None,
       parallelShards: Option[Boolean] = None,
       probers: Option[Seq[Array[Float] => Array[Int]]] = None)
       : (Serving.Strategy, Rows) = {
     require(idSet != null, "idSet must be non-null (empty = no survivors)")
-    serveShardedCore(flatShards, graphShards, queries, k, null, idSet,
-      nprobe, efSearch, overFetchMult, selectivity, mild, extreme,
-      maxOverFetchK, metric, tombstones, parallelShards, probers)
-  }
-
-  private def serveShardedCore(
-      flatShards: Seq[AnnIvf.LocalCellReplica],
-      graphShards: Option[Seq[NswGraph.LocalReplica]],
-      queries: Array[(Long, Array[Float])], k: Int,
-      attrPred: Double => Boolean, idSet: Array[Long],
-      nprobe: Int, efSearch: Int,
-      overFetchMult: Int, selectivity: Option[Double],
-      mild: Double, extreme: Double,
-      maxOverFetchK: Int, metric: String,
-      tombstones: Option[Array[Long]],
-      parallelShards: Option[Boolean],
-      probers: Option[Seq[Array[Float] => Array[Int]]])
-      : (Serving.Strategy, Rows) = {
     require(flatShards.nonEmpty, "serveFilteredSharded needs >= 1 shard")
-    require(overFetchMult >= 1, s"overFetchMult must be >= 1")
     val tomb: Array[Long] = tombstones.orNull
     val qids = queries.map(_._1)
     // summed per-shard counts = the single replica's counts (shards
     // partition the rows in both models)
-    val (sel, kFromCounts) = selectivity match {
-      case Some(x) => (x, None)
-      case None =>
-        var total = 0L; var surv = 0L
-        flatShards.foreach { f =>
-          val (t, sv) =
-            if (idSet != null) f.selectivityCountsIdSet(idSet, tomb)
-            else f.selectivityCounts(attrPred, tomb)
-          total += t; surv += sv
-        }
-        val s = if (total == 0L) 1.0 else surv.toDouble / total
-        (s, if (surv > 0L)
-          Some(((overFetchMult.toLong * k * total + surv - 1L) / surv).toInt)
-        else None)
+    val sel = selectivity.getOrElse {
+      var total = 0L; var surv = 0L
+      flatShards.foreach { f =>
+        val (t, sv) = f.selectivityCountsIdSet(idSet, tomb)
+        total += t; surv += sv
+      }
+      if (total == 0L) 1.0 else surv.toDouble / total
     }
     // total geometry: split shards (one shared centroid matrix) probe
     // nprobe global cells per query; independent shards probe nprobe
@@ -481,37 +365,21 @@ object Sharded {
       probedPerQuery, totalCells)
     val par = parallelShards.getOrElse(
       autoParallel(queries.length, flatShards.length))
-    // cross-shard kth-best bounds (r18): both flat-tier branches
-    // share one SlotBounds per call — sequential fan passes each
-    // shard the previous shards' per-slot kth-best, the parallel fan
-    // tightens the atomics mid-scan. Pure pruning, rows unchanged
-    // (ShardedSpec). The graph branch's beam has no row-scan bound to
-    // seed (its result heap feeds the EXPLORATION frontier — an
-    // external cut there would change which nodes expand, i.e. the
-    // semantics, not just the work), so it stays unseeded.
-    // MEASUREMENT ABLATION ONLY: -Dgraft.noSharedBounds (or setting
-    // the property at runtime) serves with per-shard cold bounds —
-    // the r17 behavior — so a profile can isolate the warming's
-    // effect inside ONE JVM/window. Rows are identical either way
-    // (the ShardedSpec pure-pruning pin); never set in production.
-    def newBounds(n: Int): SlotBounds =
-      if (System.getProperty("graft.noSharedBounds") != null) null
-      else new SlotBounds(n)
-    Serving.chooseStrategy(sel, graphShards.exists(_.nonEmpty), mild,
+    // cross-shard kth-best bounds (r18): both branches share one
+    // SlotBounds per call — sequential fan passes each shard the
+    // previous shards' per-slot kth-best, the parallel fan tightens
+    // the atomics mid-scan. Pure pruning, rows unchanged (ShardedSpec).
+    val bounds = new SlotBounds(queries.length)
+    Serving.chooseStrategy(sel, graphAvailable = false, mild,
       resolved) match {
-      case Serving.IvfPrefilterResident =>
-        throw new IllegalStateException("unreachable: chooseStrategy " +
-          "returns IvfPrefilter; the resident tag is applied below")
       case Serving.ExactScan =>
-        val bounds = newBounds(queries.length)
         (Serving.ExactScan, mergeSlots(
           fanShards(flatShards, par)(f =>
             AnnIvf.localCellCoreSlots(f, queries, k,
-              0, metric, Option(attrPred), Option(idSet), tombstones,
+              0, metric, None, Some(idSet), tombstones,
               exhaustive = true, sharedBounds = bounds)),
           qids, k))
       case Serving.IvfPrefilter =>
-        val bounds = newBounds(queries.length)
         // per-shard probe-list override (r18): e.g. the two-level
         // prober built from EACH shard's own quantizer — a dial that
         // cuts the coarse argmin (the mid bucket's dominant cost at
@@ -546,52 +414,13 @@ object Sharded {
         (Serving.IvfPrefilterResident, mergeSlots(
           fanShards(flatShards.zip(shardProbers), par) { case (f, p) =>
             AnnIvf.localCellCoreSlots(f, queries, k,
-              nprobe, metric, Option(attrPred), Option(idSet), tombstones,
+              nprobe, metric, None, Some(idSet), tombstones,
               exhaustive = false, sharedBounds = bounds,
               proberOverride = p) },
           qids, k))
-      case Serving.GraphOverfetch =>
-        val kF = math.min(maxOverFetchK,
-          math.max(k, kFromCounts.getOrElse(
-            math.ceil(overFetchMult * k / sel).toInt)))
-        val efF = math.max(efSearch, kF)
-        val graphs = graphShards.get
-        val perShard = fanShards(graphs, par)(g =>
-          NswGraph.searchLocalQueriesSlots(
-            g, queries, kF, nprobe, efF, metric, tombstones))
-        // global top-k' candidate cut FIRST (the unsharded branch's
-        // candidate set exactly), then the survivor filter, then k
-        val out = Array.newBuilder[(Long, Long, Long, Double)]
-        out.sizeHint(queries.length * k)
-        var slot = 0
-        while (slot < queries.length) {
-          val cand = new graft.functions.TopKBuffer(kF)
-          perShard.foreach { shard =>
-            val rows = shard(slot)
-            var i = 0
-            while (i < rows.length) {
-              cand.insert(rows(i)._4, rows(i)._3)
-              i += 1
-            }
-          }
-          val ranked = cand.sorted
-          var kept = 0L
-          var r = 0
-          while (r < ranked.length && kept < k) {
-            val id = ranked(r)._2
-            val keep =
-              if (attrPred != null)
-                flatShards.exists(_.attrSatisfies(id, attrPred))
-              else java.util.Arrays.binarySearch(idSet, id) >= 0
-            if (keep) {
-              kept += 1
-              out += ((qids(slot), kept, id, ranked(r)._1))
-            }
-            r += 1
-          }
-          slot += 1
-        }
-        (Serving.GraphOverfetch, out.result())
+      case other =>
+        throw new IllegalStateException(s"unreachable: chooseStrategy " +
+          s"returned $other with no graph tier")
     }
   }
 
@@ -601,12 +430,9 @@ object Sharded {
     * recipe's SQL. */
   def serveFilteredShardedIdSetDf(
       flatShards: Seq[AnnIvf.LocalCellReplica],
-      graphShards: Option[Seq[NswGraph.LocalReplica]],
       queries: DataFrame, k: Int, idSet: Array[Long],
-      nprobe: Int = 4, efSearch: Int = 64,
-      overFetchMult: Int = 3, selectivity: Option[Double] = None,
+      nprobe: Int = 4, selectivity: Option[Double] = None,
       mild: Double = 0.5, extreme: Double = Serving.CostBased,
-      maxOverFetchK: Int = 4096,
       metric: String = "sqeuclidean",
       qidCol: String = "qid", qvecCol: String = "q_embedding",
       tombstones: Option[Array[Long]] = None,
@@ -618,9 +444,8 @@ object Sharded {
       .select(col(qidCol).cast("long"), col(qvecCol))
       .as[(Long, Array[Float])].collect()
     val (strategy, rows) = serveFilteredShardedIdSetExplained(
-      flatShards, graphShards, qRows, k, idSet, nprobe, efSearch,
-      overFetchMult, selectivity, mild, extreme, maxOverFetchK, metric,
-      tombstones, parallelShards)
+      flatShards, qRows, k, idSet, nprobe, selectivity, mild, extreme,
+      metric, tombstones, parallelShards)
     (strategy, spark.createDataset(
       scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
       .toDF("qid", "rank", "neighbor_id", "dist"))

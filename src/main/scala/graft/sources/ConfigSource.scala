@@ -24,7 +24,6 @@ object ConfigSource {
   }
   case class YList(items: Vector[Node]) extends Node
   case class YScalar(raw: String) extends Node {
-    def asString: String = raw.stripPrefix("\"").stripSuffix("\"")
     def asDouble: Double = raw.toDouble
     def asInt: Int = raw.toInt
   }

@@ -69,51 +69,4 @@ object Multimodal {
       }
     }.toDF()
   }
-
-  /** STUB resize — deterministic fake: stride-subsample the payload to
-    * `targetLen` bytes (a real implementation decodes, resamples
-    * pixels, re-encodes; binary→binary contract is identical). */
-  def resizeStub(payload: Array[Byte], targetLen: Int): Array[Byte] =
-    if (payload.length <= targetLen) payload
-    else {
-      // ??? <- real image resize goes here
-      val out = new Array[Byte](targetLen)
-      var i = 0
-      while (i < targetLen) {
-        out(i) = payload((i.toLong * payload.length / targetLen).toInt)
-        i += 1
-      }
-      out
-    }
-
-  /** Per-partition batched resize: binary → binary, metadata updated. */
-  def resize(media: Dataset[MediaRow], targetLen: Int): Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map(r =>
-      r.copy(payload = resizeStub(r.payload, targetLen))))
-  }
-
-  case class FrameRow(doc_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** STUB frame sampling — the 1→N generator shape: each "video"
-    * payload yields every `stride`-th fixed-size frame as its own row
-    * (a real implementation seeks keyframes in the container). The
-    * flatMap lowering is what matters: output cardinality is
-    * data-dependent, rows stay partition-local, and the frame table
-    * feeds extractFeatures/Knn downstream like any other media table. */
-  def sampleFrames(media: Dataset[MediaRow], frameLen: Int,
-      stride: Int): Dataset[FrameRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.flatMap { r =>
-      // ??? <- real container demux goes here
-      val nFrames = r.payload.length / frameLen
-      (0 until nFrames by stride).iterator.map { fi =>
-        FrameRow(r.doc_id, fi,
-          java.util.Arrays.copyOfRange(r.payload,
-            fi * frameLen, (fi + 1) * frameLen))
-      }
-    }
-  }
 }

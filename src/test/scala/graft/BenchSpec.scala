@@ -121,4 +121,133 @@ class BenchSpec extends AnyFunSuite {
       scala.util.Try(Class.forName(s"graft.$n$$")).isSuccess)
     assert(missing.isEmpty, s"docs name deleted mains: $missing")
   }
+
+  /** `src` with comments and string literals blanked (the code inside
+    * `${...}` interpolations is kept); newlines survive, so offsets
+    * still map to lines. */
+  private def stripNonCode(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    val n = src.length
+    def keepInterpolations(from: Int, until: Int): Unit = {
+      var j = from
+      while (j < until) {
+        if (src.startsWith("${", j)) {
+          var depth = 1; var e = j + 2
+          while (e < until && depth > 0) {
+            if (src(e) == '{') depth += 1 else if (src(e) == '}') depth -= 1
+            e += 1
+          }
+          out.append(" " + src.substring(j + 2, e - 1) + " ")
+          j = e
+        } else { if (src(j) == '\n') out.append('\n'); j += 1 }
+      }
+    }
+    while (i < n) {
+      if (src.startsWith("//", i)) {
+        while (i < n && src(i) != '\n') i += 1
+      } else if (src.startsWith("/*", i)) {
+        val e = src.indexOf("*/", i + 2)
+        val end = if (e < 0) n else e + 2
+        src.substring(i, end).foreach(c => if (c == '\n') out.append(c))
+        i = end
+      } else if (src.startsWith("\"\"\"", i)) {
+        val e = src.indexOf("\"\"\"", i + 3)
+        var end = if (e < 0) n else e + 3
+        while (end < n && src(end) == '"') end += 1
+        keepInterpolations(i + 3, math.max(i + 3, end - 3))
+        out.append("\"\"")
+        i = end
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        keepInterpolations(i + 1, math.min(j, n))
+        out.append("\"\"")
+        i = j + 1
+      } else if (src(i) == '\'' && i + 2 < n &&
+          (src(i + 2) == '\'' || src(i + 1) == '\\')) {
+        val e = src.indexOf('\'', if (src(i + 1) == '\\') i + 3 else i + 2)
+        out.append("' '")
+        i = if (e < 0) n else e + 1
+      } else { out.append(src(i)); i += 1 }
+    }
+    out.toString
+  }
+
+  /** Public defs of the `operators/`, `sources/` and `streaming/`
+    * objects and classes whose name no code in `src/main` uses, as
+    * `File.name` keys: identifier occurrences over the stripped
+    * sources, the defining `def`s subtracted. */
+  private def unreachedDefs(main: java.io.File): Seq[String] = {
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName)
+        .flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val files = scalaFiles(main).map(f =>
+      f -> stripNonCode(java.nio.file.Files.readString(f.toPath)))
+    val all = files.map(_._2).mkString("\n")
+    def counts(it: Iterator[String]): Map[String, Int] =
+      it.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+    val refs = counts("""[A-Za-z_]\w*""".r.findAllIn(all))
+    val defs = counts("""\bdef\s+([A-Za-z_]\w*)""".r.findAllMatchIn(all)
+      .map(_.group(1)))
+    val template = ("""\b(?:object|class|trait)\s+\w+""" +
+      """(?:\s+(?:private|protected))?""" +
+      """(?:\s+(?:extends|with)\s+[\w.]+)*\s*$""").r
+    def deparen(h: String): String = {
+      val r = h.replaceAll("""\([^()]*\)|\[[^\[\]]*\]""", "")
+      if (r == h) h else deparen(r)
+    }
+    val token = """[{}]|\bdef\s+([A-Za-z_]\w*)""".r
+    files.filter { case (f, _) =>
+      val p = f.getPath
+      Seq("/operators/", "/sources/", "/streaming/").exists(p.contains)
+    }.flatMap { case (f, src) =>
+      // brace kinds: T = a named template body, B = anything else
+      val stack = scala.collection.mutable.Stack.empty[Char]
+      var last = 0
+      token.findAllMatchIn(src).flatMap { m =>
+        m.matched match {
+          case "{" =>
+            val head = deparen(src.substring(last, m.start))
+              .replace('\n', ' ')
+            stack.push(if (template.findFirstIn(head).nonEmpty) 'T' else 'B')
+            last = m.end; None
+          case "}" =>
+            if (stack.nonEmpty) stack.pop()
+            last = m.end; None
+          case _ =>
+            val name = m.group(1)
+            val mods = src.substring(src.lastIndexOf('\n', m.start) + 1,
+              m.start)
+            val public = !Seq("private", "protected", "override")
+              .exists(mods.contains)
+            if (stack.headOption.contains('T') && public &&
+                !Seq("apply", "unapply", "main").contains(name) &&
+                refs(name) <= defs(name))
+              Some(f.getName.stripSuffix(".scala") + "." + name)
+            else None
+        }
+      }.toList
+    }
+  }
+
+  test("every public operator, source and streaming def has a caller " +
+      "in src/main") {
+    // kept without a main caller: each is the reference its specs
+    // hold the engine's own path against
+    val allowed = Map(
+      "Knn.exactDeclarative" -> ("KnnSpec's and PlanPropertiesSpec's " +
+        "reference for Knn.exact"),
+      "Resident.cachedBytes" -> ("ResidentSpec's and TierBuildSpec's " +
+        "actual-bytes measurement for the Resident estimates"))
+    val unreached = unreachedDefs(new java.io.File("src/main/scala"))
+    assert(allowed.keySet.subsetOf(unreached.toSet),
+      s"allowlist entries gained a caller or were deleted: " +
+        (allowed.keySet -- unreached))
+    val extra = unreached.filterNot(allowed.contains)
+    assert(extra.isEmpty, s"public defs with no caller in src/main " +
+      s"(delete them, or call them): ${extra.mkString(", ")}")
+  }
 }

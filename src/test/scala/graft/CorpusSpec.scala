@@ -180,7 +180,8 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("dupClusters partitions the corpus and closes over pairs") {
-    val clusters = Dedup.dupClusters(docs, n = 3, threshold = 0.4)
+    val clusters = Dedup.dupClustersFromPairs(docs,
+      Dedup.ngramJaccardAuto(docs, n = 3, threshold = 0.4))
     val rows = clusters.collect()
     val nDocs = docs.count()
     assert(rows.length == nDocs, "one row per document")
@@ -458,19 +459,6 @@ class CorpusSpec extends AnyFunSuite {
     val seqIds = got.values.map(_._2).toSet
     assert(seqIds == (0L until (seqIds.max + 1)).toSet)
     assert(got.values.forall(_._3 < 1024L))
-  }
-
-  test("bloom-prefiltered decontamination equals the exact path") {
-    val isTest = $"doc_id" % 20 === 0
-    val exact = Dedup.decontaminate(docs, isTest, n = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // even at a sloppy 10% fpp the exact verify join makes the result
-    // identical — the filter prunes, never decides
-    val bloomed = Dedup.decontaminateBloom(docs, isTest, n = 5, fpp = 0.1)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(bloomed == exact && exact.nonEmpty)
-    assert(exact.exists(_._3 == 1L), "fixture should contain leakage")
   }
 
   test("curate fuses the gates and equals the composed operators") {

@@ -36,6 +36,66 @@ class KnnSpec extends AnyFunSuite {
     assert(asTuples(viaAgg) == asTuples(viaWindow))
   }
 
+  test("bad vectors fail loudly: Knn.exact and the graft_* distances " +
+      "name the column and both dims on a ragged pair, Knn.exact names " +
+      "a null embedding, and the SQL distances stay null-in null-out") {
+    // the named IllegalArgumentException, wherever Spark wraps it
+    def iae(body: => Any): IllegalArgumentException = {
+      val t = intercept[Exception](body)
+      Iterator.iterate(t: Throwable)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e }
+        .getOrElse(fail(s"no IllegalArgumentException in $t", t))
+    }
+    val rows4 = Seq((1L, Array(0f, 1f, 2f, 3f)), (2L, Array(1f, 1f, 1f, 1f)))
+    val d4 = rows4.toDF("vec_id", "embedding")
+    val q4 = Seq((7L, Array(0f, 1f, 2f, 3f))).toDF("qid", "q_embedding")
+    val q2 = Seq((8L, Array(0f, 1f))).toDF("qid", "q_embedding")
+    // ragged query against 4-dim data
+    val e1 = iae(Knn.exact(d4, q2, 1).collect())
+    assert(e1.getMessage.contains("q_embedding") &&
+      e1.getMessage.contains("dim 4") && e1.getMessage.contains("dim 2"),
+      e1.getMessage)
+    // one ragged data row
+    val dRagged = (rows4 :+ ((3L, Array(0f, 1f, 2f)))).toDF("vec_id",
+      "embedding")
+    val e2 = iae(Knn.exact(dRagged, q4, 1).collect())
+    assert(e2.getMessage.contains("embedding of vec_id=3 has dim 3") &&
+      e2.getMessage.contains("dim 4"), e2.getMessage)
+    // a null embedding on either side
+    val dNull = Seq((1L, Array(0f, 1f, 2f, 3f)), (5L, null: Array[Float]))
+      .toDF("vec_id", "embedding")
+    val e3 = iae(Knn.exact(dNull, q4, 1).collect())
+    assert(e3.getMessage.contains("embedding is null for vec_id=5"),
+      e3.getMessage)
+    val qNull = Seq((9L, null: Array[Float])).toDF("qid", "q_embedding")
+    val e4 = iae(Knn.exact(d4, qNull, 1).collect())
+    assert(e4.getMessage.contains("q_embedding is null for qid=9"),
+      e4.getMessage)
+    // the SQL distances: codegen and interpreted both refuse a
+    // mismatch with both dims; a null input gives a null distance
+    val pairs = d4.repartition(1).crossJoin(q2)
+    Seq(GraftFunctions.sqDist _, GraftFunctions.dot _,
+        GraftFunctions.cosine _).foreach { f =>
+      val e = iae(pairs.select(f($"embedding", $"q_embedding")).collect())
+      assert(e.getMessage.contains("vector dims differ") &&
+        e.getMessage.contains("4 vs 2"), e.getMessage)
+      val nulls = dNull.repartition(1).crossJoin(q4)
+        .select($"vec_id", f($"embedding", $"q_embedding").as("d"))
+        .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
+      assert(nulls == Map(1L -> false, 5L -> true))
+    }
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try {
+      val e = iae(pairs.select(GraftFunctions.sqDist($"embedding",
+        $"q_embedding")).collect())
+      assert(e.getMessage.contains("4 vs 2"), e.getMessage)
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
+
   test("fast mapPartitions path equals declarative expression path") {
     val filtered = data.filter(SparkEntry.filterLow)
     Seq("sqeuclidean", "cosine", "dot").foreach { m =>
@@ -628,17 +688,21 @@ class KnnSpec extends AnyFunSuite {
     val centroids = AnnIvf.train(snapped, numCentroids = 8,
       iterations = 2)
     val indexed = AnnIvf.index(snapped, centroids).cache()
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pkr").toString
+    AnnIvf.writeIndexPacked(indexed, tmp)
     val cells = AnnIvf.servableCells(indexed, attrCol = Some("label"))
-    cells.count()
+    val cells16 = AnnIvf.servableCellsPacked(spark.read.parquet(tmp),
+      attrCol = Some("label"))
     try {
       val rep = AnnIvf.localCellReplica(cells, centroids)
-      val packed = AnnIvf.packCellReplicaFp16(rep)
+      val packed = AnnIvf.localCellReplica(cells16, centroids)
       assert(packed.half != null && packed.flat == null)
-      // non-vector arrays shared by reference; vector share halved
-      assert((packed.ids eq rep.ids) && (packed.attrs eq rep.attrs) &&
-        (packed.cellOff eq rep.cellOff) &&
-        (packed.centroidMatrix eq rep.centroidMatrix))
-      assert(packed.approxBytes == rep.approxBytes - 2L * rep.flat.length)
+      // the same non-vector content (built from its own tree, so
+      // compared per (id, attr) row); the vector share halves (2 bytes
+      // per element where the fp32 replica holds 4)
+      assert(packed.nCells == rep.nCells &&
+        packed.ids.zip(packed.attrs).toSet == rep.ids.zip(rep.attrs).toSet)
+      assert(packed.half.length == rep.flat.length)
       val qArr = queries.select($"qid".cast("long"), $"q_embedding")
         .as[(Long, Array[Float])].collect()
       val pred: Double => Boolean = a => a == 0.0 || a == 1.0
@@ -669,15 +733,15 @@ class KnnSpec extends AnyFunSuite {
       val shards = graft.operators.Sharded.splitCellReplica(packed, 3)
       assert(shards.forall(s => s.half != null && s.flat == null))
       val (st, sharded) = graft.operators.Sharded
-        .serveFilteredShardedExplained(shards, None, qArr, 10, pred,
+        .serveFilteredShardedIdSetExplained(shards, qArr, 10, idSet,
           nprobe = 4, extreme = 0.02)
       val (st1, single) = graft.operators.Serving
-        .serveFilteredLocalExplained(packed, None, qArr, 10, pred,
+        .serveFilteredLocalIdSetExplained(packed, None, qArr, 10, idSet,
           nprobe = 4, extreme = 0.02)
       assert(st == st1 && sharded.toSeq == single.toSeq &&
         sharded.nonEmpty)
-    } finally { cells.unpersist(); indexed.unpersist()
-      snapped.unpersist() }
+    } finally { cells.unpersist(); cells16.unpersist()
+      indexed.unpersist(); snapped.unpersist() }
   }
 
   test("fp16-packed PERSISTED layout (r18): the packed tree stores " +
@@ -708,8 +772,9 @@ class KnnSpec extends AnyFunSuite {
       .select($"embedding").as[Array[Byte]].head().length == 2 * dim0)
     // lossless roundtrip on the fp16-exact grid: decoded rows equal
     // the written relation value for value
-    val rt = AnnIvf.readIndexPacked(spark, s"$tmp/f16")
-      .select($"vec_id", $"embedding").as[(Long, Array[Float])]
+    val rt = spark.read.parquet(s"$tmp/f16")
+      .select($"vec_id", GraftFunctions.fp16Decode($"embedding"))
+      .as[(Long, Array[Float])]
       .collect().map { case (id, v) => (id, v.toSeq) }.toSet
     val orig = idx.select($"vec_id", $"embedding")
       .as[(Long, Array[Float])]
@@ -738,7 +803,8 @@ class KnnSpec extends AnyFunSuite {
       val rep16 = AnnIvf.localCellReplica(cells16, centroids)
       val rep32 = AnnIvf.localCellReplica(cells32, centroids)
       assert(rep16.half != null && rep16.flat == null && rep16.rows == null)
-      assert(rep16.approxBytes < rep32.approxBytes)
+      // 2 bytes per element where the fp32 replica holds 4
+      assert(rep16.half.length == rep32.flat.length)
       val qArr = queries.select($"qid".cast("long"), $"q_embedding")
         .as[(Long, Array[Float])].collect()
       val pred: Double => Boolean = a => a == 0.0 || a == 1.0
@@ -1051,47 +1117,6 @@ class KnnSpec extends AnyFunSuite {
     assert(served == rebuilt && served.nonEmpty)
   }
 
-  test("streaming index refresh: appended micro-batches become searchable") {
-    val filtered = data.filter(SparkEntry.filterLow)
-    val centroids = AnnIvf.train(filtered, numCentroids = 16, iterations = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sidx").toString
-    // seed the index with nothing; stream the vectors in as files
-    val vecStream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sf)
-      .filter($"vec_id" % 50 =!= 0 && SparkEntry.filterLow)
-      .select($"vec_id", $"embedding")
-    // compactEveryBatches=1: every appended batch's touched cells are
-    // folded right back through the hinted compaction — the resident
-    // append→compact maintenance loop
-    val q = graft.streaming.StreamingOps.streamingIndexAppend(
-      vecStream, centroids, s"$tmp/idx", compactEveryBatches = 1)
-    try q.processAllAvailable() finally q.stop()
-    val served = asTuples(AnnIvf.searchPersisted(spark, s"$tmp/idx",
-      centroids, queries, 10, nprobe = 4))
-    val batch = asTuples(AnnIvf.search(
-      AnnIvf.index(filtered, centroids), centroids, queries, 10, nprobe = 4))
-    assert(served == batch && served.nonEmpty)
-    // the in-stream folds leave nothing crowded behind
-    assert(AnnIvf.compactIndex(spark, s"$tmp/idx") == 0L)
-  }
-
-  test("adaptive path: exact under the size threshold, IVF above it") {
-    val filtered = data.filter(SparkEntry.filterLow)
-    val (smallPath, smallRes) = Knn.adaptive(filtered, queries, 10)
-    assert(smallPath == "exact")
-    assert(asTuples(smallRes) == asTuples(Knn.exact(filtered, queries, 10)))
-    // force the IVF arm with a 1-byte threshold; results must still be
-    // valid ranked rows with recall in a sane band
-    val (bigPath, bigRes) = Knn.adaptive(filtered, queries, 10,
-      nprobe = 16, exactThresholdBytes = 1L)
-    assert(bigPath == "ivf")
-    val truth = Knn.exact(filtered, queries, 10)
-    val r = Recall.ofRanked(bigRes, truth).head()
-    assert(r.getDouble(r.fieldIndex("recall")) >= 0.45)
-  }
-
   test("chunked query lowering is bit-identical to the broadcast path") {
     val filtered = data.filter(SparkEntry.filterLow)
     val oneShot = Knn.exact(filtered, queries, 10)
@@ -1100,30 +1125,12 @@ class KnnSpec extends AnyFunSuite {
     // several chunk sizes, including one that leaves some chunks empty
     // and the degenerate single-chunk case
     Seq(1, 3, 4, 1000).foreach { sz =>
-      val chunked = Knn.exactChunked(filtered, queries, 10,
-          maxQueriesPerChunk = sz)
+      val chunked = Knn.chunkedByQuery(queries, sz)(
+          Knn.exact(filtered, _, 10))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).toSet
       assert(chunked == oneShot, s"chunk size $sz diverged")
     }
-  }
-
-  test("adaptive routes an over-budget query table to the chunked path") {
-    val filtered = data.filter(SparkEntry.filterLow)
-    val (path, res) = Knn.adaptive(filtered, queries, 10,
-      queryBroadcastBudgetBytes = 1L)
-    assert(path == "exact_chunked")
-    assert(asTuples(res) == asTuples(Knn.exact(filtered, queries, 10)))
-  }
-
-  test("adaptive routes big-query x big-data to the shuffled IVF path") {
-    val filtered = data.filter(SparkEntry.filterLow)
-    val (path, res) = Knn.adaptive(filtered, queries, 10, nprobe = 16,
-      exactThresholdBytes = 1L, queryBroadcastBudgetBytes = 1L)
-    assert(path == "ivf_shuffled")
-    val truth = Knn.exact(filtered, queries, 10)
-    val r = Recall.ofRanked(res, truth).head()
-    assert(r.getDouble(r.fieldIndex("recall")) >= 0.45)
   }
 
   test("IVF recall increases with nprobe (knob monotonicity)") {

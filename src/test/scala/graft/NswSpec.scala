@@ -75,8 +75,9 @@ class NswSpec extends AnyFunSuite {
     val oneShot = tuples(NswGraph.searchIndex(graphs, centroids, queries,
       10, nprobe = 4, efSearch = 64))
     Seq(1, 7, 1000).foreach { sz =>
-      val chunked = tuples(NswGraph.searchIndexChunked(graphs, centroids,
-        queries, 10, nprobe = 4, efSearch = 64, maxQueriesPerChunk = sz))
+      val chunked = tuples(graft.operators.Knn.chunkedByQuery(queries, sz)(
+        NswGraph.searchIndex(graphs, centroids, _, 10, nprobe = 4,
+          efSearch = 64)))
       assert(chunked == oneShot && chunked.nonEmpty, s"chunk size $sz")
     }
     // the fully distributed cogroup lowering (no probe broadcast)
@@ -277,174 +278,6 @@ class NswSpec extends AnyFunSuite {
     println(s"[NswSpec] hamming recall: nsw=$nsw ivf=$ivf")
   }
 
-  test("graph append path: touched cells bit-equal a full rebuild, " +
-      "untouched cells never rewritten") {
-    import spark.implicits._
-    val centroids = graft.operators.AnnIvf.train(data, 8, iterations = 2)
-    val first = data.filter($"vec_id" % 3 =!= 0)
-    val second = data.filter($"vec_id" % 3 === 0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gappend").toString
-    NswGraph.writeGraphIndex(
-      NswGraph.buildIndex(graft.operators.AnnIvf.index(first, centroids),
-        m = 8, efConstruction = 32), s"$tmp/idx")
-    // fingerprint the on-disk cell directories before the append
-    def cellFiles(): Map[String, Set[String]] =
-      new java.io.File(s"$tmp/idx").listFiles()
-        .filter(_.getName.startsWith("cid="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(_.endsWith(".parquet")).toSet)
-        .toMap
-    val before = cellFiles()
-    val touched = graft.operators.AnnIvf.assign(second, centroids)
-      .select("cid").distinct().collect().map(r => s"cid=${r.getInt(0)}").toSet
-    NswGraph.appendToGraphIndex(second, centroids, s"$tmp/idx",
-      m = 8, efConstruction = 32)
-    val after = cellFiles()
-    // untouched cell dirs carry exactly their old files
-    (before.keySet -- touched).foreach { c =>
-      assert(after(c) == before(c), s"untouched $c was rewritten")
-    }
-    // id-sorted deterministic builds make the appended index
-    // BIT-IDENTICAL to one built over the full corpus in one shot
-    def canon(g: org.apache.spark.sql.Dataset[NswGraph.CellGraph]) =
-      g.collect().sortBy(_.cid).map(cg => (cg.cid, cg.ids.toSeq,
-        cg.vecs.map(_.toSeq).toSeq, cg.adj.map(_.sorted.toSeq).toSeq)).toSeq
-    val appended = canon(NswGraph.readGraphIndex(spark, s"$tmp/idx"))
-    val rebuilt = canon(NswGraph.buildIndex(
-      graft.operators.AnnIvf.index(data, centroids),
-      m = 8, efConstruction = 32))
-    assert(appended == rebuilt && appended.nonEmpty)
-  }
-
-  test("incremental local-replica refresh: only touched cells are " +
-      "re-read, untouched decoded arrays are shared, and the result " +
-      "is bit-identical to a fresh replica (double-buffered)") {
-    import spark.implicits._
-    val centroids = graft.operators.AnnIvf.train(data, 8, iterations = 2)
-    val first = data.filter($"vec_id" % 3 =!= 0)
-    val second = data.filter($"vec_id" % 3 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_grefresh").toString
-    NswGraph.writeGraphIndex(
-      NswGraph.buildIndex(graft.operators.AnnIvf.index(first, centroids),
-        m = 8, efConstruction = 32), s"$tmp/idx")
-    def replicaFromPath(): NswGraph.LocalReplica = {
-      val idx = NswGraph.servableIndex(
-        NswGraph.readGraphIndex(spark, s"$tmp/idx"))
-      try NswGraph.localReplica(idx, centroids) finally idx.unpersist()
-    }
-    val old = replicaFromPath()
-    val touched = NswGraph.appendToGraphIndex(second, centroids,
-      s"$tmp/idx", m = 8, efConstruction = 32)
-    assert(touched.nonEmpty)
-    val refreshed =
-      NswGraph.refreshLocalReplica(spark, s"$tmp/idx", old, touched)
-    val fresh = replicaFromPath()
-    def canon(r: NswGraph.LocalReplica) =
-      r.cells.sortBy(_.cid).map(c => (c.cid, c.ids.toSeq,
-        (if (c.flat != null) c.flat.toSeq
-         else c.rows.flatten[Float].toSeq),
-        c.adjFlat.toSeq, c.adjOff.toSeq)).toSeq
-    assert(canon(refreshed) == canon(fresh) && refreshed.cells.nonEmpty)
-    // untouched cells SHARE the old replica's decoded arrays — the
-    // refresh never re-read or re-decoded them (reference identity)
-    val touchedSet = touched.toSet
-    val untouched = refreshed.cells.filterNot(c =>
-      touchedSet.contains(c.cid))
-    untouched.foreach(c => assert(old.cells.exists(_ eq c)))
-    // double-buffered: the OLD replica still serves the pre-append
-    // row set untouched
-    val qArr = queries.select($"qid".cast("long"), $"q_embedding")
-      .as[(Long, Array[Float])].collect().take(20)
-    val secondIds = second.select($"vec_id").as[Long].collect().toSet
-    val oldServed = NswGraph.searchLocalQueries(old, qArr, 5,
-      nprobe = 8, efSearch = 64).map(_._3).toSet
-    assert(oldServed.nonEmpty && oldServed.intersect(secondIds).isEmpty)
-    // the refreshed replica serves row-identically to the fresh one
-    val a = NswGraph.searchLocalQueries(refreshed, qArr, 5, nprobe = 8,
-      efSearch = 64)
-    val b = NswGraph.searchLocalQueries(fresh, qArr, 5, nprobe = 8,
-      efSearch = 64)
-    assert(a.toSeq == b.toSeq && a.nonEmpty)
-    assert(a.map(_._3).exists(secondIds.contains)) // appends served
-    // a no-op refresh returns the same instance
-    assert(NswGraph.refreshLocalReplica(spark, s"$tmp/idx", refreshed,
-      Array.emptyIntArray) eq refreshed)
-    // deletion that empties a whole cell: the refreshed replica drops
-    // it (directory gone) and still bit-equals the fresh rebuild
-    val doomed = refreshed.cells.minBy(c => (c.ids.length, c.cid))
-    NswGraph.deleteFromGraphIndex(spark, s"$tmp/idx",
-      doomed.ids.toSeq.toDF("vec_id"), m = 8, efConstruction = 32)
-    val afterDel = NswGraph.refreshLocalReplica(spark, s"$tmp/idx",
-      refreshed, Array(doomed.cid))
-    assert(!afterDel.cells.exists(_.cid == doomed.cid))
-    assert(canon(afterDel) == canon(replicaFromPath()))
-    // the AUTO crossover entry: a small touch set refreshes (all but
-    // the touched cell aliased from the input replica); forcing the
-    // rebuild branch (rebuildFraction = 0) aliases NOTHING — the two
-    // branches are bit-equal, only the sharing differs
-    val someCid = afterDel.cells.head.cid
-    val autoR = NswGraph.refreshLocalReplicaAuto(spark, s"$tmp/idx",
-      afterDel, Array(someCid), centroids)
-    assert(canon(autoR) == canon(afterDel))
-    assert(autoR.cells.count(c => afterDel.cells.exists(_ eq c)) ==
-      afterDel.cells.length - 1)
-    val autoB = NswGraph.refreshLocalReplicaAuto(spark, s"$tmp/idx",
-      afterDel, Array(someCid), centroids, rebuildFraction = 0.0)
-    assert(canon(autoB) == canon(afterDel))
-    assert(!autoB.cells.exists(c => afterDel.cells.exists(_ eq c)))
-    assert(NswGraph.refreshLocalReplicaAuto(spark, s"$tmp/idx",
-      afterDel, Array.emptyIntArray, centroids) eq afterDel)
-    // a PACKED replica's refresh re-packs the fresh cells: never a
-    // precision mix with the aliased untouched cells (r17)
-    val packedDel = NswGraph.packReplicaFp16(afterDel)
-    val packedRef = NswGraph.refreshLocalReplica(spark, s"$tmp/idx",
-      packedDel, Array(someCid))
-    assert(packedRef.cells.forall(c => c.half != null && c.flat == null))
-    assert(NswGraph.searchLocalQueries(packedRef, qArr, 5, nprobe = 8,
-      efSearch = 64).toSeq ==
-      NswGraph.searchLocalQueries(
-        NswGraph.packReplicaFp16(afterDel), qArr, 5, nprobe = 8,
-        efSearch = 64).toSeq)
-  }
-
-  test("graph deletion: touched cells rebuild bit-equal, empties vanish") {
-    import spark.implicits._
-    val centroids = graft.operators.AnnIvf.train(data, 8, iterations = 2)
-    val indexed = graft.operators.AnnIvf.index(data, centroids)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gdel").toString
-    NswGraph.writeGraphIndex(
-      NswGraph.buildIndex(indexed, m = 8, efConstruction = 32),
-      s"$tmp/gidx")
-    // snapshot pre-deletion membership locally (lazy readers over the
-    // path would see the post-delete listing)
-    val pre = indexed.select($"vec_id", $"cid").collect()
-      .map(r => r.getLong(0) -> r.getInt(1))
-    val emptyCell = pre.groupBy(_._2).toSeq
-      .sortBy { case (cid, rows) => (rows.length, cid) }.head._1
-    val delSet = (pre.filter(_._2 == emptyCell).map(_._1) ++
-      pre.map(_._1).filter(_ % 13 == 1)).toSet
-    val nDel = NswGraph.deleteFromGraphIndex(spark, s"$tmp/gidx",
-      delSet.toSeq.toDF("vec_id"), m = 8, efConstruction = 32)
-    assert(nDel == delSet.size)
-    assert(!new java.io.File(s"$tmp/gidx/cid=$emptyCell").exists())
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "rank", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // the graph per cell is a pure function of its row set, so the
-    // deleted layout must serve bit-identically to a full rebuild
-    // over the survivors
-    val served = tuples(NswGraph.searchIndex(
-      NswGraph.readGraphIndex(spark, s"$tmp/gidx"), centroids, queries,
-      10, nprobe = 4, efSearch = 64))
-    val survivors = data.filter(!$"vec_id".isin(delSet.toSeq: _*))
-    val rebuilt = tuples(NswGraph.searchIndex(
-      NswGraph.buildIndex(graft.operators.AnnIvf.index(survivors,
-        centroids), m = 8, efConstruction = 32),
-      centroids, queries, 10, nprobe = 4, efSearch = 64))
-    assert(served == rebuilt && served.nonEmpty)
-  }
-
   test("recall rises with efSearch (knob direction)") {
     val lo = recallOf(NswGraph.search(
       data.repartition(2), queries, 10, m = 8, efSearch = 10))
@@ -455,8 +288,7 @@ class NswSpec extends AnyFunSuite {
   }
 
   test("fp16-packed local replica (r17): bit-identical serve on " +
-      "fp16-exact vectors, vector bytes halved, streamed packed " +
-      "build equal, packed refresh stays packed") {
+      "fp16-exact vectors, vector bytes halved") {
     import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
@@ -477,13 +309,15 @@ class NswSpec extends AnyFunSuite {
     idx.count()
     try {
       val rep = NswGraph.localReplica(idx, centroids)
-      val packed = NswGraph.packReplicaFp16(rep)
-      // exactly the vector share halves (ids/adjacency unchanged)
+      // packed per fetched batch: the fp32 form is never held whole
+      val packed = NswGraph.localReplica(idx, centroids, packFp16 = true)
+      assert(packed.cells.forall(c => c.flat == null && c.half != null))
+      // exactly the vector share halves: 2 bytes per element where
+      // the fp32 replica holds 4 (ids/adjacency unchanged)
       val flatFloats = rep.cells.iterator
         .filter(_.flat != null).map(_.flat.length.toLong).sum
-      assert(flatFloats > 0)
-      assert(packed.approxBytes == rep.approxBytes - 2L * flatFloats)
-      assert(packed.cells.forall(c => c.flat == null && c.half != null))
+      assert(flatFloats > 0 &&
+        packed.cells.iterator.map(_.half.length.toLong).sum == flatFloats)
       val qArr = queries.select(col("qid").cast("long"),
         col("q_embedding")).as[(Long, Array[Float])].collect()
       val f32 = NswGraph.searchLocalQueries(rep, qArr, 10, 8,
@@ -498,100 +332,6 @@ class NswSpec extends AnyFunSuite {
         efSearch = 64, tombstones = Some(mask)).toSeq ==
         NswGraph.searchLocalQueries(rep, qArr, 10, 8, efSearch = 64,
           tombstones = Some(mask)).toSeq)
-      // the streamed packed build produces the same packed serve
-      val builtPacked = NswGraph.localReplica(idx, centroids,
-        packFp16 = true)
-      assert(builtPacked.cells.forall(_.half != null))
-      assert(NswGraph.searchLocalQueries(builtPacked, qArr, 10, 8,
-        efSearch = 64).toSeq == f16.toSeq)
-      // an incremental refresh of a packed replica re-packs the
-      // touched cells (never mixes precisions); empty touch = identity
-      assert(NswGraph.refreshLocalReplica(spark, "/nonexistent",
-        packed, Array.emptyIntArray) eq packed)
     } finally { idx.unpersist(); snapped.unpersist() }
-  }
-
-  test("fp16-packed PERSISTED graph layout (r18): packed tree stores " +
-      "binary16 vecs and serves bit-identical on fp16-exact vectors; " +
-      "packed append keeps the layout; refresh sniffs the schema and " +
-      "decodes touched cells straight to packed, untouched cells " +
-      "stay aliased") {
-    import org.apache.spark.sql.functions._
-    val spark2 = spark
-    import spark2.implicits._
-    val snapped = data.withColumn("embedding",
-      transform(col("embedding"),
-        x => (round(x * 64) / lit(64.0)).cast("float"))).cache()
-    snapped.count()
-    val centroids = graft.operators.AnnIvf.train(snapped, 8,
-      iterations = 2)
-    val qArr = queries.select(col("qid").cast("long"),
-      col("q_embedding")).as[(Long, Array[Float])].collect()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gpk").toString
-    // base/appendix split for the lifecycle half
-    val base = snapped.filter(col("vec_id") % 5 =!= 3)
-    val appendix = snapped.filter(col("vec_id") % 5 === 3)
-    val graphsAll = NswGraph.buildIndex(
-      graft.operators.AnnIvf.index(snapped, centroids),
-      m = 8, efConstruction = 32)
-    NswGraph.writeGraphIndex(graphsAll, s"$tmp/f32")
-    NswGraph.writeGraphIndexPacked(graphsAll, s"$tmp/f16")
-    // layout property (byte halving is measured at 5M in the round
-    // profile — this fixture's snapped floats compress too well for
-    // a raw size compare): vecs16 is array<binary>, 2 bytes/dim
-    val packedSchema = spark.read.parquet(s"$tmp/f16").schema
-    assert(packedSchema("vecs16").dataType ==
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.BinaryType, containsNull = true) ||
-      packedSchema("vecs16").dataType ==
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.BinaryType, containsNull = false))
-    val idx16 = NswGraph.servableIndexPacked(spark, s"$tmp/f16")
-    val idx32 = NswGraph.servableIndex(
-      NswGraph.readGraphIndex(spark, s"$tmp/f32"))
-    idx16.count(); idx32.count()
-    try {
-      val rep16 = NswGraph.localReplica(idx16, centroids)
-      assert(rep16.cells.forall(c => c.flat == null &&
-        (c.half != null || c.rows != null)))
-      val rep32 = NswGraph.localReplica(idx32, centroids)
-      // packed-tree serve == fp32-tree serve (fp16-exact fixture)
-      val f16 = NswGraph.searchLocalQueries(rep16, qArr, 10, 8,
-        efSearch = 64)
-      assert(f16.toSeq == NswGraph.searchLocalQueries(rep32, qArr, 10,
-        8, efSearch = 64).toSeq && f16.nonEmpty)
-      // LIFECYCLE on the packed layout: base tree -> packed append ->
-      // schema-sniffed refresh; the refreshed replica must equal a
-      // replica over the full packed tree, touched cells packed,
-      // untouched cells aliased from the pre-append replica
-      NswGraph.writeGraphIndexPacked(NswGraph.buildIndex(
-        graft.operators.AnnIvf.index(base, centroids),
-        m = 8, efConstruction = 32), s"$tmp/life")
-      val idxBase = NswGraph.servableIndexPacked(spark, s"$tmp/life")
-      idxBase.count()
-      val repBase = NswGraph.localReplica(idxBase, centroids)
-      idxBase.unpersist()
-      val touched = NswGraph.appendToGraphIndexPacked(appendix,
-        centroids, s"$tmp/life", m = 8, efConstruction = 32)
-      assert(touched.nonEmpty)
-      // the appended tree is still the packed schema
-      assert(spark.read.parquet(s"$tmp/life").columns.contains("vecs16"))
-      val refreshed = NswGraph.refreshLocalReplica(spark, s"$tmp/life",
-        repBase, touched)
-      // appended rows are served; rows equal the full-corpus packed
-      // replica's (per-cell builds are id-sort deterministic, so the
-      // appended tree == a fresh build over the union)
-      val served = NswGraph.searchLocalQueries(refreshed, qArr, 10, 8,
-        efSearch = 64)
-      assert(served.toSeq == f16.toSeq)
-      // untouched cells alias the pre-append replica's decoded arrays
-      val touchedSet = touched.toSet
-      refreshed.cells.filterNot(c => touchedSet.contains(c.cid))
-        .foreach(c => assert(repBase.cells.exists(_ eq c)))
-      // touched cells decoded packed (no fp32 mixed in)
-      refreshed.cells.filter(c => touchedSet.contains(c.cid))
-        .foreach(c => assert(c.flat == null))
-    } finally { idx16.unpersist(); idx32.unpersist()
-      snapped.unpersist() }
   }
 }

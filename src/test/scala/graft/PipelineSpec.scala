@@ -189,22 +189,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(err < 0.1, s"round-trip mae $err")
   }
 
-  test("approx quantizer bounds track the exact ones within grid slack") {
-    val exact = Quantize.train(embeddings).collect()
-      .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val approx = Quantize.trainApprox(embeddings).collect()
-      .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(approx.keySet == exact.keySet)
-    // bounds position the int8 grid; the sketch may move each bound a
-    // few ranks, so allow a small fraction of the exact span per dim
-    exact.foreach { case (d, (lo, hi)) =>
-      val (alo, ahi) = approx(d)
-      val slack = 0.05 * (hi - lo)
-      assert(math.abs(alo - lo) <= slack && math.abs(ahi - hi) <= slack,
-        s"dim $d: approx ($alo,$ahi) vs exact ($lo,$hi)")
-    }
-  }
-
   test("synthetic embedder: deterministic, partition-independent, in range") {
     val a = Ingest.pipeline(docs, 20, 400).select($"doc_id", $"embedding")
     val b = Ingest.pipeline(docs.repartition(7), 20, 400)
@@ -313,24 +297,6 @@ class PipelineSpec extends AnyFunSuite {
         vecs, centroids, threshold = 0.99, nassign = 2)
       .filter($"id_a" === 1L && $"id_b" === 2L).count()
     assert(rows == 1L)
-  }
-
-  test("multimodal resize + frame sampling: plumbing shapes (1->1, 1->N)") {
-    val media = Multimodal.mediaTable(docs)
-    val resized = Multimodal.resize(media, targetLen = 32)
-    assert(resized.collect().forall(_.payload.length <= 32))
-    val frames = Multimodal.sampleFrames(media, frameLen = 16, stride = 2)
-    val fr = frames.collect()
-    // every frame is frameLen bytes and indices follow the stride
-    assert(fr.forall(f => f.frame.length == 16 && f.frame_idx % 2 == 0))
-    // cardinality is data-dependent: matches the per-doc frame count
-    val expected = media.collect()
-      .map(r => (0 until r.payload.length / 16 by 2).size.toLong).sum
-    assert(fr.length.toLong == expected && expected > 0)
-    // frame tables feed the same feature extractor downstream
-    val feats = Multimodal.extractFeatures(
-      frames.map(f => Multimodal.MediaRow(f.doc_id, "video/frame", f.frame)))
-    assert(feats.count() == expected)
   }
 
   test("PII redaction: emails/IPs/digit runs replaced, counts staged") {

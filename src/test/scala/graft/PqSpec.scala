@@ -19,6 +19,12 @@ class PqSpec extends AnyFunSuite {
 
   private lazy val cb = Pq.train(data, m = 8, ksub = 16, iterations = 2)
 
+  /** The two-stage serve: ADC shortlist of k·kfactor, exact re-rank. */
+  private def searchAdcRefined(codes: org.apache.spark.sql.DataFrame,
+      book: Pq.Codebook, k: Int, kfactor: Int) =
+    Pq.refineShortlist(Pq.searchAdc(codes, book, queries, k * kfactor),
+      data, queries, k)
+
   test("encode: m one-byte-range codes per vector, deterministic") {
     val codes = Pq.encode(data, cb).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
@@ -51,8 +57,7 @@ class PqSpec extends AnyFunSuite {
     assert(rows(shortlist.filter($"rank" <= 10)) ==
       rows(Pq.searchAdc(codes, cb, queries, k = 10)))
     assert(rows(Pq.refineShortlist(shortlist, data, queries, k = 10)) ==
-      rows(Pq.searchAdcRefined(codes, cb, data, queries, k = 10,
-        kfactor = 4)))
+      rows(searchAdcRefined(codes, cb, k = 10, kfactor = 4)))
   }
 
   test("PQ recall@10 vs exact search clears a floor; refine recovers") {
@@ -64,12 +69,11 @@ class PqSpec extends AnyFunSuite {
     // 8x16 codebooks on 64-dim synthetic data: coarse, but far above
     // chance; the floor catches a broken codebook/LUT, not noise
     assert(pure >= 0.15, s"PQ recall $pure")
-    val refined = Recall.ofRanked(
-        Pq.searchAdcRefined(codes, cb, data, queries, k = 10, kfactor = 4),
-        truth)
+    val rRefined = Recall.ofRanked(
+        searchAdcRefined(codes, cb, k = 10, kfactor = 4), truth)
       .select($"recall").head().getDouble(0)
-    assert(refined >= pure && refined >= 0.5,
-      s"refined recall $refined (pure $pure)")
+    assert(rRefined >= pure && rRefined >= 0.5,
+      s"refined recall $rRefined (pure $pure)")
   }
 
   test("Recall08Preset: the measured knee as product config — a " +
@@ -91,10 +95,10 @@ class PqSpec extends AnyFunSuite {
       Recall.ofRanked(found, truth).select($"recall").head().getDouble(0)
     // same kfactor, preset m vs compression-tier m: more bytes per
     // vector must not lose recall (the knee's whole point)
-    val rP = recallOf(Pq.searchAdcRefined(codesP, cbP, data, queries,
-      k = 10, kfactor = p.kfactor))
-    val r8 = recallOf(Pq.searchAdcRefined(codes8, cb, data, queries,
-      k = 10, kfactor = p.kfactor))
+    val rP = recallOf(
+      searchAdcRefined(codesP, cbP, k = 10, kfactor = p.kfactor))
+    val r8 = recallOf(
+      searchAdcRefined(codes8, cb, k = 10, kfactor = p.kfactor))
     assert(rP >= r8 && rP >= 0.8, s"preset recall $rP vs m=8 $r8")
     codesP.unpersist(); codes8.unpersist()
   }
@@ -127,9 +131,9 @@ class PqSpec extends AnyFunSuite {
     val oneShot = pruned.select($"qid", $"rank", $"neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     Seq(7, 1000).foreach { sz =>
-      val chunked = Pq.searchPersistedAdcChunked(spark, s"$tmp/idx",
-          centroids, cb, queries, k = 10, nprobe = 4,
-          maxQueriesPerChunk = sz, residual = false)
+      val chunked = Knn.chunkedByQuery(queries, sz)(
+          Pq.searchPersistedAdc(spark, s"$tmp/idx", centroids, cb, _,
+            k = 10, nprobe = 4, residual = false))
         .select($"qid", $"rank", $"neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(chunked == oneShot && chunked.nonEmpty, s"chunk size $sz")
@@ -209,8 +213,8 @@ class PqSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val oneShot = tuples(Pq.searchAdc(codes, cb, queries, k = 10))
     Seq(1, 7, 1000).foreach { sz =>
-      val chunked = tuples(Pq.searchAdcChunked(codes, cb, queries, k = 10,
-        maxQueriesPerChunk = sz))
+      val chunked = tuples(Knn.chunkedByQuery(queries, sz)(
+        Pq.searchAdc(codes, cb, _, k = 10)))
       assert(chunked == oneShot && chunked.nonEmpty, s"chunk size $sz")
     }
     codes.unpersist()
@@ -239,29 +243,6 @@ class PqSpec extends AnyFunSuite {
     // and the resulting code relation is what one full write produces
     Pq.writeIvfPqIndex(data, centroids, cb, s"$tmp/full",
       extraCols = Seq("label"), residual = true)
-    def rel(p: String) = spark.read.parquet(p)
-      .select($"vec_id", $"codes", $"label", $"cid").collect()
-      .map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2), r.getInt(3)))
-      .toSet
-    assert(rel(s"$tmp/idx") == rel(s"$tmp/full") && rel(s"$tmp/idx").nonEmpty)
-  }
-
-  test("streaming PQ refresh: streamed micro-batches equal a full " +
-      "rebuild of the code layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivfpq_str").toString
-    val centroids = graft.operators.AnnIvf.train(data, numCentroids = 8,
-      iterations = 2)
-    val vecStream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sf)
-      .filter($"vec_id" % 50 =!= 0)
-      .select($"vec_id", $"embedding", $"label")
-    val q = graft.streaming.StreamingOps.streamingPqAppend(
-      vecStream, centroids, cb, s"$tmp/idx", extraCols = Seq("label"))
-    try q.processAllAvailable() finally q.stop()
-    Pq.writeIvfPqIndex(data, centroids, cb, s"$tmp/full",
-      extraCols = Seq("label"))
     def rel(p: String) = spark.read.parquet(p)
       .select($"vec_id", $"codes", $"label", $"cid").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2), r.getInt(3)))

@@ -209,14 +209,11 @@ class ServingSpec extends AnyFunSuite {
     // other tests in this suite
     val centroids = AnnIvf.train(data, numCentroids = 8, iterations = 2)
     val art = Serving.Artifacts(AnnIvf.index(data, centroids), centroids)
-    assert(art.selComputes == 0 && art.cachedCounts(SparkEntry.filterHigh).isEmpty)
+    assert(art.selComputes == 0)
     val (s1, r1) = Serving.serveFilteredExplained(art, queries, 10,
       SparkEntry.filterHigh, nprobe = 4)
     r1.count()
     assert(art.selComputes == 1)
-    val cached = art.cachedCounts(SparkEntry.filterHigh)
-    assert(cached.nonEmpty && cached.get._2 > 0 &&
-      cached.get._2 < cached.get._1)
     // second serve with the same predicate: dispatch identical, no
     // second measurement
     val (s2, r2) = Serving.serveFilteredExplained(art, queries, 10,
@@ -279,8 +276,10 @@ class ServingSpec extends AnyFunSuite {
       u2($"label"), nprobe = 8)
     assert(s2 == Serving.ExactScan && art.selComputes == 2)
     assert(r2.count() == 0) // no survivors — and no stale u1 counts
-    // neither call polluted the memo
-    assert(art.cachedCounts(u1($"label")).isEmpty)
+    // neither call polluted the memo: serving u1 again measures again
+    Serving.serveFilteredExplained(art, queries, 10, u1($"label"),
+      nprobe = 8)._2.count()
+    assert(art.selComputes == 3)
     art.graph.foreach(_.unpersist()); indexed.unpersist()
   }
 
@@ -297,17 +296,18 @@ class ServingSpec extends AnyFunSuite {
     val (_, pre) = Serving.serveFilteredExplained(art, queries, 10,
       SparkEntry.filterHigh, nprobe = 8)
     val preRows = asRows(pre)
-    assert(art.cachedCounts(SparkEntry.filterHigh).nonEmpty)
+    assert(art.selComputes == 1)
     art.setTombstones(tombIds)
-    // mask install = new serving epoch: the memo is cleared (masked
-    // survivor counts differ from the unmasked ones)
-    assert(art.cachedCounts(SparkEntry.filterHigh).isEmpty)
     val survivors = indexed
       .filter(!$"vec_id".isInCollection(tombIds))
     // strong branch == searchFast over the masked survivors
     val (s1, rS) = Serving.serveFilteredExplained(art, queries, 10,
       SparkEntry.filterHigh, nprobe = 8, extreme = 0.02)
     assert(s1 == Serving.IvfPrefilter)
+    // mask install = new serving epoch: the memo was cleared (masked
+    // survivor counts differ from the unmasked ones), so the same
+    // predicate was measured again
+    assert(art.selComputes == 2)
     assert(asRows(rS) == asRows(AnnIvf.searchFast(
       survivors.filter(SparkEntry.filterHigh), centroids, queries, 10,
       nprobe = 8)) && asRows(rS).nonEmpty)
@@ -536,73 +536,20 @@ class ServingSpec extends AnyFunSuite {
     } finally { graphIdx.unpersist(); cells.unpersist(); indexed.unpersist() }
   }
 
-  test("survivorIdSet: memoized per (artifact, predicate), UDF " +
-      "predicates skip the memo, and the maxIds budget refuses " +
-      "oversized collects loudly") {
+  test("survivorIdSet: the sorted ids of the filter, and the maxIds " +
+      "budget refuses oversized collects loudly") {
     val centroids = AnnIvf.train(data, numCentroids = 8, iterations = 2)
     val art = Serving.Artifacts(AnnIvf.index(data, centroids), centroids)
     val twoCol = $"label".isin(0, 1) && $"vec_id" % 3 =!= 1
-    assert(art.idSetComputes == 0)
-    val a = art.survivorIds(twoCol)
-    assert(art.idSetComputes == 1 && a.nonEmpty)
-    val b = art.survivorIds(twoCol)
-    assert(art.idSetComputes == 1 && (b sameElements a)) // cache hit
-    // a different predicate is its own entry
-    art.survivorIds($"label" =!= 4)
-    assert(art.idSetComputes == 2)
-    // ambiguous rendering (anonymous UDF) recomputes per call
-    val u = udf((x: Double) => x >= 0.0)
-    art.survivorIds(u($"label"))
-    art.survivorIds(u($"label"))
-    assert(art.idSetComputes == 4)
+    val ids = Serving.survivorIdSet(art.indexed, twoCol)
+    assert(ids.nonEmpty && (ids sameElements ids.sorted))
+    assert(ids.toSet == art.indexed.filter(twoCol).select($"vec_id")
+      .as[Long].collect().toSet)
     // the heap budget: a mild filter's id-set is refused loudly
     val ex = intercept[IllegalArgumentException] {
       Serving.survivorIdSet(art.indexed, $"label" =!= 4, maxIds = 10L)
     }
     assert(ex.getMessage.contains("maxIds"))
-  }
-
-  test("idSetCache is BYTE-BOUNDED and LRU (r17 bound, r18 order): " +
-      "eviction under byte pressure drops the least-recently-USED " +
-      "entry (a hot predicate survives), an evicted predicate " +
-      "recomputes on its next serve, and an id-set larger than the " +
-      "whole budget is served UNCACHED instead of evicting everything") {
-    val centroids = AnnIvf.train(data, numCentroids = 8, iterations = 2)
-    val art = Serving.Artifacts(AnnIvf.index(data, centroids), centroids)
-    val pA = $"label".isin(0, 1)
-    val pB = $"label".isin(2, 3)
-    val pC = $"label".isin(4, 5)
-    val a0 = art.survivorIds(pA)
-    val b0 = art.survivorIds(pB)
-    assert(art.idSetComputes == 2 && a0.nonEmpty && b0.nonEmpty)
-    assert(art.idSetCacheEntries == 2)
-    // pC's size measured OUTSIDE the memo (static helper) so the
-    // budget can be sized exactly: pA + pC fit together, pB on top
-    // does not
-    val cLen = Serving.survivorIdSet(art.indexed, pC).length
-    art.idSetCacheMaxBytes = 8L * (a0.length + cLen) + 7L
-    // touch pA — it becomes the RECENT entry; pB is now the LRU
-    art.survivorIds(pA)
-    assert(art.idSetComputes == 2) // a cache hit, stamped
-    // pC's insert needs room: the LRU victim must be pB, NOT the
-    // hot pA (hash-order eviction could pick either — r17 ADVICE)
-    val c0 = art.survivorIds(pC)
-    assert(art.idSetComputes == 3 && c0.nonEmpty)
-    val a1 = art.survivorIds(pA)
-    assert(art.idSetComputes == 3 && (a1 sameElements a0),
-      "the hot entry was evicted — eviction is not recency-ordered")
-    val b1 = art.survivorIds(pB)
-    assert(art.idSetComputes == 4 && (b1 sameElements b0)) // recomputed
-    // OVERSIZED: an id-set bigger than the whole budget never inserts
-    // and never evicts — existing entries survive, repeat serves
-    // recompute
-    val entriesBefore = art.idSetCacheEntries
-    art.idSetCacheMaxBytes = 7L
-    val computesBefore = art.idSetComputes
-    art.survivorIds($"label" =!= 4)
-    art.survivorIds($"label" =!= 4)
-    assert(art.idSetComputes == computesBefore + 2) // uncached both times
-    assert(art.idSetCacheEntries == entriesBefore) // nothing evicted
   }
 
   test("duplicate qids in one local batch: the mild over-fetch branch " +
@@ -643,80 +590,8 @@ class ServingSpec extends AnyFunSuite {
     } finally { graphIdx.unpersist(); cells.unpersist(); indexed.unpersist() }
   }
 
-  test("opt-in staleness probe: a tombstone written AFTER the " +
-      "artifacts are armed is observed on the next serve without a " +
-      "manual refresh; a fold clears the mask the same way") {
-    val centroids = AnnIvf.train(data, numCentroids = 8, iterations = 2)
-    val indexed = AnnIvf.index(data, centroids)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_serv_stale").toString
-    AnnIvf.writeIndex(indexed, s"$tmp/idx")
-    val art = Serving.Artifacts(indexed, centroids)
-      .withTombstoneProbe(spark, s"$tmp/idx")
-    assert(art.tombstones.isEmpty && art.probeRefreshes == 0)
-    // the forgotten-refresh scenario: delete lands in the side-table,
-    // nobody calls refreshTombstones — the armed probe catches it on
-    // the next serve call
-    val del = data.filter($"vec_id" % 11 === 4).select($"vec_id")
-    AnnIvf.tombstone(spark, s"$tmp/idx", del)
-    val (_, res) = Serving.serveFilteredExplained(art, queries, 10,
-      SparkEntry.filterHigh, nprobe = 8)
-    val served = res.select($"neighbor_id").collect().map(_.getLong(0)).toSet
-    val masked = del.as[Long].collect().toSet
-    assert(served.nonEmpty && served.intersect(masked).isEmpty)
-    assert(art.probeRefreshes == 1 &&
-      art.tombstones.map(_.toSeq).contains(masked.toSeq.sorted))
-    // an unchanged side-table does NOT re-read it (stamp match)
-    Serving.serveFilteredExplained(art, queries, 10,
-      SparkEntry.filterHigh, nprobe = 8)._2.count()
-    assert(art.probeRefreshes == 1)
-    // a fold drops the side-table; the probe clears the mask
-    AnnIvf.foldTombstones(spark, s"$tmp/idx")
-    Serving.serveFilteredExplained(art, queries, 10,
-      SparkEntry.filterHigh, nprobe = 8)._2.count()
-    assert(art.tombstones.isEmpty && art.probeRefreshes == 2)
-  }
-
-  test("staleness probe epoch file: back-to-back tombstone writes " +
-      "(same filesystem second) are each observed — the monotonic " +
-      "epoch closes the mtime-granularity window") {
-    val centroids = AnnIvf.train(data, numCentroids = 8, iterations = 2)
-    val indexed = AnnIvf.index(data, centroids)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_serv_epoch").toString
-    AnnIvf.writeIndex(indexed, s"$tmp/idx")
-    assert(AnnIvf.tombstoneEpoch(spark, s"$tmp/idx") == -1L)
-    val art = Serving.Artifacts(indexed, centroids)
-      .withTombstoneProbe(spark, s"$tmp/idx")
-    val batchA = data.filter($"vec_id" % 11 === 4).select($"vec_id")
-    val batchB = data.filter($"vec_id" % 11 === 5).select($"vec_id")
-    AnnIvf.tombstone(spark, s"$tmp/idx", batchA)
-    assert(AnnIvf.tombstoneEpoch(spark, s"$tmp/idx") == 0L)
-    Serving.serveFilteredExplained(art, queries, 10,
-      SparkEntry.filterHigh, nprobe = 8)._2.count()
-    assert(art.probeRefreshes == 1)
-    // the second write lands within the same wall-clock second as the
-    // first on this host — under the old mtime stamp the next serve
-    // could silently miss it; the epoch is 1 now, so it cannot
-    AnnIvf.tombstone(spark, s"$tmp/idx", batchB)
-    assert(AnnIvf.tombstoneEpoch(spark, s"$tmp/idx") == 1L)
-    Serving.serveFilteredExplained(art, queries, 10,
-      SparkEntry.filterHigh, nprobe = 8)._2.count()
-    assert(art.probeRefreshes == 2)
-    val expected = (batchA.as[Long].collect() ++
-      batchB.as[Long].collect()).sorted.toSeq
-    assert(art.tombstones.map(_.toSeq).contains(expected))
-    // fold bumps too (epoch 2) and the probe clears the mask
-    AnnIvf.foldTombstones(spark, s"$tmp/idx")
-    assert(AnnIvf.tombstoneEpoch(spark, s"$tmp/idx") == 2L)
-    Serving.serveFilteredExplained(art, queries, 10,
-      SparkEntry.filterHigh, nprobe = 8)._2.count()
-    assert(art.tombstones.isEmpty && art.probeRefreshes == 3)
-  }
-
-  test("staleness probe feeds the LOCAL dispatch: a mid-stream " +
-      "tombstone reaches the in-process strong branch without a " +
-      "manual refresh") {
+  test("refreshTombstones feeds the LOCAL dispatch: a mid-stream " +
+      "tombstone reaches the in-process strong branch") {
     val centroids = AnnIvf.train(data, numCentroids = 8, iterations = 2)
     val indexed = AnnIvf.index(data, centroids).cache()
     indexed.count()
@@ -728,11 +603,12 @@ class ServingSpec extends AnyFunSuite {
     AnnIvf.writeIndex(indexed, s"$tmp/idx")
     val art = Serving.Artifacts(indexed, centroids, flat = Some(cells),
         flatLocal = Some(flatRep))
-      .withTombstoneProbe(spark, s"$tmp/idx")
     val twin: Double => Boolean = a => a == 0.0 || a == 1.0
-    // tombstone written AFTER arming; nobody calls refreshTombstones
+    // tombstone written after the artifacts are built, then read into
+    // the serve-time mask (zero re-decode)
     val del = data.filter($"vec_id" % 9 === 2).select($"vec_id")
     AnnIvf.tombstone(spark, s"$tmp/idx", del)
+    art.refreshTombstones(spark, s"$tmp/idx")
     val (strat, res) = Serving.serveFilteredExplained(art, queries, 10,
       $"label".isin(0, 1), nprobe = 8, extreme = 0.02,
       attrPred = Some(twin))
@@ -742,7 +618,6 @@ class ServingSpec extends AnyFunSuite {
     val served = res.select($"neighbor_id").collect().map(_.getLong(0)).toSet
     val masked = del.as[Long].collect().toSet
     assert(served.nonEmpty && served.intersect(masked).isEmpty)
-    assert(art.probeRefreshes == 1)
     // row-identity with the eager truth: exact pre-filter over the
     // surviving rows at full probes == the masked local serve
     val survivors = indexed.filter($"label".isin(0, 1))
@@ -827,8 +702,10 @@ class ServingSpec extends AnyFunSuite {
       // identical supers from the shared matrix: sharded-with-auto
       // stays row-identical to the unsharded serve
       val shards = graft.operators.Sharded.splitCellReplica(flatRep, 2)
+      val ids = d.filter($"label".isin(0, 1)).select($"vec_id")
+        .as[Long].collect().sorted
       val (sSh, rSh) = graft.operators.Sharded
-        .serveFilteredShardedExplained(shards, None, qArr, 10, twin,
+        .serveFilteredShardedIdSetExplained(shards, qArr, 10, ids,
           nprobe = 2)
       assert(sSh == Serving.IvfPrefilterResident)
       assert(rSh.toSet == rAuto.toSet,

@@ -5,79 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingOps
 
-/** Streaming shapes: the windowed streaming aggregation must agree
-  * with its batch twin (q15) when the stream is fully drained. */
+/** Streaming shapes: each keyed-state operator must agree with its
+  * batch twin when the stream is fully drained. */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
   private val sf = TestSpark.sf
-
-  test("streaming windowed counts == batch windowed counts") {
-    val stream = StreamingOps.readEventStream(spark, sf)
-    assert(stream.isStreaming)
-    val q = StreamingOps.windowedCounts(stream)
-      .writeStream.format("memory").queryName("win_counts")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("win_counts")
-        .select($"hour_epoch", $"event_type", $"n").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val batch = Tables.load(spark, sf, "events")
-        .groupBy(date_trunc("hour", $"ts").as("hour"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp($"hour"), $"event_type", $"n").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("streaming knn serves micro-batches identical to batch knn") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sknn").toString
-    // stream the query vectors (embeddings file as a file-source stream)
-    val qStream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sf)
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("q_embedding"))
-    val static = SparkEntry.dataDf(spark, sf).filter(SparkEntry.filterLow)
-    val q = graft.streaming.StreamingOps.streamingKnn(
-      qStream, static, 10, s"$tmp/out")
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.read.parquet(s"$tmp/out")
-      .select($"qid", $"rank", $"neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = graft.operators.Knn.exact(
-      static, SparkEntry.queriesDf(spark, sf), 10)
-      .select($"qid", $"rank", $"neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("stateful mapGroupsWithState converges to the batch aggregate") {
-    val stream = StreamingOps.readEventStream(spark, sf)
-    val q = StreamingOps.runningUserStats(stream)
-      .writeStream.format("memory").queryName("user_stats")
-      .outputMode("update").start()
-    try {
-      q.processAllAvailable()
-      // last emitted row per user = final running state
-      val finalRows = spark.table("user_stats")
-        .groupBy($"user_id")
-        .agg(max(struct($"n", $"sum_value")).as("last"))
-        .select($"user_id", $"last.n", round($"last.sum_value", 4))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val batch = Tables.load(spark, sf, "events")
-        .groupBy($"user_id")
-        .agg(count(lit(1)).as("n"),
-          round(sum($"value"), 4).as("sum_value"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(finalRows == batch && finalRows.nonEmpty)
-    } finally q.stop()
-  }
 
   test("streaming curate equals the batch curation funnel") {
     val docStream = spark.readStream
@@ -152,197 +85,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming retraction: deleted ids leave the served index") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val data = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 =!= 0 && $"label" =!= 3)
-    val queries = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("q_embedding"))
-    val centroids = graft.operators.AnnIvf.train(data, 16, iterations = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sdel").toString
-    graft.operators.AnnIvf.writeIndex(
-      graft.operators.AnnIvf.index(data, centroids), s"$tmp/idx")
-    val delIds = data.select($"vec_id").collect().map(_.getLong(0))
-      .filter(_ % 19 == 4)
-    assert(delIds.nonEmpty)
-    val (b1, b2) = delIds.splitAt(delIds.length / 2)
-    val ms = MemoryStream[Long]
-    val q = StreamingOps.streamingIndexDelete(
-      ms.toDF.toDF("vec_id"), s"$tmp/idx")
-    try {
-      ms.addData(b1.toSeq: _*); q.processAllAvailable()
-      ms.addData(b2.toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "rank", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val served = tuples(graft.operators.AnnIvf.searchPersisted(
-      spark, s"$tmp/idx", centroids, queries, 10, nprobe = 4))
-    val survivors = data.filter(!$"vec_id".isin(delIds.toSeq: _*))
-    val rebuilt = tuples(graft.operators.AnnIvf.search(
-      graft.operators.AnnIvf.index(survivors, centroids), centroids,
-      queries, 10, nprobe = 4))
-    assert(served == rebuilt && served.nonEmpty)
-    served.foreach { case (_, _, nid) =>
-      assert(!delIds.contains(nid), s"deleted id $nid still served")
-    }
-  }
-
-  test("streaming retraction hint path: vector-carrying feed equals " +
-      "id-only retraction") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val data = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 =!= 0 && $"label" =!= 3)
-    val queries = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("q_embedding"))
-    val centroids = graft.operators.AnnIvf.train(data, 16, iterations = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shint").toString
-    graft.operators.AnnIvf.writeIndex(
-      graft.operators.AnnIvf.index(data, centroids), s"$tmp/idx")
-    val delIds = data.select($"vec_id").collect().map(_.getLong(0))
-      .filter(_ % 19 == 4)
-    assert(delIds.nonEmpty)
-    // the retraction feed carries the VECTOR (the cid-hint contract):
-    // foreachBatch re-derives the cell through the frozen quantizer
-    // and deleteFromIndex prunes discovery to the named cells
-    val delRows = data.filter($"vec_id".isin(delIds.toSeq: _*))
-      .select($"vec_id", $"embedding").as[(Long, Array[Float])]
-      .collect()
-    val (b1, b2) = delRows.splitAt(delRows.length / 2)
-    val ms = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.streamingIndexDelete(
-      ms.toDF.toDF("vec_id", "embedding"), s"$tmp/idx",
-      centroids = Some(centroids))
-    try {
-      ms.addData(b1.toSeq: _*); q.processAllAvailable()
-      ms.addData(b2.toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "rank", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val served = tuples(graft.operators.AnnIvf.searchPersisted(
-      spark, s"$tmp/idx", centroids, queries, 10, nprobe = 4))
-    val survivors = data.filter(!$"vec_id".isin(delIds.toSeq: _*))
-    val rebuilt = tuples(graft.operators.AnnIvf.search(
-      graft.operators.AnnIvf.index(survivors, centroids), centroids,
-      queries, 10, nprobe = 4))
-    assert(served == rebuilt && served.nonEmpty)
-  }
-
-  test("streaming tombstone retraction: spread micro-batches become " +
-      "invisible at batch granularity without rewriting any cell") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val data = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 =!= 0 && $"label" =!= 3)
-    val queries = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("q_embedding"))
-    val centroids = graft.operators.AnnIvf.train(data, 16, iterations = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stmb").toString
-    graft.operators.AnnIvf.writeIndex(
-      graft.operators.AnnIvf.index(data, centroids), s"$tmp/idx")
-    val cellFiles = new java.io.File(s"$tmp/idx").listFiles()
-      .filter(_.getName.startsWith("cid="))
-      .flatMap(_.listFiles().map(f => f.getPath -> f.lastModified())).toMap
-    val delIds = data.select($"vec_id").collect().map(_.getLong(0))
-      .filter(_ % 19 == 4) // uniform spread: ids land in ~every cell
-    val (b1, b2) = delIds.splitAt(delIds.length / 2)
-    val ms = MemoryStream[Long]
-    val q = StreamingOps.streamingIndexTombstone(
-      ms.toDF.toDF("vec_id"), s"$tmp/idx")
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "rank", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    try {
-      ms.addData(b1.toSeq: _*); q.processAllAvailable()
-      // batch-granularity visibility: after batch 1, only batch 1 is
-      // masked
-      val afterB1 = tuples(graft.operators.AnnIvf.searchPersisted(
-        spark, s"$tmp/idx", centroids, queries, 10, nprobe = 4))
-      val surv1 = data.filter(!$"vec_id".isin(b1.toSeq: _*))
-      assert(afterB1 == tuples(graft.operators.AnnIvf.search(
-        graft.operators.AnnIvf.index(surv1, centroids), centroids,
-        queries, 10, nprobe = 4)))
-      ms.addData(b2.toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    // no cell file was rewritten by either batch — O(batch) recording
-    new java.io.File(s"$tmp/idx").listFiles()
-      .filter(_.getName.startsWith("cid="))
-      .flatMap(_.listFiles()).foreach { f =>
-        assert(cellFiles.get(f.getPath).contains(f.lastModified()),
-          s"tombstone stream rewrote ${f.getPath}") }
-    val served = tuples(graft.operators.AnnIvf.searchPersisted(
-      spark, s"$tmp/idx", centroids, queries, 10, nprobe = 4))
-    val survivors = data.filter(!$"vec_id".isin(delIds.toSeq: _*))
-    val rebuilt = tuples(graft.operators.AnnIvf.search(
-      graft.operators.AnnIvf.index(survivors, centroids), centroids,
-      queries, 10, nprobe = 4))
-    assert(served == rebuilt && served.nonEmpty)
-  }
-
-  test("streaming retraction strict mode: a hint/build mismatch is " +
-      "caught by the shortfall fallback, never an under-delete") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val data = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 =!= 0 && $"label" =!= 3)
-    val queries = Tables.load(spark, sf, "embeddings")
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("q_embedding"))
-    val centroids = graft.operators.AnnIvf.train(data, 16, iterations = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_smis").toString
-    graft.operators.AnnIvf.writeIndex(
-      graft.operators.AnnIvf.index(data, centroids), s"$tmp/idx")
-    // the WRONG quantizer: different cell count over a different
-    // subset — re-derived cids will not match the build for most rows
-    val wrongCentroids = graft.operators.AnnIvf.train(
-      data.filter($"vec_id" % 2 === 0), 4, iterations = 1)
-    val delIds = data.select($"vec_id").collect().map(_.getLong(0))
-      .filter(_ % 19 == 4)
-    val delRows = data.filter($"vec_id".isin(delIds.toSeq: _*))
-      .select($"vec_id", $"embedding").as[(Long, Array[Float])]
-      .collect()
-    assert(delRows.nonEmpty)
-    val ms = MemoryStream[(Long, Array[Float])]
-    val q = StreamingOps.streamingIndexDelete(
-      ms.toDF.toDF("vec_id", "embedding"), s"$tmp/idx",
-      centroids = Some(wrongCentroids)) // strict = true default
-    try {
-      ms.addData(delRows.toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    // despite the bad hint, no deleted id may survive
-    val remaining = spark.read.parquet(s"$tmp/idx")
-      .select($"vec_id").collect().map(_.getLong(0)).toSet
-    assert(delIds.forall(id => !remaining.contains(id)),
-      "strict shortfall fallback must remove every present id")
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "rank", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val served = tuples(graft.operators.AnnIvf.searchPersisted(
-      spark, s"$tmp/idx", centroids, queries, 10, nprobe = 4))
-    val survivors = data.filter(!$"vec_id".isin(delIds.toSeq: _*))
-    val rebuilt = tuples(graft.operators.AnnIvf.search(
-      graft.operators.AnnIvf.index(survivors, centroids), centroids,
-      queries, 10, nprobe = 4))
-    assert(served == rebuilt && served.nonEmpty)
-    // strict=false with legitimately-absent ids: shortfall is logged,
-    // not re-scanned; the index is untouched
-    val before = spark.read.parquet(s"$tmp/idx").count()
-    val ms2 = MemoryStream[(Long, Array[Float])]
-    val q2 = StreamingOps.streamingIndexDelete(
-      ms2.toDF.toDF("vec_id", "embedding"), s"$tmp/idx",
-      centroids = Some(centroids), strict = false)
-    try {
-      ms2.addData((99999999L, delRows.head._2)); q2.processAllAvailable()
-    } finally q2.stop()
-    assert(spark.read.parquet(s"$tmp/idx").count() == before)
-  }
-
   test("streaming sessionize: state carries across micro-batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
@@ -390,46 +132,6 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4))).toSet
       assert(streamed == closedBatch && streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming minhash candidates equal the batch banding") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val corpus = Tables.load(spark, sf, "documents")
-      .select($"doc_id", $"text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val (first, second) = corpus.splitAt(corpus.size / 2)
-    val ms = MemoryStream[(Long, String)]
-    val q = StreamingOps.streamingNearDupCandidates(
-        ms.toDF.toDF("doc_id", "text"), shingleN = 3)
-      .writeStream.format("memory").queryName("mnear")
-      .outputMode("append").start()
-    try {
-      ms.addData(first); q.processAllAvailable()
-      ms.addData(second); q.processAllAvailable()
-      val streamed = spark.table("mnear").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batch = graft.operators.Dedup.lshCandidatePairs(
-          Tables.load(spark, sf, "documents"), shingleN = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamed == batch && streamed.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("stream-static join enriches streamed rows") {
-    val stream = StreamingOps.readEventStream(spark, sf)
-      .select($"event_id", $"user_id", $"event_type")
-    val dim = Seq(("click", 1.0), ("view", 0.5)).toDF("event_type", "weight")
-    val q = StreamingOps.streamStaticJoin(stream, dim, "event_type")
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val n = spark.table("enriched").count()
-      val expected = Tables.load(spark, sf, "events")
-        .filter($"event_type".isin("click", "view")).count()
-      assert(n == expected)
     } finally q.stop()
   }
 }

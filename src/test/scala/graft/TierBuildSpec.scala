@@ -10,9 +10,9 @@ import graft.operators.{AnnIvf, NswGraph, Resident, Serving}
 /** How the serving tiers are built: the resident tiers are sized in
   * the pass that materializes them, the replicas arrive in
   * byte-budgeted partition batches, and each build stays within its
-  * Spark job budget. Also the local dispatcher's fault paths: a
-  * filter that keeps nothing, k above the survivors and an empty
-  * tier return short or empty results, never an exception. */
+  * Spark job budget. Also the dispatchers' fault paths, local and
+  * Spark-side: a filter that keeps nothing, k above the survivors and
+  * an empty tier return short or empty results, never an exception. */
 class TierBuildSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -198,6 +198,49 @@ class TierBuildSpec extends AnyFunSuite {
           s"$s k=$k survivors=$survivors: $perQuery")
         assert(out.forall(r => r._3 < 4L))
       }
+    } finally { idx.unpersist(); cells.unpersist() }
+  }
+
+  test("Spark dispatcher: a filter that keeps nothing and k above the " +
+      "survivors give min(k, survivors) rows per query on every branch") {
+    val idx = NswGraph.servableIndex(NswGraph.buildIndex(indexed,
+      m = 8, efConstruction = 32))
+    val cells = AnnIvf.servableCells(indexed, attrCol = Some("rating"))
+    try {
+      val art = Serving.Artifacts(indexed, centroids, graph = Some(idx),
+        flat = Some(cells))
+      val queries = data.orderBy($"vec_id").limit(6)
+        .select(($"vec_id" + 1000L).as("qid"),
+          $"embedding".as("q_embedding")).cache()
+      val qids = queries.select($"qid").as[Long].collect()
+      // rating < 0.05 keeps vec_id 0..3; the attr twins match
+      val few = ($"rating" < 0.05, (r: Double) => r < 0.05, 4)
+      val none = ($"rating" < 0.0, (r: Double) => r < 0.0, 0)
+      // each branch forced by its hint; every cell probed and an
+      // over-fetch past the corpus, so each branch can see every
+      // survivor. The strong hint runs the resident branch with the
+      // attr twin and the relational pre-filter without it.
+      val hints = Seq((None, true, None),
+        (Some(0.0), true, Some(Serving.ExactScan)),
+        (Some(0.2), true, Some(Serving.IvfPrefilterResident)),
+        (Some(0.2), false, Some(Serving.IvfPrefilter)),
+        (Some(0.9), true, Some(Serving.GraphOverfetch)))
+      for ((pred, twin, survivors) <- Seq(few, none); k <- Seq(1, 10);
+           (hint, withTwin, branch) <- hints) {
+        val (s, out) = Serving.serveFilteredExplained(art, queries, k,
+          pred, nprobe = Cells, extreme = 0.1, overFetchMult = 200,
+          selectivity = hint,
+          attrPred = if (withTwin) Some(twin) else None)
+        branch.foreach(b => assert(s == b, s"hint $hint ran $s"))
+        val rows = out.select($"qid", $"neighbor_id")
+          .as[(Long, Long)].collect()
+        val perQuery = rows.groupBy(_._1).map { case (q, r) => q -> r.length }
+        val want = math.min(k, survivors)
+        assert(qids.forall(q => perQuery.getOrElse(q, 0) == want),
+          s"$s k=$k survivors=$survivors: $perQuery")
+        assert(rows.forall(_._2 < 4L))
+      }
+      queries.unpersist()
     } finally { idx.unpersist(); cells.unpersist() }
   }
 

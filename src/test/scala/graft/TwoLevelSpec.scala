@@ -47,8 +47,8 @@ class TwoLevelSpec extends AnyFunSuite {
     val nSupers = supers.count().toInt
     val flat = AnnIvf.assign(data, centroids)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val hier = AnnIvf.assignTwoLevel(data, supers, centroids,
-        wSuper = nSupers)
+    val hier = AnnIvf.indexTwoLevel(data, supers, centroids,
+        wSuper = nSupers).select($"vec_id", $"cid")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(hier == flat)
   }
@@ -78,8 +78,9 @@ class TwoLevelSpec extends AnyFunSuite {
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val hier = AnnIvf.assignTwoLevel(data, supers, centroids, wSuper = 1)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val hier = AnnIvf.indexTwoLevel(data, supers, centroids, wSuper = 1)
+      .select($"vec_id", $"cid").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(hier == relational)
   }
 
@@ -108,8 +109,8 @@ class TwoLevelSpec extends AnyFunSuite {
     // agreement is far higher (measured in ScaleBench)
     val flat = AnnIvf.assign(data, centroids)
       .withColumnRenamed("cid", "cid_flat")
-    val agree = AnnIvf.assignTwoLevel(data, supers, centroids)
-      .join(flat, "vec_id")
+    val agree = AnnIvf.indexTwoLevel(data, supers, centroids)
+      .select($"vec_id", $"cid").join(flat, "vec_id")
       .agg(avg(($"cid" === $"cid_flat").cast("double"))).head().getDouble(0)
     assert(agree >= 0.7, s"only ${agree * 100}%% of assignments agree")
   }
@@ -119,37 +120,10 @@ class TwoLevelSpec extends AnyFunSuite {
     val supers = AnnIvf.trainSupers(centroids, 4)
     val flat = AnnIvf.assign(data, centroids).withColumnRenamed("cid", "c0")
     def agree(w: Int): Double =
-      AnnIvf.assignTwoLevel(data, supers, centroids, wSuper = w)
-        .join(flat, "vec_id")
+      AnnIvf.indexTwoLevel(data, supers, centroids, wSuper = w)
+        .select($"vec_id", $"cid").join(flat, "vec_id")
         .agg(avg(($"cid" === $"c0").cast("double"))).head().getDouble(0)
     assert(agree(2) >= agree(1))
-  }
-
-  test("two-level graph append bit-equals a full two-level rebuild") {
-    // NSW parity of the same contract: a graph index whose cells came
-    // from indexTwoLevel, appended through appendToGraphIndex(supers),
-    // must be bit-identical to the one-shot build over the union
-    // (id-sort-deterministic per-cell builds make that exact)
-    import graft.operators.NswGraph
-    val centroids = AnnIvf.train(data, 12, iterations = 2)
-    val supers = AnnIvf.trainSupers(centroids, 4)
-    val first = data.filter($"vec_id" % 3 =!= 0)
-    val second = data.filter($"vec_id" % 3 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_g2append").toString
-    NswGraph.writeGraphIndex(
-      NswGraph.buildIndex(AnnIvf.indexTwoLevel(first, supers, centroids),
-        m = 8, efConstruction = 32), s"$tmp/idx")
-    NswGraph.appendToGraphIndex(second, centroids, s"$tmp/idx",
-      m = 8, efConstruction = 32, supers = Some(supers))
-    def canon(g: org.apache.spark.sql.Dataset[NswGraph.CellGraph]) =
-      g.collect().sortBy(_.cid).map(cg => (cg.cid, cg.ids.toSeq,
-        cg.vecs.map(_.toSeq).toSeq, cg.adj.map(_.sorted.toSeq).toSeq)).toSeq
-    val appended = canon(NswGraph.readGraphIndex(spark, s"$tmp/idx"))
-    val rebuilt = canon(NswGraph.buildIndex(
-      AnnIvf.indexTwoLevel(data, supers, centroids),
-      m = 8, efConstruction = 32))
-    assert(appended == rebuilt && appended.nonEmpty)
   }
 
   test("two-level appendToIndex lands batches in the base build's cells") {
