@@ -391,20 +391,23 @@ case class NearestCells(child: Expression, centroids: Array[Array[Float]],
   * current worst kept one (exact: an abandoned partial sum is already
   * above it and the insertion test is strict).
   *
-  * Uniform-dim centroids are copied once into one contiguous array and
-  * scanned four at a time through `Knn.sqDistBounded4` under the
-  * threshold read at the start of the group (it only tightens, so a
-  * lane past it is past the live one too); each lane is then offered
-  * in cid order against the live threshold, so the kept list equals the
-  * one-at-a-time scan's, NaN and ties included (KnnSpec probe-parity
-  * pin). Ragged centroid rows and the remainder past the last group of
-  * four take the single-row `Knn.distBoundedSlices`. Immutable after
-  * construction, so one instance serves concurrent callers. */
+  * Uniform-dim centroids are copied once into one contiguous array
+  * (`flat`; the local replicas pass the copy they keep, so a serve
+  * call does not repeat it) and scanned four at a time through
+  * `Knn.sqDistBounded4` under the threshold read at the start of the
+  * group (it only tightens, so a lane past it is past the live one
+  * too); each lane is then offered in cid order against the live
+  * threshold, so the kept list equals the one-at-a-time scan's, NaN
+  * and ties included (KnnSpec probe-parity pin). Ragged centroid rows
+  * and the remainder past the last group of four take the single-row
+  * `Knn.distBoundedSlices`. Immutable after construction, so one
+  * instance serves concurrent callers. */
 private[graft] final class CellProbe(centroids: Array[Array[Float]],
-    nprobe: Int) extends (Array[Float] => Array[Int]) {
+    nprobe: Int, flat: Array[Float]) extends (Array[Float] => Array[Int]) {
+  def this(centroids: Array[Array[Float]], nprobe: Int) =
+    this(centroids, nprobe, graft.operators.Knn.flattenUniform(centroids))
   private[this] val np = math.min(nprobe, centroids.length)
   private[this] val dim = if (centroids.isEmpty) 0 else centroids(0).length
-  private[this] val flat = graft.operators.Knn.flattenUniform(centroids)
 
   def apply(x: Array[Float]): Array[Int] = {
     val ids = new Array[Int](np)

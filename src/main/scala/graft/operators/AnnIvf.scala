@@ -1367,6 +1367,12 @@ object AnnIvf {
       val half: Array[Short] = null) extends Serializable {
     def size: Int = ids.length
     def nCells: Int = cellOff.length - 1
+    /** The centroid matrix flattened once per replica: a serve call's
+      * probe reads it instead of copying C·dim floats per call. */
+    @transient private lazy val centroidFlat: Array[Float] =
+      Knn.flattenUniform(centroidMatrix)
+    private[operators] def prober(nprobe: Int): graft.functions.CellProbe =
+      new graft.functions.CellProbe(centroidMatrix, nprobe, centroidFlat)
     // globally id-sorted view for the mild branch's membership/attr
     // lookups (built once; ids are unique by the index contract)
     private[operators] val (sortedIds, attrsBySorted)
@@ -1731,7 +1737,7 @@ object AnnIvf {
     val prober: Array[Float] => Array[Int] =
       if (exhaustive) null
       else if (proberOverride != null) proberOverride
-      else new graft.functions.CellProbe(rep.centroidMatrix, nprobe)
+      else rep.prober(nprobe)
     // EXHAUSTIVE path: resolve the attr + tombstone checks ONCE per
     // call into a survivor index list (the local twin of Knn.exact
     // scanning an already-filtered relation) — every query in the

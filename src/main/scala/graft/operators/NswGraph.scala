@@ -725,6 +725,12 @@ object NswGraph {
       cells.foreach(c => m.put(c.cid, c))
       m
     }
+    /** The centroid matrix flattened once per replica: a serve call's
+      * probe reads it instead of copying C·dim floats per call. */
+    @transient private lazy val centroidFlat: Array[Float] =
+      Knn.flattenUniform(centroidMatrix)
+    private[operators] def prober(nprobe: Int): graft.functions.CellProbe =
+      new graft.functions.CellProbe(centroidMatrix, nprobe, centroidFlat)
     /** Largest cell size / degree — sizes per-thread beam scratch. */
     private[operators] val maxN: Int =
       if (cells.isEmpty) 0 else cells.iterator.map(_.ids.length).max
@@ -850,48 +856,45 @@ object NswGraph {
       queries: Array[(Long, Array[Float])], k: Int, nprobe: Int,
       efSearch: Int = 64, metric: String = "sqeuclidean",
       tombstones: Option[Array[Long]] = None)
-      : Array[(Long, Long, Long, Double)] = {
-    val out = Array.newBuilder[(Long, Long, Long, Double)]
-    out.sizeHint(queries.length * k)
-    searchLocalQueriesSlots(rep, queries, k, nprobe, efSearch, metric,
-      tombstones).foreach(out ++= _)
-    out.result()
-  }
+      : Array[(Long, Long, Long, Double)] =
+    searchLocalKept(rep, queries, k, k, nprobe, efSearch, metric,
+      tombstones, keep = null)
 
-  /** The local serving core with PER-SLOT outputs: element i is query
-    * slot i's ranked rows (possibly empty — a slot whose beams
-    * drained nothing under the mask). The flattened public contract
-    * cannot distinguish an empty group from an absent one, which is
-    * exactly what the sharded merge needs to align slots across K
-    * shard replicas (`Sharded`) — so the sharded paths consume this
-    * form and the single-replica paths flatten it.
+  /** The local serving core: each query's top-`kFetch` rows, then the
+    * first `k` of them whose id passes `keep` (null keeps every row),
+    * ranks renumbered 1..k — the mild over-fetch branch's
+    * "top-k', filter, first k" (`Serving.serveFilteredLocalCore`)
+    * runs here, per query, so the survivor filter shares the beam's
+    * workers instead of a serial pass on the caller. Tuples are built
+    * only for the kept rows.
     *
-    * Probe lists compute INSIDE the worker loop — the probe's C·dim
-    * argmin is the dominant per-query cost at serving cell counts
-    * (measured ~2× the np2/efS32 beam cost at 1024 cells), so
-    * serializing it on the calling thread would cap small-batch
-    * throughput at roughly a third of the hardware's rate. */
-  private[operators] def searchLocalQueriesSlots(rep: LocalReplica,
-      queries: Array[(Long, Array[Float])], k: Int, nprobe: Int,
-      efSearch: Int = 64, metric: String = "sqeuclidean",
-      tombstones: Option[Array[Long]] = None)
-      : Array[Array[(Long, Long, Long, Double)]] = {
-    val qids = queries.map(_._1)
-    val qvecs = queries.map(_._2)
-    val nQ = qids.length
+    * Workers take ONE query at a time from a shared counter (the
+    * `AnnIvf.localCellCoreSlots` fan): probed cells range from a
+    * handful to hundreds of rows, so fixed multi-query chunks would
+    * leave one worker setting the batch latency. Probe lists
+    * compute inside the worker loop too — the probe's C·dim argmin is
+    * the dominant per-query cost at serving cell counts (measured ~2×
+    * the np2/efS32 beam cost at 1024 cells). Each query's rows depend
+    * only on the query, so which worker serves it never changes them;
+    * a query's group may be empty (every beam drained nothing under
+    * the mask, or no fetched row passed `keep`). */
+  private[operators] def searchLocalKept(rep: LocalReplica,
+      queries: Array[(Long, Array[Float])], kFetch: Int, k: Int,
+      nprobe: Int, efSearch: Int, metric: String,
+      tombstones: Option[Array[Long]], keep: Long => Boolean)
+      : Array[(Long, Long, Long, Double)] = {
+    val nQ = queries.length
     if (nQ == 0) return Array.empty
-    val efs = math.max(k, efSearch)
+    val efs = math.max(kFetch, efSearch)
     val mcode = Knn.metricCode(metric)
     val tomb: Array[Long] = tombstones.orNull
-    val prober = new graft.functions.CellProbe(rep.centroidMatrix, nprobe)
+    val prober = rep.prober(nprobe)
     val perQuery = new Array[Array[(Long, Long, Long, Double)]](nQ)
-    // one worker per ~4 queries up to the core count: a 100-query
-    // batch fans to 25 workers; a 4-query batch skips most of the
-    // pool wakeup cost
+    // one worker per ~4 queries up to the core count: a 4-query batch
+    // skips most of the pool wakeup cost
     val workers = math.max(1, math.min(
       Runtime.getRuntime.availableProcessors(), (nQ + 3) / 4))
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
-    val chunk = math.max(1, math.min(16, nQ / (workers * 2))) max 1
     def runWorker(): Unit = {
       // per-worker scratch, reused across its queries (the job path's
       // per-partition hoisting, thread-local here)
@@ -904,43 +907,48 @@ object NswGraph {
       val scratchI = new Array[Int](efs)
       val keptIds = new Array[Long](efs)
       val keptDs = new Array[Double](efs)
-      var start = next.getAndAdd(chunk)
-      while (start < nQ) {
-        val end = math.min(start + chunk, nQ)
-        var qi = start
-        while (qi < end) {
-          val qid = qids(qi); val qv = qvecs(qi)
-          val cids = prober(qv)
-          val buf = new graft.functions.TopKBuffer(k)
-          var ci = 0
-          while (ci < cids.length) {
-            val cell = rep.byCid.get(cids(ci))
-            if (cell != null && cell.ids.length > 0) {
-              epoch += 1
-              beamServable(cell, mcode, qv, efs, stamps, epoch,
-                candidates, results, nbuf)
-              val cnt = drainBeamTopK(results, cell.ids, k, tomb,
-                scratchD, scratchI, keptIds, keptDs)
-              var x = 0
-              while (x < cnt) { buf.insert(keptDs(x), keptIds(x)); x += 1 }
-            }
-            ci += 1
+      var qi = next.getAndIncrement()
+      while (qi < nQ) {
+        val (qid, qv) = queries(qi)
+        val cids = prober(qv)
+        val buf = new graft.functions.TopKBuffer(kFetch)
+        var ci = 0
+        while (ci < cids.length) {
+          val cell = rep.byCid.get(cids(ci))
+          if (cell != null && cell.ids.length > 0) {
+            epoch += 1
+            beamServable(cell, mcode, qv, efs, stamps, epoch,
+              candidates, results, nbuf)
+            val cnt = drainBeamTopK(results, cell.ids, kFetch, tomb,
+              scratchD, scratchI, keptIds, keptDs)
+            var x = 0
+            while (x < cnt) { buf.insert(keptDs(x), keptIds(x)); x += 1 }
           }
-          val ranked = buf.sorted
-          perQuery(qi) = Array.tabulate(ranked.length)(r =>
-            (qid, (r + 1).toLong, ranked(r)._2, ranked(r)._1))
-          qi += 1
+          ci += 1
         }
-        start = next.getAndAdd(chunk)
+        // ranked (dist, id)-ascending: the first k passing `keep` are
+        // the window's re-rank over the survivors
+        val ranked = buf.sorted
+        val rows = new Array[(Long, Long, Long, Double)](
+          math.min(k, ranked.length))
+        var n = 0
+        var r = 0
+        while (r < ranked.length && n < rows.length) {
+          val id = ranked(r)._2
+          if (keep == null || keep(id)) {
+            rows(n) = (qid, n + 1L, id, ranked(r)._1); n += 1
+          }
+          r += 1
+        }
+        perQuery(qi) = if (n == rows.length) rows else rows.take(n)
+        qi = next.getAndIncrement()
       }
     }
     runOnLocalPool(workers)(runWorker _)
-    var i = 0
-    while (i < nQ) {
-      if (perQuery(i) == null) perQuery(i) = Array.empty
-      i += 1
-    }
-    perQuery
+    val out = Array.newBuilder[(Long, Long, Long, Double)]
+    out.sizeHint(nQ * k)
+    perQuery.foreach(out ++= _)
+    out.result()
   }
 
   /** `searchLocalQueries` behind the DataFrame contract — collects the

@@ -290,7 +290,15 @@ object Pq {
       vecCol: String = "embedding",
       extraCols: Seq[String] = Nil,
       residual: Boolean = true): Unit = {
-    codeTable(indexed, centroids, cb, idCol, vecCol, extraCols, residual)
+    val (base, encCol) =
+      if (residual) (residuals(indexed, centroids, vecCol), "_resid")
+      else (indexed, vecCol)
+    val codeCols = (0 until cb.m).map { s =>
+      GraftFunctions.nearestCentroid(
+        slice(col(encCol), s * cb.dsub + 1, cb.dsub), cb.codebooks(s))
+    }
+    base.select(col(idCol) +: array(codeCols: _*).as("codes") +:
+        extraCols.map(col) :+ col("cid"): _*)
       // one shuffle by cid → one file per cell, not tasks × cells
       // files (see AnnIvf.writeIndex)
       .repartition(col("cid"))
@@ -299,17 +307,17 @@ object Pq {
     // written residual and searched raw (or vice versa) decodes
     // garbage with no error — FAISS serializes this flag inside the
     // index for the same reason. The sidecar records it next to the
-    // codes; every search/append validates against it (dot-prefixed:
+    // codes; every search validates against it (dot-prefixed:
     // parquet scans never see it).
     writePqMeta(indexed.sparkSession, path,
       PqMeta(residual, cb.m, cb.dsub, cb.codebooks(0).length))
   }
 
   /** The persisted layout's encode parameters — written by
-    * `writeIvfPqIndexed`, validated by `searchPersistedAdc*` and
-    * `appendToIndex`. A flag mismatch between writer and searcher is
-    * silent garbage (raw codes decoded as residuals rank noise), so
-    * it must fail loudly instead. */
+    * `writeIvfPqIndexed`, validated by `searchPersistedAdc*`. A flag
+    * mismatch between writer and searcher is silent garbage (raw codes
+    * decoded as residuals rank noise), so it must fail loudly
+    * instead. */
   final case class PqMeta(residual: Boolean, m: Int, dsub: Int, ksub: Int)
 
   private val PqMetaFile = ".graft_pq_meta.json"
@@ -366,67 +374,6 @@ object Pq {
           s"(m=${meta.m}, dsub=${meta.dsub}, ksub=${meta.ksub}) — " +
           "the codes were written with a different codebook")
     }
-
-  /** The (id, codes, extra…, cid) relation the clustered layout stores
-    * — shared by the full write and the incremental append so the two
-    * paths cannot drift. */
-  private def codeTable(indexed: DataFrame, centroids: DataFrame,
-      cb: Codebook, idCol: String, vecCol: String,
-      extraCols: Seq[String], residual: Boolean): DataFrame = {
-    val (base, encCol) =
-      if (residual) (residuals(indexed, centroids, vecCol), "_resid")
-      else (indexed, vecCol)
-    val codeCols = (0 until cb.m).map { s =>
-      GraftFunctions.nearestCentroid(
-        slice(col(encCol), s * cb.dsub + 1, cb.dsub), cb.codebooks(s))
-    }
-    base.select(col(idCol) +: array(codeCols: _*).as("codes") +:
-      extraCols.map(col) :+ col("cid"): _*)
-  }
-
-  /** Incremental maintenance of the persisted IVF-PQ layout — parity
-    * with `AnnIvf.appendToIndex`: NEW vectors are assigned against the
-    * frozen coarse centroids (through the two-level expression when
-    * the base index was built with it — pass `supers`), encoded with
-    * the frozen codebooks, and appended into the cell directories they
-    * touch. Nothing existing is rewritten; probes keep pruning; a
-    * batch's cells and codes are identical to what a full rebuild
-    * would assign (both are pure per-row functions of the vector), so
-    * append == rebuild on the code relation (pinned in PqSpec).
-    * Re-train codebooks/centroids only on drift, as in any IVF-PQ
-    * system. */
-  def appendToIndex(newData: DataFrame, centroids: DataFrame,
-      cb: Codebook, path: String, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      extraCols: Seq[String] = Nil,
-      residual: Boolean = true,
-      supers: Option[DataFrame] = None, wSuper: Int = 4): Unit = {
-    val spark = newData.sparkSession
-    // appending raw codes into a residual layout (or vice versa) is
-    // per-row silent garbage — validate against the sidecar before
-    // touching the tree; legacy layouts (no sidecar) get one written
-    // from this batch's flags so the NEXT mismatch is caught.
-    // LEGACY-UPGRADE TRUST BOUNDARY (r13 ADVICE): for a sidecar-less
-    // layout the FIRST appender's flags are taken as the layout's
-    // mode — nothing in the codes themselves can disambiguate
-    // raw vs residual, so a first append with the WRONG flag both
-    // mixes modes in the layout and freezes the wrong mode into the
-    // sidecar (later correct-flag searches are then loudly rejected).
-    // Layouts written by writeIvfPqIndex* since r13 always carry the
-    // sidecar, so this only concerns pre-r13 trees: verify the
-    // original build's mode before the first append, or rewrite via
-    // writeIvfPqIndexed (whose flags are authoritative).
-    validatePqMode(spark, path, cb, residual, "Pq.appendToIndex")
-    val indexed = supers.fold(
-      AnnIvf.index(newData, centroids, idCol, vecCol))(sup =>
-      AnnIvf.indexTwoLevel(newData, sup, centroids, idCol, vecCol, wSuper))
-    codeTable(indexed, centroids, cb, idCol, vecCol, extraCols, residual)
-      .repartition(col("cid")) // one file per touched cell per batch
-      .write.mode("append").partitionBy("cid").parquet(path)
-    if (readPqMeta(spark, path).isEmpty)
-      writePqMeta(spark, path,
-        PqMeta(residual, cb.m, cb.dsub, cb.codebooks(0).length))
-  }
 
   /** ADC search over the persisted clustered code table: per query,
     * probe the `nprobe` nearest coarse cells; the probed-cell filter

@@ -469,10 +469,12 @@ object Serving {
     *  - STRONG → `AnnIvf.searchLocalCellsQueries` (pre-filter scan of
     *    the probed cells — tagged `IvfPrefilterResident`, it IS the
     *    resident branch in-process)
-    *  - MILD → beam k' on the local GRAPH replica, drop non-survivors
-    *    by the attr of each fetched id, re-rank to k — the
-    *    over-fetch branch with the semi-join replaced by an id-sorted
-    *    attr lookup
+    *  - MILD → beam k' on the local GRAPH replica, then keep each
+    *    query's first k fetched ids whose attr passes — the
+    *    over-fetch branch with the semi-join and window replaced by
+    *    an id-sorted attr lookup inside the beam's pool workers
+    *    (`NswGraph.searchLocalKept`), so `attrPred` runs on pool
+    *    threads, as it does in the two IVF branches
     *
     * Each branch is row-identical to its distributed twin given the
     * same counts (ServingSpec pins all three, masked and unmasked).
@@ -616,40 +618,19 @@ object Serving {
           math.max(k, kFromCounts.getOrElse(
             math.ceil(overFetchMult * k / sel).toInt)))
         val efF = math.max(efSearch, kF)
-        val fetched = NswGraph.searchLocalQueries(graph.get, queries,
-          kF, nprobe, efF, metric, tombstones)
-        // fetched rows arrive grouped per query, (dist, id)-ascending
+        // the keep test is the attr lookup or the id-set membership
+        // search — same sorted-array machinery as the tombstone mask,
+        // polarity flipped. It runs per query inside the beam's
+        // workers: each query's k' rows arrive (dist, id)-ascending
         // (the local drain's order == the window's (dist, neighbor_id)
-        // sort) — keep survivors, take k, renumber ranks. The keep
-        // test is the attr lookup or the id-set membership search —
-        // same sorted-array machinery as the tombstone mask, polarity
-        // flipped. Group boundaries come from the RANK column
-        // restarting at 1 (each query's rows start there), NOT from
-        // qid run-lengths: a batch holding the same qid twice in
-        // adjacent slots would otherwise collapse into one k-capped
-        // group and silently drop the second query's results (r14
-        // ADVICE; duplicate-qid contract in the entry scaladoc).
-        val out = Array.newBuilder[(Long, Long, Long, Double)]
-        out.sizeHint(queries.length * k)
-        var i = 0
-        while (i < fetched.length) {
-          val qid = fetched(i)._1
-          var kept = 0L
-          var inGroup = true
-          while (i < fetched.length && inGroup) {
-            val row = fetched(i)
-            val keep =
-              if (attrPred != null) flat.attrSatisfies(row._3, attrPred)
-              else java.util.Arrays.binarySearch(idSet, row._3) >= 0
-            if (kept < k && keep) {
-              kept += 1
-              out += ((qid, kept, row._3, row._4))
-            }
-            i += 1
-            inGroup = i < fetched.length && fetched(i)._2 != 1L
-          }
-        }
-        (GraphOverfetch, out.result())
+        // sort), so its first k survivors, ranked 1..k, are the
+        // re-rank. Per-query groups keep adjacent duplicate qids apart
+        // (duplicate-qid contract in the entry scaladoc).
+        val keep: Long => Boolean =
+          if (attrPred != null) id => flat.attrSatisfies(id, attrPred)
+          else id => java.util.Arrays.binarySearch(idSet, id) >= 0
+        (GraphOverfetch, NswGraph.searchLocalKept(graph.get, queries,
+          kF, k, nprobe, efF, metric, tombstones, keep))
     }
   }
 

@@ -181,22 +181,6 @@ object Sharded {
       same
     })
 
-  /** The measured parallel-fan rule as a pure function: fan whenever
-    * there is more than one shard. The r17 counter-reading (fan
-    * REGRESSED at batch=1000: 17,301 vs 27,119 sequential,
-    * BENCH_scale_r17) was measured with K fresh threads per call and
-    * cold per-shard bounds — r18 retired both (cached fan pool;
-    * cross-shard `SlotBounds`), and re-measurement across three
-    * windows and both tiers shows the fan WINNING OR TYING at every
-    * shape: flat tier 4 shards batch=1000 +0–15% (24,791/22,283;
-    * 28,022/24,320; 10,711/10,711), batch=100 +40–75%; graph tier 8
-    * shards batch=1000 +32–41% (6,821/4,829) — BENCH_scale_r18. The
-    * `batch`/`cores` parameters remain for callers with their own
-    * policies and for the record of what the rule once keyed on. */
-  private[graft] def autoParallel(batch: Int, nShards: Int,
-      cores: Int = Runtime.getRuntime.availableProcessors()): Boolean =
-    nShards > 1
-
   /** CACHED daemon pool for the shard fan (r17 ADVICE: K fresh
     * threads per call added create/join latency to every batch of the
     * closed-loop profiles). Distinct from `NswGraph.runOnLocalPool`'s
@@ -363,8 +347,12 @@ object Sharded {
       if (sharedCentroids) nprobe else nprobe * flatShards.length
     val resolved = Serving.effectiveExtreme(extreme, mild,
       probedPerQuery, totalCells)
-    val par = parallelShards.getOrElse(
-      autoParallel(queries.length, flatShards.length))
+    // the measured fan rule: fan whenever there is more than one
+    // shard. With the cached fan pool and warm cross-shard bounds the
+    // fan won or tied at every measured shape (flat tier 4 shards
+    // batch=1000 +0-15%, batch=100 +40-75%; graph tier 8 shards
+    // batch=1000 +32-41%, BENCH_scale_r18)
+    val par = parallelShards.getOrElse(flatShards.length > 1)
     // cross-shard kth-best bounds (r18): both branches share one
     // SlotBounds per call — sequential fan passes each shard the
     // previous shards' per-slot kth-best, the parallel fan tightens

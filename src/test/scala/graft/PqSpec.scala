@@ -220,36 +220,6 @@ class PqSpec extends AnyFunSuite {
     codes.unpersist()
   }
 
-  test("incremental append: appended layout equals a full rebuild, " +
-      "untouched cell files are not rewritten") {
-    val tmp = java.nio.file.Files.createTempDirectory("ivfpq_app").toString
-    val centroids = graft.operators.AnnIvf.train(data, numCentroids = 8,
-      iterations = 2)
-    val baseRows = data.filter($"vec_id" % 3 =!= 0)
-    val newRows = data.filter($"vec_id" % 3 === 0)
-    Pq.writeIvfPqIndex(baseRows, centroids, cb, s"$tmp/idx",
-      extraCols = Seq("label"), residual = true)
-    val filesBefore = new java.io.File(s"$tmp/idx").listFiles()
-      .filter(_.getName.startsWith("cid="))
-      .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    Pq.appendToIndex(newRows, centroids, cb, s"$tmp/idx",
-      extraCols = Seq("label"), residual = true)
-    // append only ADDS files — every pre-append file survives untouched
-    val filesAfter = new java.io.File(s"$tmp/idx").listFiles()
-      .filter(_.getName.startsWith("cid="))
-      .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    filesBefore.foreach { case (cell, fs) =>
-      assert(fs.subsetOf(filesAfter(cell)), s"cell $cell rewritten") }
-    // and the resulting code relation is what one full write produces
-    Pq.writeIvfPqIndex(data, centroids, cb, s"$tmp/full",
-      extraCols = Seq("label"), residual = true)
-    def rel(p: String) = spark.read.parquet(p)
-      .select($"vec_id", $"codes", $"label", $"cid").collect()
-      .map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2), r.getInt(3)))
-      .toSet
-    assert(rel(s"$tmp/idx") == rel(s"$tmp/full") && rel(s"$tmp/idx").nonEmpty)
-  }
-
   test("residual encoding beats raw codes on clustered data") {
     // deterministic hash-synth Gaussian-mixture analog (ScaleBench's
     // generator, shrunk): 20 tight clusters in 64 dims. Raw-vector PQ
@@ -323,9 +293,7 @@ class PqSpec extends AnyFunSuite {
     assert(viaDefaults == explicitRes && viaDefaults.nonEmpty)
   }
 
-  test("encode-mode sidecar: searching or appending with the wrong " +
-      "residual flag fails loudly; matching flags pass; legacy " +
-      "layouts skip validation") {
+  test("encode-mode sidecar: wrong flags fail the search, legacy skips") {
     val tmp = java.nio.file.Files.createTempDirectory("ivfpq_meta").toString
     val centroids = graft.operators.AnnIvf.train(data, numCentroids = 8,
       iterations = 2)
@@ -343,13 +311,6 @@ class PqSpec extends AnyFunSuite {
         queries, k = 10, nprobe = 8, residual = false).count()
     }
     assert(ex.getMessage.contains("residual"))
-    // append with the wrong flag is refused BEFORE touching the tree
-    val exA = intercept[IllegalArgumentException] {
-      Pq.appendToIndex(queries.select($"qid".as("vec_id"),
-        $"q_embedding".as("embedding")), centroids, cb, s"$tmp/idx",
-        residual = false)
-    }
-    assert(exA.getMessage.contains("residual"))
     // a codebook of a different shape is refused too
     val cbSmall = Pq.train(data, m = 4, ksub = 16, iterations = 1)
     val exS = intercept[IllegalArgumentException] {
@@ -357,8 +318,7 @@ class PqSpec extends AnyFunSuite {
         queries, k = 10, nprobe = 8, residual = true).count()
     }
     assert(exS.getMessage.contains("codebook"))
-    // legacy layout (no sidecar): validation skips, and the first
-    // append writes the sidecar from its own flags
+    // legacy layout (no sidecar): validation skips
     val fs = new org.apache.hadoop.fs.Path(s"$tmp/idx")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/idx/.graft_pq_meta.json"),
@@ -366,12 +326,6 @@ class PqSpec extends AnyFunSuite {
     assert(Pq.readPqMeta(spark, s"$tmp/idx").isEmpty)
     assert(Pq.searchPersistedAdc(spark, s"$tmp/idx", centroids, cb,
       queries, k = 10, nprobe = 8, residual = true).count() > 0)
-    Pq.appendToIndex(queries.limit(1).select($"qid".as("vec_id"),
-      $"q_embedding".as("embedding")), centroids, cb, s"$tmp/idx",
-      residual = true)
-    assert(Pq.readPqMeta(spark, s"$tmp/idx").contains(
-      Pq.PqMeta(residual = true, m = cb.m, dsub = cb.dsub,
-        ksub = cb.codebooks(0).length)))
   }
 
   test("compression accounting: 8 codes vs 64 floats per vector") {

@@ -590,6 +590,134 @@ class ServingSpec extends AnyFunSuite {
     } finally { graphIdx.unpersist(); cells.unpersist(); indexed.unpersist() }
   }
 
+  /** Mild-branch fixture: an attr-built flat replica, the graph
+    * replica, 100 queries (the testdata's query rows plus data rows
+    * under fresh qids) and a tombstone mask. */
+  private lazy val mildLocal = {
+    val d = data.cache()
+    val centroids = AnnIvf.train(d, numCentroids = 8, iterations = 2)
+    val indexed = AnnIvf.index(d, centroids).cache()
+    indexed.count()
+    val graphs = NswGraph.buildIndex(indexed, m = 8, efConstruction = 32)
+    val graphIdx = NswGraph.servableIndex(graphs)
+    val cells = AnnIvf.servableCells(indexed, attrCol = Some("label"))
+    try {
+      val flatRep = AnnIvf.localCellReplica(cells, centroids)
+      val graphRep = NswGraph.localReplica(graphIdx, centroids)
+      val qs = queries.select($"qid".cast("long"), $"q_embedding")
+        .as[(Long, Array[Float])].collect()
+      val extra = d.orderBy($"vec_id").limit(100 - qs.length)
+        .select(($"vec_id" + 1000000L).cast("long"), $"embedding")
+        .as[(Long, Array[Float])].collect()
+      val mask = d.filter($"vec_id" % 7 === 2)
+        .select($"vec_id").collect().map(_.getLong(0)).sorted
+      (flatRep, graphRep, qs ++ extra, mask)
+    } finally { graphIdx.unpersist(); cells.unpersist(); indexed.unpersist() }
+  }
+
+  test("mild local branch: the in-worker filter serves the rows of " +
+      "searchLocalQueries at k', a per-slot filter and the first k — " +
+      "both entries, masked and unmasked, every batch shape") {
+    val (flatRep, graphRep, q100, mask) = mildLocal
+    assert(q100.length == 100)
+    val k = 10; val hint = 0.9
+    val kF = math.max(k, math.ceil(3 * k / hint).toInt)
+    // the serial form the branch replaced: fetch k', split slots on
+    // the rank restarting at 1, keep survivors, take k, renumber
+    def serial(qs: Array[(Long, Array[Float])], keep: Long => Boolean,
+        tomb: Option[Array[Long]]): Seq[(Long, Long, Long, Double)] = {
+      val fetched = NswGraph.searchLocalQueries(graphRep, qs, kF, 4,
+        math.max(64, kF), tombstones = tomb)
+      val starts = fetched.indices.filter(fetched(_)._2 == 1L) :+
+        fetched.length
+      starts.sliding(2).toSeq.flatMap { case Seq(a, b) =>
+        fetched.slice(a, b).filter(r => keep(r._3)).take(k).zipWithIndex
+          .map { case (r, j) => (r._1, j + 1L, r._3, r._4) }
+      }
+    }
+    val twin: Double => Boolean = a => a != 4.0
+    val mildIds = flatRep.ids.filter(flatRep.attrSatisfies(_, twin)).sorted
+    val batches = Seq(q100.take(1), q100.take(3), q100.slice(2, 7), q100,
+      Array(q100(0), q100(0), q100(1))) // adjacent duplicate qids
+    for (qs <- batches; tomb <- Seq(None, Some(mask))) {
+      val (sa, ra) = Serving.serveFilteredLocalExplained(flatRep,
+        Some(graphRep), qs, k, twin, selectivity = Some(hint),
+        tombstones = tomb)
+      val (si, ri) = Serving.serveFilteredLocalIdSetExplained(flatRep,
+        Some(graphRep), qs, k, mildIds, selectivity = Some(hint),
+        tombstones = tomb)
+      assert(sa == Serving.GraphOverfetch && si == Serving.GraphOverfetch)
+      val want = serial(qs, flatRep.attrSatisfies(_, twin), tomb)
+      assert(want.nonEmpty)
+      assert(ra.toSeq == want, s"attr entry, ${qs.length} queries, $tomb")
+      assert(ri.toSeq == want, s"id-set entry, ${qs.length} queries")
+    }
+    // a query whose k' rows all fail: its group is empty, its
+    // neighbours' groups are untouched
+    val probe = q100.slice(0, 3)
+    for (tomb <- Seq(None, Some(mask))) {
+      val dropped = NswGraph.searchLocalQueries(graphRep,
+        Array(probe(1)), kF, 4, math.max(64, kF), tombstones = tomb)
+        .map(_._3).toSet
+      assert(dropped.nonEmpty)
+      val ids = mildIds.filterNot(dropped)
+      val (_, ri) = Serving.serveFilteredLocalIdSetExplained(flatRep,
+        Some(graphRep), probe, k, ids, selectivity = Some(hint),
+        tombstones = tomb)
+      val want = serial(probe, id =>
+        java.util.Arrays.binarySearch(ids, id) >= 0, tomb)
+      assert(ri.toSeq == want && !ri.exists(_._1 == probe(1)._1))
+      assert(ri.exists(_._1 == probe(0)._1))
+      // the attr entry: a filter that keeps nothing empties every group
+      val (s0, r0) = Serving.serveFilteredLocalExplained(flatRep,
+        Some(graphRep), probe, k, _ => false, selectivity = Some(hint),
+        tombstones = tomb)
+      assert(s0 == Serving.GraphOverfetch && r0.isEmpty)
+    }
+  }
+
+  test("mild local branch: the attr predicate runs on the pool's " +
+      "workers, never on the caller thread (perf guard)") {
+    assume(Runtime.getRuntime.availableProcessors() > 1,
+      "a one-core host serves every batch inline")
+    val (flatRep, graphRep, q100, _) = mildLocal
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val pred: Double => Boolean = { a =>
+      seen.add(Thread.currentThread().getName); a != 4.0 }
+    for (n <- Seq(8, 100)) {
+      seen.clear()
+      val (s, rows) = Serving.serveFilteredLocalExplained(flatRep,
+        Some(graphRep), q100.take(n), 10, pred, selectivity = Some(0.9))
+      assert(s == Serving.GraphOverfetch && rows.nonEmpty)
+      val names = seen.toArray(new Array[String](0))
+      val onCaller = names.count(_ == Thread.currentThread().getName)
+      assert(names.nonEmpty)
+      assert(onCaller == 0, s"$n queries: $onCaller of ${names.length} " +
+        "predicate calls ran on the caller thread")
+      assert(names.forall(_.startsWith("graft-local-serve")),
+        names.distinct.mkString(", "))
+    }
+  }
+
+  test("mild local branch: rows served inline from a pool-named thread " +
+      "equal the rows served on the pool") {
+    val (flatRep, graphRep, q100, mask) = mildLocal
+    val twin: Double => Boolean = a => a != 4.0
+    for (tomb <- Seq(None, Some(mask))) {
+      def serve() = Serving.serveFilteredLocalExplained(flatRep,
+        Some(graphRep), q100, 10, twin, selectivity = Some(0.9),
+        tombstones = tomb)
+      val pooled = serve()
+      var inline: (Serving.Strategy, Array[(Long, Long, Long, Double)]) =
+        null
+      val t = new Thread(() => inline = serve(),
+        "graft-local-serve-inline-test")
+      t.start(); t.join()
+      assert(inline != null && inline._1 == Serving.GraphOverfetch)
+      assert(inline._2.toSeq == pooled._2.toSeq && pooled._2.nonEmpty)
+    }
+  }
+
   test("refreshTombstones feeds the LOCAL dispatch: a mid-stream " +
       "tombstone reaches the in-process strong branch") {
     val centroids = AnnIvf.train(data, numCentroids = 8, iterations = 2)

@@ -102,8 +102,7 @@ class ShardedSpec extends AnyFunSuite {
   test("cross-shard bound seeding is pure pruning: a kernel scan " +
       "seeded with the TIGHTEST legal per-slot bound (the true global " +
       "kth-best) returns the unseeded rows exactly, on the pre-filter " +
-      "and exact branches — and the auto-parallel rule picks the " +
-      "measured winner at both profiled batch sizes") {
+      "and exact branches") {
     val d = data.cache()
     val centroids = AnnIvf.train(d, numCentroids = 8, iterations = 2)
     val indexed = AnnIvf.index(d, centroids).cache()
@@ -142,12 +141,6 @@ class ShardedSpec extends AnyFunSuite {
       val b = new Sharded.SlotBounds(1)
       b.tighten(0, -0.25); b.tighten(0, -0.125)
       assert(b.get(0) == -0.25)
-      // the measured fan rule (BENCH_scale_r18: with the cached pool
-      // + warm bounds the fan wins or ties at EVERY measured shape —
-      // the r17 batch=1000 regression is retired)
-      assert(Sharded.autoParallel(100, 4, cores = 32))
-      assert(Sharded.autoParallel(1000, 4, cores = 32))
-      assert(!Sharded.autoParallel(100, 1, cores = 32)) // nothing to fan
     } finally { cells.unpersist(); indexed.unpersist() }
   }
 
